@@ -5,16 +5,21 @@ deterministic/cross-engine-checkable via the portable md5 hash
 (functions/text.py):
 
 - exact:       md5 fingerprint of the normalized token stream
-- MinHash+LSH: word-shingle minhash signatures, banded bucket join
+- MinHash+LSH: word-shingle minhash signatures, banded buckets
 - SimHash:     60-bit weighted token hash, chunk-blocked hamming pairs
 - n-gram Jaccard: exact Jaccard on LSH candidate pairs
 - embedding cosine: label-blocked (IVF-style) near-duplicate vectors
 
 Scale design (the point of each strategy at 100 TB):
 - exact dedup is a single hash-shuffle on the fingerprint.
-- MinHash/LSH replaces the O(n²) all-pairs comparison with a
-  shuffle-on-band-key join; candidates per bucket are bounded, so cost
+- MinHash/LSH replaces the O(n²) all-pairs comparison with one
+  shuffle on the band key; candidates per bucket are bounded, so cost
   is ~linear in corpus size.  Signature width/bands tune recall.
+  Signatures are one per-row projection (tokenize once, build the
+  trigram array once, fold every salt's md5-min over it in a single
+  ``aggregate``), so their cost is linear in tokens and needs no
+  shuffle; candidate pairs come from each bucket's sorted member
+  array, not from a band self-join.
 - SimHash chunk blocking (pigeonhole: 4 chunks, hamming ≤ 3 ⇒ one
   chunk equal) likewise turns all-pairs hamming into an equi-join.
 - embedding dedup blocks on a coarse partition (here: `label`, standing
@@ -742,35 +747,50 @@ def span_removal_by_source(
     )
 
 
+def _unit_grams(
+    documents: DataFrame,
+    text_col: str,
+    key_cols: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """(*key_cols, grams array<string>): each unit's word SHINGLE_N-grams
+    in text order, repeats kept (units with < SHINGLE_N tokens are
+    excluded — no shingle exists).
+
+    The tokens are projected as their own column and the gram lambda
+    reads that column, so each unit is tokenized once: the lambda
+    references ``_toks`` twice, which keeps CollapseProject from
+    inlining the regex into it (one regex run per gram position made
+    shingling quadratic in unit length)."""
+    toks = (
+        spread(documents)
+        .select(*key_cols, tokenize(text_col).alias("_toks"))
+        .where(F.size("_toks") >= SHINGLE_N)
+    )
+    return toks.select(
+        *key_cols,
+        F.transform(
+            F.sequence(F.lit(1), F.size("_toks") - (SHINGLE_N - 1)),
+            lambda i: F.concat_ws(" ", F.slice("_toks", i, SHINGLE_N)),
+        ).alias("grams"),
+    )
+
+
 def _doc_shingles(
     documents: DataFrame,
     text_col: str,
     key_cols: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
-    """(*key_cols, shingle): DISTINCT word n-grams per unit (units with
-    < SHINGLE_N tokens are excluded — no shingle exists)."""
-    # repartition first: shingling + salting + md5 are the CPU hot
-    # path and the testdata parquet is a single row group (one scan
-    # task).  At cluster scale input splits already provide the
-    # parallelism; the tiny exchange is noise next to the hash work.
-    toks = tokenize(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (SHINGLE_N - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE_N)),
-    )
-    return (
-        spread(documents)
-        .where(F.size(toks) >= SHINGLE_N)
-        .select(
-            *key_cols, F.explode(F.array_distinct(grams)).alias("shingle")
-        )
+    """(*key_cols, shingle): DISTINCT word n-grams per unit, one row
+    each — the exploded form the exact Jaccard / containment / PPJoin
+    joins need."""
+    return _unit_grams(documents, text_col, key_cols).select(
+        *key_cols, F.explode(F.array_distinct("grams")).alias("shingle")
     )
 
 
 def minhash_signatures(
     documents: DataFrame,
     text_col: str = "text",
-    shingles: DataFrame | None = None,
     key_cols: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """(*key_cols, sig array<string>): N_HASHES lexicographic-min md5
@@ -778,32 +798,80 @@ def minhash_signatures(
     hashed shingle set is a valid permutation-min — and portable, so
     the DuckDB oracle computes the identical signature.
 
-    `shingles` lets callers share one (ideally persisted) shingle
-    DataFrame across pipeline stages instead of re-tokenizing the
-    corpus per stage.  `key_cols` generalizes the signature unit from
-    documents to any finer grain — (doc_id, para_idx) gives the
-    paragraph-level dedup of the RefinedWeb/Dolma recipe — without
-    touching the doc-level callers (default unchanged)."""
-    keys = list(key_cols)
-    sh = (
-        shingles
-        if shingles is not None
-        else _doc_shingles(documents, text_col, key_cols=key_cols)
+    One per-row projection: a single ``aggregate`` folds every gram
+    into all N_HASHES running minima at once (``zip_with`` + ``least``
+    over the salt array), so there is no salt explode, no aggregation
+    and no shuffle beyond ``spread``.  Repeated grams cannot change a
+    min, so the gram array needs no de-duplication.  `key_cols`
+    generalizes the signature unit from documents to any finer grain —
+    (doc_id, para_idx) gives the paragraph-level dedup of the
+    RefinedWeb/Dolma recipe.  The key columns must identify one input
+    row each: one signature is emitted per row."""
+    salts = F.array(*(F.lit(f"{s}|") for s in range(N_HASHES)))
+    sig = F.aggregate(
+        "grams",
+        F.array_repeat(F.lit(None).cast("string"), N_HASHES),
+        lambda acc, g: F.zip_with(
+            acc,
+            F.transform(salts, lambda s: F.md5(F.concat(s, g))),
+            lambda a, b: F.least(a, b),
+        ),
     )
-    salted = sh.select(
+    return _unit_grams(documents, text_col, key_cols).select(
+        *key_cols, sig.alias("sig")
+    )
+
+
+def _band_rows(
+    sig: DataFrame, keys: tuple[str, ...], n_bands: int, n_rows: int
+) -> DataFrame:
+    """(*keys, band, band_key): one row per unit and band; band_key is
+    the md5 of the band's comma-joined slice of the signature."""
+    return sig.select(
         *keys,
-        F.explode(F.sequence(F.lit(0), F.lit(N_HASHES - 1))).alias("salt"),
-        "shingle",
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+        "sig",
+    ).select(
+        *keys,
+        "band",
+        F.md5(
+            F.concat_ws(",", F.slice("sig", F.col("band") * n_rows + 1, n_rows))
+        ).alias("band_key"),
     )
-    mh = salted.groupBy(*keys, "salt").agg(
-        F.min(
-            F.md5(F.concat(F.col("salt").cast("string"), F.lit("|"), F.col("shingle")))
-        ).alias("mh")
+
+
+def _bucket_pairs(
+    bands: DataFrame, keys: tuple[str, ...], max_bucket: int | None = None
+) -> DataFrame:
+    """(a, b, n_bands): every pair of units sharing a (band, band_key)
+    bucket, as ``struct(*keys)`` values with ``a < b``, and the number
+    of buckets the pair shares.
+
+    One shuffle groups each bucket into a sorted unit array; the i < j
+    pairs of that array are emitted and counted per pair.  There is no
+    band self-join, so the band frame (and the signatures under it) is
+    computed once per action.  ``max_bucket`` drops larger buckets."""
+    # singletons hold no pair, and sequence(1, 0) below would count down
+    buckets = (
+        bands.groupBy("band", "band_key")
+        .agg(F.array_sort(F.collect_list(F.struct(*keys))).alias("ids"))
+        .where(F.size("ids") >= 2)
     )
-    return mh.groupBy(*keys).agg(
+    if max_bucket is not None:
+        buckets = buckets.where(F.size("ids") <= max_bucket)
+    pairs = F.flatten(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("salt", "mh"))), lambda s: s["mh"]
-        ).alias("sig")
+            F.sequence(F.lit(1), F.size("ids") - 1),
+            lambda i: F.transform(
+                F.slice("ids", i + 1, F.size("ids")),
+                lambda b: F.struct(F.element_at("ids", i).alias("a"), b.alias("b")),
+            ),
+        )
+    )
+    return (
+        buckets.select(F.inline(pairs))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_bands"))
     )
 
 
@@ -811,40 +879,33 @@ def minhash_candidates(
     documents: DataFrame,
     text_col: str = "text",
     max_bucket: int | None = None,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, n_bands): candidate near-dup pairs = docs sharing
     ≥1 LSH band bucket; n_bands = how many buckets they share.
 
-    The equi-join on (band, band_key) is the scale trick: no all-pairs
-    comparison ever happens.  ``max_bucket`` is the degenerate-bucket
-    guard: a bucket of B near-identical docs still yields B²/2 pairs,
-    so buckets larger than the cap are dropped (at 100 TB such buckets
-    are handled separately — usually by exact-dedup first, which
-    collapses identical docs before LSH runs).
+    Grouping band rows by (band, band_key) is the scale trick: no
+    all-pairs comparison ever happens.  ``max_bucket`` is the
+    degenerate-bucket guard: a bucket of B near-identical docs still
+    yields B²/2 pairs, so buckets larger than the cap are dropped (at
+    100 TB such buckets are handled separately — usually by exact-dedup
+    first, which collapses identical docs before LSH runs).
 
-    Warm path: result-memoized on the input frame when ``shingles``
-    is not caller-supplied — six gates (lsh, jaccard, containment,
-    clusters, representatives, agreement) call this; the ~0.5 s of
-    per-call signature-expression construction is pure overhead after
-    the first."""
-    if shingles is None:
-        from lab3_spark.functions.partitioning import memo_result
+    Warm path: result-memoized on the input frame — six gates (lsh,
+    jaccard, containment, clusters, representatives, agreement) call
+    this; the per-call plan construction is pure overhead after the
+    first."""
+    from lab3_spark.functions.partitioning import memo_result
 
-        return memo_result(
-            f"dedup.minhash_cand.{text_col}.b{max_bucket}",
-            documents,
-            lambda: _minhash_candidates_build(
-                documents, text_col, max_bucket, None
-            ),
-        )
-    return _minhash_candidates_build(documents, text_col, max_bucket, shingles)
+    return memo_result(
+        f"dedup.minhash_cand.{text_col}.b{max_bucket}",
+        documents,
+        lambda: _minhash_candidates_build(documents, text_col, max_bucket),
+    )
 
 
 def minhash_band_keys(
     documents: DataFrame,
     text_col: str = "text",
-    shingles: DataFrame | None = None,
     key_cols: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """(*key_cols, band, band_key): each unit's LSH band bucket keys —
@@ -852,55 +913,19 @@ def minhash_band_keys(
     (`minhash_candidates`), the streaming near-dup flagging store
     (`streaming/lsh_flag.py`), and the paragraph-grain dedup
     (`paragraph_minhash_duplicates`, key_cols=(doc_id, para_idx))."""
-    keys = list(key_cols)
-    sig = minhash_signatures(
-        documents, text_col, shingles=shingles, key_cols=key_cols
-    )
-    return sig.select(
-        *keys,
-        F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band"),
-        "sig",
-    ).select(
-        *keys,
-        "band",
-        F.md5(
-            F.concat_ws(
-                ",", F.slice("sig", F.col("band") * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-            )
-        ).alias("band_key"),
-    )
+    sig = minhash_signatures(documents, text_col, key_cols=key_cols)
+    return _band_rows(sig, key_cols, N_BANDS, ROWS_PER_BAND)
 
 
 def _minhash_candidates_build(
-    documents: DataFrame,
-    text_col: str,
-    max_bucket: int | None,
-    shingles: DataFrame | None,
+    documents: DataFrame, text_col: str, max_bucket: int | None
 ) -> DataFrame:
-    bands = minhash_band_keys(documents, text_col, shingles)
-    if max_bucket is not None:
-        sizes = bands.groupBy("band", "band_key").agg(
-            F.count("*").alias("_bucket_n")
-        )
-        bands = bands.join(
-            sizes.where(F.col("_bucket_n") <= max_bucket).drop("_bucket_n"),
-            ["band", "band_key"],
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_bands"))
-        .orderBy("doc_a", "doc_b")
-    )
+    bands = minhash_band_keys(documents, text_col)
+    return _bucket_pairs(bands, ("doc_id",), max_bucket).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        "n_bands",
+    ).orderBy("doc_a", "doc_b")
 
 
 def paragraph_frame(
@@ -978,10 +1003,10 @@ def paragraph_minhash_duplicates(
     Reuses the document-level LSH machinery VERBATIM
     (minhash_band_keys with key_cols=(doc_id, para_idx)): same
     shingling, same salted-md5 permutation-min, same band hashing —
-    so candidate generation stays a banded EQUI-join on
-    (band, band_key), never all-pairs, with the same ``max_bucket``
-    degenerate-bucket guard.  Within-document pairs are kept (a doc
-    repeating its own boilerplate is dedup-worthy); the pair order is
+    so candidate generation stays a grouping on (band, band_key),
+    never all-pairs, with the same ``max_bucket`` degenerate-bucket
+    guard.  Within-document pairs are kept (a doc repeating its own
+    boilerplate is dedup-worthy); the pair order is
     lexicographic on (doc_id, para_idx).  Paragraphs shorter than
     SHINGLE_N tokens have no shingle and drop out, exactly as
     sub-shingle documents do at doc grain.
@@ -1008,49 +1033,20 @@ def _paragraph_minhash_build(
     block_tokens: int | None,
     max_bucket: int | None,
 ) -> DataFrame:
-    from lab3_spark.functions.partitioning import memo_persist
-
     paras = paragraph_frame(
         documents, text_col, delimiter=delimiter, block_tokens=block_tokens
     )
-    # persisted: the bucket-size guard and BOTH self-join sides read
-    # this frame, and unlike the doc-level build no ReusedExchange
-    # materializes here (measured: 0 in the physical plan) — so the
-    # whole shingle→60-salt-minhash→band pipeline ran three times per
-    # action (optimization round 12, guide §5; bounded registry)
-    bands = memo_persist(
-        f"dedup.para_bands.{text_col}.{delimiter!r}.{block_tokens}",
-        minhash_band_keys(
-            paras, "para_text", key_cols=("doc_id", "para_idx")
-        ),
-    )
-    if max_bucket is not None:
-        sizes = bands.groupBy("band", "band_key").agg(
-            F.count("*").alias("_bucket_n")
-        )
-        bands = bands.join(
-            sizes.where(F.col("_bucket_n") <= max_bucket).drop("_bucket_n"),
-            ["band", "band_key"],
-        )
-    a, b = bands.alias("a"), bands.alias("b")
-    lt = (F.col("a.doc_id") < F.col("b.doc_id")) | (
-        (F.col("a.doc_id") == F.col("b.doc_id"))
-        & (F.col("a.para_idx") < F.col("b.para_idx"))
-    )
+    keys = ("doc_id", "para_idx")
+    bands = minhash_band_keys(paras, "para_text", key_cols=keys)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & lt,
-        )
-        .groupBy(
+        _bucket_pairs(bands, keys, max_bucket)
+        .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("a.para_idx").alias("para_a"),
             F.col("b.doc_id").alias("doc_b"),
             F.col("b.para_idx").alias("para_b"),
+            "n_bands",
         )
-        .agg(F.count("*").alias("n_bands"))
         .orderBy("doc_a", "para_a", "doc_b", "para_b")
     )
 
@@ -1161,11 +1157,11 @@ def ngram_jaccard_pairs(
     only on MinHash-LSH candidate pairs (verify step of the classic
     dedup pipeline: cheap candidate generation → exact verification).
 
-    The shingle DataFrame — the expensive tokenize→slice→md5 scan — is
-    computed ONCE and persisted, then shared by candidate generation
-    and all three verify-side uses (sizes, sh_a, sh_b).  Without the
-    persist the DAG re-tokenizes the corpus ~4×; this was the slowest
-    query of round 1 (10.1 s → the shared-scan form).  Cached via
+    The exploded shingle DataFrame is computed ONCE and persisted, then
+    shared by the three verify-side uses (sizes, sh_a, sh_b); without
+    the persist the DAG re-shingles the corpus per use.  Candidate
+    generation hashes its signatures straight from the documents in
+    one per-row pass and needs no shingle rows.  Cached via
     ``memo_persist`` so repeated catalog runs in one session hold at
     most one shingle frame (CacheManager entries are never GC'd)."""
     from lab3_spark.functions.partitioning import memo_persist
@@ -1173,9 +1169,7 @@ def ngram_jaccard_pairs(
     sh = memo_persist(
         "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
     )
-    cands = minhash_candidates(
-        documents, text_col, shingles=sh
-    ).select("doc_a", "doc_b")
+    cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = sh.select(
@@ -1854,11 +1848,11 @@ def containment_pairs(
     the threshold.
 
     Same scale shape as the Jaccard verify: the shingle scan is
-    computed once (memo_persist, shared with candidate generation and
-    both verify sides), candidates come from the banded LSH equi-join
-    (never all-pairs), and the intersection is a shingle equi-join on
-    candidate pairs only.  Ratios are exact-integer numerator/
-    denominator with one final division, truncated — hash-stable.
+    computed once (memo_persist, shared by both verify sides),
+    candidates come from the banded LSH buckets (never all-pairs), and
+    the intersection is a shingle equi-join on candidate pairs only.
+    Ratios are exact-integer numerator/denominator with one final
+    division, truncated — hash-stable.
 
     Recall caveat (documented, not hidden): MinHash-LSH candidates
     are JACCARD-tuned, so an extreme size mismatch (tiny doc inside a
@@ -1876,9 +1870,7 @@ def containment_pairs(
     sh = memo_persist(
         "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
     )
-    cands = minhash_candidates(documents, text_col, shingles=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = sh.select(
@@ -2828,8 +2820,8 @@ def lsh_planned_blocking_quality(
     The winner row is a 1-row driver collect (bounded planner
     metadata — the kmeans-centroid pattern, never corpus-scale); the
     re-banding slices the EXISTING signature arrays (one explode over
-    b* band indices, equi-join on (band, band_key)) — no signature is
-    recomputed, and the candidate join shape is identical to
+    b* band indices, grouped on (band, band_key)) — no signature is
+    recomputed, and the candidate shape is identical to
     minhash_candidates' at any corpus size.
 
     Warm path: the winner collect happens during CONSTRUCTION (the
@@ -2837,7 +2829,7 @@ def lsh_planned_blocking_quality(
     input-keyed result memo; the signature frame additionally rides
     memo_persist so a re-run after a pass-boundary result-memo flush
     re-bands from the persisted signatures instead of recomputing the
-    16-salt aggregation (sf1 measured: 15.6 s → re-band only)."""
+    16-salt signature pass."""
     from lab3_spark.functions.partitioning import memo_result
 
     return memo_result(
@@ -2859,41 +2851,9 @@ def _lsh_planned_quality_build(
         f"dedup.minhash_sig.{text_col}",
         minhash_signatures(documents, text_col),
     )
-    # persisted (optimization round 13 — the paragraph-minhash r12
-    # pattern): the banded frame feeds BOTH sides of the candidate
-    # self-join, so unpersisted the explode+md5 re-ran twice per
-    # action (the dominant cold cost).  A co-partitioned layout
-    # (repartition+sort by the join key) was A/B-measured ~0.4 s WORSE
-    # warm at sf0.1 and dropped.
-    bands = memo_persist(
-        f"dedup.lsh_planned_bands.{text_col}.b{bstar}",
-        sig.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(bstar - 1))).alias("band"),
-            "sig",
-        ).select(
-            "doc_id",
-            "band",
-            F.md5(
-                F.concat_ws(
-                    ",", F.slice("sig", F.col("band") * rstar + 1, rstar)
-                )
-            ).alias("band_key"),
-        ),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    bands = _band_rows(sig, ("doc_id",), bstar, rstar)
+    cand = _bucket_pairs(bands, ("doc_id",)).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
     return _blocking_metrics(documents, cand, text_col).select(
         F.lit(bstar).cast("bigint").alias("n_bands"),

@@ -17,11 +17,12 @@ from pyspark.sql import functions as F
 def render_keyval_text(df: DataFrame, key: str = "word", val: str = "cnt") -> DataFrame:
     """One formatted line per row, exactly the reference's
     ``%15s - %lu`` (wordCount.cpp:153): key right-aligned to 15 chars,
-    " - ", value."""
+    " - ", value.  Like ``%15s``, a longer key is printed whole (a bare
+    ``lpad`` to 15 would cut it)."""
+    k = F.col(key)
+    padded = F.lpad(k, F.greatest(F.length(k), F.lit(15)), " ")
     return df.select(
-        F.concat(
-            F.lpad(F.col(key), 15, " "), F.lit(" - "), F.col(val).cast("string")
-        ).alias("line")
+        F.concat(padded, F.lit(" - "), F.col(val).cast("string")).alias("line")
     )
 
 

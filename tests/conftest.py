@@ -16,6 +16,52 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def settled_persistent_rdds(spark):
+    """Callable: the persistent-RDD count after letting the cleanup
+    machinery run.
+
+    Two populations live in getPersistentRDDs():
+
+    - CacheManager entries (``.persist()`` on DataFrames) — STRONGLY
+      held for the session; a leak here never shrinks.  This is the
+      class the storage-bound tests exist to catch.
+    - localCheckpoint RDDs from iterative operators, and frames
+      released with a non-blocking ``unpersist`` — freed in the
+      background (ContextCleaner once Python + JVM GC drop them, or
+      the async block release).  Bounded by design, but on a busy
+      executor the cleanup lags, so a raw snapshot is nondeterministic.
+
+    Polls with explicit GC until the count stops shrinking: GC-collect
+    both sides, wait, re-count; converges in 1-2 rounds when nothing
+    leaks, while a genuine CacheManager leak (GC-immune) keeps the
+    count high and still fails the assertion."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def count() -> int:
+        best = sc._jsc.sc().getPersistentRDDs().size()
+        stable = 0
+        deadline = time.time() + 45
+        while time.time() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(1.5)
+            n = sc._jsc.sc().getPersistentRDDs().size()
+            if n >= best:
+                stable += 1
+                if stable >= 2:  # two consecutive non-shrinking polls
+                    return best
+            else:
+                stable = 0
+                best = n
+        return best
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

@@ -40,56 +40,18 @@ _PERSISTING_QUERIES = [
 ]
 
 
-def _n_persistent_rdds(spark) -> int:
-    """Persistent-RDD count after letting the cleanup machinery run.
-
-    Two populations live in getPersistentRDDs():
-
-    - CacheManager entries (``.persist()`` on DataFrames) — STRONGLY
-      held for the session; a leak here never shrinks.  This is the
-      class the test exists to catch.
-    - localCheckpoint RDDs from iterative operators — held only by
-      (weak-referenced) frame objects and freed by Spark's
-      ContextCleaner once Python + JVM GC drop them.  Bounded by
-      design, but on a busy executor the cleanup lags, so a raw
-      snapshot is nondeterministic.
-
-    Poll with explicit GC until the count stops shrinking: GC-collect
-    both sides, wait, re-count; converges in 1-2 rounds when nothing
-    leaks, while a genuine CacheManager leak (GC-immune) keeps the
-    count high and still fails the assertion."""
-    import gc
-    import time
-
-    sc = spark.sparkContext
-    best = sc._jsc.sc().getPersistentRDDs().size()
-    stable = 0
-    deadline = time.time() + 45
-    while time.time() < deadline:
-        gc.collect()
-        sc._jvm.System.gc()
-        time.sleep(1.5)
-        n = sc._jsc.sc().getPersistentRDDs().size()
-        if n >= best:
-            stable += 1
-            if stable >= 2:  # two consecutive non-shrinking polls
-                return best
-        else:
-            stable = 0
-            best = n
-    return best
-
-
 def _run_all(spark, sf_dir) -> None:
     for name in _PERSISTING_QUERIES:
         QUERIES[name](spark, sf_dir).collect()
 
 
-def test_persistent_rdds_bounded_across_repeat_runs(spark, sf_dir):
+def test_persistent_rdds_bounded_across_repeat_runs(
+    spark, sf_dir, settled_persistent_rdds
+):
     _run_all(spark, sf_dir)
-    after_first = _n_persistent_rdds(spark)
+    after_first = settled_persistent_rdds()
     _run_all(spark, sf_dir)
-    after_second = _n_persistent_rdds(spark)
+    after_second = settled_persistent_rdds()
     # Second pass replaces, never accumulates: persist_latest holds at
     # most one frame per key, so the count must not grow.
     assert after_second <= after_first, (

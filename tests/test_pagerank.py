@@ -79,7 +79,7 @@ def test_ppr_mass_stays_in_seed_component(spark):
         assert got[n] == 0, (n, got)
 
 
-def test_long_horizon_truncation_branch(spark):
+def test_long_horizon_truncation_branch(spark, settled_persistent_rdds):
     """n_iter > 8 exercises the periodic lineage-truncation branch
     (pagerank.py: localCheckpoint every 8 rounds) — ADVICE r12: the
     branch was dead code under every n_iter=5 caller.  Values must be
@@ -103,17 +103,16 @@ def test_long_horizon_truncation_branch(spark):
     # including two truncations at n_iter=20) must not grow the set of
     # pinned RDDs — each truncation frees its predecessor and the final
     # checkpoint frees the last one (the prev_trunc discipline).
-    jsc = spark.sparkContext._jsc.sc()
     pairs2 = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
     )
     pagerank_fixed_point(symmetrize(pairs2), n_iter=20).collect()
-    n_after_first = jsc.getPersistentRDDs().size()
+    n_after_first = settled_persistent_rdds()
     pairs3 = spark.createDataFrame(
         [(5, 6), (6, 7), (7, 8)], "doc_a long, doc_b long"
     )
     pagerank_fixed_point(symmetrize(pairs3), n_iter=20).collect()
-    n_after_second = jsc.getPersistentRDDs().size()
+    n_after_second = settled_persistent_rdds()
     assert n_after_second <= n_after_first, (
         n_after_first,
         n_after_second,

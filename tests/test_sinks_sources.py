@@ -23,6 +23,21 @@ def test_render_keyval_matches_printf(spark, corpus):
     assert "            fox - 3" in lines
 
 
+def test_render_keyval_long_word_not_cut(spark):
+    # printf("%15s") pads short keys and prints longer ones whole
+    word = "abcdefghijklmnopqrst"  # 20 characters
+    df = spark.createDataFrame(
+        [(word, 2), ("a" * 15, 1), ("fox", 3)], "word string, cnt long"
+    )
+    lines = {r["line"] for r in render_keyval_text(df).collect()}
+    assert lines == {
+        "%15s - %d" % (word, 2),
+        "%15s - %d" % ("a" * 15, 1),
+        "%15s - %d" % ("fox", 3),
+    }
+    assert f"{word} - 2" in lines
+
+
 def test_render_inverted_index(spark, corpus):
     lines = {
         r["line"]

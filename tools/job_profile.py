@@ -33,11 +33,15 @@ def _jobs(base: str, app: str) -> list[dict]:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    passes = 2
-    for a in sys.argv[1:]:
-        if a.startswith("--passes"):
-            passes = int(a.split("=", 1)[1]) if "=" in a else passes
+    args, passes = [], 2
+    argv = iter(sys.argv[1:])
+    for a in argv:
+        if a == "--passes":
+            passes = int(next(argv))
+        elif a.startswith("--passes="):
+            passes = int(a.split("=", 1)[1])
+        elif not a.startswith("--"):
+            args.append(a)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # the engine session disables the UI; this diagnostic needs it
     spark = get_spark("job_profile", extra_conf={"spark.ui.enabled": "true"})
