@@ -414,74 +414,36 @@ def main() -> None:
     # steal (the same query varies 4s↔100s across runs); the min is
     # the reproducible dataflow cost (the reference's self-timing
     # likewise measures the compute phase, not program setup).
-    from lab3_spark.functions.partitioning import (
-        memo_result_hit_count,
-        memo_result_invalidate,
-    )
-
-    def run_once(name: str) -> tuple[float, bool]:
-        h0 = memo_result_hit_count()
+    def run_once(name: str) -> float:
         t0 = time.time()
         # noop sink: full computation of every column, zero driver
         # transfer (count() would let Catalyst prune projections)
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = round(time.time() - t0, 3)
-        return dt, memo_result_hit_count() > h0
+        return round(time.time() - t0, 3)
 
-    # Whole-RESULT memos (memo_result) are cleared at the START of
-    # each pass (ADVICE r5): without this, pass 2 of a result-memoized
-    # gate returns the pass-1 frame without re-running the fixpoint or
-    # plan construction, and min-of-passes measures cache-read, not
-    # dataflow.  Pass-scoped clearing keeps CROSS-QUERY sharing within
-    # a pass (lpa→modularity, components→representatives — exactly
-    # what a long-lived production driver serving the whole catalog
-    # would do) while guaranteeing the same query never serves ITSELF
-    # from memo across passes.  `memo_served` reports queries whose
-    # timing benefited from a sibling's memo this way.
+    # Every call computes from its input (the engine keeps no
+    # cross-call memo), so each pass measures the full computation.
     passes: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    memoed: dict[str, list[bool]] = {n: [] for n in HEADLINE}
     for rnd in (1, 2):
-        memo_result_invalidate("")
         for name in HEADLINE:
-            dt, hit = run_once(name)
+            dt = run_once(name)
             passes[name].append(dt)
-            memoed[name].append(hit)
             print(f"[pass {rnd}] {name} took: {dt:.3f} seconds", file=sys.stderr)
     timings: dict[str, float] = {}
-    memo_served: list[str] = []
     for name, ts in passes.items():
-        # sibling-shared memo reads within a pass are legitimate
-        # production timings (see above) — the headline is the plain
-        # min; memo_served records which queries benefited
-        if any(memoed[name]):
-            memo_served.append(name)
         best = min(ts)
         # wildly disagreeing passes = the host stole CPU mid-run;
-        # take one tie-breaker measurement.  Memos are cleared first
-        # so the re-run cannot serve ITSELF from a prior pass's entry
-        # (it pays the family-leader cost — a conservative sample).
+        # take one tie-breaker measurement
         if max(ts) > 2 * best + 0.5:
-            memo_result_invalidate("")
-            extra, hit = run_once(name)
+            extra = run_once(name)
             print(f"[pass 3] {name} took: {extra:.3f} seconds", file=sys.stderr)
             passes[name].append(extra)
-            memoed[name].append(hit)
             best = min(best, extra)
         timings[name] = best
 
-    # Cold vs warm split for the composite gates (training / iterative
-    # memoization): pass 1 pays quantizer training + fixpoint runs that
-    # memo_persist/trained_centroids serve from cache in a long-lived
-    # driver — the production shape.  cold = pass 1, warm = best later
-    # pass; reported per query so the memo benefit is bench-visible.
-    # For queries in memo_served the HEADLINE entry is min(ts), which
-    # for a gate served from a sibling's whole-result memo in every
-    # pass is a cache-READ time, not a standalone compute cost (the
-    # family leader pays the compute inside its own timed region each
-    # pass; the TOTAL therefore stays honest).  The per-gate standalone
-    # cost for those gates lives in the `cold` map — do not read a
-    # memo_served gate's headline number as its isolated price
-    # (VERDICT r12 item 3).
+    # cold = pass 1 (adds first-use codegen and, on a fresh codebook
+    # store, the PQ trainings later passes load), warm = best later
+    # pass.
     cold = {n: ts[0] for n, ts in passes.items()}
     warm = {n: min(ts[1:]) for n, ts in passes.items()}
 
@@ -496,11 +458,9 @@ def main() -> None:
     )
     # VERDICT r9 item 8: the full cold/warm maps above are truncated
     # out of the driver's ~2 KB tail — so the 10 largest COLD times
-    # ride inside the tail too.  These are the memo-family gates
-    # (ANN training, KN bigram table, fixpoint edges) whose headline
-    # min-of-passes is the warm production shape; cold_slowest keeps
-    # the first-computation cost visible in every BENCH_rN artifact
-    # so nobody mistakes warm for cold.
+    # ride inside the tail too: cold_slowest keeps the first-pass cost
+    # visible in every BENCH_rN artifact next to the min-of-passes
+    # headline.
     cold_slowest = dict(
         sorted(cold.items(), key=lambda kv: -kv[1])[:10]
     )
@@ -512,7 +472,6 @@ def main() -> None:
         "queries": timings,
         "cold": cold,
         "warm": warm,
-        "memo_served": sorted(memo_served),
         "slowest": slowest,
         "cold_slowest": cold_slowest,
         "unit": "sec",

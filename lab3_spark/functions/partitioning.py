@@ -51,9 +51,12 @@ _PERSISTED_LATEST: dict[str, DataFrame] = {}
 
 
 def persist_latest(key: str, df: DataFrame) -> DataFrame:
-    """``persist()`` with bounded growth: drops the PREVIOUS frame
-    cached under ``key`` first, so repeated invocations of an operator
-    hold at most one cached copy per session.  Plain per-call persists
+    """``persist()`` for a frame the current call reads more than once
+    (fan-out), with bounded growth: drops the PREVIOUS frame cached
+    under ``key`` first, so repeated invocations of an operator hold at
+    most one cached copy per session.  A later call never reads the
+    earlier call's frame — every call persists the frame it builds and
+    computes from its own input.  Plain per-call persists
     accumulate in Spark's CacheManager until explicitly unpersisted —
     the round-3 review measured them as a slow storage-memory leak in
     a long-lived session running the catalog repeatedly.
@@ -81,43 +84,6 @@ def persist_latest(key: str, df: DataFrame) -> DataFrame:
             pass  # session may be stopped/replaced; nothing to free
     _PERSISTED_LATEST[key] = df
     return df.persist()
-
-
-def memo_persist(key: str, df: DataFrame) -> DataFrame:
-    """Bounded cross-invocation MEMOIZATION: if the frame registered
-    under ``key`` has the same canonical analyzed plan as ``df``
-    (Catalyst ``sameResult`` — the exact predicate Spark's own cache
-    lookup uses to substitute InMemoryRelations), return the cached
-    frame and recompute NOTHING; otherwise retire the old entry and
-    persist ``df``.
-
-    This is the legitimate half of a behavior round 4 found by
-    accident: connected_components' per-iteration ``unpersist()`` was
-    a silent no-op (it targeted a Project OVER the persisted plan, not
-    the plan itself), so iteration caches leaked — and repeat runs
-    then cache-HIT those leaked entries via sameResult matching,
-    making warm runs ~4× faster.  The leak was unbounded growth; the
-    reuse was real memoization of a deterministic plan.  memo_persist
-    keeps the reuse and bounds the growth to one entry per key:
-    same input (same plan) → hit; different input (new sf_dir, new
-    source data path) → structural mismatch → replace.
-
-    Caveat shared with all Spark caching: a hit serves the data as of
-    materialization — if the underlying FILES mutate under an
-    unchanged path, the cache is stale (testdata is immutable; a real
-    deployment keys datasets by snapshot/version path)."""
-    prev = _PERSISTED_LATEST.get(key)
-    if prev is not None:
-        try:
-            if (
-                prev._jdf.queryExecution()
-                .analyzed()
-                .sameResult(df._jdf.queryExecution().analyzed())
-            ):
-                return prev
-        except Exception:
-            pass  # stale/stopped session — fall through to replace
-    return persist_latest(key, df)
 
 
 _RETIRED_LATEST: dict[str, DataFrame] = {}
@@ -149,65 +115,16 @@ def retire_latest(key: str, df: DataFrame) -> DataFrame:
     return df
 
 
-_RESULT_MEMO: dict[str, tuple[DataFrame, DataFrame]] = {}
-
-# monotone count of memo_result cache hits — bench.py samples it
-# around each run to tell "re-computed" from "served from memo" (a
-# memo-served pass measures cache-read time, not the computation, and
-# must not be the headline number)
-_RESULT_MEMO_HITS = 0
+def memo_result_invalidate(prefix: str) -> None:
+    """No-op.  The engine keeps no cross-call result memo; this name and
+    :func:`memo_result_hit_count` stay only because ``perfbench/``
+    imports them, until the next benchmark change drops that import.
+    Nothing else may call either."""
 
 
 def memo_result_hit_count() -> int:
-    return _RESULT_MEMO_HITS
-
-
-def memo_result(key: str, input_df: DataFrame, build) -> DataFrame:
-    """Input-keyed RESULT memo for driver-looped iterative operators.
-
-    `memo_persist` can only serve frames whose PLAN recurs — but an
-    iterative fixpoint (connected components, PageRank, Lloyd) does
-    its work driver-side DURING construction (per-iteration count()
-    jobs), so by the time the output plan exists the cost is already
-    paid.  This memo keys on the INPUT plan instead: if ``input_df``
-    is `sameResult`-equal to the previous call's input under ``key``,
-    the previous RESULT frame is returned and the loop never runs —
-    the long-lived-driver warm path for composite gates.  One entry
-    per key (bounded); a different input replaces it.
-
-    The cached result may be checkpoint-backed; it stays valid
-    because replacement happens only when a new result supersedes it
-    (and `retire_prefix` frees the old checkpoints in the same
-    build).  Same single-driver assumption as the other registries."""
-    prev = _RESULT_MEMO.get(key)
-    if prev is not None:
-        try:
-            if (
-                prev[0]._jdf.queryExecution()
-                .analyzed()
-                .sameResult(input_df._jdf.queryExecution().analyzed())
-            ):
-                global _RESULT_MEMO_HITS
-                _RESULT_MEMO_HITS += 1
-                return prev[1]
-        except Exception:
-            pass  # stale/stopped session — fall through to rebuild
-    result = build()
-    _RESULT_MEMO[key] = (input_df, result)
-    return result
-
-
-def memo_result_invalidate(prefix: str) -> None:
-    """Drop every result-memo entry whose key starts with ``prefix``.
-
-    An operator family that frees shared backing state when it
-    rebuilds (components: retire_prefix over checkpoints, replaced
-    iteration persists) must invalidate ALL its result entries at
-    rebuild time — a sibling entry under a different parameter key
-    could otherwise outlive the checkpoints its lineage is rooted at
-    and raise on recompute."""
-    for k in [k for k in _RESULT_MEMO if k.startswith(prefix)]:
-        _RESULT_MEMO.pop(k, None)
+    """Always 0 — see :func:`memo_result_invalidate`."""
+    return 0
 
 
 def retire_prefix(prefix: str) -> None:
@@ -216,7 +133,7 @@ def retire_prefix(prefix: str) -> None:
     several checkpoint frames per run (one per CHECKPOINT_EVERY
     rounds).  Freeing at the NEXT call's entry instead of mid-run
     keeps two invariants the mid-run single-key form broke (round-4
-    advice): (a) memo-persisted per-iteration frames whose lineage is
+    advice): (a) persisted per-iteration frames whose lineage is
     rooted at an earlier checkpoint stay recomputable for the whole
     run, and (b) the frame returned to the caller — possibly
     checkpoint-backed — stays valid until the operator is invoked

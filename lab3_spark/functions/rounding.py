@@ -24,8 +24,3 @@ from pyspark.sql import functions as F
 def trunc(col: Column, digits: int = 4) -> Column:
     p = 10**digits
     return F.floor(col * p) / p
-
-
-def duck_trunc(expr: str, digits: int = 4) -> str:
-    p = 10**digits
-    return f"floor(({expr}) * {p}) / {p}"

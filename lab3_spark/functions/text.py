@@ -102,9 +102,3 @@ def duckdb_hex_to_long(expr: str) -> str:
         "c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), "
         "(a, b) -> a * 16 + b)"
     )
-
-
-def duckdb_md5_long(expr: str, salt: str | None = None) -> str:
-    """DuckDB SQL fragment mirroring :func:`md5_long`."""
-    inner = expr if salt is None else f"concat('{salt}', '|', {expr})"
-    return duckdb_hex_to_long(f"substr(md5({inner}), 1, 15)")

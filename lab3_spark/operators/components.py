@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CHECKPOINT_EVERY = 4
-# rounds per convergence check — see the batching note in _cc_fixpoint
+# rounds per convergence check — see the batching note in connected_components
 CHECK_EVERY = 2
 
 
@@ -60,63 +60,29 @@ def connected_components(
 
     Exact fixpoint: terminates when an iteration changes no label, or
     raises after `max_iter` (never silently returns a half-converged
-    labeling).
-
-    Warm path: the whole fixpoint is behind an INPUT-keyed result
-    memo (`memo_result`) — the per-iteration count() jobs run driver-
-    side during construction, so plan-level memoization cannot skip
-    them; keying on the input edge frame can.  A repeat call over the
-    same input returns the previous labels frame without looping —
-    the long-lived-driver shape the composite gates bench under."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    und_input = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    # parameters are part of the key: same edges under different
-    # shortcut/max_iter settings are DIFFERENT computations (tests
-    # exercise both); only the input frame is plan-compared
-    return memo_result(
-        f"components.result.mi{max_iter}.sc{int(shortcut)}.sa{shortcut_after}",
-        und_input,
-        lambda: _cc_fixpoint(und_input, max_iter, shortcut, shortcut_after),
-    )
-
-
-def _cc_fixpoint(
-    und_input: DataFrame, max_iter: int, shortcut: bool, shortcut_after: int
-) -> DataFrame:
-    # every persisted frame goes through memo_persist: ONE bounded
-    # registry entry per key, and a repeat run over the SAME input
-    # cache-hits every iteration (sameResult plan match) instead of
-    # recomputing the fixpoint — deterministic-plan memoization, the
-    # bounded version of what round 3's silently-no-op per-iteration
-    # unpersist provided by leaking (see functions/partitioning.py)
+    labeling)."""
     from lab3_spark.functions.partitioning import (
-        memo_persist,
-        memo_result_invalidate,
+        persist_latest,
         retire_latest,
         retire_prefix,
     )
 
     # Free the PREVIOUS run's checkpoint frames at entry (not mid-run):
     # a checkpoint-backed result returned to a caller stays valid until
-    # the next rebuild (round-4 advice: mid-run single-key retirement
-    # freed an RDD other cached frames were rooted at).  Every cached
-    # components result — including sibling parameter keys — may be
-    # rooted at those checkpoints, so the whole result-memo family is
-    # invalidated before they are freed.
-    memo_result_invalidate("components.result.")
+    # the next call (round-4 advice: mid-run single-key retirement
+    # freed an RDD other cached frames were rooted at).
     retire_prefix("components.ckpt")
 
-    und = und_input
+    und = edges.select(
+        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    )
     # hash-partitioned by the probe key ONCE before caching
     # (optimization round 12, guide §2.4): every iteration joins
     # und.b == labels.node, so the cached layout means only the
     # node-scale label table moves per round — un-partitioned, the
     # edge table (the heavy side at 100 TB) re-shuffled every round.
     par = und.sparkSession.sparkContext.defaultParallelism
-    und = memo_persist(
+    und = persist_latest(
         "components.und",
         und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -124,7 +90,7 @@ def _cc_fixpoint(
         .sortWithinPartitions("b"),
     )
 
-    labels = memo_persist(
+    labels = persist_latest(
         "components.labels0",
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -134,9 +100,8 @@ def _cc_fixpoint(
     # Convergence is checked every CHECK_EVERY rounds, not every round
     # (optimization round 13, VERDICT r12 item 5): the per-round count
     # was the materializing action, and each one paid a full job
-    # schedule plus a memo_persist plan comparison.  The check itself
-    # is unchanged — "did the LAST executed round change any label"
-    # (the propagation step is a deterministic function T; T(L) = L
+    # schedule plus a persist.  The check itself is unchanged — "did
+    # the LAST executed round change any label" (the propagation step is a deterministic function T; T(L) = L
     # means L is the fixpoint regardless of what earlier rounds in the
     # batch did) — so the returned labeling is IDENTICAL to the
     # check-every-round form and convergence is detected at the same
@@ -187,10 +152,9 @@ def _cc_fixpoint(
             "node", "comp", (F.col("comp") < F.col("comp0")).alias("_chg")
         )
         if it % CHECKPOINT_EVERY == 0:
-            # a checkpoint truncates lineage to a fresh LogicalRDD, so
-            # it can never memo-match a later call — register it under
-            # a PER-ITERATION key and let the NEXT call's entry
-            # retire_prefix free the whole set.  Bound: at most
+            # register the checkpoint under a PER-ITERATION key and
+            # let the NEXT call's entry retire_prefix free the whole
+            # set.  Bound: at most
             # max_iter/CHECKPOINT_EVERY label-scale checkpoint RDDs
             # pinned between calls; freeing them mid-run instead would
             # invalidate cached frames rooted at them (round-4 advice).
@@ -198,12 +162,10 @@ def _cc_fixpoint(
                 f"components.ckpt.{it}", new_labels.localCheckpoint(eager=True)
             )
         else:
-            # per-batch memo keys are deliberate: a warm repeat run
-            # cache-hits every batch's label frame (measured ~4×).
             # Bound: #batches × label-scale (node, comp) rows — for
             # the O(log d) pointer-doubled convergence this is a handful
             # of frames, each ≪ corpus size.
-            new_labels = memo_persist(f"components.iter{it}", new_labels)
+            new_labels = persist_latest(f"components.iter{it}", new_labels)
         changed = new_labels.where(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
         if changed == 0:
@@ -258,9 +220,9 @@ def triangle_stats(
     triangle output.  clustering = 2·tri / (deg·(deg−1)), exact
     integers into one truncated double — cross-engine stable.
     """
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    e = memo_persist(
+    e = persist_latest(
         "components.triangle_edges",
         pairs.select(F.col(a).alias("x"), F.col(b).alias("y")),
     )
@@ -270,7 +232,7 @@ def triangle_stats(
         .groupBy("node")
         .agg(F.count("*").cast("bigint").alias("degree"))
     )
-    o = memo_persist("components.triangle_oriented", _oriented(e, deg))
+    o = persist_latest("components.triangle_oriented", _oriented(e, deg))
     o1 = o.select("u", "v", F.col("dv").alias("_d1"))
     o2 = o.select("u", F.col("v").alias("w"), F.col("dv").alias("_d2"))
     wedges = o1.join(o2, "u").where(
@@ -347,12 +309,10 @@ def label_propagation(
             )
             .select("node", (-F.col("m.nl")).alias("label"))
         )
-    # the LPA and modularity gates share this exact frame —
-    # memo_persist (bounded, sameResult-matched) makes the second
-    # consumer reuse one propagation instead of re-running the chain
-    from lab3_spark.functions.partitioning import memo_persist
+    # community_modularity joins the labels three times
+    from lab3_spark.functions.partitioning import persist_latest
 
-    return memo_persist(f"components.lpa_i{n_iter}", labels)
+    return persist_latest(f"components.lpa_i{n_iter}", labels)
 
 
 def community_modularity(

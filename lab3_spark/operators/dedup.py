@@ -260,7 +260,7 @@ def exact_substring_spans(
     (pos − row_number) to maximal runs.  The islands window is
     per-document — bounded by document length, the per-entity window
     class (sessionize, rolling revenue) — never corpus-wide."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.operators.textstats import _word_ngrams
 
     # cached gram-partitioned (optimization round 13, guide §2.4 —
@@ -269,7 +269,7 @@ def exact_substring_spans(
     # gram removes BOTH downstream gram exchanges — before, the probe
     # side re-shuffled the full positional stream every action
     par = documents.sparkSession.sparkContext.defaultParallelism
-    grams = memo_persist(
+    grams = persist_latest(
         f"dedup.exact_substring_spans.grams.{n}",
         spread(documents)
         .select(
@@ -888,19 +888,13 @@ def minhash_candidates(
     degenerate-bucket guard: a bucket of B near-identical docs still
     yields B²/2 pairs, so buckets larger than the cap are dropped (at
     100 TB such buckets are handled separately — usually by exact-dedup
-    first, which collapses identical docs before LSH runs).
-
-    Warm path: result-memoized on the input frame — six gates (lsh,
-    jaccard, containment, clusters, representatives, agreement) call
-    this; the per-call plan construction is pure overhead after the
-    first."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"dedup.minhash_cand.{text_col}.b{max_bucket}",
-        documents,
-        lambda: _minhash_candidates_build(documents, text_col, max_bucket),
-    )
+    first, which collapses identical docs before LSH runs)."""
+    bands = minhash_band_keys(documents, text_col)
+    return _bucket_pairs(bands, ("doc_id",), max_bucket).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        "n_bands",
+    ).orderBy("doc_a", "doc_b")
 
 
 def minhash_band_keys(
@@ -915,17 +909,6 @@ def minhash_band_keys(
     (`paragraph_minhash_duplicates`, key_cols=(doc_id, para_idx))."""
     sig = minhash_signatures(documents, text_col, key_cols=key_cols)
     return _band_rows(sig, key_cols, N_BANDS, ROWS_PER_BAND)
-
-
-def _minhash_candidates_build(
-    documents: DataFrame, text_col: str, max_bucket: int | None
-) -> DataFrame:
-    bands = minhash_band_keys(documents, text_col)
-    return _bucket_pairs(bands, ("doc_id",), max_bucket).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        "n_bands",
-    ).orderBy("doc_a", "doc_b")
 
 
 def paragraph_frame(
@@ -1009,30 +992,7 @@ def paragraph_minhash_duplicates(
     boilerplate is dedup-worthy); the pair order is
     lexicographic on (doc_id, para_idx).  Paragraphs shorter than
     SHINGLE_N tokens have no shingle and drop out, exactly as
-    sub-shingle documents do at doc grain.
-
-    Warm path: result-memoized on the input frame (the
-    minhash_candidates pattern) — the pair gate and the APPLY capstone
-    (:func:`apply_paragraph_dedup`) share one candidate computation."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"dedup.para_minhash.{text_col}.{delimiter!r}.{block_tokens}"
-        f".b{max_bucket}",
-        documents,
-        lambda: _paragraph_minhash_build(
-            documents, text_col, delimiter, block_tokens, max_bucket
-        ),
-    )
-
-
-def _paragraph_minhash_build(
-    documents: DataFrame,
-    text_col: str,
-    delimiter: str | None,
-    block_tokens: int | None,
-    max_bucket: int | None,
-) -> DataFrame:
+    sub-shingle documents do at doc grain."""
     paras = paragraph_frame(
         documents, text_col, delimiter=delimiter, block_tokens=block_tokens
     )
@@ -1162,11 +1122,11 @@ def ngram_jaccard_pairs(
     the persist the DAG re-shingles the corpus per use.  Candidate
     generation hashes its signatures straight from the documents in
     one per-row pass and needs no shingle rows.  Cached via
-    ``memo_persist`` so repeated catalog runs in one session hold at
-    most one shingle frame (CacheManager entries are never GC'd)."""
-    from lab3_spark.functions.partitioning import memo_persist
+    ``persist_latest`` so repeated calls in one session hold at most
+    one shingle frame (CacheManager entries are never GC'd)."""
+    from lab3_spark.functions.partitioning import persist_latest
 
-    sh = memo_persist(
+    sh = persist_latest(
         "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
     )
     cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
@@ -1197,13 +1157,12 @@ def ngram_jaccard_pairs(
             F.col("n_a").cast("bigint").alias("n_a"),
             F.col("n_b").cast("bigint").alias("n_b"),
         ]
-    # the VERIFIED pair list itself is memoized (keyed by params, one
-    # entry each): four catalog consumers share the default-threshold
-    # list (near-dup view, cross-source linkage, split-leakage audit,
-    # train decontamination) — without this each re-runs the whole
-    # candidate→verify stage.  Memo sits BEFORE the orderBy so
-    # consumers that join/regroup don't inherit a wasted sort.
-    pairs = memo_persist(
+    # the VERIFIED pair list is persisted (keyed by params, one entry
+    # each): the orderBy below reads it twice (range sampling + result)
+    # and consumers that join/regroup read it again.  The persist sits
+    # BEFORE the orderBy so those consumers don't inherit a wasted
+    # sort.
+    pairs = persist_latest(
         f"dedup.ngram_jaccard.pairs.{min_jaccard}.{int(keep_counts)}",
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -1691,36 +1650,16 @@ def simhash_near_pairs(
     hot join task; buckets above the cap are dropped (at 100 TB such
     masses are collapsed by exact dedup BEFORE near-dup runs).
 
-    The signature frame is persisted (bounded, memo_persist) before
+    The signature frame is persisted (bounded, persist_latest) before
     the self-join: Spark plans the two join sides as independent
     subtrees (no ReusedExchange materializes here — measured r4), so
     without the persist the whole tokenize→md5→bit-sum scan runs
     TWICE.  The persisted frame is 16 bytes/doc — at 100 TB corpus
     scale the signature table is ~GBs, exactly what you'd checkpoint
-    between dedup stages anyway.
+    between dedup stages anyway."""
+    from lab3_spark.functions.partitioning import persist_latest
 
-    Result-memoized on the input frame (several gates call this; the
-    Arrow-kernel + chunk-expression construction is the warm cost)."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"dedup.simhash_pairs.{text_col}.h{max_hamming}.b{max_bucket}",
-        documents,
-        lambda: _simhash_near_pairs_build(
-            documents, text_col, max_hamming, max_bucket
-        ),
-    )
-
-
-def _simhash_near_pairs_build(
-    documents: DataFrame,
-    text_col: str,
-    max_hamming: int,
-    max_bucket: int | None,
-) -> DataFrame:
-    from lab3_spark.functions.partitioning import memo_persist
-
-    sig = memo_persist(
+    sig = persist_latest(
         "dedup.simhash.signatures", simhash_signatures(documents, text_col)
     )
     chunks = sig.select(
@@ -1848,7 +1787,7 @@ def containment_pairs(
     the threshold.
 
     Same scale shape as the Jaccard verify: the shingle scan is
-    computed once (memo_persist, shared by both verify sides),
+    computed once (persist_latest, shared by both verify sides),
     candidates come from the banded LSH buckets (never all-pairs), and
     the intersection is a shingle equi-join on candidate pairs only.
     Ratios are exact-integer numerator/denominator with one final
@@ -1865,9 +1804,9 @@ def containment_pairs(
     Reference parity note: no similarity ops in the reference
     (Phoenix++, include/map_reduce.h) — SURVEY §2.9 extension row.
     """
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    sh = memo_persist(
+    sh = persist_latest(
         "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
     )
     cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
@@ -2218,9 +2157,9 @@ def ppjoin_pairs(
     similarity join.  A bucket cap is deliberately NOT offered: it
     would silently void the completeness theorem this operator
     exists to provide."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    sh = memo_persist(
+    sh = persist_latest(
         f"dedup.ppjoin_shingles.{text_col}",
         _doc_shingles(documents, text_col),
     )
@@ -2298,9 +2237,9 @@ def sorted_neighborhood_pairs(
     method.  Scale shape: the global sort order comes from
     rank.with_global_row_number (ranged shuffle + broadcast offsets —
     no single-partition window); neighbor pairing is an equi-join of
-    the rank frame with itself on rn+offset; the verify reuses the
-    memo-persisted shingle frame shared with the LSH family."""
-    from lab3_spark.functions.partitioning import memo_persist
+    the rank frame with itself on rn+offset; the verify joins a
+    persisted shingle frame (the LSH family's shingling)."""
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.functions.rounding import trunc
     from lab3_spark.operators.rank import with_global_row_number
 
@@ -2332,7 +2271,7 @@ def sorted_neighborhood_pairs(
         # but normalize anyway so the contract is self-evident
         .distinct()
     )
-    sh = memo_persist(
+    sh = persist_latest(
         "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -2738,7 +2677,7 @@ def lsh_band_plan(
     S-curve table is 5 bandings × 11 buckets of driver-computed exact
     ints (planner metadata, broadcast) joined against the ≤11-row
     histogram — nothing here touches corpus-scale data beyond the
-    shared candidate memo."""
+    candidate pairs the histogram is built from."""
     if not 0 <= t10 <= 10:
         raise ValueError(
             f"t10 = {t10} outside the 0..10 similarity grid — every "
@@ -2810,7 +2749,7 @@ def lsh_planned_blocking_quality(
 ) -> DataFrame:
     """(n_bands, n_rows, n_docs, n_true_pairs, n_cand_pairs, n_caught,
     pc_fp, rr_fp): the planner's chosen banding MEASURED — re-band the
-    shared MinHash signatures with :func:`lsh_band_plan`'s winning
+    MinHash signatures with :func:`lsh_band_plan`'s winning
     (b, r) and score the resulting candidate generator with the same
     pair-completeness / reduction-ratio metrics as
     :func:`blocking_quality`, so the planned and shipped bandings sit
@@ -2819,35 +2758,17 @@ def lsh_planned_blocking_quality(
 
     The winner row is a 1-row driver collect (bounded planner
     metadata — the kmeans-centroid pattern, never corpus-scale); the
-    re-banding slices the EXISTING signature arrays (one explode over
-    b* band indices, grouped on (band, band_key)) — no signature is
-    recomputed, and the candidate shape is identical to
-    minhash_candidates' at any corpus size.
-
-    Warm path: the winner collect happens during CONSTRUCTION (the
-    driver-looped class), so the whole gate sits behind the
-    input-keyed result memo; the signature frame additionally rides
-    memo_persist so a re-run after a pass-boundary result-memo flush
-    re-bands from the persisted signatures instead of recomputing the
-    16-salt signature pass."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"dedup.lsh_planned_quality.{text_col}.t{t10}",
-        documents,
-        lambda: _lsh_planned_quality_build(documents, text_col, t10),
-    )
-
-
-def _lsh_planned_quality_build(
-    documents: DataFrame, text_col: str, t10: int
-) -> DataFrame:
-    from lab3_spark.functions.partitioning import memo_persist
+    re-banding slices the signature arrays (one explode over b* band
+    indices, grouped on (band, band_key)), persisted so both metric
+    branches (candidate count and caught pairs) read one signature
+    pass, and the candidate shape is identical to
+    minhash_candidates' at any corpus size."""
+    from lab3_spark.functions.partitioning import persist_latest
 
     plan = lsh_band_plan(documents, text_col, t10)
     best = plan.where(F.col("is_best") == 1).collect()[0]
     bstar, rstar = int(best["n_bands"]), int(best["n_rows"])
-    sig = memo_persist(
+    sig = persist_latest(
         f"dedup.minhash_sig.{text_col}",
         minhash_signatures(documents, text_col),
     )

@@ -181,14 +181,14 @@ def hll_daily_merge(events: DataFrame) -> DataFrame:
 
     One shuffle (day group-by); the union of the tiny per-day sketch
     table is a broadcast scalar join.  The per-day sketch frame is
-    persisted (bounded, via ``memo_persist``) so deriving both the
+    persisted (bounded, via ``persist_latest``) so deriving both the
     per-day estimates AND the union total sketches the events scan
     once — "sketch once, union cheaply" for real, not just in prose.
     No oracle: sketch internals are engine-specific (rows-only driver
     check; the estimate-vs-exact tolerance is pinned in tests)."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    daily = memo_persist(
+    daily = persist_latest(
         "events.hll_daily",
         events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
             F.expr("hll_sketch_agg(user_id)").alias("sk")
@@ -726,9 +726,9 @@ def kmv_daily_users(events: DataFrame, k: int = 64) -> DataFrame:
     synopsis (≤ k rows/day — stored state, like the HLL sketch table);
     the all-time total re-selects the k smallest over the ≤ days·k
     union WITHOUT rescanning events.  The per-day synopsis frame is
-    memo-persisted so daily estimates and the merged total share one
+    persisted so daily estimates and the merged total share one
     events scan."""
-    from lab3_spark.functions.partitioning import memo_persist, spread
+    from lab3_spark.functions.partitioning import persist_latest, spread
     from lab3_spark.functions.text import hex_to_long
 
     hv = hex_to_long(
@@ -741,7 +741,7 @@ def kmv_daily_users(events: DataFrame, k: int = 64) -> DataFrame:
     day_hv = spread(events).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), hv.alias("hv")
     )
-    syn = memo_persist(
+    syn = persist_latest(
         f"events.kmv_daily.{k}", kmv_synopsis(day_hv, "day", "hv", k)
     )
     num = f"CAST({(k - 1) * KMV_DOMAIN} AS BIGINT)"
@@ -1432,9 +1432,9 @@ def kmv_rolling_users(
     sketch state): explode is window_days×synopsis rows — metadata
     scale — then per-target bottom-k re-select + the standard KMV
     estimator.  Correct by the same mergeability theorem as the daily
-    gate; the synopsis frame is memo-shared with kmv_daily_users
-    (same key, same plan)."""
-    from lab3_spark.functions.partitioning import memo_persist, spread
+    gate; the synopsis frame is built as in kmv_daily_users and
+    persisted under the same key."""
+    from lab3_spark.functions.partitioning import persist_latest, spread
     from lab3_spark.functions.text import hex_to_long
     from lab3_spark.operators.rank import top_n_per_key
 
@@ -1448,7 +1448,7 @@ def kmv_rolling_users(
     day_hv = spread(events).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), hv.alias("hv")
     )
-    syn = memo_persist(
+    syn = persist_latest(
         f"events.kmv_daily.{k}", kmv_synopsis(day_hv, "day", "hv", k)
     )
     observed = syn.select("day").distinct()
@@ -1746,7 +1746,7 @@ def kmv_type_overlap(
     estimate reads ≤ 3k synopsis rows — at 100 TB the per-type
     synopses are stored state and the intersection never rescans
     events.  All integer arithmetic (truncating div)."""
-    from lab3_spark.functions.partitioning import memo_persist, spread
+    from lab3_spark.functions.partitioning import persist_latest, spread
     from lab3_spark.functions.text import hex_to_long
 
     hv = hex_to_long(
@@ -1761,7 +1761,7 @@ def kmv_type_overlap(
         .where(F.col("event_type").isin(type_a, type_b))
         .select("event_type", "user_id", hv.alias("hv"))
     )
-    syn = memo_persist(
+    syn = persist_latest(
         f"events.kmv_overlap.{type_a}.{type_b}.{k}",
         kmv_synopsis(typed, "event_type", "hv", k),
     )

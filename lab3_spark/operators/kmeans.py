@@ -193,25 +193,9 @@ def kmeans_fixed(
     (LSH shares the floor(x·1e6) transform) gets silently substituted
     into THEIR plans by the cache manager, which round 3 measured as a
     cross-query plan-pollution bug.  Callers looping many more
-    iterations can persist `embeddings` themselves.
-
-    Warm path: behind the input-keyed result memo (the Lloyd jobs run
-    during construction — driver collects between iterations — so
-    only memo_result can skip a repeat training)."""
+    iterations can persist `embeddings` themselves."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"kmeans.fixed.k{k}.i{n_iter}" + (".pre" if prescaled else ""),
-        embeddings,
-        lambda: _kmeans_fixed_build(embeddings, k, n_iter, prescaled),
-    )
-
-
-def _kmeans_fixed_build(
-    embeddings: DataFrame, k: int, n_iter: int, prescaled: bool = False
-) -> DataFrame:
     xi0 = (
         F.col("embedding") if prescaled else fixed_point(F.col("embedding"))
     )
@@ -313,10 +297,6 @@ def _assign_arrow(
     )
 
 
-# entries: (input frame, (k, prescaled), n_iter, centroids)
-_CENTROID_MEMO: list[tuple[DataFrame, tuple[int, bool], int, list]] = []
-
-
 def _codebook_store_path(
     embeddings: DataFrame,
     k: int,
@@ -398,34 +378,13 @@ def trained_centroids(
 ) -> list[tuple[int, list[int]]]:
     """Train and collect the final centroids as (cl, components).
 
-    Driver-side memoized (bounded, last 4 configs): the training is a
-    deterministic pure function of (input plan, k, n_iter), and FIVE
-    catalog queries (assign / IVF / multi-probe / recall / SemDeDup)
-    need the same quantizer — retraining per query re-ran ~15 Spark
-    jobs each.  Same sameResult predicate as
-    functions.partitioning.memo_persist.
-
-    ``store_key`` additionally keys the codebook into the env-gated
-    DISK store (:func:`_codebook_store_path`): on a memory miss the
-    store is consulted before training, and a fresh training is
-    persisted for the next session.  A corrupt/unreadable artifact
-    falls through to retraining and is overwritten."""
-    for entry in _CENTROID_MEMO:
-        f, key, nn, cents = entry
-        if key == (k, prescaled) and nn == n_iter:
-            try:
-                if (
-                    f._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(embeddings._jdf.queryExecution().analyzed())
-                ):
-                    # LRU touch: move-to-back so a full catalog pass
-                    # cannot evict a config it is about to reuse
-                    _CENTROID_MEMO.remove(entry)
-                    _CENTROID_MEMO.append(entry)
-                    return cents
-            except Exception:
-                pass  # stale session — retrain
+    Every call trains (one Lloyd run, ~15 Spark jobs); a caller that
+    needs the same quantizer twice trains once and passes the list on.
+    ``store_key`` keys the codebook into the env-gated DISK store
+    (:func:`_codebook_store_path`): the store is consulted before
+    training, and a fresh training is persisted for the next session.
+    A corrupt/unreadable artifact falls through to retraining and is
+    overwritten."""
     # store_base: a PERSISTED training input (InMemoryRelation) hides
     # its file scan from inputFiles(), so derived frames pass the raw
     # base frame for key derivation; store_key must then also encode
@@ -452,8 +411,6 @@ def trained_centroids(
         except Exception:
             loaded = None  # corrupt artifact — retrain and overwrite
         if loaded:
-            _CENTROID_MEMO.append((embeddings, (k, prescaled), n_iter, loaded))
-            del _CENTROID_MEMO[:-24]
             return loaded
     bycl: dict[int, dict[int, int]] = {}
     for r in kmeans_fixed(embeddings, k, n_iter, prescaled).collect():
@@ -471,16 +428,6 @@ def trained_centroids(
         except OSError:
             pass  # store is best-effort: a read-only/full .materialized
             # must never fail the training path that just succeeded
-    _CENTROID_MEMO.append((embeddings, (k, prescaled), n_iter, cents))
-    # bound 24 with LRU touch (was 12 FIFO): a FULL catalog pass
-    # trains more than 12 distinct (input, k, n_iter, prescaled)
-    # configs, so append-order eviction dropped the PQ codebooks
-    # before the bench's second pass reached them — warm IVF-PQ paid
-    # full retraining (measured: 5.3 s warm vs 1.5 s with a live
-    # memo).  Each entry is k×d ints (~4 KB): 24 is still
-    # driver-noise, and the LRU touch keeps any actively-shared
-    # config resident regardless of how many cold configs follow.
-    del _CENTROID_MEMO[:-24]
     return cents
 
 
@@ -537,7 +484,7 @@ def ann_ivf_trained(
     (FAISS ``add`` after ``train``, public); queries see the whole
     corpus immediately.  Retraining cadence becomes an offline policy
     decision measured by the recall gates, not an ingest cost."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.functions.vectors import dot_product, unit_vector
     from lab3_spark.operators.similarity import _topk_per_query
 
@@ -549,7 +496,7 @@ def ann_ivf_trained(
         else embeddings.where(F.col("vec_id") < train_limit)
     )
     cents = trained_centroids(train, k, n_iter)
-    assigned = memo_persist(
+    assigned = persist_latest(
         f"ann_ivf_trained_assigned_t{train_limit}",
         _assign_arrow(embeddings, cents),
     )
@@ -862,7 +809,7 @@ def ann_pq_adc(
 
     PQ splits each d-dim vector into ``m`` subvectors and trains an
     independent k-codeword quantizer per subspace (the engine's own
-    `kmeans_fixed`, memoized via `trained_centroids`); a vector is
+    `kmeans_fixed`, via `trained_centroids`); a vector is
     stored as m SMALL CODES (here 2×3 bits instead of 64×32-bit
     floats — the compression that lets a 100 TB corpus's index live
     in executor memory).  Query time: compute the m×k table of exact
@@ -880,19 +827,39 @@ def ann_pq_adc(
 
     Reference parity note: no ANN in the reference (Phoenix++,
     include/map_reduce.h) — SURVEY §2.9 extension row.
-
-    Warm path: the whole gate is behind an INPUT-keyed result memo —
-    round-5 profiling put the warm floor at ~2.5 s of pure Python/
-    py4j PLAN CONSTRUCTION (hundreds of centroid literals per call),
-    not execution; reusing the constructed frame removes it.
     """
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"kmeans.pq_adc.q{n_queries}.t{topk}.m{m}.k{k}.i{n_iter}.d{dims}",
-        embeddings,
-        lambda: _pq_adc_build(embeddings, n_queries, topk, m, k, n_iter, dims),
+    codes, dts = _pq_codes_and_tables(
+        embeddings, n_queries, m, k, n_iter, dims
     )
+    # one broadcast table of all (query, code_0..code_{m-1}) distance
+    # combinations: m*k rows per query per subspace joined into k^m
+    # combos — still metadata-scale (20 queries × 64 combos here)
+    pairs = codes.join(
+        F.broadcast(dts), [f"code_{s}" for s in range(m)]
+    ).where(F.col("vec_id") != F.col("query_id"))
+    adist = sum(F.col(f"dist_{s}") for s in range(m))
+    from pyspark.sql.window import Window
+
+    ranked = pairs.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        adist.cast("bigint").alias("adist"),
+    ).withColumn(
+        "rnk",
+        F.row_number().over(
+            Window.partitionBy("query_id").orderBy(
+                F.asc("adist"), F.asc("neighbor_id")
+            )
+        ),
+    )
+    # persisted: the final orderBy's range-sampling job and its result
+    # job both read the ranked frame (one entry per (m,k,i,d,q) key)
+    from lab3_spark.functions.partitioning import persist_latest
+
+    ranked = persist_latest(
+        f"kmeans.pq_ranked_m{m}_k{k}_i{n_iter}_d{dims}_q{n_queries}", ranked
+    )
+    return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
 
 
 def _pq_codes_and_tables(
@@ -904,9 +871,8 @@ def _pq_codes_and_tables(
     dims: int,
 ) -> tuple[DataFrame, DataFrame]:
     """(codes, dts): the PQ INDEX — one m-code bigint row per corpus
-    vector (memo-shared across every PQ consumer per session) — and
-    the per-query subspace distance tables (metadata-scale,
-    broadcastable).  Factored out of the flat ADC so IVF-PQ reuses
+    vector — and the per-query subspace distance tables
+    (metadata-scale, broadcastable).  Factored out of the flat ADC so IVF-PQ reuses
     the identical codebooks/codes."""
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
@@ -940,9 +906,9 @@ def _pq_codes_and_tables(
             )
         )
         dts = dt if dts is None else dts.join(dt, "query_id")
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    codes = memo_persist(f"kmeans.pq_codes_m{m}_k{k}_i{n_iter}_d{dims}", codes)
+    codes = persist_latest(f"kmeans.pq_codes_m{m}_k{k}_i{n_iter}_d{dims}", codes)
     return codes, dts
 
 
@@ -967,13 +933,12 @@ def ann_ivf_pq(
     never raw vectors at query time.
 
     Composition of the engine's own certified parts: coarse cells =
-    `kmeans_assign` (trained Lloyd, memoized), probes =
-    `_nearest_cells_expr` (the multi-probe expression
+    `trained_centroids` + `_assign_arrow` (Lloyd, trained once per
+    call), probes = `_nearest_cells_expr` (the multi-probe expression
     `ann_ivf_probe2` gates), codes/tables = `_pq_codes_and_tables`
-    (the exact frames `ann_pq_adc` ranks with — one shared encode
-    pass per session).  This variant quantizes RAW vectors (IVF as a
-    candidate restriction); the residual-quantized refinement is the
-    documented next step.
+    (the exact frames `ann_pq_adc` ranks with).  This variant
+    quantizes RAW vectors (IVF as a candidate restriction); the
+    residual-quantized refinement is the documented next step.
 
     Scale shape: cells and codes are one narrow bigint row per corpus
     vector; the probe join touches nprobe/k of the corpus per query;
@@ -981,40 +946,10 @@ def ann_ivf_pq(
     equi-joins, zero per-pair vector folds, index memory is m codes +
     one cell id per vector.  ALL-INTEGER like the PQ family, so the
     composed DuckDB oracle matches bit-for-bit."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    key = (
-        f"kmeans.ivf_pq.q{n_queries}.t{topk}.m{m}.pk{pq_k}.pi{pq_iter}"
-        f".ck{coarse_k}.ci{coarse_iter}.d{dims}.p{nprobe}"
-    )
-    return memo_result(
-        key,
-        embeddings,
-        lambda: _ivf_pq_build(
-            embeddings, n_queries, topk, m, pq_k, pq_iter,
-            coarse_k, coarse_iter, dims, nprobe,
-        ),
-    )
-
-
-def _ivf_pq_build(
-    embeddings: DataFrame,
-    n_queries: int,
-    topk: int,
-    m: int,
-    pq_k: int,
-    pq_iter: int,
-    coarse_k: int,
-    coarse_iter: int,
-    dims: int,
-    nprobe: int,
-) -> DataFrame:
     from pyspark.sql.window import Window
 
-    cells = kmeans_assign(embeddings, coarse_k, coarse_iter).select(
-        "vec_id", "cl"
-    )
     cents = trained_centroids(embeddings, coarse_k, coarse_iter)
+    cells = _assign_arrow(embeddings, cents).select("vec_id", "cl")
     probes = (
         embeddings.where(F.col("vec_id") < n_queries)
         .select(
@@ -1104,37 +1039,9 @@ def ann_ivf_pq_residual(
     table join; the only addition is one scan-speed residual
     projection (zip_with against a k×d literal map) before training/
     encoding."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    key = (
-        f"kmeans.ivf_pq_res.q{n_queries}.t{topk}.m{m}.pk{pq_k}.pi{pq_iter}"
-        f".ck{coarse_k}.ci{coarse_iter}.d{dims}.p{nprobe}"
-    )
-    return memo_result(
-        key,
-        embeddings,
-        lambda: _ivf_pq_residual_build(
-            embeddings, n_queries, topk, m, pq_k, pq_iter,
-            coarse_k, coarse_iter, dims, nprobe,
-        ),
-    )
-
-
-def _ivf_pq_residual_build(
-    embeddings: DataFrame,
-    n_queries: int,
-    topk: int,
-    m: int,
-    pq_k: int,
-    pq_iter: int,
-    coarse_k: int,
-    coarse_iter: int,
-    dims: int,
-    nprobe: int,
-) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
@@ -1148,9 +1055,9 @@ def _ivf_pq_residual_build(
     lookup = _cent_lookup_expr(cents)
     # residual frame: one narrow (vec_id, cl, rxi) projection over the
     # assigned corpus — exact bigint xi − centroid, scan-speed
-    rx = memo_persist(
+    rx = persist_latest(
         f"kmeans.ivfpq_residuals_k{coarse_k}_i{coarse_iter}",
-        kmeans_assign(embeddings, coarse_k, coarse_iter).select(
+        _assign_arrow(embeddings, cents).select(
             "vec_id",
             "cl",
             F.zip_with(
@@ -1210,7 +1117,7 @@ def _ivf_pq_residual_build(
             F.col("dc.dist").alias(f"dist_{s}"),
         )
         dts = dt if dts is None else dts.join(dt, ["query_id", "cl"])
-    codes = memo_persist(
+    codes = persist_latest(
         f"kmeans.ivfpq_res_codes_m{m}_k{pq_k}_i{pq_iter}_d{dims}", codes
     )
     # candidates: the probe equi-join (nprobe/k of the corpus per
@@ -1241,51 +1148,6 @@ def _ivf_pq_residual_build(
     return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
 
 
-def _pq_adc_build(
-    embeddings: DataFrame,
-    n_queries: int,
-    topk: int,
-    m: int,
-    k: int,
-    n_iter: int,
-    dims: int,
-) -> DataFrame:
-    codes, dts = _pq_codes_and_tables(
-        embeddings, n_queries, m, k, n_iter, dims
-    )
-    # one broadcast table of all (query, code_0..code_{m-1}) distance
-    # combinations: m*k rows per query per subspace joined into k^m
-    # combos — still metadata-scale (20 queries × 64 combos here)
-    pairs = codes.join(
-        F.broadcast(dts), [f"code_{s}" for s in range(m)]
-    ).where(F.col("vec_id") != F.col("query_id"))
-    adist = sum(F.col(f"dist_{s}") for s in range(m))
-    from pyspark.sql.window import Window
-
-    ranked = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        adist.cast("bigint").alias("adist"),
-    ).withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.asc("adist"), F.asc("neighbor_id")
-            )
-        ),
-    )
-    # the ranked frame is IDENTICAL for every topk (the filter comes
-    # after rnk) — memo one copy per (m,k,i,d,q) so the three PQ gates
-    # (adc top-k, recall, rerank shortlist) share a single ADC pass
-    # per session instead of re-running the code join + rank each
-    from lab3_spark.functions.partitioning import memo_persist
-
-    ranked = memo_persist(
-        f"kmeans.pq_ranked_m{m}_k{k}_i{n_iter}_d{dims}_q{n_queries}", ranked
-    )
-    return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
-
-
 def ann_bruteforce_l2(
     embeddings: DataFrame, n_queries: int = 20, topk: int = 5
 ) -> DataFrame:
@@ -1296,18 +1158,6 @@ def ann_bruteforce_l2(
     anywhere).  Queries broadcast, corpus scanned once — O(Q·N) folds,
     the correct-but-unscalable baseline the quantized paths are
     measured against."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"kmeans.bf_l2.q{n_queries}.t{topk}",
-        embeddings,
-        lambda: _bf_l2_build(embeddings, n_queries, topk),
-    )
-
-
-def _bf_l2_build(
-    embeddings: DataFrame, n_queries: int, topk: int
-) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = embeddings.select("vec_id", fixed_point(F.col("embedding")).alias("xi"))
@@ -1334,11 +1184,11 @@ def _bf_l2_build(
             ),
         )
     )
-    # shared by the bruteforce gate and the recall gate's ground-truth
-    # side — one exact O(Q·N) pass per session (topk filters after)
-    from lab3_spark.functions.partitioning import memo_persist as _mp
+    # persisted like the PQ ranked frame: the final orderBy reads it
+    # twice (range sampling + result)
+    from lab3_spark.functions.partitioning import persist_latest
 
-    ranked = _mp(f"kmeans.bf_l2_ranked_q{n_queries}", ranked)
+    ranked = persist_latest(f"kmeans.bf_l2_ranked_q{n_queries}", ranked)
     return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
 
 

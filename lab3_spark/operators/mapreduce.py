@@ -63,12 +63,6 @@ def map_reduce(
     return out
 
 
-def kv_pairs(key: Column, value: Column) -> Column:
-    """Helper: build one (key, value) struct — combine into an array
-    with F.array / F.transform for multi-emit mappers."""
-    return F.struct(key.alias("key"), value.alias("value"))
-
-
 def word_count_as_mapreduce(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The reference wordCount expressed through the facade — proof the
     generic surface reproduces the concrete pipeline (SURVEY §3.1)."""

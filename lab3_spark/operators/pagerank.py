@@ -57,29 +57,7 @@ def pagerank_fixed_point(
     lets each iteration skip the nodes-left-join: the contribution agg
     already emits every node, so ``s`` is never NULL and the key set is
     exactly the node set — values identical, one join fewer per
-    iteration (optimization round 12, guide §2.4).
-
-    Warm path: the final ranks checkpoint sits behind an INPUT-keyed
-    result memo — a repeat call over the same edge frame returns the
-    previous ranks without running a single job.  A rebuild retires the
-    old ranks checkpoint, so all cached entries are invalidated first."""
-    from lab3_spark.functions.partitioning import (
-        memo_result,
-        memo_result_invalidate,
-    )
-
-    def build() -> DataFrame:
-        memo_result_invalidate("pagerank.result.")
-        return _pr_iterations(edges, n_iter, input_from_symmetrize)
-
-    return memo_result(
-        f"pagerank.result.n{n_iter}.sym{int(input_from_symmetrize)}",
-        edges,
-        build,
-    )
-
-
-def _pr_iterations(edges: DataFrame, n_iter: int, symmetric: bool) -> DataFrame:
+    iteration (optimization round 12, guide §2.4)."""
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # degree rides with the edge list from the start: one narrow join
     # now instead of a second join every iteration.  The edge table is
@@ -90,7 +68,7 @@ def _pr_iterations(edges: DataFrame, n_iter: int, symmetric: bool) -> DataFrame:
     # at 100 TB) re-shuffles n_iter times.
     from lab3_spark.functions.partitioning import (
         free_checkpoint,
-        memo_persist,
+        persist_latest,
         retire_latest,
     )
 
@@ -100,15 +78,15 @@ def _pr_iterations(edges: DataFrame, n_iter: int, symmetric: bool) -> DataFrame:
         .select("src", "dst", "deg")
         .repartition(par, "src")
     )
-    edeg = memo_persist("pagerank.edeg", edeg)
+    edeg = persist_latest("pagerank.edeg", edeg)
 
-    if symmetric:
+    if input_from_symmetrize:
         nodes = None
         ranks = edeg.select(F.col("src").alias("node")).distinct().withColumn(
             "rank_fp", F.lit(RANK_SCALE).cast("bigint")
         )
     else:
-        nodes = memo_persist(
+        nodes = persist_latest(
             "pagerank.nodes",
             edges.select(F.col("src").alias("node")).distinct(),
         )
@@ -131,7 +109,7 @@ def _pr_iterations(edges: DataFrame, n_iter: int, symmetric: bool) -> DataFrame:
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        if symmetric:
+        if input_from_symmetrize:
             ranks = summed.select("node", damp.alias("rank_fp"))
         else:
             ranks = nodes.join(summed, "node", "left").select(
@@ -180,76 +158,70 @@ def ppr_fixed_point(
     CASE base term."""
     from lab3_spark.functions.partitioning import (
         free_checkpoint,
-        memo_persist,
-        memo_result,
-        memo_result_invalidate,
+        persist_latest,
         retire_latest,
     )
 
-    def build() -> DataFrame:
-        memo_result_invalidate("pagerank.ppr_result.")
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        nodes = edges.select(F.col("src").alias("node")).distinct()
-        # hash-partition by src once before caching — the per-iteration
-        # join then moves only the node-scale rank table (guide §2.4)
-        par = edges.sparkSession.sparkContext.defaultParallelism
-        edeg = memo_persist(
-            "pagerank.ppr_edeg",
-            edges.join(deg, "src")
-            .select("src", "dst", "deg")
-            .repartition(par, "src"),
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    # hash-partition by src once before caching — the per-iteration
+    # join then moves only the node-scale rank table (guide §2.4)
+    par = edges.sparkSession.sparkContext.defaultParallelism
+    edeg = persist_latest(
+        "pagerank.ppr_edeg",
+        edges.join(deg, "src")
+        .select("src", "dst", "deg")
+        .repartition(par, "src"),
+    )
+    seeds = nodes.orderBy("node").limit(n_seeds).select(
+        "node", F.lit(1).alias("is_seed")
+    )
+    nflag = persist_latest(
+        "pagerank.ppr_nodes",
+        nodes.join(F.broadcast(seeds), "node", "left").select(
+            "node", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
+        ),
+    )
+    base = (F.col("is_seed") * F.lit(BASE_FP)).cast("bigint")
+    ranks = nflag.select(
+        "node",
+        (F.col("is_seed") * F.lit(RANK_SCALE)).cast("bigint").alias("rank_fp"),
+    )
+    prev_trunc = None
+    for it in range(n_iter):
+        summed = (
+            edeg.join(ranks, edeg.src == ranks.node)
+            .select(
+                F.col("dst").alias("node"),
+                F.expr("rank_fp div deg").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("s"))
         )
-        seeds = nodes.orderBy("node").limit(n_seeds).select(
-            "node", F.lit(1).alias("is_seed")
-        )
-        nflag = memo_persist(
-            "pagerank.ppr_nodes",
-            nodes.join(F.broadcast(seeds), "node", "left").select(
-                "node", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
-            ),
-        )
-        base = (F.col("is_seed") * F.lit(BASE_FP)).cast("bigint")
-        ranks = nflag.select(
+        ranks = nflag.join(summed, "node", "left").select(
             "node",
-            (F.col("is_seed") * F.lit(RANK_SCALE)).cast("bigint").alias("rank_fp"),
+            (
+                base
+                + F.expr(
+                    f"({DAMPING_NUM} * coalesce(s, CAST(0 AS BIGINT)))"
+                    f" div {DAMPING_DEN}"
+                )
+            )
+            .cast("bigint")
+            .alias("rank_fp"),
         )
-        prev_trunc = None
-        for it in range(n_iter):
-            summed = (
-                edeg.join(ranks, edeg.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr("rank_fp div deg").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = nflag.join(summed, "node", "left").select(
-                "node",
-                (
-                    base
-                    + F.expr(
-                        f"({DAMPING_NUM} * coalesce(s, CAST(0 AS BIGINT)))"
-                        f" div {DAMPING_DEN}"
-                    )
-                )
-                .cast("bigint")
-                .alias("rank_fp"),
-            )
-            # purely lazy loop; one eager checkpoint at the end (see
-            # _pr_iterations) — periodic truncation for long horizons,
-            # each freeing its predecessor (ADVICE r12)
-            if n_iter > 8 and (it + 1) % 8 == 0 and (it + 1) < n_iter:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev_trunc is not None:
-                    free_checkpoint(prev_trunc)
-                prev_trunc = ranks
-        final = ranks.localCheckpoint(eager=True)
-        if prev_trunc is not None:
-            free_checkpoint(prev_trunc)
-        return retire_latest("pagerank.ppr_ranks", final)
-
-    return memo_result(f"pagerank.ppr_result.n{n_iter}.s{n_seeds}", edges, build)
+        # purely lazy loop; one eager checkpoint at the end (see
+        # pagerank_fixed_point) — periodic truncation for long horizons,
+        # each freeing its predecessor (ADVICE r12)
+        if n_iter > 8 and (it + 1) % 8 == 0 and (it + 1) < n_iter:
+            ranks = ranks.localCheckpoint(eager=True)
+            if prev_trunc is not None:
+                free_checkpoint(prev_trunc)
+            prev_trunc = ranks
+    final = ranks.localCheckpoint(eager=True)
+    if prev_trunc is not None:
+        free_checkpoint(prev_trunc)
+    return retire_latest("pagerank.ppr_ranks", final)
 
 
 # 10^6 (not the rank family's 10^12): raw = Σ scores over in-edges ≤
@@ -278,18 +250,18 @@ def hits_scores(edges: DataFrame, n_iter: int = 2, k: int = 10) -> DataFrame:
     edge-scale exchanges.  Two sorted, hash-partitioned caches (one per
     probe key), built once off a shared base cache, make every round's
     join move only the node-scale score table."""
-    from lab3_spark.functions.partitioning import memo_persist, persist_latest
+    from lab3_spark.functions.partitioning import persist_latest
 
     if n_iter < 1:  # auths is only bound inside the loop
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
 
     par = edges.sparkSession.sparkContext.defaultParallelism
-    base = memo_persist("pagerank.hits.edges", edges)
-    e_src = memo_persist(
+    base = persist_latest("pagerank.hits.edges", edges)
+    e_src = persist_latest(
         "pagerank.hits.edges_src",
         base.repartition(par, "src").sortWithinPartitions("src"),
     )
-    e_dst = memo_persist(
+    e_dst = persist_latest(
         "pagerank.hits.edges_dst",
         base.repartition(par, "dst").sortWithinPartitions("dst"),
     )

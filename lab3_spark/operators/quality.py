@@ -602,11 +602,11 @@ def _logreg_feature_frame(documents: DataFrame, text_col: str) -> DataFrame:
     doubles, so ROUND (not floor) recovers the underlying integer
     exactly in both engines; n_words is capped at 1000 so one epic
     document cannot dominate the gradient."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.operators.textstats import gopher_quality
 
     g = gopher_quality(documents, text_col)
-    return memo_persist(
+    return persist_latest(
         "quality.logreg.features",
         g.select(
             "doc_id",

@@ -309,9 +309,9 @@ def keyed_quantile_check(
     (merged from stored digest rows, never rescanning) checked against
     exact counts, the kll_daily_quantile_check contract with the key
     abstracted."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    digests = memo_persist(
+    digests = persist_latest(
         "qdigest.keyed." + "|".join(sorted(c for c in vals.columns)),
         keyed_value_digest(vals, eps),
     )
@@ -416,10 +416,10 @@ def kll_daily_quantile_check(
     digests (the streaming store, streaming/quantiles.py) — the gate
     then value-checks the INCREMENTAL merge path against the same
     exact counts."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     if daily is None:
-        daily = memo_persist(
+        daily = persist_latest(
             "events.qdigest_daily",
             daily_value_digest(events, value_col, eps),
         )

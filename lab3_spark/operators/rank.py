@@ -64,16 +64,22 @@ def _ranged_frame(
     per-partition metadata aggregate and the final broadcast join, and
     must not be recomputed — the range partitioner would re-sample),
     via the bounded ``persist_latest`` registry: at most one ranged
-    frame stays cached per ``memo_key`` per session.
+    frame stays cached per ``memo_key``.
 
-    Deliberately NOT ``memo_persist``: round 5's drift attribution
-    measured cross-run cache reuse of the ranged frame as a net LOSS
-    at bench scale (~+0.2-0.3 s/run on order_total_deciles /
-    doc_length_distribution vs recomputing — the InMemoryTableScan
-    read path costs more than the small re-shuffle it saves, while the
-    memo's own bookkeeping is negligible).  The within-call persist is
-    the part that matters at every scale; recomputing one ranged
-    shuffle per invocation is the honest price of a fresh query.
+    Each call ranks afresh; no call reads a frame an earlier call
+    persisted.  That is also the measured choice: round 5's drift
+    attribution found cross-run reuse of the ranged frame a net LOSS at
+    bench scale (~+0.2-0.3 s/run on order_total_deciles /
+    doc_length_distribution — the InMemoryTableScan read path costs
+    more than the small re-shuffle it saves).  The within-call persist
+    is the part that matters at every scale.
+
+    ``memo_key`` is only the registry key.  Callers that keep the
+    default key share one slot: a second ranked frame under the same
+    key unpersists the first (and its ``.in`` input), so a plan that
+    ranks twice under one key — or reads an earlier ranked frame after
+    another rank call — recomputes it (correct, just uncached).  The
+    heavy callers pass distinct keys (ADVICE r13, low).
 
     The INPUT is also persisted (bounded, ``memo_key + ".in"``) unless
     the caller already cached it: ``repartitionByRange`` SAMPLES its

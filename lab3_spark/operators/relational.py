@@ -415,15 +415,11 @@ def brand_pair_lift(
     # Hash-partitioned and sorted by the order key before caching
     # (optimization round 12, guide §2.4): the pair self-join probes
     # both sides on that key, so the cached layout removes BOTH of the
-    # join's basket-scale exchanges and sorts.  memo_persist (not
-    # persist_latest): partitioning only PROPAGATES to the join once
-    # the cached plan is final — a per-call re-registered cache is
-    # never materialized at planning time and the planner falls back
-    # to re-shuffling both sides.
-    from lab3_spark.functions.partitioning import memo_persist
+    # join's basket-scale exchanges and sorts.
+    from lab3_spark.functions.partitioning import persist_latest
 
     par = lineitem.sparkSession.sparkContext.defaultParallelism
-    baskets = memo_persist(
+    baskets = persist_latest(
         "relational.brand_pairs.baskets",
         lineitem.join(
             F.broadcast(part),

@@ -479,8 +479,8 @@ def cluster_balanced_sample(
     every cell; `rank.top_n_per_key`'s salted two-stage ranking bounds
     every task at ~cell/n_salts rows while staying row-for-row equal
     to the single-window form (which is what the oracle runs).  The
-    quantizer is the session-memoized `kmeans_assign` — shared with
-    the whole IVF/SemDeDup gate family, no extra training."""
+    quantizer is `kmeans_assign` — the same trained cells as the
+    IVF/SemDeDup gate family."""
     from lab3_spark.operators.kmeans import kmeans_assign
     from lab3_spark.operators.rank import top_n_per_key
 
@@ -611,8 +611,8 @@ def leakage_safe_split(
     component therefore shares one hash and one split, by construction.
 
     ``candidates`` is the (doc_a, doc_b, ...) near-dup pair frame (e.g.
-    dedup.minhash_candidates) — shared with the dedup family, so the
-    expensive part is computed once per session.  Scale shape: the
+    dedup.minhash_candidates) — the dedup family's candidate
+    generator.  Scale shape: the
     component closure is the iterative min-label propagation
     (operators/components.py, bounded persists); the split itself is a
     pure per-row expression after ONE left join of documents against

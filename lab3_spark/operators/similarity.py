@@ -125,53 +125,17 @@ def _embedding_dims(embeddings: DataFrame, dims: int | None = None) -> int:
     return int(row["d"])
 
 
-def lsh_codes_pandas(embeddings: DataFrame, dims: int | None = None) -> DataFrame:
-    """(vec_id, code): the SAME integer fixed-point signature as
-    :func:`lsh_codes`, computed as an Arrow-batched numpy matmul
-    (mapInPandas) — the vectorized-Python path for wide embeddings.
-
-    Bit-identical by construction: int64 `floor(x·1e6)` matrix times
-    the int64 plane matrix is exact in numpy exactly as in the JVM
-    fold (tests pin expression == pandas).  Shape: one narrow
-    mapInPandas pass, no shuffle — dims×N_PLANES multiply-adds per row
-    run inside BLAS-grade loops instead of interpreted Catalyst HOF
-    lambdas, the trade documented in SCALE.md."""
-    import numpy as np
-    import pandas as pd
-
-    dims = _embedding_dims(embeddings, dims)
-    planes = np.array(plane_numerators(N_PLANES, dims), dtype=np.int64)  # 16×d
-    bits = (np.int64(1) << np.arange(N_PLANES, dtype=np.int64))
-
-    def batches(it):
-        for pdf in it:
-            x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            xi = np.floor(x * float(FIXED_SCALE)).astype(np.int64)
-            dots = xi @ planes.T  # n×16 exact int64
-            codes = ((dots > 0) * bits).sum(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": codes})
-
-    return (
-        spread(embeddings)
-        .select("vec_id", "embedding")
-        .mapInPandas(batches, "vec_id bigint, code bigint")
-    )
-
-
 def lsh_codes_arrow(embeddings: DataFrame, dims: int | None = None) -> DataFrame:
     """(vec_id, code): the SAME integer signature as :func:`lsh_codes`,
     via ``mapInArrow`` — the lowest-overhead Python path: RecordBatches
     cross the Arrow boundary with NO pandas materialization, the list
     column is flattened zero-copy into one numpy matrix per batch, and
-    the int64 matmul is identical to the pandas and JVM variants
-    (tests pin all three bit-equal).
+    the int64 matmul is identical to the JVM fold (tests pin both
+    against a pure-Python reference).
 
     When to choose which (SCALE.md): expression fold = no Python at
-    all (small dims); mapInPandas = convenient but pays pandas
-    boxing; mapInArrow = BLAS throughput at minimum serialization —
-    the right shape for wide embeddings at 100 TB."""
+    all (small dims); mapInArrow = BLAS throughput at minimum
+    serialization — the right shape for wide embeddings at 100 TB."""
     import numpy as np
     import pyarrow as pa
 
@@ -292,12 +256,12 @@ def lsh_bucket_sizes(embeddings: DataFrame, dims: int | None = None) -> DataFram
     """(code, n_vecs): LSH bucket histogram — the partition-balance
     diagnostic for the ANN scale path.
 
-    Uses the mapInArrow code path: all three implementations are
-    bit-identical (pinned by tests/test_similarity_impls.py), and the
-    measured ladder at sf0.1 is expression fold 2.5 s vs arrow 0.48 s
-    vs pandas 0.43 s — 16 interpreted Catalyst `aggregate` folds per
-    row lose to one BLAS matmul per Arrow batch by ~5× even at 64
-    dims, and the gap widens with dimension."""
+    Uses the mapInArrow code path: both implementations are
+    bit-identical (pinned by tests/test_arrow_python.py), and the
+    measured ladder at sf0.1 was expression fold 2.5 s vs arrow
+    0.48 s — 16 interpreted Catalyst `aggregate` folds per row lose to
+    one BLAS matmul per Arrow batch by ~5× even at 64 dims, and the
+    gap widens with dimension."""
     return (
         lsh_codes_arrow(embeddings, dims)
         .groupBy("code")
@@ -350,16 +314,6 @@ def ann_sq8(
     binary `zip_with`s against d-length literal arrays); the only
     shuffles are the d-row min/max aggregation and the final
     per-query rank."""
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"similarity.sq8.q{n_queries}.t{topk}",
-        embeddings,
-        lambda: _sq8_build(embeddings, n_queries, topk),
-    )
-
-
-def _sq8_build(embeddings: DataFrame, n_queries: int, topk: int) -> DataFrame:
     from lab3_spark.operators.kmeans import fixed_point
 
     mm = sq8_minmax(embeddings)

@@ -471,9 +471,9 @@ def pmi_collocations(
     expression is arranged with an explicit operation order —
     ln((pair·N·N)/(bi_total·cnt·cnt)) — so the DuckDB oracle computes
     bit-identical doubles, truncated to 4 decimals for the gate."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    tok_arrays = memo_persist(
+    tok_arrays = persist_latest(
         "pmi_tok_arrays",
         spread(documents).select(tokenize(text_col).alias("toks")),
     )
@@ -577,14 +577,12 @@ def unigram_surprisal(documents: DataFrame, text_col: str = "text") -> DataFrame
         )
         .orderBy("doc_id")
     )
-    # memoized: doc_unigram_logprob AND perplexity_buckets consume this
-    # exact per-doc frame (n_docs rows — cache is metadata-scale); the
-    # sameResult match means the second consumer skips both corpus
-    # passes in a warm session, and the registry stays bounded to one
-    # entry across sf dirs.
-    from lab3_spark.functions.partitioning import memo_persist
+    # persisted (n_docs rows — metadata-scale) for callers that read
+    # the per-doc frame more than once, such as perplexity_buckets'
+    # ranking; one registry entry across calls.
+    from lab3_spark.functions.partitioning import persist_latest
 
-    return memo_persist("textstats.unigram_surprisal", out)
+    return persist_latest("textstats.unigram_surprisal", out)
 
 
 def perplexity_buckets(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -659,10 +657,7 @@ def bigram_backoff_surprisal(
     combine-compressed shuffles plus the vocabulary joins, no
     broadcast of anything corpus-scaled.  Docs with < 2 tokens have no
     bigrams and no row, in both engines."""
-    from lab3_spark.functions.partitioning import (
-        memo_persist,
-        persist_latest,
-    )
+    from lab3_spark.functions.partitioning import persist_latest
 
     alpha_inv_fp = F.lit(2.5)  # 1/α, α = 0.4 exactly
     clean_ids = (
@@ -756,9 +751,9 @@ def bigram_backoff_surprisal(
         )
         .orderBy("doc_id")
     )
-    # memoized like unigram_surprisal: the logprob gate AND the bucket
-    # gate consume this exact n_docs-row frame
-    return memo_persist("textstats.bigram_backoff_surprisal", out)
+    # persisted like unigram_surprisal: the bucket gate reads this
+    # n_docs-row frame more than once
+    return persist_latest("textstats.bigram_backoff_surprisal", out)
 
 
 def bigram_ppl_buckets(
@@ -820,10 +815,7 @@ def kn_bigram_surprisal(
     Same two-shuffle scale shape as bigram_backoff_surprisal — every
     statistic is a hash agg over the clean bigram stream (type scale),
     scoring is a term-keyed equi-join."""
-    from lab3_spark.functions.partitioning import (
-        memo_persist,
-        persist_latest,
-    )
+    from lab3_spark.functions.partitioning import persist_latest
 
     clean_ids = (
         gopher_quality(documents, text_col)
@@ -849,7 +841,7 @@ def kn_bigram_surprisal(
             "doc_id", F.explode(_word_ngrams(F.col("toks"), 2)).alias("gram")
         ),
     )
-    clean_stream = memo_persist(
+    clean_stream = persist_latest(
         "textstats.kn_bigram.clean_stream",
         stream.join(clean_ids, "doc_id", "left_semi"),
     )
@@ -925,7 +917,7 @@ def kn_bigram_surprisal(
         )
         .orderBy("doc_id")
     )
-    return memo_persist("textstats.kn_bigram_surprisal", out)
+    return persist_latest("textstats.kn_bigram_surprisal", out)
 
 
 def bigram_ppl_filter_by_source(
@@ -1021,30 +1013,7 @@ def sparse_tfidf_pairs(
 
     Reference parity note: no similarity join exists in the reference
     (Phoenix++, include/map_reduce.h) — SURVEY §2.9 extension row.
-
-    Result-memoized on the input frame (the memo_result rung): warm
-    cost was plan construction + the pair join re-planning, not new
-    physical work.
     """
-    from lab3_spark.functions.partitioning import memo_result
-
-    return memo_result(
-        f"textstats.tfidf_pairs.{text_col}.c{min_cosine}"
-        f".f{max_df_frac}.a{max_df_abs}",
-        documents,
-        lambda: _sparse_tfidf_pairs_build(
-            documents, text_col, min_cosine, max_df_frac, max_df_abs
-        ),
-    )
-
-
-def _sparse_tfidf_pairs_build(
-    documents: DataFrame,
-    text_col: str,
-    min_cosine: float,
-    max_df_frac: float,
-    max_df_abs: int,
-) -> DataFrame:
     toks = tokenize(text_col)
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - 2),
@@ -1096,13 +1065,13 @@ def _sparse_tfidf_pairs_build(
             .alias("idf_fp"),
         )
     )
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     # the pruned weight frame feeds THREE consumers (ssq, both pair
     # sides) — without the persist the tokenize→shingle→tf scan runs
     # 3×; post-pruning it is the compact inverted index, the right
     # frame to hold (the ngram_jaccard shared-shingle pattern)
-    w = memo_persist(
+    w = persist_latest(
         "textstats.sparse_tfidf.w",
         tf.join(idf, "term").select(
             "term", "doc_id", (F.col("tf") * F.col("idf_fp")).alias("w")
@@ -1230,12 +1199,12 @@ def dsir_log_ratio_weights(
         )
         .orderBy("doc_id")
     )
-    # memoized: the weights gate AND the selection capstone consume
-    # this exact per-doc frame — the unigram_surprisal recipe (one
-    # two-pass LM fit per warm session, n_docs-row cache, bounded).
-    from lab3_spark.functions.partitioning import memo_persist
+    # persisted for consumers that read this per-doc frame more than
+    # once (a final orderBy samples its input, then reads it again) —
+    # the unigram_surprisal recipe (n_docs-row cache, bounded).
+    from lab3_spark.functions.partitioning import persist_latest
 
-    return memo_persist("textstats.dsir_weights", out)
+    return persist_latest("textstats.dsir_weights", out)
 
 
 def robust_quality_zscore(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1261,14 +1230,14 @@ def robust_quality_zscore(documents: DataFrame, text_col: str = "text") -> DataF
     """
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.functions.rounding import trunc
 
     # the scored frame feeds four branches (median rank pass + its
     # counts, the med join, the MAD rank pass) — without a persist the
     # tokenize+quality scan re-executes per branch (the shared-scan
     # convention: ngram_jaccard/sparse_tfidf do the same)
-    q = memo_persist(
+    q = persist_latest(
         "textstats.robust_zscore.q",
         spread(documents).select(
             "doc_id",
@@ -1347,14 +1316,14 @@ def bigram_surprisal(documents: DataFrame, text_col: str = "text") -> DataFrame:
     broadcast, the honest cost of a conditional model; the unigram
     form remains the broadcast-cheap variant.
     """
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     toks = tokenize(text_col)
     grams = spread(documents).where(F.size(toks) >= 2).select(
         "doc_id",
         F.explode(_word_ngrams(toks, 2)).alias("bg"),
     )
-    bg_counts = memo_persist(
+    bg_counts = persist_latest(
         "textstats.bigram_counts",
         grams.groupBy("bg").agg(F.count("*").alias("cnt_bg")).withColumn(
             "w1", F.split("bg", " ")[0]
@@ -1723,9 +1692,9 @@ def winnowing_fingerprints(
         (F.col("idx") <= F.col("_m") - WINNOW_W)
         | ((F.col("_m") < WINNOW_W) & (F.col("idx") == 0))
     )
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
-    return memo_persist(
+    return persist_latest(
         "textstats.winnow_fps",
         fps.select("doc_id", F.col("winmin").cast("bigint").alias("fp"))
         .distinct(),
@@ -1750,9 +1719,8 @@ def winnowing_candidates(
     run shared by thousands of docs would contribute O(bucket²)
     pairs; dropping it costs only candidates that other, rarer shared
     runs still surface — the same symmetric cap the MinHash/SimHash
-    joins carry).  The fingerprint frame is the memo-persisted scan
-    `doc_winnowing_fingerprints` already materializes — one winnowing
-    pass per session feeds both gates."""
+    joins carry).  The fingerprint frame is persisted, so the bucket
+    count and both join sides read one winnowing pass."""
     fps = winnowing_fingerprints(documents, text_col)
     ok = (
         fps.groupBy("fp")
@@ -2339,8 +2307,9 @@ def bpe_merges(
     Identical `replace` semantics in Spark and DuckDB — the oracle
     runs the same algorithm.  Pinned against a pure-Python greedy
     reference in tests, pathological same-char runs included.  Each
-    round's frame is memo-persisted under a per-iteration key (the
-    components.py discipline): warm repeat runs cache-hit every round.
+    round's frame is persisted under a per-iteration key (the
+    components.py discipline), so the next round's pair count and
+    merge read it without re-running the earlier rounds.
 
     Ties break (cnt DESC, pair ASC) — deterministic, mirrored in the
     oracle.  Stops early if no pair remains (every word fully merged).
@@ -2357,7 +2326,7 @@ def _bpe_loop(
     """The shared BPE engine behind :func:`bpe_merges` and
     :func:`bpe_apply_compression`: returns (chosen merges, the FINAL
     (wcnt, seg) segmentation frame after all of them applied)."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     words = (
         spread(documents)
@@ -2374,7 +2343,7 @@ def _bpe_loop(
     )
     rows: list[tuple[int, str, int]] = []
     for it in range(1, k + 1):
-        seg = memo_persist(f"textstats.bpe.seg_k{k}_it{it}", seg)
+        seg = persist_latest(f"textstats.bpe.seg_k{k}_it{it}", seg)
         pairs = (
             seg.select(
                 "wcnt",
@@ -2471,7 +2440,7 @@ def grouped_bpe_merges(
     A source whose words are fully merged simply stops contributing
     rows (LEFT join keeps its segmentation frozen), identically in
     both engines."""
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     spark = documents.sparkSession
     words = (
@@ -2493,7 +2462,7 @@ def grouped_bpe_merges(
     )
     out_rows: list[tuple[str, int, str, int]] = []
     for it in range(1, k + 1):
-        seg = memo_persist(f"textstats.bpe_grouped.seg_k{k}_it{it}", seg)
+        seg = persist_latest(f"textstats.bpe_grouped.seg_k{k}_it{it}", seg)
         pairs = (
             seg.select(
                 "source",
@@ -2903,7 +2872,7 @@ def substring_contamination(
             "pos", "gram"
         ),
     )
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
 
     train_grams = base.where(F.col("h") < 90).select("gram").distinct()
     # persist the 5% TEST slice: its positional grams feed both the
@@ -2911,7 +2880,7 @@ def substring_contamination(
     # each consumer re-tokenizes the corpus (the slice is 5% of token
     # occurrences, cheap to hold; the 90% train side stays one
     # straight scan into the map-side-distinct aggregate)
-    test_grams = memo_persist(
+    test_grams = persist_latest(
         "textstats.substr_contam.test_grams",
         base.where(F.col("h") >= 95).select("doc_id", "pos", "gram"),
     )

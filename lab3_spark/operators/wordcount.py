@@ -74,36 +74,6 @@ def stop_words_df(spark) -> DataFrame:
     return spark.createDataFrame([(w,) for w in STOP_WORDS], "word string")
 
 
-def word_count_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    mode: str = "idiomatic",
-    ordered: bool = True,
-) -> DataFrame:
-    """Word count with the ARROW-BATCHED byte-level tokenizer
-    (functions/arrow_text.py) in place of the JVM regex — the measured
-    alternative on the tokenize hot path.
-
-    The mapInArrow stage emits per-batch PARTIAL counts (Arrow C++
-    hash group-by inside the worker), so the Python boundary carries
-    ~vocabulary-sized batches and the downstream shuffle is the same
-    one-row-per-distinct-word-per-partition shape as the JVM partial
-    aggregate.  Identical results to :func:`word_count` on ASCII input
-    (pinned by tests); the reference's own byte-level tolower
-    semantics (wordCount.cpp:67-86) on non-ASCII."""
-    from lab3_spark.functions.arrow_text import token_count_batches
-
-    partial = df.select(F.col(text_col).alias("text")).mapInArrow(
-        token_count_batches, "word string, cnt bigint"
-    )
-    counts = partial.groupBy("word").agg(F.sum("cnt").alias("cnt"))
-    no_pushdown_barrier = F.col("cnt") < F.lit(0)
-    counts = counts.where(~is_stop_word("word", mode) | no_pushdown_barrier)
-    if ordered:
-        counts = counts.orderBy(F.asc("cnt"), F.desc("word"))
-    return counts
-
-
 def word_count_antijoin(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Word count with the stop filter as a broadcast LEFT ANTI join —
     the form to use when the stop list is a TABLE (too big / too

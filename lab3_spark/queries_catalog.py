@@ -3348,7 +3348,7 @@ def q_contamination(spark, sf_dir):
     comparison.  The distinct (source, shingle) frame is persisted so
     the self-join's two sides share ONE tokenize+shingle scan instead
     of recomputing it per side."""
-    from lab3_spark.functions.partitioning import memo_persist, spread
+    from lab3_spark.functions.partitioning import persist_latest, spread
     from lab3_spark.functions.text import tokenize
 
     docs = _t(spark, sf_dir, "documents")
@@ -3357,7 +3357,7 @@ def q_contamination(spark, sf_dir):
         F.sequence(F.lit(1), F.size(toks) - 4),
         lambda i: F.concat_ws(" ", F.slice(toks, i, 5)),
     )
-    sh = memo_persist(
+    sh = persist_latest(
         "contamination_shingles",
         spread(docs)
         .where(F.size(toks) >= 5)
@@ -4471,21 +4471,9 @@ def q_dedup_community_modularity(spark, sf_dir):
     )
     from lab3_spark.operators.dedup import minhash_candidates
 
-    from lab3_spark.functions.partitioning import memo_result
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def build():
-        # build the label frame EXACTLY as the LPA gate does (same
-        # column names into label_propagation) so its memo_persist
-        # entry is sameResult-shared between the two gates — a
-        # rename-first variant is a different plan and silently
-        # misses the memo
-        cands = minhash_candidates(docs)
-        labels = label_propagation(cands, "doc_a", "doc_b", n_iter=3)
-        return community_modularity(cands, labels, "doc_a", "doc_b")
-
-    return memo_result("gate.dedup_community_modularity", docs, build)
+    cands = minhash_candidates(_t(spark, sf_dir, "documents"))
+    labels = label_propagation(cands, "doc_a", "doc_b", n_iter=3)
+    return community_modularity(cands, labels, "doc_a", "doc_b")
 
 
 def _duck_pagerank_iters(n_iter: int) -> str:
@@ -7324,7 +7312,7 @@ def q_dedup_cluster_representatives(spark, sf_dir):
     unrolled-iteration oracle matches bit-for-bit."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import memo_persist
+    from lab3_spark.functions.partitioning import persist_latest
     from lab3_spark.operators.components import connected_components
     from lab3_spark.operators.dedup import minhash_candidates
     from lab3_spark.operators.pagerank import pagerank_fixed_point, symmetrize
@@ -7332,7 +7320,7 @@ def q_dedup_cluster_representatives(spark, sf_dir):
     # BOTH iterative consumers (components, pagerank) re-read the
     # candidate frame many times; one bounded persist shares the
     # LSH banding pass instead of recomputing it per branch
-    cands = memo_persist(
+    cands = persist_latest(
         "catalog.cluster_rep_cands",
         minhash_candidates(_t(spark, sf_dir, "documents")),
     )
@@ -7940,8 +7928,8 @@ def q_dedup_winnowing(spark, sf_dir):
     """MOSS-style substring-level near-dup candidates (textstats.
     winnowing_candidates): pairs sharing ≥ 2 winnowing fingerprints —
     the LSH-candidate equi-join pattern over the positional sketch,
-    degenerate fingerprints capped at 50 docs; shares the
-    memo-persisted fingerprint scan with `doc_winnowing_fingerprints`."""
+    degenerate fingerprints capped at 50 docs; the fingerprint scan is
+    `doc_winnowing_fingerprints`'s."""
     from lab3_spark.operators.textstats import winnowing_candidates
 
     return winnowing_candidates(_t(spark, sf_dir, "documents"))
@@ -13341,10 +13329,9 @@ def q_bpe_apply_compression(spark, sf_dir):
     """Vocabulary-induction acceptance metric (textstats.
     bpe_apply_compression): the 8 learned merges applied back to the
     corpus, measuring chars-per-symbol compression — the number a
-    tokenizer built from this vocabulary delivers.  Shares the
-    metadata-scale type-table loop with bpe_merges_k (per-iteration
-    memo: the driver run pays the loop once for both gates); the apply
-    stage is ONE aggregate over the final segmentation frame."""
+    tokenizer built from this vocabulary delivers.  Runs the
+    metadata-scale type-table loop of bpe_merges_k; the apply stage
+    is ONE aggregate over the final segmentation frame."""
     from lab3_spark.operators.textstats import bpe_apply_compression
 
     return bpe_apply_compression(_t(spark, sf_dir, "documents"), k=8)

@@ -53,10 +53,6 @@ def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
     df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

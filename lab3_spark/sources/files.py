@@ -1,4 +1,4 @@
-"""CSV / JSON / text file sources with EXPLICIT schemas.
+"""JSON / parquet file sources with EXPLICIT schemas.
 
 Engine convention (SURVEY.md §1.3): always declare schemas, never
 infer — inference costs an extra full pass at scale and can flip types
@@ -10,23 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    header: bool = True,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """CSV with declared schema; PERMISSIVE captures malformed rows as
-    nulls (add a _corrupt_record column upstream to quarantine)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", mode)
-        .csv(path)
-    )
 
 
 def read_json(

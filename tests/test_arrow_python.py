@@ -10,9 +10,11 @@ from pyspark.sql import functions as F
 
 from lab3_spark.functions.text import hex_to_long
 from lab3_spark.operators.similarity import (
+    FIXED_SCALE,
+    N_PLANES,
     lsh_codes,
     lsh_codes_arrow,
-    lsh_codes_pandas,
+    plane_numerators,
 )
 
 
@@ -20,12 +22,33 @@ def _codes(df):
     return {r["vec_id"]: r["code"] for r in df.collect()}
 
 
+def _python_codes(rows) -> dict[int, int]:
+    """The signature spec, computed driver-side in plain Python:
+    bit p set iff the exact integer dot of floor(x·1e6) with plane p
+    is positive."""
+    import math
+
+    dims = len(rows[0]["embedding"])
+    planes = plane_numerators(N_PLANES, dims)
+    out = {}
+    for r in rows:
+        xi = [math.floor(x * float(FIXED_SCALE)) for x in r["embedding"]]
+        out[r["vec_id"]] = sum(
+            1 << p
+            for p, plane in enumerate(planes)
+            if sum(a * b for a, b in zip(xi, plane)) > 0
+        )
+    return out
+
+
 def test_lsh_codes_three_ways_bit_identical(spark, sf_dir):
+    """Catalyst fold, mapInArrow matmul and a pure-Python reference
+    agree bit for bit."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     jvm = _codes(lsh_codes(emb))
     arrow = _codes(lsh_codes_arrow(emb))
-    pandas = _codes(lsh_codes_pandas(emb))
-    assert jvm == arrow == pandas
+    python = _python_codes(emb.select("vec_id", "embedding").collect())
+    assert jvm == arrow == python
     assert len(jvm) == emb.count()
 
 

@@ -13,6 +13,8 @@ once (at most one cached frame per persist_latest key).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from lab3_spark.queries_catalog import QUERIES
@@ -27,7 +29,7 @@ _PERSISTING_QUERIES = [
     "events_hll_daily_merge",
     # iterative localCheckpoint bookkeeping (free_checkpoint path)
     "dedup_clusters",
-    # round-4 memo sites: surprisal frame (2 consumers), DSIR weights,
+    # round-4 persist sites: surprisal frame, DSIR weights,
     # robust-zscore quality frame, triangle edge frame, the prefix-sum
     # ranged frame, and the cluster-representatives candidate frame
     # (which also walks BOTH iterative checkpointers in one query)
@@ -38,6 +40,21 @@ _PERSISTING_QUERIES = [
     "token_budget_select",
     "dedup_cluster_representatives",
 ]
+
+
+# cross-call memo machinery the engine no longer has
+_MEMO_WORDS = (
+    "sameResult",
+    "memo_persist",
+    "memo_result(",
+    "_RESULT_MEMO",
+    "_CENTROID_MEMO",
+)
+
+
+@pytest.fixture(scope="module")
+def docs(spark, sf_dir):
+    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _run_all(spark, sf_dir) -> None:
@@ -61,11 +78,10 @@ def test_persistent_rdds_bounded_across_repeat_runs(
 
 
 def test_no_bare_persist_outside_managed_sites():
-    """Structural guard: every ``.persist()`` in lab3_spark is either
-    persist_latest's own call or paired with an explicit unpersist in
-    the same module (components.py's iterative bookkeeping)."""
-    import os
-
+    """Structural guard: every ``.persist()`` in lab3_spark is
+    persist_latest's own call, and no cross-call memo survives — no
+    plan-equality lookup (``sameResult``) and none of the removed memo
+    registries appear anywhere in the package."""
     import lab3_spark
 
     root = os.path.dirname(lab3_spark.__file__)
@@ -74,6 +90,7 @@ def test_no_bare_persist_outside_managed_sites():
         os.path.join("functions", "partitioning.py"),
     }
     offenders = []
+    memos = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if not fn.endswith(".py"):
@@ -84,61 +101,23 @@ def test_no_bare_persist_outside_managed_sites():
                 src = fh.read()
             if ".persist()" in src and rel not in allowed:
                 offenders.append(rel)
+            memos.extend(f"{rel}: {w}" for w in _MEMO_WORDS if w in src)
     assert not offenders, (
         f"bare .persist() outside managed sites: {offenders}; route "
         "through functions.partitioning.persist_latest"
     )
+    assert not memos, f"cross-call memo left in lab3_spark: {memos}"
 
 
-def test_memo_persist_hits_same_plan_replaces_different(spark):
-    """Same analyzed plan → the registered frame comes back (object
-    identity — zero recompute); a different plan under the same key →
-    replaced, and the registry still holds exactly one entry."""
-    from lab3_spark.functions.partitioning import (
-        _PERSISTED_LATEST,
-        memo_persist,
-    )
+def test_unigram_surprisal_recomputes_after_clear_cache(spark, docs):
+    """A call after ``spark.catalog.clearCache()`` must hand back a
+    frame it persisted itself, never the previous call's frame (which
+    the clear left uncached, so each consumer recomputed it)."""
+    from lab3_spark.operators.textstats import unigram_surprisal
 
-    a1 = spark.range(100).selectExpr("id", "id * 2 AS x")
-    m1 = memo_persist("test.memo", a1)
-    m1.count()
-    a2 = spark.range(100).selectExpr("id", "id * 2 AS x")  # same plan
-    m2 = memo_persist("test.memo", a2)
-    assert m2 is m1  # hit: the registered frame itself
-    b = spark.range(50).selectExpr("id", "id * 3 AS x")  # different plan
-    m3 = memo_persist("test.memo", b)
-    assert m3 is not m1
-    assert _PERSISTED_LATEST["test.memo"] is m3
-    assert m3.count() == 50
-    m3.unpersist()
-    del _PERSISTED_LATEST["test.memo"]
-
-
-def test_memo_result_hit_and_invalidate(spark):
-    """memo_result returns the SAME frame for a sameResult-equal
-    input without re-running the build, rebuilds on a different
-    input, and drops entries on prefix invalidation."""
-    from lab3_spark.functions.partitioning import (
-        memo_result,
-        memo_result_invalidate,
-    )
-
-    calls = {"n": 0}
-
-    def build(df):
-        def _b():
-            calls["n"] += 1
-            return df.selectExpr("id * 2 AS twice")
-        return _b
-
-    a = spark.range(10)
-    r1 = memo_result("test.memo_result.x", a, build(a))
-    r2 = memo_result("test.memo_result.x", spark.range(10), build(a))
-    assert calls["n"] == 1  # second call memo-hit on an equal plan
-    assert r2 is r1
-    b = spark.range(20)  # different input -> rebuild
-    memo_result("test.memo_result.x", b, build(b))
-    assert calls["n"] == 2
-    memo_result_invalidate("test.memo_result.")
-    memo_result("test.memo_result.x", b, build(b))
-    assert calls["n"] == 3  # invalidation forced the rebuild
+    first = unigram_surprisal(docs)
+    rows = sorted(first.collect())
+    spark.catalog.clearCache()
+    second = unigram_surprisal(docs)
+    assert second.storageLevel.useMemory
+    assert sorted(second.collect()) == rows

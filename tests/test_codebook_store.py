@@ -28,23 +28,15 @@ def store_env(tmp_path, monkeypatch):
     return str(tmp_path)
 
 
-def _fresh_memo():
-    from lab3_spark.operators import kmeans
-
-    kmeans._CENTROID_MEMO.clear()
-
-
 def test_store_disabled_by_default(emb, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CODEBOOK_STORE", raising=False)
     assert _codebook_store_path(emb, 4, 1, False, "x") is None
 
 
 def test_store_roundtrip_identical(emb, store_env):
-    _fresh_memo()
     trained = trained_centroids(emb, k=4, n_iter=1, store_key="t.s0")
     path = _codebook_store_path(emb, 4, 1, False, "t.s0")
     assert path is not None and os.path.exists(path)
-    _fresh_memo()  # force the disk path on the next call
     loaded = trained_centroids(emb, k=4, n_iter=1, store_key="t.s0")
     assert loaded == trained
 
@@ -57,12 +49,10 @@ def test_store_keys_distinguish_derivations(emb, store_env):
 
 
 def test_corrupt_artifact_retrains_and_overwrites(emb, store_env):
-    _fresh_memo()
     expected = trained_centroids(emb, k=4, n_iter=1, store_key="t.c")
     path = _codebook_store_path(emb, 4, 1, False, "t.c")
     with open(path, "w") as fh:
         fh.write("{not json")
-    _fresh_memo()
     got = trained_centroids(emb, k=4, n_iter=1, store_key="t.c")
     assert got == expected
     # the retrain must have repaired the artifact
@@ -70,7 +60,6 @@ def test_corrupt_artifact_retrains_and_overwrites(emb, store_env):
 
 
 def test_no_store_key_never_touches_disk(emb, store_env):
-    _fresh_memo()
     trained_centroids(emb, k=4, n_iter=1)
     assert not os.path.isdir(os.path.join(store_env, "codebooks")) or not os.listdir(
         os.path.join(store_env, "codebooks")
@@ -82,12 +71,9 @@ def test_ivfpq_residual_identical_with_and_without_store(
 ):
     """The gate-level contract: the residual IVF-PQ result is
     bit-identical whether codebooks are trained or loaded."""
-    from lab3_spark.functions.partitioning import memo_result_invalidate
     from lab3_spark.operators.kmeans import ann_ivf_pq_residual
 
     def run():
-        memo_result_invalidate("")
-        _fresh_memo()
         return [
             tuple(r)
             for r in ann_ivf_pq_residual(
@@ -111,7 +97,6 @@ def test_unwritable_store_is_best_effort(emb, store_env, monkeypatch):
     os.makedirs(os.path.join(store_env, "codebooks"), exist_ok=True)
     os.chmod(os.path.join(store_env, "codebooks"), 0o555)
     try:
-        _fresh_memo()
         cents = trained_centroids(emb, k=4, n_iter=1, store_key="t.ro")
         assert cents  # trained fine despite the failed write
     finally:

@@ -59,15 +59,23 @@ def test_band_planner_curve_join_is_broadcast(spark, docs):
 
 def test_planner_quality_reband_no_signature_recompute(spark, docs):
     """lsh_planned_blocking_quality must re-band from the persisted
-    signature frame: after one call, the signature plan is registered
-    under the memo_persist key and a second call reuses it (plan
-    object identity through the registry)."""
+    signature frame: the call registers the signature frame under its
+    persist key, and the re-banded plan reads it through the cache
+    (an InMemoryRelation over the signature columns) instead of
+    re-running the signature pass."""
+    import re
+
     from lab3_spark.functions import partitioning as P
     from lab3_spark.operators.dedup import lsh_planned_blocking_quality
 
-    lsh_planned_blocking_quality(docs).collect()
-    assert "dedup.minhash_sig.text" in P._PERSISTED_LATEST
-    sig_before = P._PERSISTED_LATEST["dedup.minhash_sig.text"]
-    P.memo_result_invalidate("")  # pass boundary: result memos flushed
-    lsh_planned_blocking_quality(docs).collect()
-    assert P._PERSISTED_LATEST["dedup.minhash_sig.text"] is sig_before
+    out = lsh_planned_blocking_quality(docs)
+    sig = P._PERSISTED_LATEST["dedup.minhash_sig.text"]
+    assert sig.storageLevel.useMemory
+    # cached relations' column lists with expression ids stripped
+    cached = out._jdf.queryExecution().withCachedData().toString()
+    relations = {
+        re.sub(r"#\d+L?", "", r)
+        for r in re.findall(r"InMemoryRelation \[([^\]]*)\]", cached)
+    }
+    assert ", ".join(sig.columns) in relations, cached
+    out.collect()

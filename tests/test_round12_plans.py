@@ -108,9 +108,6 @@ def test_ship_latency_percentiles_histogram_plan(spark, sf_dir):
     that feeds the windows keys on (priority, days) — the histogram
     collapse — so the only windows run over metadata-scale rows."""
     from lab3_spark.operators.relational import ship_latency_percentiles
-    from lab3_spark.functions.partitioning import memo_result_invalidate
-
-    memo_result_invalidate("")
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     plan = formatted_plan(ship_latency_percentiles(orders, li))

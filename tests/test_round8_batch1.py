@@ -83,7 +83,6 @@ def test_bench_tail_carries_slowest_map():
             "queries": fake,
             "cold": fake,
             "warm": fake,
-            "memo_served": sorted(bench.HEADLINE),
             "slowest": slowest,
             "unit": "sec",
             "metric": "headline_queries_total_wall_sec",

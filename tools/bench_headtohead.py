@@ -16,7 +16,6 @@ warm session, same corpus file.
 
 Usage:
   python tools/bench_headtohead.py [--corpus /tmp/d512.txt] [--n 5]
-                                   [--mode expr|arrow|both]
                                    [--workload wordcount|top50|invert]
 
 Prints per-iteration times and the min-of-N summary with the ratio
@@ -92,7 +91,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--corpus", default="/tmp/d512.txt")
     ap.add_argument("--n", type=int, default=5)
-    ap.add_argument("--mode", default="expr", choices=["expr", "arrow", "both"])
     ap.add_argument(
         "--workload",
         default="wordcount",
@@ -109,7 +107,7 @@ def main() -> int:
 
     spark = get_spark("headtohead")
 
-    def run_engine(mode: str) -> float:
+    def run_engine() -> float:
         if args.workload == "invert":
             # invert needs line numbers (sources/text.py numbering path);
             # postings keyed by line_no like the reference's occurrence
@@ -125,11 +123,6 @@ def main() -> int:
 
             lines = spark.read.text(corpus).withColumnRenamed("value", "text")
             out = top_k_words(lines, 50)
-        elif mode == "arrow":
-            from lab3_spark.operators.wordcount import word_count_arrow
-
-            lines = spark.read.text(corpus).withColumnRenamed("value", "text")
-            out = word_count_arrow(lines, "text")
         else:
             from lab3_spark.operators.wordcount import word_count
 
@@ -139,34 +132,27 @@ def main() -> int:
         out.write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    engine_modes = ["expr", "arrow"] if args.mode == "both" else [args.mode]
     # warmup both sides once (JIT/codegen/page cache) before timing
     time_ref(exe, corpus, ref_extra)
-    for m in engine_modes:
-        run_engine(m)
+    run_engine()
 
     ref_ts: list[float] = []
-    eng_ts: dict[str, list[float]] = {m: [] for m in engine_modes}
+    eng_ts: list[float] = []
     for i in range(args.n):
         r = time_ref(exe, corpus, ref_extra)
         ref_ts.append(r)
-        line = f"iter {i}: ref {r:.2f}s"
-        for m in engine_modes:
-            e = run_engine(m)
-            eng_ts[m].append(e)
-            line += f"  {m} {e:.2f}s"
-        print(line, flush=True)
+        e = run_engine()
+        eng_ts.append(e)
+        print(f"iter {i}: ref {r:.2f}s  engine {e:.2f}s", flush=True)
 
     rmin = min(ref_ts)
+    emin = min(eng_ts)
     print(f"\ncorpus {mb:.0f} MB, min-of-{args.n} interleaved:")
     print(f"  reference total: {rmin:.2f}s ({sorted(round(t,2) for t in ref_ts)})")
-    for m in engine_modes:
-        emin = min(eng_ts[m])
-        print(
-            f"  engine[{m}]: {emin:.2f}s "
-            f"({sorted(round(t,2) for t in eng_ts[m])})  "
-            f"ratio {emin / rmin:.2f}x"
-        )
+    print(
+        f"  engine: {emin:.2f}s ({sorted(round(t,2) for t in eng_ts)})  "
+        f"ratio {emin / rmin:.2f}x"
+    )
     return 0
 
 

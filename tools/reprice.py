@@ -5,10 +5,8 @@ per round whether a mover is a plan change or noise.  Protocol (the
 round-10 `corpus_ngram_novelty` reprice, now reusable): ONE warm
 session, N interleaved rounds over the flagged gates (gate order
 rotates within a round is unnecessary — interleaving across rounds
-already decorrelates steal bursts), whole-RESULT memos cleared per
-iteration exactly like bench.py's pass boundary (the driver-side
-centroid memo stays live, matching the driver's min-of-passes shape),
-noop sink.  Prints per-gate min + all samples as one JSON line.
+already decorrelates steal bursts), noop sink; every call computes
+from its input, as in bench.py's passes.  Prints per-gate min + all samples as one JSON line.
 
 Usage: python tools/reprice.py gate [gate ...] [--passes N]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -23,7 +21,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lab3_spark.functions.partitioning import memo_result_invalidate
 from lab3_spark.queries_catalog import QUERIES
 from lab3_spark.session import get_spark
 from lab3_spark.sources.tables import TABLES, load_table
@@ -71,7 +68,6 @@ def main() -> None:
     samples: dict[str, list[float]] = {g: [] for g in args}
     for rnd in range(passes):
         for g in args:
-            memo_result_invalidate("")
             t0 = time.time()
             QUERIES[g](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
