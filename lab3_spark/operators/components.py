@@ -61,17 +61,7 @@ def connected_components(
     Exact fixpoint: terminates when an iteration changes no label, or
     raises after `max_iter` (never silently returns a half-converged
     labeling)."""
-    from lab3_spark.functions.partitioning import (
-        persist_latest,
-        retire_latest,
-        retire_prefix,
-    )
-
-    # Free the PREVIOUS run's checkpoint frames at entry (not mid-run):
-    # a checkpoint-backed result returned to a caller stays valid until
-    # the next call (round-4 advice: mid-run single-key retirement
-    # freed an RDD other cached frames were rooted at).
-    retire_prefix("components.ckpt")
+    from lab3_spark.functions.partitioning import scoped
 
     und = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
@@ -82,16 +72,14 @@ def connected_components(
     # node-scale label table moves per round — un-partitioned, the
     # edge table (the heavy side at 100 TB) re-shuffled every round.
     par = und.sparkSession.sparkContext.defaultParallelism
-    und = persist_latest(
-        "components.und",
+    und = scoped(
         und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .repartition(par, "b")
         .sortWithinPartitions("b"),
     )
 
-    labels = persist_latest(
-        "components.labels0",
+    labels = scoped(
         und.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("comp")),
@@ -151,21 +139,14 @@ def connected_components(
         new_labels = cur.select(
             "node", "comp", (F.col("comp") < F.col("comp0")).alias("_chg")
         )
+        # Every checkpoint and persisted batch frame stays until the
+        # caller's scope exits: freeing one mid-run would invalidate
+        # cached frames rooted at it (round-4 advice).  Bound: one
+        # label-scale (node, comp) frame per batch — a handful for the
+        # O(log d) pointer-doubled convergence, each ≪ corpus size.
         if it % CHECKPOINT_EVERY == 0:
-            # register the checkpoint under a PER-ITERATION key and
-            # let the NEXT call's entry retire_prefix free the whole
-            # set.  Bound: at most
-            # max_iter/CHECKPOINT_EVERY label-scale checkpoint RDDs
-            # pinned between calls; freeing them mid-run instead would
-            # invalidate cached frames rooted at them (round-4 advice).
-            new_labels = retire_latest(
-                f"components.ckpt.{it}", new_labels.localCheckpoint(eager=True)
-            )
-        else:
-            # Bound: #batches × label-scale (node, comp) rows — for
-            # the O(log d) pointer-doubled convergence this is a handful
-            # of frames, each ≪ corpus size.
-            new_labels = persist_latest(f"components.iter{it}", new_labels)
+            new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = scoped(new_labels)
         changed = new_labels.where(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
         if changed == 0:
@@ -220,19 +201,16 @@ def triangle_stats(
     triangle output.  clustering = 2·tri / (deg·(deg−1)), exact
     integers into one truncated double — cross-engine stable.
     """
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    e = persist_latest(
-        "components.triangle_edges",
-        pairs.select(F.col(a).alias("x"), F.col(b).alias("y")),
-    )
+    e = scoped(pairs.select(F.col(a).alias("x"), F.col(b).alias("y")))
     deg = (
         e.select(F.col("x").alias("node"))
         .unionAll(e.select(F.col("y").alias("node")))
         .groupBy("node")
         .agg(F.count("*").cast("bigint").alias("degree"))
     )
-    o = persist_latest("components.triangle_oriented", _oriented(e, deg))
+    o = scoped(_oriented(e, deg))
     o1 = o.select("u", "v", F.col("dv").alias("_d1"))
     o2 = o.select("u", F.col("v").alias("w"), F.col("dv").alias("_d2"))
     wedges = o1.join(o2, "u").where(
@@ -310,9 +288,9 @@ def label_propagation(
             .select("node", (-F.col("m.nl")).alias("label"))
         )
     # community_modularity joins the labels three times
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    return persist_latest(f"components.lpa_i{n_iter}", labels)
+    return scoped(labels)
 
 
 def community_modularity(
@@ -393,14 +371,12 @@ def bfs_hops(
     with the PREVIOUS frontier plus one anti-join against the settled
     set — per-round shuffle is O(frontier edges), never all nodes, and
     the depth cap bounds the rounds.  Lineage truncated per round
-    (eager localCheckpoint + free-prev, the pagerank.py discipline)."""
-    from lab3_spark.functions.partitioning import free_checkpoint
-
-    from lab3_spark.functions.partitioning import persist_latest
+    (eager localCheckpoint + free-prev, the pagerank.py discipline);
+    the final checkpoint lives until the caller's scope exits."""
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
 
     # persisted: probed once per depth round plus the node/seed scan
-    und = persist_latest(
-        "components.bfs.und",
+    und = scoped(
         edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
             edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
         ),
@@ -425,7 +401,7 @@ def bfs_hops(
         dist = dist.unionAll(nxt).localCheckpoint(eager=True)
         free_checkpoint(prev_ckpt)
         prev_ckpt = dist
-    return dist.orderBy("hops", "node")
+    return scoped(dist).orderBy("hops", "node")
 
 
 def kcore(
@@ -465,9 +441,10 @@ def kcore(
     the plan 3^rounds — analysis time dominates long before execution
     does.  Every round is therefore eagerly localCheckpoint-ed and the
     superseded checkpoint freed once its successor is materialized
-    (the bfs_hops/pagerank discipline).
+    (the bfs_hops/pagerank discipline); the last one lives until the
+    caller's scope exits.
     """
-    from lab3_spark.functions.partitioning import free_checkpoint
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
 
     und = (
         edges.select(
@@ -511,7 +488,8 @@ def kcore(
     if not converged:
         raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
     return (
-        und.groupBy(F.col("a").alias("node"))
+        scoped(und)
+        .groupBy(F.col("a").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .orderBy("node")
     )
@@ -539,9 +517,9 @@ def degree_assortativity(
             F.col(src).cast("long").alias("b"),
         )
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    und = persist_latest("components.assort.und", und)
+    und = scoped(und)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     pairs = (
         und.join(deg, "a")
@@ -589,8 +567,9 @@ def ktruss(
     edge list (|N(a) ∩ N(b)| via wedge closing — the triangle_stats
     join shape, never all-pairs), one left join back, one filter.
     Each round references the prior edge frame three times ⇒ eager
-    localCheckpoint per round (the kcore lineage discipline)."""
-    from lab3_spark.functions.partitioning import free_checkpoint
+    localCheckpoint per round (the kcore lineage discipline); the last
+    one lives until the caller's scope exits."""
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
 
     und = (
         edges.select(
@@ -625,6 +604,6 @@ def ktruss(
             free_checkpoint(prev)
         prev = und
         und = nxt
-    return (
-        und.where(F.col("a") < F.col("b")).orderBy("a", "b")
-    )
+    if prev is not None:
+        free_checkpoint(prev)
+    return scoped(und).where(F.col("a") < F.col("b")).orderBy("a", "b")

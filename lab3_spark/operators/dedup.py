@@ -260,7 +260,7 @@ def exact_substring_spans(
     (pos − row_number) to maximal runs.  The islands window is
     per-document — bounded by document length, the per-entity window
     class (sessionize, rolling revenue) — never corpus-wide."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.textstats import _word_ngrams
 
     # cached gram-partitioned (optimization round 13, guide §2.4 —
@@ -269,8 +269,7 @@ def exact_substring_spans(
     # gram removes BOTH downstream gram exchanges — before, the probe
     # side re-shuffled the full positional stream every action
     par = documents.sparkSession.sparkContext.defaultParallelism
-    grams = persist_latest(
-        f"dedup.exact_substring_spans.grams.{n}",
+    grams = scoped(
         spread(documents)
         .select(
             "doc_id",
@@ -1121,14 +1120,12 @@ def ngram_jaccard_pairs(
     shared by the three verify-side uses (sizes, sh_a, sh_b); without
     the persist the DAG re-shingles the corpus per use.  Candidate
     generation hashes its signatures straight from the documents in
-    one per-row pass and needs no shingle rows.  Cached via
-    ``persist_latest`` so repeated calls in one session hold at most
-    one shingle frame (CacheManager entries are never GC'd)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    one per-row pass and needs no shingle rows.  The shingle frame lives
+    until the caller's scope exits (CacheManager entries are never
+    GC'd, so unscoped callers free it with ``clearCache()``)."""
+    from lab3_spark.functions.partitioning import scoped
 
-    sh = persist_latest(
-        "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
-    )
+    sh = scoped(_doc_shingles(documents, text_col))
     cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -1162,8 +1159,7 @@ def ngram_jaccard_pairs(
     # and consumers that join/regroup read it again.  The persist sits
     # BEFORE the orderBy so those consumers don't inherit a wasted
     # sort.
-    pairs = persist_latest(
-        f"dedup.ngram_jaccard.pairs.{min_jaccard}.{int(keep_counts)}",
+    pairs = scoped(
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
         .select(*cols)
@@ -1650,18 +1646,16 @@ def simhash_near_pairs(
     hot join task; buckets above the cap are dropped (at 100 TB such
     masses are collapsed by exact dedup BEFORE near-dup runs).
 
-    The signature frame is persisted (bounded, persist_latest) before
+    The signature frame is cached (caller-scoped) before
     the self-join: Spark plans the two join sides as independent
     subtrees (no ReusedExchange materializes here — measured r4), so
     without the persist the whole tokenize→md5→bit-sum scan runs
     TWICE.  The persisted frame is 16 bytes/doc — at 100 TB corpus
     scale the signature table is ~GBs, exactly what you'd checkpoint
     between dedup stages anyway."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    sig = persist_latest(
-        "dedup.simhash.signatures", simhash_signatures(documents, text_col)
-    )
+    sig = scoped(simhash_signatures(documents, text_col))
     chunks = sig.select(
         "doc_id",
         "sig",
@@ -1787,7 +1781,8 @@ def containment_pairs(
     the threshold.
 
     Same scale shape as the Jaccard verify: the shingle scan is
-    computed once (persist_latest, shared by both verify sides),
+    computed once (cached until the caller's scope exits, shared by
+    both verify sides),
     candidates come from the banded LSH buckets (never all-pairs), and
     the intersection is a shingle equi-join on candidate pairs only.
     Ratios are exact-integer numerator/denominator with one final
@@ -1804,11 +1799,9 @@ def containment_pairs(
     Reference parity note: no similarity ops in the reference
     (Phoenix++, include/map_reduce.h) — SURVEY §2.9 extension row.
     """
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    sh = persist_latest(
-        "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
-    )
+    sh = scoped(_doc_shingles(documents, text_col))
     cands = minhash_candidates(documents, text_col).select("doc_a", "doc_b")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -2157,12 +2150,9 @@ def ppjoin_pairs(
     similarity join.  A bucket cap is deliberately NOT offered: it
     would silently void the completeness theorem this operator
     exists to provide."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    sh = persist_latest(
-        f"dedup.ppjoin_shingles.{text_col}",
-        _doc_shingles(documents, text_col),
-    )
+    sh = scoped(_doc_shingles(documents, text_col))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (
         sh.join(dfreq, "shingle")
@@ -2239,7 +2229,7 @@ def sorted_neighborhood_pairs(
     no single-partition window); neighbor pairing is an equi-join of
     the rank frame with itself on rn+offset; the verify joins a
     persisted shingle frame (the LSH family's shingling)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.rounding import trunc
     from lab3_spark.operators.rank import with_global_row_number
 
@@ -2250,7 +2240,6 @@ def sorted_neighborhood_pairs(
         ),
         ["_snm_key", "doc_id"],
         out_col="rn",
-        memo_key="dedup.snm.rank",
     ).select("doc_id", "rn")
     lhs = ranked.select(
         F.col("doc_id").alias("_id_a"),
@@ -2271,9 +2260,7 @@ def sorted_neighborhood_pairs(
         # but normalize anyway so the contract is self-evident
         .distinct()
     )
-    sh = persist_latest(
-        "dedup.ngram_jaccard.shingles", _doc_shingles(documents, text_col)
-    )
+    sh = scoped(_doc_shingles(documents, text_col))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     sh_b = sh.select(
@@ -2483,11 +2470,9 @@ def blocking_quality(documents: DataFrame, text_col: str = "text") -> DataFrame:
     fingerprint group sizes (one agg), n_caught joins the candidate
     frame to the fingerprint table twice (equi-joins on doc id), and
     RR's denominator is arithmetic."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    cand = persist_latest(
-        "dedup.blocking.cand", minhash_candidates(documents, text_col)
-    )
+    cand = scoped(minhash_candidates(documents, text_col))
     return _blocking_metrics(documents, cand, text_col)
 
 
@@ -2501,10 +2486,9 @@ def simhash_blocking_quality(
     land in every chunk bucket, so PC = 1 unless a bucket cap drops a
     pathological mass; RR measures how much tighter the 60-bit
     signature blocks than MinHash bands."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    cand = persist_latest(
-        "dedup.blocking.simcand",
+    cand = scoped(
         simhash_near_pairs(documents, text_col).select("doc_a", "doc_b"),
     )
     return _blocking_metrics(documents, cand, text_col)
@@ -2513,10 +2497,9 @@ def simhash_blocking_quality(
 def _blocking_metrics(
     documents: DataFrame, cand: DataFrame, text_col: str
 ) -> DataFrame:
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    fp = persist_latest(
-        "dedup.blocking.fp",
+    fp = scoped(
         documents.select(
             "doc_id", F.md5(F.concat_ws(" ", tokenize(text_col))).alias("fp")
         ),
@@ -2763,15 +2746,12 @@ def lsh_planned_blocking_quality(
     branches (candidate count and caught pairs) read one signature
     pass, and the candidate shape is identical to
     minhash_candidates' at any corpus size."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     plan = lsh_band_plan(documents, text_col, t10)
     best = plan.where(F.col("is_best") == 1).collect()[0]
     bstar, rstar = int(best["n_bands"]), int(best["n_rows"])
-    sig = persist_latest(
-        f"dedup.minhash_sig.{text_col}",
-        minhash_signatures(documents, text_col),
-    )
+    sig = scoped(minhash_signatures(documents, text_col))
     bands = _band_rows(sig, ("doc_id",), bstar, rstar)
     cand = _bucket_pairs(bands, ("doc_id",)).select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import persist_latest
+from lab3_spark.functions.partitioning import scoped
 
 N_BINS = 10
 BIN_WIDTH = 200  # n_chars per bin; last bin is open-ended
@@ -48,8 +48,7 @@ def snapshot_psi(documents: DataFrame) -> DataFrame:
             F.floor(F.col("n_chars") / BIN_WIDTH), F.lit(N_BINS - 1)
         ).cast("bigint").alias("bin"),
     )
-    counts = persist_latest(
-        "drift.snapshot_psi.counts",
+    counts = scoped(
         binned.groupBy("source", "bin").agg(
             F.sum(F.col("is_a").cast("bigint")).alias("c_a"),
             F.sum((~F.col("is_a")).cast("bigint")).alias("c_b"),

@@ -181,15 +181,14 @@ def hll_daily_merge(events: DataFrame) -> DataFrame:
 
     One shuffle (day group-by); the union of the tiny per-day sketch
     table is a broadcast scalar join.  The per-day sketch frame is
-    persisted (bounded, via ``persist_latest``) so deriving both the
+    cached until the caller's scope exits, so deriving both the
     per-day estimates AND the union total sketches the events scan
     once — "sketch once, union cheaply" for real, not just in prose.
     No oracle: sketch internals are engine-specific (rows-only driver
     check; the estimate-vs-exact tolerance is pinned in tests)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    daily = persist_latest(
-        "events.hll_daily",
+    daily = scoped(
         events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
             F.expr("hll_sketch_agg(user_id)").alias("sk")
         ),
@@ -728,7 +727,7 @@ def kmv_daily_users(events: DataFrame, k: int = 64) -> DataFrame:
     union WITHOUT rescanning events.  The per-day synopsis frame is
     persisted so daily estimates and the merged total share one
     events scan."""
-    from lab3_spark.functions.partitioning import persist_latest, spread
+    from lab3_spark.functions.partitioning import scoped, spread
     from lab3_spark.functions.text import hex_to_long
 
     hv = hex_to_long(
@@ -741,9 +740,7 @@ def kmv_daily_users(events: DataFrame, k: int = 64) -> DataFrame:
     day_hv = spread(events).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), hv.alias("hv")
     )
-    syn = persist_latest(
-        f"events.kmv_daily.{k}", kmv_synopsis(day_hv, "day", "hv", k)
-    )
+    syn = scoped(kmv_synopsis(day_hv, "day", "hv", k))
     num = f"CAST({(k - 1) * KMV_DOMAIN} AS BIGINT)"
     est = F.when(F.col("ns") < k, F.col("ns")).otherwise(
         F.expr(f"{num} div hk")
@@ -993,7 +990,7 @@ def transition_matrix(events: DataFrame) -> DataFrame:
     construction."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = events.withColumn(
@@ -1002,8 +999,7 @@ def transition_matrix(events: DataFrame) -> DataFrame:
     # persisted: the counts frame feeds BOTH the row totals and the
     # final join, and alias differences defeat exchange reuse — without
     # this the lead-window pass over events runs twice
-    counts = persist_latest(
-        "events.transition.counts",
+    counts = scoped(
         nxt.groupBy("event_type", "next_type").agg(
             F.count("*").alias("n_trans")
         ),
@@ -1355,7 +1351,7 @@ def kmv_value_quantiles(
     bounded."""
     from lab3_spark.operators.rank import top_n_per_key
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     keyed = events.select(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
@@ -1364,8 +1360,7 @@ def kmv_value_quantiles(
     )
     # persisted: the per-day synopses feed both the merge re-select and
     # the union — ≤ |days|·k rows, but recomputing would rescan events
-    syn = persist_latest(
-        "events.kmv_quantiles.syn",
+    syn = scoped(
         top_n_per_key(keyed, ["day"], ["hk"], k).select(
             "day", "hk", "value"
         ),
@@ -1434,7 +1429,7 @@ def kmv_rolling_users(
     estimator.  Correct by the same mergeability theorem as the daily
     gate; the synopsis frame is built as in kmv_daily_users and
     persisted under the same key."""
-    from lab3_spark.functions.partitioning import persist_latest, spread
+    from lab3_spark.functions.partitioning import scoped, spread
     from lab3_spark.functions.text import hex_to_long
     from lab3_spark.operators.rank import top_n_per_key
 
@@ -1448,9 +1443,7 @@ def kmv_rolling_users(
     day_hv = spread(events).select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), hv.alias("hv")
     )
-    syn = persist_latest(
-        f"events.kmv_daily.{k}", kmv_synopsis(day_hv, "day", "hv", k)
-    )
+    syn = scoped(kmv_synopsis(day_hv, "day", "hv", k))
     observed = syn.select("day").distinct()
     contrib = (
         syn.select(
@@ -1549,12 +1542,9 @@ def weekly_churn(events: DataFrame) -> DataFrame:
         )
         / 7
     ).cast("bigint")
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    uw = persist_latest(
-        "events.weekly_churn.uw",
-        events.select("user_id", wk.alias("week")).distinct(),
-    )
+    uw = scoped(events.select("user_id", wk.alias("week")).distinct())
     weeks = uw.select("week").distinct()
     eligible = weeks.join(
         weeks.select((F.col("week") - 1).alias("week")), "week", "left_semi"
@@ -1616,7 +1606,7 @@ def lagged_xcorr(
     double expression per lag (the ab_ztest/OLS contract: products of
     two bigint moments are cast to double BEFORE multiplying so no
     intermediate exceeds int64 at any SF)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     xy = F.when(F.col("event_type") == type_x, 1).otherwise(0)
     yy = F.when(F.col("event_type") == type_y, 1).otherwise(0)
@@ -1636,8 +1626,7 @@ def lagged_xcorr(
     spine = hourly.agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     ).select(F.explode(F.sequence("h0", "h1")).alias("h"))
-    dense = persist_latest(
-        "events.lagged_xcorr.dense",
+    dense = scoped(
         spine.join(hourly, "h", "left").select(
             "h",
             F.coalesce("x", F.lit(0)).alias("x"),
@@ -1689,7 +1678,7 @@ def activity_bitmap_from_presence(
     a (user_id, dt) presence frame — shared with the streaming twin,
     whose store maintains exactly this frame incrementally (bit_or is
     idempotent, so duplicate presence rows from replays are free)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     d0 = presence.agg(F.min("dt").alias("_d0"))
     days = (
@@ -1702,8 +1691,7 @@ def activity_bitmap_from_presence(
         )
         .where(F.col("d") < horizon_days)
     )
-    masks = persist_latest(
-        "events.activity_bitmap.masks",
+    masks = scoped(
         days.groupBy("user_id").agg(
             F.bit_or(F.expr("shiftleft(1L, d)")).alias("mask"),
             F.bit_or(
@@ -1746,7 +1734,7 @@ def kmv_type_overlap(
     estimate reads ≤ 3k synopsis rows — at 100 TB the per-type
     synopses are stored state and the intersection never rescans
     events.  All integer arithmetic (truncating div)."""
-    from lab3_spark.functions.partitioning import persist_latest, spread
+    from lab3_spark.functions.partitioning import scoped, spread
     from lab3_spark.functions.text import hex_to_long
 
     hv = hex_to_long(
@@ -1761,10 +1749,7 @@ def kmv_type_overlap(
         .where(F.col("event_type").isin(type_a, type_b))
         .select("event_type", "user_id", hv.alias("hv"))
     )
-    syn = persist_latest(
-        f"events.kmv_overlap.{type_a}.{type_b}.{k}",
-        kmv_synopsis(typed, "event_type", "hv", k),
-    )
+    syn = scoped(kmv_synopsis(typed, "event_type", "hv", k))
     syn_u = (
         syn.select("hv").distinct().orderBy("hv").limit(k)
     )
@@ -1867,7 +1852,7 @@ def hourly_acf(events: DataFrame, max_lag: int = 24) -> DataFrame:
     DIFFERENT series).  Same machinery: densified hour spine, ONE
     shifted-key equi-join for all lags, exact bigint moments per lag,
     r as one double expression."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     hourly = (
         events.groupBy(
@@ -1878,8 +1863,7 @@ def hourly_acf(events: DataFrame, max_lag: int = 24) -> DataFrame:
     spine = hourly.agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     ).select(F.explode(F.sequence("h0", "h1")).alias("h"))
-    dense = persist_latest(
-        "events.acf.dense",
+    dense = scoped(
         spine.join(hourly, "h", "left").select(
             "h", F.coalesce("x", F.lit(0)).alias("x")
         ),
@@ -1916,7 +1900,6 @@ def decayed_leaderboard(events: DataFrame, half_life_days: int = 1) -> DataFrame
     — no float decay per row, no summation-order hazard.  Only the
     final ·10⁶ normalization runs in double (one expression, mirrored
     in the oracle)."""
-    from lab3_spark.functions.partitioning import persist_latest
     from pyspark.sql.window import Window
 
     CAP = 20
@@ -1983,7 +1966,7 @@ def seasonal_profile_decomposed(events: DataFrame) -> DataFrame:
     calendar-bounded metadata, never events."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     hourly = (
         events.groupBy(
@@ -1994,8 +1977,7 @@ def seasonal_profile_decomposed(events: DataFrame) -> DataFrame:
     spine = hourly.agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
     ).select(F.explode(F.sequence("h0", "h1")).alias("h"))
-    dense = persist_latest(
-        "events.seasonal_decomp.dense",
+    dense = scoped(
         spine.join(hourly, "h", "left").select(
             "h", F.coalesce("x", F.lit(0)).alias("x")
         ),

@@ -484,7 +484,7 @@ def ann_ivf_trained(
     (FAISS ``add`` after ``train``, public); queries see the whole
     corpus immediately.  Retraining cadence becomes an offline policy
     decision measured by the recall gates, not an ingest cost."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.vectors import dot_product, unit_vector
     from lab3_spark.operators.similarity import _topk_per_query
 
@@ -496,10 +496,7 @@ def ann_ivf_trained(
         else embeddings.where(F.col("vec_id") < train_limit)
     )
     cents = trained_centroids(train, k, n_iter)
-    assigned = persist_latest(
-        f"ann_ivf_trained_assigned_t{train_limit}",
-        _assign_arrow(embeddings, cents),
-    )
+    assigned = scoped(_assign_arrow(embeddings, cents))
     corpus = assigned.select(
         "cl", F.col("vec_id").alias("neighbor_id"), unit_vector("embedding").alias("u_n")
     )
@@ -854,11 +851,9 @@ def ann_pq_adc(
     )
     # persisted: the final orderBy's range-sampling job and its result
     # job both read the ranked frame (one entry per (m,k,i,d,q) key)
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    ranked = persist_latest(
-        f"kmeans.pq_ranked_m{m}_k{k}_i{n_iter}_d{dims}_q{n_queries}", ranked
-    )
+    ranked = scoped(ranked)
     return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
 
 
@@ -906,9 +901,9 @@ def _pq_codes_and_tables(
             )
         )
         dts = dt if dts is None else dts.join(dt, "query_id")
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    codes = persist_latest(f"kmeans.pq_codes_m{m}_k{k}_i{n_iter}_d{dims}", codes)
+    codes = scoped(codes)
     return codes, dts
 
 
@@ -1041,7 +1036,7 @@ def ann_ivf_pq_residual(
     encoding."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     if dims % m != 0:
         raise ValueError(f"dims {dims} not divisible by m {m}")
@@ -1055,8 +1050,7 @@ def ann_ivf_pq_residual(
     lookup = _cent_lookup_expr(cents)
     # residual frame: one narrow (vec_id, cl, rxi) projection over the
     # assigned corpus — exact bigint xi − centroid, scan-speed
-    rx = persist_latest(
-        f"kmeans.ivfpq_residuals_k{coarse_k}_i{coarse_iter}",
+    rx = scoped(
         _assign_arrow(embeddings, cents).select(
             "vec_id",
             "cl",
@@ -1117,9 +1111,7 @@ def ann_ivf_pq_residual(
             F.col("dc.dist").alias(f"dist_{s}"),
         )
         dts = dt if dts is None else dts.join(dt, ["query_id", "cl"])
-    codes = persist_latest(
-        f"kmeans.ivfpq_res_codes_m{m}_k{pq_k}_i{pq_iter}_d{dims}", codes
-    )
+    codes = scoped(codes)
     # candidates: the probe equi-join (nprobe/k of the corpus per
     # query), then m-code lookup against the (query, cell)-keyed
     # broadcast distance tables
@@ -1186,9 +1178,9 @@ def ann_bruteforce_l2(
     )
     # persisted like the PQ ranked frame: the final orderBy reads it
     # twice (range sampling + result)
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    ranked = persist_latest(f"kmeans.bf_l2_ranked_q{n_queries}", ranked)
+    ranked = scoped(ranked)
     return ranked.where(F.col("rnk") <= topk).orderBy("query_id", "rnk")
 
 

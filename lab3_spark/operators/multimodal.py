@@ -308,15 +308,13 @@ def dhash_near_dups(
             f"max_hamming={max_hamming} exceeds the {DHASH_CHUNKS}-chunk "
             f"pigeonhole's complete radius of {DHASH_CHUNKS - 1}"
         )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     # persisted (optimization round 13, guide §4/§5): the chunk frame
     # feeds the bucket-size agg AND both self-join sides — unpersisted,
     # the mapInPandas dHash pass (a Python-boundary decode of every
     # media payload) re-ran 3-4x per action
-    ch = persist_latest(
-        "multimodal.dhash_chunks", dhash_chunks(attach_media(documents))
-    )
+    ch = scoped(dhash_chunks(attach_media(documents)))
     if max_bucket is not None:
         sizes = ch.groupBy("c", "cv").agg(F.count("*").alias("_n"))
         ch = ch.join(
@@ -409,13 +407,11 @@ def phash_near_dups(
     ``max_bucket`` drops degenerate (idx, cv) buckets (identical
     boilerplate media at corpus scale), mirroring
     `dedup.minhash_candidates`."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     # same fan-out and fix as dhash_near_dups (guide §4/§5): the
     # mapInPandas block-hash pass otherwise re-ran per consumer
-    ch = persist_latest(
-        "multimodal.phash_chunks", phash_chunks(attach_media(documents))
-    )
+    ch = scoped(phash_chunks(attach_media(documents)))
     if max_bucket is not None:
         sizes = ch.groupBy("idx", "cv").agg(F.count("*").alias("_n"))
         ch = ch.join(

@@ -66,11 +66,7 @@ def pagerank_fixed_point(
     # the cached partitioning means only the node-scale rank table
     # moves per iteration — without it the edge table (the heavy side
     # at 100 TB) re-shuffles n_iter times.
-    from lab3_spark.functions.partitioning import (
-        free_checkpoint,
-        persist_latest,
-        retire_latest,
-    )
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
 
     par = edges.sparkSession.sparkContext.defaultParallelism
     edeg = (
@@ -78,7 +74,7 @@ def pagerank_fixed_point(
         .select("src", "dst", "deg")
         .repartition(par, "src")
     )
-    edeg = persist_latest("pagerank.edeg", edeg)
+    edeg = scoped(edeg)
 
     if input_from_symmetrize:
         nodes = None
@@ -86,8 +82,7 @@ def pagerank_fixed_point(
             "rank_fp", F.lit(RANK_SCALE).cast("bigint")
         )
     else:
-        nodes = persist_latest(
-            "pagerank.nodes",
+        nodes = scoped(
             edges.select(F.col("src").alias("node")).distinct(),
         )
         ranks = nodes.withColumn("rank_fp", F.lit(RANK_SCALE).cast("bigint"))
@@ -130,12 +125,12 @@ def pagerank_fixed_point(
             if prev_trunc is not None:
                 free_checkpoint(prev_trunc)
             prev_trunc = ranks
-    # the final checkpoint outlives this call (the caller reads it);
-    # the NEXT call retires it
+    # the final checkpoint outlives this call (the caller reads it)
+    # until the caller's scope exits
     final = ranks.localCheckpoint(eager=True)
     if prev_trunc is not None:
         free_checkpoint(prev_trunc)
-    return retire_latest("pagerank.ranks", final)
+    return scoped(final)
 
 
 def ppr_fixed_point(
@@ -156,19 +151,14 @@ def ppr_fixed_point(
     Same per-iteration shape and bounded checkpointing as
     `pagerank_fixed_point`; the oracle unrolls identical CTEs with a
     CASE base term."""
-    from lab3_spark.functions.partitioning import (
-        free_checkpoint,
-        persist_latest,
-        retire_latest,
-    )
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
 
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # hash-partition by src once before caching — the per-iteration
     # join then moves only the node-scale rank table (guide §2.4)
     par = edges.sparkSession.sparkContext.defaultParallelism
-    edeg = persist_latest(
-        "pagerank.ppr_edeg",
+    edeg = scoped(
         edges.join(deg, "src")
         .select("src", "dst", "deg")
         .repartition(par, "src"),
@@ -176,8 +166,7 @@ def ppr_fixed_point(
     seeds = nodes.orderBy("node").limit(n_seeds).select(
         "node", F.lit(1).alias("is_seed")
     )
-    nflag = persist_latest(
-        "pagerank.ppr_nodes",
+    nflag = scoped(
         nodes.join(F.broadcast(seeds), "node", "left").select(
             "node", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
         ),
@@ -221,7 +210,7 @@ def ppr_fixed_point(
     final = ranks.localCheckpoint(eager=True)
     if prev_trunc is not None:
         free_checkpoint(prev_trunc)
-    return retire_latest("pagerank.ppr_ranks", final)
+    return scoped(final)
 
 
 # 10^6 (not the rank family's 10^12): raw = Σ scores over in-edges ≤
@@ -250,19 +239,17 @@ def hits_scores(edges: DataFrame, n_iter: int = 2, k: int = 10) -> DataFrame:
     edge-scale exchanges.  Two sorted, hash-partitioned caches (one per
     probe key), built once off a shared base cache, make every round's
     join move only the node-scale score table."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     if n_iter < 1:  # auths is only bound inside the loop
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
 
     par = edges.sparkSession.sparkContext.defaultParallelism
-    base = persist_latest("pagerank.hits.edges", edges)
-    e_src = persist_latest(
-        "pagerank.hits.edges_src",
+    base = scoped(edges)
+    e_src = scoped(
         base.repartition(par, "src").sortWithinPartitions("src"),
     )
-    e_dst = persist_latest(
-        "pagerank.hits.edges_dst",
+    e_dst = scoped(
         base.repartition(par, "dst").sortWithinPartitions("dst"),
     )
     src_nodes = e_src.select(F.col("src").alias("node")).distinct()
@@ -275,10 +262,9 @@ def hits_scores(edges: DataFrame, n_iter: int = 2, k: int = 10) -> DataFrame:
         # normalizer and the normalized projection, and the rounds
         # chain — unpersisted, every consumer re-derives the whole
         # prior-round subtree and the duplication compounds per round
-        # (measured 13 s → ~3 s at sf0.1).  Keys are per-round, so the
-        # registry holds a fixed 2·n_iter entries.
-        a_raw = persist_latest(
-            f"pagerank.hits.a_raw{i}",
+        # (measured 13 s → ~3 s at sf0.1).  The caller's scope holds
+        # a fixed 2·n_iter of them until it exits.
+        a_raw = scoped(
             e_src.join(hubs, e_src.src == hubs.node)
             .groupBy("dst")
             .agg(F.sum("score").alias("_raw")),
@@ -292,8 +278,7 @@ def hits_scores(edges: DataFrame, n_iter: int = 2, k: int = 10) -> DataFrame:
                 ),
             )
         )
-        h_raw = persist_latest(
-            f"pagerank.hits.h_raw{i}",
+        h_raw = scoped(
             e_dst.join(auths, e_dst.dst == auths.node)
             .groupBy("src")
             .agg(F.sum("score").alias("_raw")),

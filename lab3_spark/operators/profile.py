@@ -332,12 +332,11 @@ def winsorized_stats(
     ranked = drop_rank_internals(
         with_global_row_number(
             vals, ["y", "k"], out_col="rn",
-            memo_key="profile.winsorize",
         )
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    ranked = persist_latest("profile.winsorize.ranked", ranked)
+    ranked = scoped(ranked)
     n_row = ranked.agg(F.count(F.lit(1)).alias("n"))
     cuts = (
         ranked.crossJoin(F.broadcast(n_row))
@@ -424,7 +423,6 @@ def mannwhitney_u(
     cum = drop_rank_internals(
         with_global_running_sum(
             hist, ["y"], "cnt", out_col="cum_incl",
-            memo_key="profile.mannwhitney",
         )
     )
     agg = cum.agg(
@@ -479,7 +477,7 @@ def grouped_winsorized_stats(
     broadcast back — the data never crosses a per-group
     single-partition window, so a skewed group cannot stall an
     executor.  Cutoffs come back as a #groups-row broadcast frame."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.rank import (
         group_rows_col,
         with_grouped_row_number,
@@ -493,11 +491,9 @@ def grouped_winsorized_stats(
     vals = df.select(
         F.col(group_col).alias("grp"), y.alias("y"), F.col(key_col).alias("k")
     )
-    ranked = persist_latest(
-        "profile.grouped_winsorize.ranked",
+    ranked = scoped(
         with_grouped_row_number(
             vals, ["grp"], ["y", "k"], out_col="rn",
-            memo_key="profile.grouped_winsorize",
         ).withColumn("gn", group_rows_col()),
     )
     kcut = F.greatest(F.lit(1), F.expr(f"gn * {tail_pct} DIV 100"))
@@ -569,7 +565,6 @@ def grouped_mannwhitney_u(
     cum = drop_rank_internals(
         with_grouped_running_sum(
             hist, ["grp"], ["y"], "cnt", out_col="cum_incl",
-            memo_key="profile.grouped_mannwhitney",
         )
     )
     agg = cum.groupBy("grp").agg(
@@ -619,7 +614,7 @@ def spearman_rho(
     same bound); the final rho is ONE double expression evaluated
     identically in both engines (docs/SCALE.md).  Degenerate (constant)
     column → NULL rho_fp."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.rank import (
         drop_rank_internals,
         with_global_running_sum,
@@ -627,19 +622,14 @@ def spearman_rho(
 
     xfp = F.floor(F.col(x_col) * 100 + F.lit(0.5)).cast("bigint")
     yfp = F.floor(F.col(y_col) * 100 + F.lit(0.5)).cast("bigint")
-    vals = persist_latest(
-        "profile.spearman.vals",
-        df.select(xfp.alias("x"), yfp.alias("y")),
-    )
+    vals = scoped(df.select(xfp.alias("x"), yfp.alias("y")))
 
-    def rank_table(col: str, memo: str) -> DataFrame:
+    def rank_table(col: str) -> DataFrame:
         hist = vals.groupBy(col).agg(
             F.count(F.lit(1)).cast("bigint").alias("_c")
         )
         cum = drop_rank_internals(
-            with_global_running_sum(
-                hist, [col], "_c", out_col="_cum", memo_key=memo
-            )
+            with_global_running_sum(hist, [col], "_c", out_col="_cum")
         )
         # 2·(tie-averaged rank) = 2·cum_below + cnt + 1
         return cum.select(
@@ -649,9 +639,7 @@ def spearman_rho(
             ),
         )
 
-    ranked = vals.join(
-        rank_table("x", "profile.spearman.x"), "x"
-    ).join(rank_table("y", "profile.spearman.y"), "y")
+    ranked = vals.join(rank_table("x"), "x").join(rank_table("y"), "y")
     d38 = "decimal(38,0)"
     agg = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -678,7 +666,6 @@ def grouped_spearman_rho(
     group_col: str,
     x: Column,
     y: Column,
-    memo_prefix: str = "profile.grouped_spearman",
 ) -> DataFrame:
     """Per-GROUP Spearman — :func:`spearman_rho` lifted to one row per
     group (grp, n, rho_fp), ordered by grp.
@@ -696,14 +683,13 @@ def grouped_spearman_rho(
     scalar operator, mirrored in the oracle.  Degenerate (constant)
     column within a group → NULL rho_fp.  ``x``/``y`` must already be
     exact integer expressions (the caller fixes the point)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.rank import (
         drop_rank_internals,
         with_grouped_running_sum,
     )
 
-    vals = persist_latest(
-        f"{memo_prefix}.vals",
+    vals = scoped(
         df.select(
             F.col(group_col).alias("grp"),
             x.cast("bigint").alias("x"),
@@ -711,14 +697,12 @@ def grouped_spearman_rho(
         ),
     )
 
-    def rank_table(col: str, memo: str) -> DataFrame:
+    def rank_table(col: str) -> DataFrame:
         hist = vals.groupBy("grp", col).agg(
             F.count(F.lit(1)).cast("bigint").alias("_c")
         )
         cum = drop_rank_internals(
-            with_grouped_running_sum(
-                hist, ["grp"], [col], "_c", out_col="_cum", memo_key=memo
-            )
+            with_grouped_running_sum(hist, ["grp"], [col], "_c", out_col="_cum")
         )
         return cum.select(
             "grp",
@@ -728,8 +712,8 @@ def grouped_spearman_rho(
             ),
         )
 
-    ranked = vals.join(rank_table("x", f"{memo_prefix}.x"), ["grp", "x"]).join(
-        rank_table("y", f"{memo_prefix}.y"), ["grp", "y"]
+    ranked = vals.join(rank_table("x"), ["grp", "x"]).join(
+        rank_table("y"), ["grp", "y"]
     )
     d38 = "decimal(38,0)"
     agg = ranked.groupBy("grp").agg(
@@ -848,7 +832,7 @@ def paired_permutation_test(
     Scale shape: pairs frame is |keys| rows; explode ×B then ONE
     combinable groupBy(b) — the poisson_bootstrap_ci cost model.  No
     pairs → NULL p (mirrored in the oracle)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.text import md5_long
 
     P = 2147483647  # 2^31 - 1
@@ -865,8 +849,7 @@ def paired_permutation_test(
             (F.col("sa") - F.col("sb")).alias("d"),
         )
     )
-    pairs = persist_latest(
-        "profile.paired_perm.pairs",
+    pairs = scoped(
         pairs.select(
             "d", md5_long(F.col("k"), salt="perm").alias("h")
         ),
@@ -961,18 +944,14 @@ def source_mannwhitney_bh(
 
     The group count m is collected once (a 1-row metadata aggregate,
     the kmeans pattern) because the BH thresholds depend on it."""
-    from lab3_spark.functions.partitioning import (
-        one_window_partition,
-        persist_latest,
-    )
+    from lab3_spark.functions.partitioning import one_window_partition, scoped
     from lab3_spark.operators.rank import (
         drop_rank_internals,
         with_global_running_sum,
     )
     from pyspark.sql.window import Window
 
-    hist = persist_latest(
-        "profile.mw_bh.hist",
+    hist = scoped(
         df.select(
             F.col(group_col).alias("grp"),
             F.col(value_col).cast("bigint").alias("y"),
@@ -980,14 +959,11 @@ def source_mannwhitney_bh(
         .groupBy("y", "grp")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
     )
-    tot = persist_latest(
-        "profile.mw_bh.tot",
+    tot = scoped(
         hist.groupBy("y").agg(F.sum("cnt").cast("bigint").alias("ct")),
     )
     cum = drop_rank_internals(
-        with_global_running_sum(
-            tot, ["y"], "ct", out_col="cumt", memo_key="profile.mw_bh"
-        )
+        with_global_running_sum(tot, ["y"], "ct", out_col="cumt")
     )
     rank2 = (2 * (F.col("cumt") - F.col("ct")) + F.col("ct") + 1).alias("r2")
     per = (
@@ -1089,13 +1065,12 @@ def grouped_bootstrap_ci(
     job if needed."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.text import md5_long
 
     P = 2147483647  # 2^31 - 1
     y = F.col(value_col).cast("bigint")
-    hashed = persist_latest(
-        "profile.grouped_boot.hashed",
+    hashed = scoped(
         df.select(
             F.col(group_col).alias("grp"),
             y.alias("y"),

@@ -20,7 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import persist_latest
+from lab3_spark.functions.partitioning import scoped
 
 
 def _unpivot(wide: DataFrame, checks: list[str]) -> DataFrame:
@@ -218,8 +218,7 @@ def chi_square_independence(
     corpus scale, double rounding is deterministic and identical in
     both engines) — then floored to fixed-point so the grand total is
     an order-insensitive exact bigint SUM (the PSI contract)."""
-    cells = persist_latest(
-        "quality.chi2.cells",
+    cells = scoped(
         documents.groupBy(
             F.col(row_col).alias("r"), F.col(col_col).alias("c")
         ).agg(F.count(F.lit(1)).alias("o")),
@@ -277,8 +276,7 @@ def cramers_v_residuals(
     order-insensitivity contract), so V derives from exact integers;
     residual and V are each ONE double expression mirrored in the
     oracle."""
-    cells = persist_latest(
-        "quality.cramers.cells",
+    cells = scoped(
         documents.groupBy(
             F.col(row_col).alias("r"), F.col(col_col).alias("c")
         ).agg(F.count(F.lit(1)).alias("o")),
@@ -362,8 +360,7 @@ def quality_dup_calibration(
     from lab3_spark.functions.text import tokenize
     from lab3_spark.operators.textstats import quality_expr
 
-    base = persist_latest(
-        "quality.calibration.base",
+    base = scoped(
         documents.select(
             "doc_id",
             F.md5(F.concat_ws(" ", tokenize(text_col))).alias("fp"),
@@ -410,8 +407,7 @@ def mutual_information(
     ln((o·n)/(r·c)) per CELL, immediately fixed-pointed, then exact
     bigint Σ o·term and ONE integer division by n (the
     source_token_entropy contract); entropies likewise."""
-    cells = persist_latest(
-        "quality.mi.cells",
+    cells = scoped(
         documents.groupBy(
             F.col(row_col).alias("r"), F.col(col_col).alias("c")
         ).agg(F.count(F.lit(1)).alias("o")),
@@ -602,12 +598,11 @@ def _logreg_feature_frame(documents: DataFrame, text_col: str) -> DataFrame:
     doubles, so ROUND (not floor) recovers the underlying integer
     exactly in both engines; n_words is capped at 1000 so one epic
     document cannot dominate the gradient."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.textstats import gopher_quality
 
     g = gopher_quality(documents, text_col)
-    return persist_latest(
-        "quality.logreg.features",
+    return scoped(
         g.select(
             "doc_id",
             F.col("gopher_pass").cast("int").alias("label"),

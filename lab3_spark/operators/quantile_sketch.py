@@ -309,12 +309,9 @@ def keyed_quantile_check(
     (merged from stored digest rows, never rescanning) checked against
     exact counts, the kll_daily_quantile_check contract with the key
     abstracted."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    digests = persist_latest(
-        "qdigest.keyed." + "|".join(sorted(c for c in vals.columns)),
-        keyed_value_digest(vals, eps),
-    )
+    digests = scoped(keyed_value_digest(vals, eps))
     total = digest_union(digests, eps)
     v = vals.select("grp", "v")
 
@@ -416,13 +413,10 @@ def kll_daily_quantile_check(
     digests (the streaming store, streaming/quantiles.py) — the gate
     then value-checks the INCREMENTAL merge path against the same
     exact counts."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     if daily is None:
-        daily = persist_latest(
-            "events.qdigest_daily",
-            daily_value_digest(events, value_col, eps),
-        )
+        daily = scoped(daily_value_digest(events, value_col, eps))
     total = digest_union(daily, eps)
 
     day = F.date_format("ts", "yyyy-MM-dd").alias("day")

@@ -51,53 +51,35 @@ _OFF = "_gos_offset"
 _TOT = "_gos_total"
 
 
-def _ranged_frame(
-    df: DataFrame, order_cols: Sequence[str], memo_key: str
-) -> DataFrame:
+def _ranged_frame(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
     """The shared scaffolding of every global-order operator: ONE
     ranged shuffle + within-partition sort complete the total order,
     then (pid, local row index) decompose from
     ``monotonically_increasing_id`` over the sorted iterator — no
     window, no second Exchange, ever touches the big side.
 
-    The result is persisted WITHIN the call (it feeds both the
-    per-partition metadata aggregate and the final broadcast join, and
-    must not be recomputed — the range partitioner would re-sample),
-    via the bounded ``persist_latest`` registry: at most one ranged
-    frame stays cached per ``memo_key``.
+    The result is cached (:func:`scoped`) until the caller's scope
+    exits: it feeds both the per-partition metadata aggregate and the
+    final broadcast join, and must not be recomputed — the range
+    partitioner would re-sample.  Each call ranks afresh; no call reads
+    a frame an earlier call cached (round 5 measured cross-run reuse of
+    the ranged frame a net LOSS at bench scale: the InMemoryTableScan
+    read path costs more than the small re-shuffle it saves).
 
-    Each call ranks afresh; no call reads a frame an earlier call
-    persisted.  That is also the measured choice: round 5's drift
-    attribution found cross-run reuse of the ranged frame a net LOSS at
-    bench scale (~+0.2-0.3 s/run on order_total_deciles /
-    doc_length_distribution — the InMemoryTableScan read path costs
-    more than the small re-shuffle it saves).  The within-call persist
-    is the part that matters at every scale.
-
-    ``memo_key`` is only the registry key.  Callers that keep the
-    default key share one slot: a second ranked frame under the same
-    key unpersists the first (and its ``.in`` input), so a plan that
-    ranks twice under one key — or reads an earlier ranked frame after
-    another rank call — recomputes it (correct, just uncached).  The
-    heavy callers pass distinct keys (ADVICE r13, low).
-
-    The INPUT is also persisted (bounded, ``memo_key + ".in"``) unless
-    the caller already cached it: ``repartitionByRange`` SAMPLES its
-    child to pick range boundaries — a reservoir sketch that computes
-    EVERY input partition — and the shuffle map then computes the child
-    again.  For the rank-stat gates the child is itself a full
-    aggregation (a value histogram) or a tokenize/score pass, so the
-    un-persisted form paid that subtree twice per call (optimization
-    round 13, guide §1.2 "don't compute things you throw away" / §5).
-    Storage cost: one extra data-scale projection per memo_key, the
-    same size class as the ranged frame this helper already caches;
-    both are bounded by the persist_latest registry."""
-    from lab3_spark.functions.partitioning import persist_latest
+    The INPUT is cached the same way unless the caller already cached
+    it: ``repartitionByRange`` SAMPLES its child to pick range
+    boundaries — a reservoir sketch that computes EVERY input partition
+    — and the shuffle map then computes the child again.  For the
+    rank-stat gates the child is itself a full aggregation (a value
+    histogram) or a tokenize/score pass, so the uncached form paid that
+    subtree twice per call (optimization round 13).  Storage cost: one
+    extra data-scale projection per call, the same size class as the
+    ranged frame."""
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.sources.text import ROW_IDX_BITS
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-        df = persist_latest(memo_key + ".in", df)
+    df = scoped(df)
     cols = [F.col(c) for c in order_cols]
     mid = F.monotonically_increasing_id()
     d = (
@@ -106,14 +88,13 @@ def _ranged_frame(
         .withColumn(_PID, F.shiftrightunsigned(mid, ROW_IDX_BITS))
         .withColumn(_RIDX, mid.bitwiseAND(F.lit((1 << ROW_IDX_BITS) - 1)))
     )
-    return persist_latest(memo_key, d)
+    return scoped(d)
 
 
 def with_global_row_number(
     df: DataFrame,
     order_cols: Sequence[str],
     out_col: str = "rn",
-    memo_key: str = "rank.global_row_number",
 ) -> DataFrame:
     """Add a 1-based global row number following ``ORDER BY order_cols``
     without a single-partition window.
@@ -124,7 +105,7 @@ def with_global_row_number(
     ``order_cols`` must be a total order (append a unique key as the
     last column) — equal keys across a range boundary would otherwise
     make ranks partition-placement-dependent."""
-    d = _ranged_frame(df, order_cols, memo_key)
+    d = _ranged_frame(df, order_cols)
 
     counts = d.groupBy(_PID).agg(F.count("*").alias("_n"))
     # one_window_partition(): same single-partition placement over the
@@ -159,7 +140,6 @@ def with_global_running_sum(
     order_cols: Sequence[str],
     value_col: str,
     out_col: str = "cum",
-    memo_key: str = "rank.global_running_sum",
 ) -> DataFrame:
     """Global prefix sum of ``value_col`` following ``ORDER BY
     order_cols`` — the distributed replacement for
@@ -173,7 +153,7 @@ def with_global_running_sum(
     offsets; the within-partition running sum is an ordinary
     partitioned window.  ``order_cols`` must be a total order (append a
     unique key)."""
-    d = _ranged_frame(df, order_cols, memo_key)
+    d = _ranged_frame(df, order_cols)
 
     sums = d.groupBy(_PID).agg(F.sum(value_col).alias("_v"))
     # see with_global_row_number — warning hygiene over the
@@ -213,7 +193,6 @@ def with_grouped_row_number(
     group_cols: Sequence[str],
     order_cols: Sequence[str],
     out_col: str = "rn",
-    memo_key: str = "rank.grouped_row_number",
 ) -> DataFrame:
     """Per-GROUP 1-based row number following ``ORDER BY order_cols``
     within each group — WITHOUT a per-group window (``partitionBy(
@@ -231,9 +210,7 @@ def with_grouped_row_number(
     from lab3_spark.functions.partitioning import one_window_partition
 
     gcols = list(group_cols)
-    d = with_global_row_number(
-        df, [*gcols, *order_cols], out_col="_grn", memo_key=memo_key
-    )
+    d = with_global_row_number(df, [*gcols, *order_cols], out_col="_grn")
     counts = d.groupBy(*gcols).agg(F.count("*").alias(_GRP_N))
     w = (
         Window.partitionBy(one_window_partition())
@@ -256,7 +233,6 @@ def with_grouped_running_sum(
     order_cols: Sequence[str],
     value_col: str,
     out_col: str = "cum",
-    memo_key: str = "rank.grouped_running_sum",
 ) -> DataFrame:
     """Per-group prefix sum of ``value_col`` following ``ORDER BY
     order_cols`` within each group — the grouped sibling of
@@ -268,8 +244,7 @@ def with_grouped_running_sum(
 
     gcols = list(group_cols)
     d = with_global_running_sum(
-        df, [*gcols, *order_cols], value_col, out_col="_gcum",
-        memo_key=memo_key,
+        df, [*gcols, *order_cols], value_col, out_col="_gcum"
     )
     sums = d.groupBy(*gcols).agg(F.sum(value_col).alias("_gv"))
     w = (
@@ -342,12 +317,11 @@ def with_global_order_stats(
     percent_rank: bool = False,
     cume_dist: bool = False,
     rn_col: str = "rn",
-    memo_key: str = "rank.global_row_number",
 ) -> DataFrame:
     """One-stop: global row number plus any of ntile / percent_rank /
     cume_dist, all derived from the distributed rank — the drop-in
     replacement for an unpartitioned window."""
-    d = with_global_row_number(df, order_cols, out_col=rn_col, memo_key=memo_key)
+    d = with_global_row_number(df, order_cols, out_col=rn_col)
     rn = F.col(rn_col)
     n = total_rows_col()
     if ntile is not None:

@@ -416,11 +416,10 @@ def brand_pair_lift(
     # (optimization round 12, guide §2.4): the pair self-join probes
     # both sides on that key, so the cached layout removes BOTH of the
     # join's basket-scale exchanges and sorts.
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     par = lineitem.sparkSession.sparkContext.defaultParallelism
-    baskets = persist_latest(
-        "relational.brand_pairs.baskets",
+    baskets = scoped(
         lineitem.join(
             F.broadcast(part),
             lineitem.l_partkey == part.p_partkey,
@@ -612,13 +611,12 @@ def customer_rfm_segments(orders: DataFrame, q: int = 5) -> DataFrame:
     global-rank operator (operators/rank.py — range shuffle + broadcast
     offsets; an unpartitioned ntile window would single-task the whole
     customer table), each over a (sort_key, custkey) total order so
-    the massive frequency ties resolve identically in both engines;
-    distinct memo keys keep the three ranged frames from evicting each
-    other mid-plan.  ``base`` (the customer-grain agg all three passes
-    rank) is persisted once (bounded) — unpersisted, each pass's
+    the massive frequency ties resolve identically in both engines.
+    ``base`` (the customer-grain agg all three passes rank) is cached
+    once, until the caller's scope exits — uncached, each pass's
     range-sampling + shuffle recomputed the orders aggregation, six
     orders scans total (optimization round 13, guide §5)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.rank import with_global_order_stats
 
     base = orders.groupBy("o_custkey").agg(
@@ -633,22 +631,21 @@ def customer_rfm_segments(orders: DataFrame, q: int = 5) -> DataFrame:
         (-F.col("_freq")).alias("_freq_sort"),
         (-F.col("_mon")).alias("_mon_sort"),
     )
-    base = persist_latest("relational.rfm.base", base)
+    base = scoped(base)
 
-    def score(sort_col: str, out: str, key: str) -> DataFrame:
+    def score(sort_col: str, out: str) -> DataFrame:
         return (
             with_global_order_stats(
                 base.select("o_custkey", sort_col),
                 [sort_col, "o_custkey"],
                 ntile=q,
-                memo_key=key,
             )
             .select("o_custkey", F.col("ntile").alias(out))
         )
 
-    r = score("_rec_sort", "r_score", "rank.rfm_r")
-    f = score("_freq_sort", "f_score", "rank.rfm_f")
-    m = score("_mon_sort", "m_score", "rank.rfm_m")
+    r = score("_rec_sort", "r_score")
+    f = score("_freq_sort", "f_score")
+    m = score("_mon_sort", "m_score")
     return (
         r.join(f, "o_custkey")
         .join(m, "o_custkey")
@@ -930,10 +927,9 @@ def nation_trend_robust(
     for negative numerators — floor-on-double instead); the median is
     the positional rule on the per-nation slope list; S is an exact
     bigint sum of sign()."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    monthly = persist_latest(
-        "relational.trend_robust.monthly",
+    monthly = scoped(
         orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(
             F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey
@@ -1084,7 +1080,6 @@ def customer_revenue_lorenz(
     )
     d = with_global_row_number(
         rev, ["cents", "o_custkey"], out_col="_rn",
-        memo_key="relational.lorenz",
     ).withColumn("_n", total_rows_col())
     d = d.withColumn(
         "decile", ntile_from_rank(F.col("_rn"), F.col("_n"), deciles)

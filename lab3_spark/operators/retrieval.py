@@ -384,10 +384,10 @@ def rank_agreement(
     ql = ql_dirichlet_top_docs(documents, terms, k).select(
         "doc_id", F.col("rnk").alias("r2")
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    bm = persist_latest("retrieval.agree.bm", bm)
-    ql = persist_latest("retrieval.agree.ql", ql)
+    bm = scoped(bm)
+    ql = scoped(ql)
     common = bm.join(ql, "doc_id")
     stats = common.agg(
         F.count(F.lit(1)).alias("n_common"),

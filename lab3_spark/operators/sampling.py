@@ -273,7 +273,6 @@ def token_budget_select(
         ["_negq", "doc_id"],
         "n_tokens",
         out_col="cum_tokens",
-        memo_key="sampling.token_budget_select",
     )
     return (
         cum.where(F.col("cum_tokens") <= budget)
@@ -526,7 +525,6 @@ def corpus_shuffle_shards(
         spread(documents).select(F.col(id_col), hv.alias("hv")),
         ["hv", id_col],
         ntile=n_shards,
-        memo_key="sampling.corpus_shuffle",
     )
     return (
         d.select(id_col, "rn", F.col("ntile").alias("shard"))
@@ -669,7 +667,6 @@ def systematic_sample(
     ranked = drop_rank_internals(
         with_global_row_number(
             hashed, ["_h", id_col], out_col="rn",
-            memo_key=f"sampling.systematic.{salt}",
         )
     )
     # (rn - 1) % k == 0 picks rows 1, k+1, 2k+1, … for ALL k >= 1;
@@ -813,7 +810,6 @@ def packing_fragmentation_curve(
             ["k"],
             "nt",
             out_col="_cum",
-            memo_key="sampling.packing_curve.cum",
         )
         .withColumn("before", F.col("_cum") - F.col("nt"))
         .select(

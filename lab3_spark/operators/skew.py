@@ -102,10 +102,9 @@ def key_skew_report(df: DataFrame, key_col: str, table: str) -> DataFrame:
     key sequence (the ship_latency_percentiles convention)."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    cnts = persist_latest(
-        f"skew.report.{table}.{key_col}",
+    cnts = scoped(
         df.groupBy(F.col(key_col).alias("k")).agg(
             F.count(F.lit(1)).alias("c")
         ),

@@ -471,10 +471,9 @@ def pmi_collocations(
     expression is arranged with an explicit operation order —
     ln((pair·N·N)/(bi_total·cnt·cnt)) — so the DuckDB oracle computes
     bit-identical doubles, truncated to 4 decimals for the gate."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    tok_arrays = persist_latest(
-        "pmi_tok_arrays",
+    tok_arrays = scoped(
         spread(documents).select(tokenize(text_col).alias("toks")),
     )
     toks = F.col("toks")
@@ -579,10 +578,10 @@ def unigram_surprisal(documents: DataFrame, text_col: str = "text") -> DataFrame
     )
     # persisted (n_docs rows — metadata-scale) for callers that read
     # the per-doc frame more than once, such as perplexity_buckets'
-    # ranking; one registry entry across calls.
-    from lab3_spark.functions.partitioning import persist_latest
+    # ranking; it lives until the caller's scope exits.
+    from lab3_spark.functions.partitioning import scoped
 
-    return persist_latest("textstats.unigram_surprisal", out)
+    return scoped(out)
 
 
 def perplexity_buckets(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -608,10 +607,6 @@ def perplexity_buckets(documents: DataFrame, text_col: str = "text") -> DataFram
         s,
         ["mean_surprisal_fp", "doc_id"],
         ntile=3,
-        # own memo key: sharing "rank.global_row_number" with the
-        # deciles gate would retire each other's ranged frame on
-        # alternating runs (correct, just uncached)
-        memo_key="rank.ppl_buckets",
     )
     bucket = (
         F.when(F.col("ntile") == 1, "head")
@@ -657,7 +652,7 @@ def bigram_backoff_surprisal(
     combine-compressed shuffles plus the vocabulary joins, no
     broadcast of anything corpus-scaled.  Docs with < 2 tokens have no
     bigrams and no row, in both engines."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     alpha_inv_fp = F.lit(2.5)  # 1/α, α = 0.4 exactly
     clean_ids = (
@@ -678,12 +673,10 @@ def bigram_backoff_surprisal(
     # time for cache/disk; a deployment short on scratch disk should
     # drop the toks persist first (stream carries the 3-way fan-out;
     # toks only fans out 2×).
-    toks = persist_latest(
-        "textstats.bigram_lm.toks",
+    toks = scoped(
         spread(documents).select("doc_id", tokenize(text_col).alias("toks")),
     )
-    stream = persist_latest(
-        "textstats.bigram_lm.stream",
+    stream = scoped(
         toks.select(
             "doc_id", F.explode(_word_ngrams(F.col("toks"), 2)).alias("gram")
         ),
@@ -753,7 +746,7 @@ def bigram_backoff_surprisal(
     )
     # persisted like unigram_surprisal: the bucket gate reads this
     # n_docs-row frame more than once
-    return persist_latest("textstats.bigram_backoff_surprisal", out)
+    return scoped(out)
 
 
 def bigram_ppl_buckets(
@@ -773,7 +766,6 @@ def bigram_ppl_buckets(
         s,
         ["mean_surprisal_fp", "doc_id"],
         ntile=3,
-        memo_key="rank.bigram_ppl_buckets",
     )
     bucket = (
         F.when(F.col("ntile") == 1, "head")
@@ -815,7 +807,7 @@ def kn_bigram_surprisal(
     Same two-shuffle scale shape as bigram_backoff_surprisal — every
     statistic is a hash agg over the clean bigram stream (type scale),
     scoring is a term-keyed equi-join."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     clean_ids = (
         gopher_quality(documents, text_col)
@@ -831,20 +823,15 @@ def kn_bigram_surprisal(
     # ~2×-corpus-scale, both bounded MEMORY_AND_DISK; drop the toks
     # persist first if scratch disk is short (stream carries the 3-way
     # fan-out).
-    toks = persist_latest(
-        "textstats.kn_bigram.toks",
+    toks = scoped(
         spread(documents).select("doc_id", tokenize(text_col).alias("toks")),
     )
-    stream = persist_latest(
-        "textstats.kn_bigram.stream",
+    stream = scoped(
         toks.select(
             "doc_id", F.explode(_word_ngrams(F.col("toks"), 2)).alias("gram")
         ),
     )
-    clean_stream = persist_latest(
-        "textstats.kn_bigram.clean_stream",
-        stream.join(clean_ids, "doc_id", "left_semi"),
-    )
+    clean_stream = scoped(stream.join(clean_ids, "doc_id", "left_semi"))
     w1 = F.element_at(F.split("gram", " "), 1)
     w2 = F.element_at(F.split("gram", " "), 2)
     big = clean_stream.groupBy("gram").agg(
@@ -917,7 +904,7 @@ def kn_bigram_surprisal(
         )
         .orderBy("doc_id")
     )
-    return persist_latest("textstats.kn_bigram_surprisal", out)
+    return scoped(out)
 
 
 def bigram_ppl_filter_by_source(
@@ -1065,14 +1052,13 @@ def sparse_tfidf_pairs(
             .alias("idf_fp"),
         )
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     # the pruned weight frame feeds THREE consumers (ssq, both pair
     # sides) — without the persist the tokenize→shingle→tf scan runs
     # 3×; post-pruning it is the compact inverted index, the right
     # frame to hold (the ngram_jaccard shared-shingle pattern)
-    w = persist_latest(
-        "textstats.sparse_tfidf.w",
+    w = scoped(
         tf.join(idf, "term").select(
             "term", "doc_id", (F.col("tf") * F.col("idf_fp")).alias("w")
         ),
@@ -1201,10 +1187,10 @@ def dsir_log_ratio_weights(
     )
     # persisted for consumers that read this per-doc frame more than
     # once (a final orderBy samples its input, then reads it again) —
-    # the unigram_surprisal recipe (n_docs-row cache, bounded).
-    from lab3_spark.functions.partitioning import persist_latest
+    # the unigram_surprisal recipe (n_docs-row cache, caller-scoped).
+    from lab3_spark.functions.partitioning import scoped
 
-    return persist_latest("textstats.dsir_weights", out)
+    return scoped(out)
 
 
 def robust_quality_zscore(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1230,15 +1216,14 @@ def robust_quality_zscore(documents: DataFrame, text_col: str = "text") -> DataF
     """
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.rounding import trunc
 
     # the scored frame feeds four branches (median rank pass + its
     # counts, the med join, the MAD rank pass) — without a persist the
     # tokenize+quality scan re-executes per branch (the shared-scan
     # convention: ngram_jaccard/sparse_tfidf do the same)
-    q = persist_latest(
-        "textstats.robust_zscore.q",
+    q = scoped(
         spread(documents).select(
             "doc_id",
             "source",
@@ -1316,15 +1301,14 @@ def bigram_surprisal(documents: DataFrame, text_col: str = "text") -> DataFrame:
     broadcast, the honest cost of a conditional model; the unigram
     form remains the broadcast-cheap variant.
     """
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     toks = tokenize(text_col)
     grams = spread(documents).where(F.size(toks) >= 2).select(
         "doc_id",
         F.explode(_word_ngrams(toks, 2)).alias("bg"),
     )
-    bg_counts = persist_latest(
-        "textstats.bigram_counts",
+    bg_counts = scoped(
         grams.groupBy("bg").agg(F.count("*").alias("cnt_bg")).withColumn(
             "w1", F.split("bg", " ")[0]
         ),
@@ -1481,7 +1465,6 @@ def quality_quantile_by_source(
         [group_col],
         ["quality", "doc_id"],
         out_col="rn",
-        memo_key="textstats.quality_quantile",
     ).withColumn("_gn", group_rows_col())
     return (
         drop_rank_internals(ranked)
@@ -1692,10 +1675,9 @@ def winnowing_fingerprints(
         (F.col("idx") <= F.col("_m") - WINNOW_W)
         | ((F.col("_m") < WINNOW_W) & (F.col("idx") == 0))
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    return persist_latest(
-        "textstats.winnow_fps",
+    return scoped(
         fps.select("doc_id", F.col("winmin").cast("bigint").alias("fp"))
         .distinct(),
     )
@@ -2028,10 +2010,9 @@ def lang_confusion_matrix(documents: DataFrame) -> DataFrame:
     count; per-label totals ride back broadcast.  The pair-count frame
     is persisted — it feeds both the totals and the final join, and
     alias differences defeat exchange reuse."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    cm = persist_latest(
-        "textstats.lang_confusion.cm",
+    cm = scoped(
         lang_id(documents)
         .groupBy("lang", "pred_lang")
         .agg(F.count("*").alias("n_docs")),
@@ -2086,9 +2067,7 @@ def zipf_fit(documents: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("neg", -F.col("cnt"))
     )
     ranked = drop_rank_internals(
-        with_global_row_number(
-            wc, ["neg", "term"], out_col="rank", memo_key="textstats.zipf"
-        )
+        with_global_row_number(wc, ["neg", "term"], out_col="rank")
     )
     xf = F.floor(F.log(F.col("rank").cast("double")) * ZIPF_LOG_FP).cast("bigint")
     yf = F.floor(F.log(F.col("cnt").cast("double")) * ZIPF_LOG_FP).cast("bigint")
@@ -2191,11 +2170,10 @@ def vocab_coverage_curve(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     # vocabulary-scale; probed once per ladder step + once for the total
-    ranked = persist_latest(
-        "textstats.vocab_curve.ranked",
+    ranked = scoped(
         counts.withColumn(
             "rk",
             F.row_number().over(
@@ -2326,7 +2304,7 @@ def _bpe_loop(
     """The shared BPE engine behind :func:`bpe_merges` and
     :func:`bpe_apply_compression`: returns (chosen merges, the FINAL
     (wcnt, seg) segmentation frame after all of them applied)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     words = (
         spread(documents)
@@ -2343,7 +2321,7 @@ def _bpe_loop(
     )
     rows: list[tuple[int, str, int]] = []
     for it in range(1, k + 1):
-        seg = persist_latest(f"textstats.bpe.seg_k{k}_it{it}", seg)
+        seg = scoped(seg)
         pairs = (
             seg.select(
                 "wcnt",
@@ -2440,7 +2418,7 @@ def grouped_bpe_merges(
     A source whose words are fully merged simply stops contributing
     rows (LEFT join keeps its segmentation frozen), identically in
     both engines."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     spark = documents.sparkSession
     words = (
@@ -2462,7 +2440,7 @@ def grouped_bpe_merges(
     )
     out_rows: list[tuple[str, int, str, int]] = []
     for it in range(1, k + 1):
-        seg = persist_latest(f"textstats.bpe_grouped.seg_k{k}_it{it}", seg)
+        seg = scoped(seg)
         pairs = (
             seg.select(
                 "source",
@@ -2678,9 +2656,9 @@ def source_vocab_overlap(
         .select("source", F.explode(tokenize(text_col)).alias("word"))
         .distinct()
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
-    sv = persist_latest("textstats.vocab_overlap.sv", sv)
+    sv = scoped(sv)
     sizes = sv.groupBy("source").agg(F.count(F.lit(1)).alias("v"))
     a = sv.select(F.col("source").alias("source_a"), "word")
     b = sv.select(F.col("source").alias("source_b"), "word")
@@ -2749,7 +2727,7 @@ def length_ks_test(
             .alias("cb"),
         )
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     w = (
         Window.partitionBy(one_window_partition())
@@ -2757,8 +2735,7 @@ def length_ks_test(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # persisted: probed once for the totals and once for the deviation
-    cum = persist_latest(
-        "textstats.ks.cum",
+    cum = scoped(
         hist.select(
             F.sum("ca").over(w).alias("cum_a"),
             F.sum("cb").over(w).alias("cum_b"),
@@ -2872,7 +2849,7 @@ def substring_contamination(
             "pos", "gram"
         ),
     )
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     train_grams = base.where(F.col("h") < 90).select("gram").distinct()
     # persist the 5% TEST slice: its positional grams feed both the
@@ -2880,8 +2857,7 @@ def substring_contamination(
     # each consumer re-tokenizes the corpus (the slice is 5% of token
     # occurrences, cheap to hold; the 90% train side stays one
     # straight scan into the map-side-distinct aggregate)
-    test_grams = persist_latest(
-        "textstats.substr_contam.test_grams",
+    test_grams = scoped(
         base.where(F.col("h") >= 95).select("doc_id", "pos", "gram"),
     )
     hits = test_grams.join(train_grams, "gram", "left_semi")
@@ -3001,11 +2977,10 @@ def source_ks_matrix(
     count) into one groupBy(src_a, src_b) max.  Exact integers
     throughout: d_num = max|cum_a·n_b − cum_b·n_a|, one division at
     the end (cum·n ≤ n² — bigint-safe)."""
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.rank import with_grouped_running_sum
 
-    hist = persist_latest(
-        "textstats.ks_matrix.hist",
+    hist = scoped(
         documents.select(
             F.col(group_col).alias("grp"),
             F.col(value_col).cast("bigint").alias("y"),
@@ -3022,11 +2997,9 @@ def source_ks_matrix(
             "y", "grp", F.coalesce("cnt", F.lit(0)).cast("bigint").alias("cnt")
         )
     )
-    cum = persist_latest(
-        "textstats.ks_matrix.cum",
+    cum = scoped(
         with_grouped_running_sum(
             grid, ["grp"], ["y"], "cnt", out_col="cum",
-            memo_key="textstats.ks_matrix",
         ).select("y", "grp", "cum"),
     )
     tot = hist.groupBy("grp").agg(F.sum("cnt").cast("bigint").alias("n"))

@@ -217,11 +217,10 @@ def zone_map_pruning_audit(
     # persisted: the three layout rankings below each probe this frame
     # (plus their range-partition sampling passes) — unpersisted, the
     # scan + bucketize + Morton/Hilbert chains re-ran per layout
-    # (optimization round 12, guide §5; bounded registry)
-    from lab3_spark.functions.partitioning import persist_latest
+    # (optimization round 12, guide §5; freed at the caller's scope exit)
+    from lab3_spark.functions.partitioning import scoped
 
-    coded = persist_latest(
-        "zorder.prune.coded",
+    coded = scoped(
         hilbert_index(coded, "cx", "cy", bits, out_col="h").select(
             key_col, col_b, "cx", "cy", "z", "h"
         ),
@@ -232,7 +231,6 @@ def zone_map_pruning_audit(
             coded,
             [order_col, key_col],
             out_col="_rn",
-            memo_key=f"zorder.prune.{layout}",
         )
         return d.withColumn("_n_total", total_rows_col()).select(
             F.lit(layout).alias("layout"),

@@ -1196,15 +1196,14 @@ def q_pipeline_gopher_prune(spark, sf_dir):
         .select("doc_id")
     )
     toks = tokenize("text")
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
 
     # persisted (bounded): pd_ fans out three ways — the min-id agg,
     # the semi-join probe, and the per-source pass counts below —
     # and its child is the gopher scorer + a full tokenize+md5 pass;
     # unpersisted, that chain ran twice and the r12 window→agg rewrite
     # REGRESSED this gate 2.0→3.1 s (VERDICT r12 item 4; guide §5)
-    pd_ = persist_latest(
-        "catalog.gopher_prune.pd",
+    pd_ = scoped(
         docs.join(gp, "doc_id").select(
             "doc_id",
             "source",
@@ -3348,7 +3347,7 @@ def q_contamination(spark, sf_dir):
     comparison.  The distinct (source, shingle) frame is persisted so
     the self-join's two sides share ONE tokenize+shingle scan instead
     of recomputing it per side."""
-    from lab3_spark.functions.partitioning import persist_latest, spread
+    from lab3_spark.functions.partitioning import scoped, spread
     from lab3_spark.functions.text import tokenize
 
     docs = _t(spark, sf_dir, "documents")
@@ -3357,8 +3356,7 @@ def q_contamination(spark, sf_dir):
         F.sequence(F.lit(1), F.size(toks) - 4),
         lambda i: F.concat_ws(" ", F.slice(toks, i, 5)),
     )
-    sh = persist_latest(
-        "contamination_shingles",
+    sh = scoped(
         spread(docs)
         .where(F.size(toks) >= 5)
         .select("source", F.explode(grams).alias("shingle"))
@@ -7312,7 +7310,7 @@ def q_dedup_cluster_representatives(spark, sf_dir):
     unrolled-iteration oracle matches bit-for-bit."""
     from pyspark.sql.window import Window
 
-    from lab3_spark.functions.partitioning import persist_latest
+    from lab3_spark.functions.partitioning import scoped
     from lab3_spark.operators.components import connected_components
     from lab3_spark.operators.dedup import minhash_candidates
     from lab3_spark.operators.pagerank import pagerank_fixed_point, symmetrize
@@ -7320,10 +7318,7 @@ def q_dedup_cluster_representatives(spark, sf_dir):
     # BOTH iterative consumers (components, pagerank) re-read the
     # candidate frame many times; one bounded persist shares the
     # LSH banding pass instead of recomputing it per branch
-    cands = persist_latest(
-        "catalog.cluster_rep_cands",
-        minhash_candidates(_t(spark, sf_dir, "documents")),
-    )
+    cands = scoped(minhash_candidates(_t(spark, sf_dir, "documents")))
     comps = connected_components(cands, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 _STATE_SCHEMA = "user_id bigint, last_type string, converted int"
 _COUNTS_SCHEMA = "s string, t string, n bigint"
 
@@ -85,6 +87,7 @@ def start_streaming_attribution(
     per-user window re-sorts."""
     from pyspark.sql.window import Window
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         _guard_prior(spark, store_path, batch_id)

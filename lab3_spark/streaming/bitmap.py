@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 
 def merged_presence(spark: SparkSession, store_path: str) -> DataFrame:
     """Distinct (user_id, dt) over every batch partition — the exact
@@ -45,6 +47,7 @@ def start_streaming_bitmap(
     trigger — drains the source then stops; production ingest would
     use a processing-time trigger)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(
             "user_id", F.to_date("ts").alias("dt")

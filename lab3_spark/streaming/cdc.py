@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 SNAPSHOT_COLS = (
     "o_orderkey",
     "last_op",
@@ -70,6 +72,7 @@ def start_cdc_apply(stream: DataFrame, store_path: str, checkpoint: str):
     trigger).  ``stream`` rows: (o_orderkey, seq, op, price_cents,
     o_orderstatus)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         latest = (

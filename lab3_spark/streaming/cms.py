@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.events import cms_counters
 
 
@@ -118,6 +119,7 @@ def start_streaming_cms(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         cms_counters(batch_df, key_col, d, w).write.mode("overwrite").parquet(
             f"{store_path}/batch_id={batch_id}"

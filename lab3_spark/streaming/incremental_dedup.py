@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.functions.text import tokenize
 
 
@@ -70,6 +71,7 @@ def start_incremental_dedup(
     semantics; replays re-apply it deterministically, keeping the
     idempotence contract."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if pre_filter is not None:

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 
 def cands_snapshot(
     spark: SparkSession, store_path: str, version: int
@@ -80,6 +82,7 @@ def start_incremental_lsh_index(
     document deltas; extra columns are ignored."""
     from lab3_spark.operators.dedup import minhash_band_keys
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 
 def ranks_snapshot(
     spark: SparkSession, store_path: str, version: int
@@ -75,6 +77,7 @@ def start_incremental_pagerank(
     deltas; extra columns are ignored."""
     from lab3_spark.operators.pagerank import pagerank_fixed_point
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_edges = batch_df.select("src", "dst").distinct()

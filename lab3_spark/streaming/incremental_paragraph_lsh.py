@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 
 def cands_snapshot(
     spark: SparkSession, store_path: str, version: int
@@ -100,6 +102,7 @@ def start_incremental_paragraph_lsh(
     if (delimiter is None) == (block_tokens is None):
         raise ValueError("give exactly one of delimiter / block_tokens")
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
+
 SPAN_COLS = ("doc_id", "span_start", "span_end", "span_tokens")
 
 
@@ -87,6 +89,7 @@ def start_incremental_spans(
     from lab3_spark.operators.dedup import spans_from_hits
     from lab3_spark.operators.textstats import _word_ngrams
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(

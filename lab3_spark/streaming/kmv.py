@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.events import KMV_DOMAIN, KMV_HEX_CHARS, kmv_synopsis
 
 
@@ -136,6 +137,7 @@ def start_streaming_kmv(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_syn = kmv_synopsis(
             batch_df.select(F.lit("all").alias("g"), _hv(key_col).alias("hv")),

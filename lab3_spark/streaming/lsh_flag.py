@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.dedup import minhash_band_keys
 
 
@@ -76,6 +77,7 @@ def start_streaming_lsh_flags(
     trigger — drains the source then stops; a production ingest would
     use a processing-time trigger)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         minhash_band_keys(batch_df, text_col).write.mode(
             "overwrite"

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.quantile_sketch import (
     DEFAULT_EPS,
     _DIGEST_FIELDS,
@@ -73,6 +74,7 @@ def start_streaming_quantiles(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
+    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         daily_value_digest(batch_df, value_col, eps).write.mode(
             "overwrite"

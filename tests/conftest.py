@@ -16,6 +16,16 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def cache_scope_per_test():
+    """Run every test inside its own ``cache_scope()``: frames the
+    engine caches during the test are released when it ends."""
+    from lab3_spark.functions.partitioning import cache_scope
+
+    with cache_scope():
+        yield
+
+
 @pytest.fixture
 def settled_persistent_rdds(spark):
     """Callable: the persistent-RDD count after letting the cleanup

@@ -5,10 +5,10 @@ Round 3 measured the leak class this pins: a bare per-call
 ``.persist()`` inside an operator leaves one CacheManager entry per
 invocation for the life of the session (entries are NOT GC-cleaned).
 Every shared-scan persist in the engine now routes through
-``functions.partitioning.persist_latest``, which unpersists the
-previous frame under the same key — so running the same operators
-twice must end with exactly as many persisted RDDs as running them
-once (at most one cached frame per persist_latest key).
+``functions.partitioning.scoped``, which registers the frame in the
+caller's ``cache_scope()`` — so running the same operators twice, each
+pass in its own scope, must end with no more persisted RDDs than
+running them once.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ import os
 
 import pytest
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.queries_catalog import QUERIES
 
 # Every operator family the round-3 verdict named as leaking (ngram
@@ -51,6 +52,16 @@ _MEMO_WORDS = (
     "_CENTROID_MEMO",
 )
 
+# keyed persist/retire registries the caller-owned cache scope replaced
+_REGISTRY_WORDS = (
+    "persist_latest",
+    "retire_latest",
+    "retire_prefix",
+    "_PERSISTED_LATEST",
+    "_RETIRED_LATEST",
+    "memo_key",
+)
+
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
@@ -65,12 +76,14 @@ def _run_all(spark, sf_dir) -> None:
 def test_persistent_rdds_bounded_across_repeat_runs(
     spark, sf_dir, settled_persistent_rdds
 ):
-    _run_all(spark, sf_dir)
+    with cache_scope():
+        _run_all(spark, sf_dir)
     after_first = settled_persistent_rdds()
-    _run_all(spark, sf_dir)
+    with cache_scope():
+        _run_all(spark, sf_dir)
     after_second = settled_persistent_rdds()
-    # Second pass replaces, never accumulates: persist_latest holds at
-    # most one frame per key, so the count must not grow.
+    # Each pass's scope releases what the pass cached, so the count
+    # must not grow.
     assert after_second <= after_first, (
         f"CacheManager grew across identical runs: {after_first} -> "
         f"{after_second} persisted RDDs (a bare .persist() leaked)"
@@ -79,18 +92,20 @@ def test_persistent_rdds_bounded_across_repeat_runs(
 
 def test_no_bare_persist_outside_managed_sites():
     """Structural guard: every ``.persist()`` in lab3_spark is
-    persist_latest's own call, and no cross-call memo survives — no
-    plan-equality lookup (``sameResult``) and none of the removed memo
-    registries appear anywhere in the package."""
+    ``scoped``'s own call, and no cross-call memo survives — no
+    plan-equality lookup (``sameResult``), none of the removed memo
+    registries and none of the removed keyed persist/retire registries
+    appear anywhere in the package."""
     import lab3_spark
 
     root = os.path.dirname(lab3_spark.__file__)
     allowed = {
-        # persist_latest implementation itself
+        # scoped implementation itself
         os.path.join("functions", "partitioning.py"),
     }
     offenders = []
     memos = []
+    registries = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if not fn.endswith(".py"):
@@ -102,11 +117,17 @@ def test_no_bare_persist_outside_managed_sites():
             if ".persist()" in src and rel not in allowed:
                 offenders.append(rel)
             memos.extend(f"{rel}: {w}" for w in _MEMO_WORDS if w in src)
+            registries.extend(
+                f"{rel}: {w}" for w in _REGISTRY_WORDS if w in src
+            )
     assert not offenders, (
         f"bare .persist() outside managed sites: {offenders}; route "
-        "through functions.partitioning.persist_latest"
+        "through functions.partitioning.scoped"
     )
     assert not memos, f"cross-call memo left in lab3_spark: {memos}"
+    assert not registries, (
+        f"keyed persist/retire registry left in lab3_spark: {registries}"
+    )
 
 
 def test_unigram_surprisal_recomputes_after_clear_cache(spark, docs):

@@ -3,6 +3,7 @@ graphs; integer arithmetic must match an exact Python re-computation."""
 
 from pyspark.sql import functions as F
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.pagerank import (
     BASE_FP,
     DAMPING_DEN,
@@ -100,18 +101,21 @@ def test_long_horizon_truncation_branch(spark, settled_persistent_rdds):
     assert got == python_pagerank(edge_list, 10)
 
     # storage bound: rebuilding on a DIFFERENT input (forces the loop,
-    # including two truncations at n_iter=20) must not grow the set of
-    # pinned RDDs — each truncation frees its predecessor and the final
-    # checkpoint frees the last one (the prev_trunc discipline).
+    # including two truncations at n_iter=20), each build in its own
+    # scope, must not grow the set of pinned RDDs — each truncation
+    # frees its predecessor, the final checkpoint frees the last one
+    # (the prev_trunc discipline) and the scope frees the final one.
     pairs2 = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
     )
-    pagerank_fixed_point(symmetrize(pairs2), n_iter=20).collect()
+    with cache_scope():
+        pagerank_fixed_point(symmetrize(pairs2), n_iter=20).collect()
     n_after_first = settled_persistent_rdds()
     pairs3 = spark.createDataFrame(
         [(5, 6), (6, 7), (7, 8)], "doc_a long, doc_b long"
     )
-    pagerank_fixed_point(symmetrize(pairs3), n_iter=20).collect()
+    with cache_scope():
+        pagerank_fixed_point(symmetrize(pairs3), n_iter=20).collect()
     n_after_second = settled_persistent_rdds()
     assert n_after_second <= n_after_first, (
         n_after_first,

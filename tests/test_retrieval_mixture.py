@@ -108,9 +108,7 @@ def test_global_running_sum_matches_window(spark):
     )
     got = {
         r.id: r.cum
-        for r in with_global_running_sum(
-            df, ["id"], "v", memo_key="test.grs"
-        ).collect()
+        for r in with_global_running_sum(df, ["id"], "v").collect()
     }
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     want = {

@@ -59,23 +59,28 @@ def test_band_planner_curve_join_is_broadcast(spark, docs):
 
 def test_planner_quality_reband_no_signature_recompute(spark, docs):
     """lsh_planned_blocking_quality must re-band from the persisted
-    signature frame: the call registers the signature frame under its
-    persist key, and the re-banded plan reads it through the cache
-    (an InMemoryRelation over the signature columns) instead of
+    signature frame: the call registers the signature frame in the
+    caller's cache scope, and the re-banded plan reads it through the
+    cache (an InMemoryRelation over the signature columns) instead of
     re-running the signature pass."""
     import re
 
-    from lab3_spark.functions import partitioning as P
-    from lab3_spark.operators.dedup import lsh_planned_blocking_quality
+    from lab3_spark.functions.partitioning import cache_scope
+    from lab3_spark.operators.dedup import (
+        lsh_planned_blocking_quality,
+        minhash_signatures,
+    )
 
-    out = lsh_planned_blocking_quality(docs)
-    sig = P._PERSISTED_LATEST["dedup.minhash_sig.text"]
-    assert sig.storageLevel.useMemory
-    # cached relations' column lists with expression ids stripped
-    cached = out._jdf.queryExecution().withCachedData().toString()
-    relations = {
-        re.sub(r"#\d+L?", "", r)
-        for r in re.findall(r"InMemoryRelation \[([^\]]*)\]", cached)
-    }
-    assert ", ".join(sig.columns) in relations, cached
-    out.collect()
+    with cache_scope() as frames:
+        out = lsh_planned_blocking_quality(docs)
+        sig_cols = minhash_signatures(docs).columns
+        sig = next(f for f in frames if f.columns == sig_cols)
+        assert sig.storageLevel.useMemory
+        # cached relations' column lists with expression ids stripped
+        cached = out._jdf.queryExecution().withCachedData().toString()
+        relations = {
+            re.sub(r"#\d+L?", "", r)
+            for r in re.findall(r"InMemoryRelation \[([^\]]*)\]", cached)
+        }
+        assert ", ".join(sig.columns) in relations, cached
+        out.collect()

@@ -8,11 +8,13 @@ join strategies, Python-eval nodes) so plan diffs are greppable.
 
 --warm executes each query once (noop sink) BEFORE re-constructing and
 dumping its plan, so one-time work (parquet footers, bucketed-table
-registration) is done first.  It does not change the plan: no call
-reuses a frame an earlier call persisted (persist_latest replaces the
-previous frame under its key), so every dump shows the plan each call
-runs — caches built during construction (iterative operators' loops)
-appear materialized, the rest as InMemoryRelations built in the call.
+registration) is done first.  It does not change the plan: the warm
+run and the dump each run in their own
+``functions.partitioning.cache_scope()``, which frees every frame the
+call cached when it exits, so no call reuses a frame an earlier call
+cached and every dump shows the plan each call runs — caches built
+during construction (iterative operators' loops) appear materialized,
+the rest as InMemoryRelations built in the call.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.queries_catalog import QUERIES
 from lab3_spark.session import get_spark
 
@@ -44,13 +47,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         if warm:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+            with cache_scope():
+                QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+        with cache_scope():
+            df = QUERIES[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

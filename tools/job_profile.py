@@ -21,6 +21,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.queries_catalog import QUERIES
 from lab3_spark.session import get_spark
 from lab3_spark.sources.tables import TABLES, load_table
@@ -57,9 +58,10 @@ def main() -> None:
             before_ids = {j["jobId"] for j in _jobs(base, app)}
             spark.sparkContext.setJobDescription(f"profile:{name}")
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            with cache_scope():
+                QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
             dt = time.time() - t0
             spark.sparkContext.setJobDescription(None)
             time.sleep(0.3)

@@ -48,6 +48,7 @@ def v(*names, sf=None):
     importlib.reload(VL)
     _reload()
     import __spark_entry__ as em
+    from lab3_spark.functions.partitioning import cache_scope
 
     queries, oracles = em.queries(), em.oracle_sql()
     sel = names or list(queries)
@@ -57,8 +58,9 @@ def v(*names, sf=None):
             print(f"??    {name}: not registered")
             continue
         try:
-            sdf = queries[name](spark, sf or SF)
-            scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+            with cache_scope():
+                sdf = queries[name](spark, sf or SF)
+                scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark: {type(e).__name__}: {str(e)[:300]}")
             fails.append(name)

@@ -6,7 +6,7 @@ round-10 `corpus_ngram_novelty` reprice, now reusable): ONE warm
 session, N interleaved rounds over the flagged gates (gate order
 rotates within a round is unnecessary — interleaving across rounds
 already decorrelates steal bursts), noop sink; every call computes
-from its input, as in bench.py's passes.  Prints per-gate min + all samples as one JSON line.
+from its input in its own cache scope, as in bench.py's passes.  Prints per-gate min + all samples as one JSON line.
 
 Usage: python tools/reprice.py gate [gate ...] [--passes N]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -21,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.queries_catalog import QUERIES
 from lab3_spark.session import get_spark
 from lab3_spark.sources.tables import TABLES, load_table
@@ -69,9 +70,10 @@ def main() -> None:
     for rnd in range(passes):
         for g in args:
             t0 = time.time()
-            QUERIES[g](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            with cache_scope():
+                QUERIES[g](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
             dt = round(time.time() - t0, 3)
             samples[g].append(dt)
             print(f"[round {rnd + 1}] {g}: {dt:.3f}s", file=sys.stderr)

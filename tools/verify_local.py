@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.session import get_spark
 from lab3_spark.sources.tables import TABLES
 
@@ -108,8 +109,8 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            spdf = sdf.toPandas()
+            with cache_scope():
+                spdf = fn(spark, sf_dir).toPandas()
             scols = list(spdf.columns)
             srows = pandas_rows(spdf)
         except Exception as e:
