@@ -44,8 +44,9 @@ def tokenize(text: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(_col(text)), F.lit(TOKEN_REGEX), F.lit(0))
 
 
-def is_stop_word(word: Column | str, mode: str = "idiomatic") -> Column:
-    """Boolean predicate: is `word` dropped by the stop-word filter?
+def is_stop_word(word: str, mode: str = "idiomatic") -> Column:
+    """Boolean predicate: is the column named `word` dropped by the
+    stop-word filter?
 
     - ``idiomatic``: set membership in the 182-word list.  (For large
       vocabularies prefer the broadcast anti-join in operators/wordcount —
@@ -56,13 +57,15 @@ def is_stop_word(word: Column | str, mode: str = "idiomatic") -> Column:
       strictly more aggressive: any word that appears as a substring of
       the 1000-char stop line is dropped.
     """
-    w = _col(word)
     if mode == "parity":
-        return F.instr(F.lit(STOP_LINE), w) > 0
+        return F.instr(F.lit(STOP_LINE), F.col(word)) > 0
     if mode == "idiomatic":
         from lab3_spark.stopwords import STOP_WORDS
 
-        return w.isin(*STOP_WORDS)
+        # one SQL parse on the JVM; ``isin(*STOP_WORDS)`` makes a py4j
+        # round trip per literal, 182 on every plan that filters words
+        words = ", ".join("'" + w.replace("'", "\\'") + "'" for w in STOP_WORDS)
+        return F.expr(f"{word} IN ({words})")
     raise ValueError(f"unknown stop-word mode: {mode!r}")
 
 
@@ -93,12 +96,3 @@ def md5_long(c: Column | str, salt: str | None = None) -> Column:
     """
     inp = _col(c) if salt is None else F.concat(F.lit(salt), F.lit("|"), _col(c))
     return hex_to_long(F.substring(F.md5(inp), 1, 15))
-
-
-def duckdb_hex_to_long(expr: str) -> str:
-    """DuckDB SQL fragment mirroring :func:`hex_to_long` for oracle SQL."""
-    return (
-        "list_reduce(list_transform(string_split(" + expr + ", ''), "
-        "c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), "
-        "(a, b) -> a * 16 + b)"
-    )

@@ -23,7 +23,7 @@ from lab3_spark.operators import textstats as TS
 from lab3_spark.operators.inverted_index import inverted_index
 from lab3_spark.operators.topk import top_k_words
 from lab3_spark.operators.wordcount import word_count
-from lab3_spark.sources.tables import ensure_nanos_as_long, normalize_event_time
+from lab3_spark.sources.tables import ensure_nanos_as_long, normalize_event_time, table_schema
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1695,14 +1695,11 @@ def q_streaming_tumbling(spark, sf_dir):
     tumbling-window agg → memory sink, availableNow trigger), returned
     as the final complete-mode table.  Oracle = the batch SQL: with
     all data available, streaming complete mode must equal batch."""
-    import os as _os
-
     from lab3_spark.streaming.windowed import streaming_tumbling_counts
 
-    path = _os.path.join(sf_dir, "events.parquet")
     stage = _staged_stream_dir(sf_dir, "events")
     ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     src = spark.readStream.schema(schema).parquet(stage)
     src = normalize_event_time(src)
     result = streaming_tumbling_counts(src)
@@ -1751,14 +1748,11 @@ def q_streaming_sliding(spark, sf_dir):
     with all data available, complete mode must equal the batch
     sliding oracle — the events_sliding_10m semantics carried into a
     stream with bounded state."""
-    import os as _os
-
     from lab3_spark.streaming.windowed import streaming_sliding_counts
 
-    path = _os.path.join(sf_dir, "events.parquet")
     stage = _staged_stream_dir(sf_dir, "events")
     ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     src = spark.readStream.schema(schema).parquet(stage)
     src = normalize_event_time(src)
     result = streaming_sliding_counts(src)
@@ -2934,14 +2928,11 @@ def q_streaming_stateful(spark, sf_dir):
     the emitted rows are exactly the GAP-CLOSED sessions = every
     session except each user's last — which the oracle expresses with
     the lag+running-sum formulation."""
-    import os as _os
-
     from lab3_spark.streaming.stateful import streaming_sessionize
 
-    path = _os.path.join(sf_dir, "events.parquet")
     stage = _staged_stream_dir(sf_dir, "events")
     ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     src = spark.readStream.schema(schema).parquet(stage)
     src = normalize_event_time(src)
     # gate on a user subset: per-group Python/state overhead makes
@@ -5696,14 +5687,11 @@ def q_streaming_ss_join(spark, sf_dir):
     time-range bound make both state buffers evictable; with the
     bounded source the result equals the batch interval join — which
     is exactly what the oracle states."""
-    import os as _os
-
     from lab3_spark.streaming.joins import view_purchase_interval_join
 
-    path = _os.path.join(sf_dir, "events.parquet")
     stage = _staged_stream_dir(sf_dir, "events")
     ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     src = spark.readStream.schema(schema).parquet(stage)
     src = normalize_event_time(src)
     out = view_purchase_interval_join(src.where(F.col("user_id") < 300))

@@ -11,6 +11,13 @@ Config choices (SURVEY.md §4):
   should be ~2-3x total cores or left to AQE coalescing.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for the few Pandas-UDF extension operators.
+- PySpark's DataFrame debugging off: with it on (the PySpark 4
+  default), every ``functions``/``Column`` call walks the Python stack
+  and makes extra py4j round trips to record its call site, a fixed
+  cost on every plan a query builds.  Errors keep their class and
+  message; only the Python call-site annotation in their query context
+  is gone.  It must be set here: PySpark reads the flag once per
+  process, from the first active session.
 """
 
 from __future__ import annotations
@@ -54,6 +61,7 @@ def get_spark(
         # (sources/tables.py) by truncating to micros like DuckDB does.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -4,10 +4,15 @@ Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file each under a
 scale-factor directory.
 
-Reading parquet via ``spark.read.parquet`` gets us columnar vectorized
-scans, predicate pushdown, and column pruning for free (SURVEY.md §4) —
-the Spark-native answer to the reference's whole-file pread
-(wordCount.cpp:116-133).
+Reading parquet gets us columnar vectorized scans, predicate pushdown,
+and column pruning for free (SURVEY.md §4) — the Spark-native answer to
+the reference's whole-file pread (wordCount.cpp:116-133).
+
+Every table is read with a declared schema (:data:`SCHEMAS`): schema
+inference (``spark.read.parquet`` without one) runs a Spark job per
+table per load to read the file footer, which at catalog sizes was most
+of a query's build time.  ``tests/test_table_schemas.py`` pins each
+declared schema to what inference returns on every data source.
 """
 
 from __future__ import annotations
@@ -16,19 +21,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-TABLES: tuple[str, ...] = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# Each table's columns as Spark infers them from the parquet files
+# (TESTDATA.md and perfbench/gen.py write the same types).
+SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, "
+        "l_tax double, l_returnflag string, l_linestatus string, "
+        "l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TABLES: tuple[str, ...] = tuple(SCHEMAS)
 
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -41,7 +68,7 @@ def ensure_nanos_as_long(spark: SparkSession) -> None:
 
     It's a *runtime* conf (not builder-only), so it works on ANY
     SparkSession — including ones constructed outside our session
-    factory.  Without it, ``spark.read.parquet`` on events.parquet
+    factory.  Without it, reading a TIMESTAMP(NANOS) events.parquet
     throws ``PARQUET_TYPE_ILLEGAL: INT64 (TIMESTAMP(NANOS,false))``.
     Only nano-timestamp columns are affected; all other tables read
     identically with or without it."""
@@ -61,26 +88,59 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     ensure_nanos_as_long(spark)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table, normalizing nano-timestamps.
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
-    events.parquet stores ts as TIMESTAMP(NANOS); with
-    ``spark.sql.legacy.parquet.nanosAsLong`` Spark reads it as a long,
-    which we truncate to micros (integer division — the same truncation
-    DuckDB applies casting TIMESTAMP_NS → TIMESTAMP).
 
-    Self-sufficient on any session: sets the conf itself (runtime SQL
-    conf), with a catch-and-retry fallback should some other table ever
-    carry a nano column."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ensure_session_defaults(spark)
+def _event_ts_type(path: str) -> str | None:
+    """The Spark type ``events.ts`` reads as, from the file's parquet
+    footer, read in this Python process (no Spark job).
+
+    The generator has shipped ts both as TIMESTAMP(MICROS), which Spark
+    reads as timestamp_ntz, and as TIMESTAMP(NANOS), which nanosAsLong
+    reads as bigint nanos.  No one declared type reads both: declaring
+    timestamp_ntz fails on a NANOS file only when the scan runs, and
+    bigint returns raw micros or raw nanos with nothing to tell them
+    apart.  None (infer) when the path is not a local file or ts has
+    any other encoding."""
+    if not os.path.isfile(path):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     try:
-        df = spark.read.parquet(path)
-    except Exception as exc:  # pragma: no cover - defensive retry
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
-            raise
-        ensure_nanos_as_long(spark)
-        df = spark.read.parquet(path)
+        ts = pq.read_schema(path).field("ts").type
+    except (OSError, KeyError, ValueError):
+        return None
+    if ts == pa.timestamp("us"):
+        return "timestamp_ntz"
+    if ts == pa.timestamp("ns"):
+        return "bigint"
+    return None
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> str | StructType:
+    """The schema :func:`load_table` reads `name` with: the declared
+    one, with events' ts typed after its encoding.  Falls back to
+    inference (one Spark job) only for an events file whose ts encoding
+    cannot be read in this Python process."""
+    if name != "events":
+        return SCHEMAS[name]
+    path = _table_path(sf_dir, name)
+    ts = _event_ts_type(path)
+    if ts is None:
+        return spark.read.parquet(path).schema
+    return SCHEMAS[name].replace("ts timestamp_ntz", f"ts {ts}")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table with its declared schema (no Spark job), with
+    events' ts normalized to TIMESTAMP (:func:`normalize_event_time`).
+
+    Self-sufficient on any session: sets the runtime confs it needs
+    itself (:func:`ensure_session_defaults`)."""
+    ensure_session_defaults(spark)
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(_table_path(sf_dir, name))
     if name == "events":
         df = normalize_event_time(df)
     return df

@@ -32,9 +32,8 @@ def test_tokenizer_tab_and_newline_split(spark):
 
 
 def test_stop_word_modes(spark):
-    df = spark.createDataFrame(
-        [("the",), ("hav",), ("quick",), ("abo",)], "word string"
-    )
+    words = ["the", "hav", "quick", "abo", "dont", *STOP_WORDS]
+    df = spark.createDataFrame([(w,) for w in words], "word string")
     got = df.select(
         "word",
         is_stop_word("word", "idiomatic").alias("idio"),
@@ -47,6 +46,8 @@ def test_stop_word_modes(spark):
     assert by["quick"] == (False, False)
     # 'abo' is a substring of 'about'
     assert by["abo"] == (False, True)
+    # every listed word, apostrophes included, is an exact member
+    assert {w: idio for w, (idio, _) in by.items()} == {w: w in STOP_WORDS for w in words}
 
 
 def test_stop_line_is_reference_file():
