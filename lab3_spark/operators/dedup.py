@@ -36,7 +36,6 @@ from pyspark.sql.window import Window
 from lab3_spark.functions.partitioning import spread
 from lab3_spark.functions.rounding import trunc
 from lab3_spark.functions.text import md5_long, tokenize
-from lab3_spark.functions.vectors import cosine_similarity
 
 N_HASHES = 16
 N_BANDS = 4
@@ -2294,82 +2293,6 @@ CDC_GEAR_MUL = 2654435761  # Knuth multiplicative hash
 CDC_GEAR_MOD = 8192
 
 
-def cdc_chunk_frame(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, idx, chunk): CONTENT-DEFINED chunking — the
-    restic/borg/FastCDC family's answer to the fixed-window chunker's
-    boundary-shift fragility.  A gear rolling hash over a 16-byte
-    window places a boundary wherever h % 64 == 0, so inserting or
-    deleting one byte shifts only the chunk it lands in: boundaries
-    RESYNCHRONIZE at the next hash match and every later chunk keeps
-    its fingerprint (pinned by test), whereas repeated_chunks'
-    fixed windows shift every subsequent fingerprint.
-
-    Whole computation is ONE in-row expression chain (gear table →
-    closed-form window hash Σ gear[i−k]·4^k (< 2^47, exact int64) →
-    boundary filter → slice explode): no UDF, no shuffle until the
-    consumer aggregates.  O(n·16) expression ops per doc."""
-    n = F.length(text_col)
-    gear = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: (
-            F.ascii(F.substring(F.col(text_col), i, F.lit(1)))
-            * F.lit(CDC_GEAR_MUL)
-        )
-        % CDC_GEAR_MOD,
-    )
-    pre = documents.select(
-        "doc_id", F.col(text_col).alias("_t"), gear.alias("_gear"),
-        n.cast("long").alias("_n"),
-    )
-
-    def h(i):
-        return F.aggregate(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(CDC_WINDOW - 1)),
-                lambda k: F.element_at(F.col("_gear"), (i - k).cast("int"))
-                * F.pow(F.lit(4.0), k).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    bnd = F.array_sort(
-        F.array_distinct(
-            F.concat(
-                F.array(F.lit(0).cast("long")),
-                F.filter(
-                    # Spark's sequence(a, b) DESCENDS when b < a (DuckDB's
-                    # range is empty) — docs shorter than the window must
-                    # yield no interior boundary candidates, not a reversed
-                    # scan off the end of the gear table
-                    F.when(
-                        F.col("_n") >= CDC_WINDOW,
-                        F.sequence(
-                            F.lit(CDC_WINDOW).cast("long"), F.col("_n")
-                        ),
-                    ).otherwise(F.expr("CAST(array() AS ARRAY<BIGINT>)")),
-                    lambda i: h(i) % CDC_MASK_MOD == 0,
-                ),
-                F.array(F.col("_n")),
-            )
-        )
-    )
-    return pre.select("doc_id", bnd.alias("_bs"), "_t").select(
-        "doc_id",
-        F.expr(
-            # CASE guard: an empty doc collapses _bs to [0] and
-            # sequence(1, 0) DESCENDS in Spark — emit no chunks instead
-            "posexplode(CASE WHEN size(_bs) >= 2 THEN"
-            " transform(sequence(1, size(_bs) - 1), idx ->"
-            " substring(_t, CAST(element_at(_bs, idx) + 1 AS INT),"
-            " CAST(element_at(_bs, idx + 1) - element_at(_bs, idx) AS INT)))"
-            " ELSE CAST(array() AS ARRAY<STRING>) END)"
-        ).alias("idx", "chunk"),
-    ).where(F.length("chunk") > 0).select(
-        "doc_id", (F.col("idx") + 1).alias("idx"), "chunk"
-    )
-
-
 def cdc_duplicate_chunks(
     documents: DataFrame, text_col: str = "text"
 ) -> DataFrame:
@@ -2396,13 +2319,19 @@ def cdc_duplicate_chunks(
 def cdc_chunk_frame_arrow(
     documents: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Arrow twin of :func:`cdc_chunk_frame` — bit-identical output
-    (pinned in tests/test_dedup.py), ~7× faster: the per-character
-    window hash is a numpy int64 convolution per doc instead of an
-    interpreted higher-order-function fold per position.  Same ladder
-    as the SimHash/LSH expression-vs-arrow twins: the expression form
-    IS the oracle-matching spec, the Arrow form is the measured fast
-    path the gate runs."""
+    """(doc_id, idx, chunk): CONTENT-DEFINED chunking — the
+    restic/borg/FastCDC family's answer to the fixed-window chunker's
+    boundary-shift fragility.  A gear rolling hash over a 16-character
+    window places a boundary wherever h % 64 == 0, so inserting or
+    deleting one character shifts only the chunk it lands in:
+    boundaries RESYNCHRONIZE at the next hash match and every later
+    chunk keeps its fingerprint (pinned by test), whereas
+    repeated_chunks' fixed windows shift every subsequent fingerprint.
+
+    One Arrow batch pass per partition, no shuffle: the window hash
+    Σ gear[i−k]·4^k (< 2^47, exact int64) is a numpy convolution per
+    doc.  tests/test_dedup.py checks it against a pure-Python
+    reference of the same closed form."""
     import numpy as np
     import pyarrow as pa
 
@@ -2426,8 +2355,7 @@ def cdc_chunk_frame_arrow(
                 gear = (cps * CDC_GEAR_MUL) % CDC_GEAR_MOD
                 if n >= CDC_WINDOW:
                     # h[i] = Σ_k gear[i−k]·4^k for i = W..n (1-based):
-                    # exact int64 (< 2^47), same closed form as the
-                    # expression twin
+                    # exact int64 (< 2^47)
                     h = np.convolve(gear, kernel, mode="valid")
                     interior = np.flatnonzero(h % CDC_MASK_MOD == 0) + CDC_WINDOW
                 else:

@@ -80,20 +80,10 @@ def sliding_counts(
 
 def daily_active_users(events: DataFrame) -> DataFrame:
     """Exact daily distinct users (count-distinct shuffles twice:
-    partial distinct then count; use approx_dau at 100 TB)."""
+    partial distinct then count; the HLL++ path is approx_dau_check)."""
     return (
         events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(F.countDistinct("user_id").alias("dau"))
-        .orderBy("day")
-    )
-
-
-def approx_dau(events: DataFrame, rsd: float = 0.01) -> DataFrame:
-    """HyperLogLog++ distinct users — the scale path (single shuffle,
-    fixed-size sketch per group; no oracle: approximate)."""
-    return (
-        events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .agg(F.approx_count_distinct("user_id", rsd).alias("dau"))
         .orderBy("day")
     )
 

@@ -82,28 +82,6 @@ def word_count_as_mapreduce(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def inverted_index_as_mapreduce(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The reference invert app through the facade: map emits
-    (word, doc_id), buffer combiner collects the posting list
-    (invert.cpp:85 + combiner.h buffer semantics)."""
-    from lab3_spark.functions.text import tokenize
-
-    mapper = F.transform(
-        tokenize(text_col),
-        lambda w: F.struct(
-            w.alias("key"), F.col(id_col).cast("long").alias("value")
-        ),
-    )
-    out = map_reduce(
-        df, mapper, combiner="set", key_name="word", value_name="ids"
-    )
-    return out.select(
-        "word", F.sort_array("ids").alias("ids")
-    ).orderBy("word")
-
-
 def map_reduce_salted(
     df: DataFrame,
     mapper: Column,

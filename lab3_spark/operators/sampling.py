@@ -29,23 +29,6 @@ from lab3_spark.functions.text import md5_long, tokenize
 SAMPLE_MOD = 1_000_000
 
 
-def hash_keep(id_col: Column | str, fraction: float, salt: str = "sample") -> Column:
-    """Deterministic keep-predicate: md5_long(salt|id) % 1e6 < fraction·1e6.
-
-    Uniform because md5 is; deterministic because nothing else is
-    involved.  The SQL oracle states the same arithmetic."""
-    h = md5_long(F.col(id_col).cast("string") if isinstance(id_col, str) else id_col.cast("string"), salt=salt)
-    return (h % SAMPLE_MOD) < int(fraction * SAMPLE_MOD)
-
-
-def hash_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Reproducible row sample: WHERE on the hash predicate — a narrow
-    per-row filter, no shuffle, no RNG state."""
-    return df.where(hash_keep(id_col, fraction, salt))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     id_col: str,
@@ -56,8 +39,11 @@ def stratified_hash_sample(
 ) -> DataFrame:
     """Per-stratum deterministic sampling (`sampleBy`'s reproducible
     twin): each stratum value gets its own keep-fraction; unlisted
-    strata get `default_fraction`.  The per-row decision stays a pure
-    expression — a CASE over the stratum column against the hash."""
+    strata get `default_fraction` (with no listed strata, every row
+    does: a plain uniform sample).  The per-row decision stays a pure
+    expression — md5_long(salt|id) % 1e6 against a CASE over the
+    stratum column — so it is deterministic, and the SQL oracle states
+    the same arithmetic."""
     h = md5_long(F.col(id_col).cast("string"), salt=salt) % SAMPLE_MOD
     thresh: Column = F.lit(int(default_fraction * SAMPLE_MOD))
     for value, frac in sorted(fractions.items()):
@@ -174,7 +160,7 @@ def stratified_fixed_sample(
     repartitioning.  Cost: one window shuffle on the stratum key;
     strata are assumed many/modest-sized (eval sets) — a single giant
     stratum would hot-task the window, at which point fractional
-    hash_sample is the right tool."""
+    sampling (:func:`stratified_hash_sample`) is the right tool."""
     hv = md5_long(F.col(id_col).cast("string"), salt=salt)
     w = Window.partitionBy("stratum").orderBy(hv, F.col(id_col))
     return (
@@ -414,7 +400,7 @@ def weighted_sample_docs(
     break by doc_id.  Weight = fixed-point quality + 1 (strictly
     positive).  Top-n plans as TakeOrderedAndProject.
 
-    This is the weighted companion to `hash_sample`'s uniform
+    This is the weighted companion to `stratified_hash_sample`'s uniform
     deterministic sampling: quality-proportional subset selection for
     a training mix, auditable and reproducible by construction.
     """
@@ -649,7 +635,7 @@ def systematic_sample(
     frame effectively randomly ordered, so the 1-in-k grid is an
     unbiased uniform sample with exactly ceil(N/k) rows — a GUARANTEED
     cadence (every window of k consecutive hash-ordered rows yields
-    exactly one pick) that Bernoulli hash_sample cannot give.
+    exactly one pick) that Bernoulli hash sampling cannot give.
 
     The rank is the distributed range-partitioned row number
     (operators/rank.py) over the (hash, id) total order — no

@@ -126,16 +126,23 @@ def _embedding_dims(embeddings: DataFrame, dims: int | None = None) -> int:
 
 
 def lsh_codes_arrow(embeddings: DataFrame, dims: int | None = None) -> DataFrame:
-    """(vec_id, code): the SAME integer signature as :func:`lsh_codes`,
-    via ``mapInArrow`` — the lowest-overhead Python path: RecordBatches
-    cross the Arrow boundary with NO pandas materialization, the list
-    column is flattened zero-copy into one numpy matrix per batch, and
-    the int64 matmul is identical to the JVM fold (tests pin both
-    against a pure-Python reference).
+    """(vec_id, code): N_PLANES-bit random-hyperplane signature.
 
-    When to choose which (SCALE.md): expression fold = no Python at
-    all (small dims); mapInArrow = BLAS throughput at minimum
-    serialization — the right shape for wide embeddings at 100 TB."""
+    code bit p = sign(v · plane_p).  Buckets with equal codes hold
+    likely-similar vectors; at scale the code is the shuffle key that
+    replaces all-pairs search.
+
+    ALL-INTEGER arithmetic (same contract as SimHash, dedup.py): the
+    embedding is fixed-pointed to bigint (floor(x·1e6) — floor, not
+    round: HALF_UP vs nearbyint disagree across engines), plane
+    components stay integer numerators, and the dot product is an
+    int64 matmul — exact, so summation order can't flip a sign the
+    way float summation does near zero.
+
+    Plan shape: one ``mapInArrow`` pass, no shuffle.  RecordBatches
+    cross the Arrow boundary with no pandas materialization and the
+    list column flattens zero-copy into one numpy matrix per batch
+    (tests pin the codes against a pure-Python reference)."""
     import numpy as np
     import pyarrow as pa
 
@@ -160,53 +167,6 @@ def lsh_codes_arrow(embeddings: DataFrame, dims: int | None = None) -> DataFrame
         spread(embeddings)
         .select("vec_id", "embedding")
         .mapInArrow(batches, "vec_id bigint, code bigint")
-    )
-
-
-def lsh_codes(embeddings: DataFrame, dims: int | None = None) -> DataFrame:
-    """(vec_id, code): N_PLANES-bit random-hyperplane signature.
-
-    code bit p = sign(v · plane_p).  Buckets with equal codes hold
-    likely-similar vectors; at scale the code is the shuffle key that
-    replaces all-pairs search.
-
-    ALL-INTEGER arithmetic (same contract as SimHash, dedup.py): the
-    embedding is fixed-pointed to bigint (floor(x·1e6) — floor, not
-    round: HALF_UP vs nearbyint disagree across engines), plane
-    components stay integer numerators, and the dot product is a bigint
-    sum — associative, so aggregation order can't flip a sign the way
-    float summation did near zero.
-
-    Plan shape: a single narrow projection — per-row zip_with/aggregate
-    folds against literal plane arrays.  No explode, no shuffle, no
-    aggregation at all; the previous form shuffled dims × N_PLANES rows
-    per vector (a 1024× amplifier at 100 TB)."""
-    dims = _embedding_dims(embeddings, dims)
-    planes = plane_numerators(N_PLANES, dims)
-
-    xi = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * F.lit(float(FIXED_SCALE))).cast("bigint"),
-    )
-    zero = F.lit(0).cast("bigint")
-
-    def dot_int(plane: list[int]) -> F.Column:
-        lits = F.array(*[F.lit(n).cast("bigint") for n in plane])
-        return F.aggregate(
-            F.zip_with(F.col("xi"), lits, lambda a, b: a * b),
-            zero,
-            lambda acc, v: acc + v,
-        )
-
-    code = None
-    for p, plane in enumerate(planes):
-        bit = F.when(dot_int(plane) > 0, F.lit(1 << p).cast("bigint")).otherwise(zero)
-        code = bit if code is None else code + bit
-
-    return (
-        spread(embeddings)
-        .select("vec_id", xi.alias("xi"))
-        .select("vec_id", code.alias("code"))
     )
 
 

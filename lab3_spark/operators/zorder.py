@@ -283,26 +283,3 @@ def zone_map_pruning_audit(
         )
         .orderBy("layout", "q_a", "q_b")
     )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = DEFAULT_BITS,
-) -> None:
-    """Materialize ``df`` as parquet clustered on the (col_a, col_b)
-    Morton curve: range-repartition by z (each output file covers a
-    contiguous z-range = a small rectangle in key space), sort within
-    partitions so row groups inside a file are tight too, drop the
-    helper column at write."""
-    z = with_z_value(df, col_a, col_b, bits=bits)
-    (
-        z.repartitionByRange(n_files, F.col("z"))
-        .sortWithinPartitions("z")
-        .drop("z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -45,34 +45,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-_STAGE_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _staged_stream_dir(sf_dir: str, table: str) -> str:
-    """One symlink staging dir per (sf_dir, table), shared by every
-    file-source streaming gate and removed at interpreter exit.
-
-    The parquet file-stream source requires a DIRECTORY; the driver's
-    testdata is a single read-only file, so we stage it behind a
-    symlink.  Caching per (sf_dir, table) + atexit cleanup keeps
-    repeated verify/bench runs from accumulating temp dirs (the
-    round-4 leak: one mkdtemp per gate invocation, never removed)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    key = (sf_dir, table)
-    d = _STAGE_CACHE.get(key)
-    if d is not None and os.path.isdir(d):
-        return d
-    d = tempfile.mkdtemp(prefix=f"stream_{table}_")
-    os.symlink(
-        os.path.join(sf_dir, f"{table}.parquet"),
-        os.path.join(d, f"{table}.parquet"),
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a parquet file stream with ``ts`` normalized
+    as in :func:`load_table`: the source lists the data directory itself
+    and the glob admits only ``events.parquet``, so nothing is staged
+    on disk."""
+    ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
+    return normalize_event_time(
+        spark.readStream.schema(table_schema(spark, sf_dir, "events"))
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    _STAGE_CACHE[key] = d
-    return d
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -1117,20 +1100,15 @@ def q_dataset_card(spark, sf_dir):
 )
 def q_jsonl_roundtrip(spark, sf_dir):
     """JSONL sink → source round trip: documents written as JSON-lines
-    (fresh overwrite per run, per-SF dir under the engine's
-    materialized warehouse) and read back with the DECLARED schema
+    (a fresh directory per call) and read back with the DECLARED schema
     (sources/files.read_json — no inference pass).  The oracle
     reads the ORIGINAL parquet, so a green row proves the JSON format
     path is lossless row-for-row, including escaped newlines/quotes in
     `text`."""
     from lab3_spark.sources.files import read_json
-    from lab3_spark.sources.layout import MATERIALIZED_ROOT, _sf_tag
 
-    path = os.path.join(MATERIALIZED_ROOT, f"docs_jsonl_{_sf_tag(sf_dir)}")
-    # overwrite, not ignore: SaveMode.Ignore would silently reuse a
-    # stale or partially-written directory forever (e.g. after a crash
-    # mid-write or regenerated testdata); the write is metadata-scale
-    _t(spark, sf_dir, "documents").write.mode("overwrite").json(path)
+    path = os.path.join(_scratch_dir("docs_jsonl_"), "docs")
+    _t(spark, sf_dir, "documents").write.json(path)
     out = read_json(
         spark,
         path,
@@ -1585,7 +1563,7 @@ def q_ann_ivf(spark, sf_dir):
         FROM embeddings)
     ),
     dots AS (
-      -- ALL-BIGINT dot product (mirrors lsh_codes' fixed-point contract):
+      -- ALL-BIGINT dot product (mirrors lsh_codes_arrow's fixed-point contract):
       -- integer sums are associative, so aggregation order is irrelevant
       SELECT vec_id, p,
              sum(xi * ((({_h2l("substr(md5(concat(p, ',', d)), 1, 15)")}) % 2001) - 1000)) AS dot
@@ -1697,11 +1675,7 @@ def q_streaming_tumbling(spark, sf_dir):
     all data available, streaming complete mode must equal batch."""
     from lab3_spark.streaming.windowed import streaming_tumbling_counts
 
-    stage = _staged_stream_dir(sf_dir, "events")
-    ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = table_schema(spark, sf_dir, "events")
-    src = spark.readStream.schema(schema).parquet(stage)
-    src = normalize_event_time(src)
+    src = _event_stream(spark, sf_dir)
     result = streaming_tumbling_counts(src)
     q = (
         result.writeStream.outputMode("complete")
@@ -1750,11 +1724,7 @@ def q_streaming_sliding(spark, sf_dir):
     stream with bounded state."""
     from lab3_spark.streaming.windowed import streaming_sliding_counts
 
-    stage = _staged_stream_dir(sf_dir, "events")
-    ensure_nanos_as_long(spark)
-    schema = table_schema(spark, sf_dir, "events")
-    src = spark.readStream.schema(schema).parquet(stage)
-    src = normalize_event_time(src)
+    src = _event_stream(spark, sf_dir)
     result = streaming_sliding_counts(src)
     q = (
         result.writeStream.outputMode("complete")
@@ -2533,8 +2503,7 @@ def q_approx_dau(spark, sf_dir):
     a BOUNDED-ERROR contract (events.approx_dau_check): the estimate
     itself is engine-specific, but `|est − exact| ≤ 5%·exact` is
     oracle-expressible — the oracle emits exact counts + literal TRUE,
-    so a sketch drifting past the bound flips the hash.  The raw
-    estimate path stays available as events.approx_dau."""
+    so a sketch drifting past the bound flips the hash."""
     return EV.approx_dau_check(_t(spark, sf_dir, "events"))
 
 
@@ -2930,11 +2899,7 @@ def q_streaming_stateful(spark, sf_dir):
     the lag+running-sum formulation."""
     from lab3_spark.streaming.stateful import streaming_sessionize
 
-    stage = _staged_stream_dir(sf_dir, "events")
-    ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = table_schema(spark, sf_dir, "events")
-    src = spark.readStream.schema(schema).parquet(stage)
-    src = normalize_event_time(src)
+    src = _event_stream(spark, sf_dir)
     # gate on a user subset: per-group Python/state overhead makes
     # the full table needlessly slow for a correctness check
     out = streaming_sessionize(
@@ -3943,13 +3908,16 @@ def q_weekday_profile(spark, sf_dir):
 def q_bucketed_fact_join(spark, sf_dir):
     """The fact-fact join read from the BUCKETED materialized layout
     (sources/layout.py): both sides bucketed+sorted by orderkey, so the
-    sort-merge join itself needs NO Exchange — the shuffle was paid once
-    at write time (pinned by tests/test_bucketing.py).  The oracle is
-    the same join over the flat parquet: layout must never change
-    results, only plans."""
+    sort-merge join itself needs NO Exchange — the shuffle is paid by
+    the write (pinned by tests/test_bucketing.py).  Every call writes
+    both tables into its own fresh directory, so a result always comes
+    from this ``sf_dir``'s rows.  The oracle is the same join over the
+    flat parquet: layout must never change results, only plans."""
     from lab3_spark.sources.layout import materialize_bucketed_facts
 
-    ob, lb = materialize_bucketed_facts(spark, sf_dir)
+    ob, lb = materialize_bucketed_facts(
+        spark, sf_dir, _scratch_dir("bucketed_facts_")
+    )
     return (
         ob.join(lb, ob.o_orderkey == lb.l_orderkey)
         .groupBy("o_orderstatus")
@@ -5689,11 +5657,7 @@ def q_streaming_ss_join(spark, sf_dir):
     is exactly what the oracle states."""
     from lab3_spark.streaming.joins import view_purchase_interval_join
 
-    stage = _staged_stream_dir(sf_dir, "events")
-    ensure_nanos_as_long(spark)  # self-sufficient on the driver's session
-    schema = table_schema(spark, sf_dir, "events")
-    src = spark.readStream.schema(schema).parquet(stage)
-    src = normalize_event_time(src)
+    src = _event_stream(spark, sf_dir)
     out = view_purchase_interval_join(src.where(F.col("user_id") < 300))
     q = (
         out.writeStream.outputMode("append")
@@ -7055,16 +7019,13 @@ def q_robust_quality_zscore(spark, sf_dir):
 )
 def q_orc_roundtrip(spark, sf_dir):
     """ORC sink → source round trip on the EVENTS table (timestamps +
-    doubles — the types ORC encodes differently from parquet): fresh
-    overwrite per run under the materialized warehouse, read back via
-    ORC's embedded schema.  The oracle reads the ORIGINAL parquet, so
-    a green row proves the ORC path is lossless including microsecond
-    timestamp precision (printed to micros on both sides)."""
-    from lab3_spark.sources.layout import MATERIALIZED_ROOT, _sf_tag
-
-    path = os.path.join(MATERIALIZED_ROOT, f"events_orc_{_sf_tag(sf_dir)}")
-    ev = _t(spark, sf_dir, "events")
-    ev.write.mode("overwrite").orc(path)
+    doubles — the types ORC encodes differently from parquet): written
+    to a fresh directory per call, read back via ORC's embedded schema.
+    The oracle reads the ORIGINAL parquet, so a green row proves the ORC
+    path is lossless including microsecond timestamp precision (printed
+    to micros on both sides)."""
+    path = os.path.join(_scratch_dir("events_orc_"), "events")
+    _t(spark, sf_dir, "events").write.orc(path)
     out = spark.read.orc(path)
     return out.select(
         "event_id",

@@ -49,10 +49,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

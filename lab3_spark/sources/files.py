@@ -17,8 +17,3 @@ def read_json(
 ) -> DataFrame:
     """JSON-lines with declared schema (no sampling inference pass)."""
     return spark.read.schema(schema).json(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet — schema from the file footer (self-describing)."""
-    return spark.read.parquet(path)

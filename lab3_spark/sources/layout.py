@@ -1,4 +1,4 @@
-"""Materialized storage layouts: bucketed tables and date partitioning.
+"""Storage layouts: bucketed tables, date partitioning, compaction plans.
 
 At 100 TB the dominant costs are (a) the shuffle of fact-fact joins and
 (b) full scans that a predicate should have pruned.  Both are STORAGE
@@ -10,10 +10,11 @@ for every downstream query:
   partitioning and plans the orders ⋈ lineitem sort-merge join with ZERO
   Exchange (pinned by tests/test_bucketing.py).  The shuffle is paid
   once at layout time instead of per query.
-- **Date partitioning** (`partitionBy(event_date)`): a `WHERE
-  event_date = …` predicate becomes directory pruning — partitions that
-  can't match are never listed, never opened (PartitionFilters in the
-  scan node; pinned by tests/test_partition_pruning.py).
+- **Date partitioning** (`sinks.write_parquet(..., partition_by=
+  ["event_date"])`): a `WHERE event_date = …` predicate becomes
+  directory pruning — partitions that can't match are never listed,
+  never opened (PartitionFilters in the scan node; pinned by
+  tests/test_partition_pruning.py).
 
 The reference has no analogue (it rescans its flat input per run,
 phoenixLab/wordCount/wordCount.cpp:116-133); this is the Spark-native
@@ -23,82 +24,42 @@ answer to the same I/O problem at cluster scale.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lab3_spark.sinks import write_bucketed
 from lab3_spark.sources.tables import load_table
 
 DEFAULT_BUCKETS = 8
 
-# External-table data lands under the repo, never under the session's
-# warehouse dir (a static conf — on sessions we didn't build it could
-# point anywhere).
-MATERIALIZED_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".materialized",
-)
-
-
-def _sf_tag(sf_dir: str) -> str:
-    """Stable table-name suffix per scale factor so sf0.01 and sf0.1
-    materializations never collide in the shared warehouse."""
-    return os.path.basename(os.path.normpath(sf_dir)).replace(".", "_").replace("-", "_")
-
-
-def bucketed_table_names(sf_dir: str) -> tuple[str, str]:
-    tag = _sf_tag(sf_dir)
-    return f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
-
 
 def materialize_bucketed_facts(
     spark: SparkSession,
     sf_dir: str,
+    out_dir: str,
     n_buckets: int = DEFAULT_BUCKETS,
-    force: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Write orders + lineitem as managed tables bucketed (and sorted)
-    by orderkey; return the bucketed readers.
+    """Write orders + lineitem under ``out_dir`` as external tables
+    bucketed (and sorted) by orderkey; return the bucketed readers.
 
-    Idempotent: existing tables are reused unless ``force`` — the whole
-    point of a materialized layout is paying the shuffle once."""
-    orders_t, lineitem_t = bucketed_table_names(sf_dir)
-    if force or not spark.catalog.tableExists(orders_t):
+    Every call writes both tables from ``sf_dir``: a table is named
+    after ``out_dir`` (the caller passes a fresh directory), so no
+    call can read rows another call wrote."""
+    tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(out_dir)))
+    readers = []
+    for table, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        name = f"{table}_bkt_{tag}"
         write_bucketed(
-            load_table(spark, sf_dir, "orders"),
-            orders_t,
-            "o_orderkey",
+            load_table(spark, sf_dir, table),
+            name,
+            key,
             n_buckets,
-            sort_col="o_orderkey",
-            path=os.path.join(MATERIALIZED_ROOT, orders_t),
+            sort_col=key,
+            path=os.path.join(out_dir, table),
         )
-    if force or not spark.catalog.tableExists(lineitem_t):
-        write_bucketed(
-            load_table(spark, sf_dir, "lineitem"),
-            lineitem_t,
-            "l_orderkey",
-            n_buckets,
-            sort_col="l_orderkey",
-            path=os.path.join(MATERIALIZED_ROOT, lineitem_t),
-        )
-    return spark.table(orders_t), spark.table(lineitem_t)
-
-
-def materialize_partitioned_events(
-    spark: SparkSession, sf_dir: str, out_dir: str, force: bool = False
-) -> DataFrame:
-    """Write events date-partitioned (`event_date=YYYY-MM-DD/` dirs) and
-    return a reader over the layout.  A date predicate on the result
-    prunes at the DIRECTORY level — the scan's PartitionFilters — which
-    at 100 TB is the difference between reading one day and reading
-    three years."""
-    if force or not os.path.isdir(out_dir) or not os.listdir(out_dir):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "event_date", F.to_date("ts")
-        )
-        ev.write.mode("overwrite").partitionBy("event_date").parquet(out_dir)
-    return spark.read.parquet(out_dir)
+        readers.append(spark.table(name))
+    return readers[0], readers[1]
 
 
 def compaction_plan(

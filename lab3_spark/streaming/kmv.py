@@ -13,10 +13,7 @@ hash values is the entire implementation.
 Exactly-once: each batch's synopsis goes to its own
 ``{store}/batch_id=N`` partition with overwrite — the same
 idempotence-per-(batch_id, data) contract as `streaming/cms.py`.  The
-store holds ≤ k rows per batch (metadata scale); a compaction job
-that re-selects the k smallest over old partitions keeps it bounded
-without changing any estimate (the same associativity argument as CMS
-elementwise addition).
+store holds ≤ k rows per batch (metadata scale).
 
 At 100 TB/day the per-batch cost is one distinct + salted top-k over
 the batch only; the all-time distinct estimate never rescans history
@@ -69,61 +66,6 @@ def merged_estimate_frame(
             .alias("est_users_total")
         )
     )
-
-
-def merged_estimate(spark: SparkSession, store_path: str, k: int) -> int:
-    return merged_estimate_frame(spark, store_path, k).collect()[0][
-        "est_users_total"
-    ]
-
-
-def compact_kmv_store(
-    spark: SparkSession, store_path: str, k: int, keep_last: int = 2
-) -> int:
-    """Re-select the k smallest distinct hashes over all batch
-    partitions except the ``keep_last`` most recent into the OLDEST
-    retained partition, then drop the absorbed ones — the same
-    bounded-store maintenance job as `cms.compact_cms_store`, with the
-    same crash-safety discipline: the scratch dir is _-prefixed (the
-    ``batch_id=*`` reader glob never sees it) and stale scratch dirs
-    are deleted on entry.  ``keep_last`` protects replayable batches
-    (a replayed absorbed batch would overwrite a partition its hashes
-    were folded into).  Returns the number of absorbed partitions."""
-    import re
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    for st in fs.listStatus(hpath):
-        if st.getPath().getName().startswith("_compacting_"):
-            fs.delete(st.getPath(), True)
-    ids = sorted(
-        int(m.group(1))
-        for st in fs.listStatus(hpath)
-        if (m := re.fullmatch(r"batch_id=(\d+)", st.getPath().getName()))
-    )
-    absorb = ids[:-keep_last] if keep_last > 0 else ids
-    if len(absorb) < 2:
-        return 0
-    target, rest = absorb[0], absorb[1:]
-    merged = (
-        spark.read.option("basePath", store_path)
-        .parquet(*[f"{store_path}/batch_id={b}" for b in absorb])
-        .select("hv")
-        .distinct()
-        .orderBy("hv")
-        .limit(k)
-    )
-    tmp = f"{store_path}/_compacting_{target}"
-    merged.write.mode("overwrite").parquet(tmp)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={target}"), True)
-    fs.rename(
-        jvm.org.apache.hadoop.fs.Path(tmp),
-        jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={target}"),
-    )
-    for b in rest:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={b}"), True)
-    return len(rest)
 
 
 def start_streaming_kmv(

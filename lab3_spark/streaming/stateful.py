@@ -119,74 +119,3 @@ def streaming_sessionize(
         outputMode="append",
         timeoutConf=timeout_conf,
     )
-
-
-def _sessionize_group_event_time(gap_us: int):
-    """Event-time variant: pending sessions flush when the WATERMARK
-    passes (last_ts + gap) — the production-correct closure rule (a
-    session is only final once no in-order event can extend it)."""
-
-    def fn(key, pdfs, state: GroupState) -> "Iterator[pd.DataFrame]":
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                start_us, last_us, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_start": [pd.Timestamp(start_us, unit="us")],
-                        "session_end": [pd.Timestamp(last_us, unit="us")],
-                        "n_events": [n],
-                        "closed_by": ["timeout"],
-                    }
-                )
-            return
-
-        ts_us = (
-            pd.concat([p["ts"] for p in pdfs]).astype("int64").sort_values() // 1000
-        )
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = int(ts_us.iloc[0])
-            n = 0
-        out = {k: [] for k in ("user_id", "session_start", "session_end", "n_events", "closed_by")}
-        for t in ts_us:
-            t = int(t)
-            if n > 0 and t - last_us > gap_us:
-                out["user_id"].append(user_id)
-                out["session_start"].append(pd.Timestamp(start_us, unit="us"))
-                out["session_end"].append(pd.Timestamp(last_us, unit="us"))
-                out["n_events"].append(n)
-                out["closed_by"].append("gap")
-                start_us, n = t, 0
-            last_us = t
-            n += 1
-        state.update((start_us, last_us, n))
-        # flush when the watermark passes the point at which no event
-        # could extend this session (event-time, not wall-clock)
-        state.setTimeoutTimestamp((last_us + gap_us) // 1000)
-        if out["user_id"]:
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def streaming_sessionize_event_time(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Event-time-timeout sessionizer: requires a watermark on ts;
-    trailing sessions are emitted with closed_by='timeout' once the
-    watermark passes session_end + gap."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group_event_time(gap_minutes * 60 * US),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )

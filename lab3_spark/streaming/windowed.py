@@ -93,35 +93,3 @@ def streaming_sliding_counts(
             "total_value",
         )
     )
-
-
-def run_stream_to_memory(
-    result: DataFrame, query_name: str, trigger_once: bool = True
-):
-    """Start the stream into an in-memory table (complete mode) —
-    the test harness; returns the StreamingQuery."""
-    writer = (
-        result.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_dedup(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact-deduplication with bounded state:
-    ``dropDuplicatesWithinWatermark`` keeps each key's state only until
-    the watermark passes it — the streaming twin of exact dedup
-    (operators/dedup.exact_duplicates) that can run forever on an
-    unbounded stream.  (Plain dropDuplicates on a stream grows state
-    without bound.)"""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )

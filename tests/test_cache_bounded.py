@@ -62,6 +62,14 @@ _REGISTRY_WORDS = (
     "memo_key",
 )
 
+# disk and module-global state that outlived the call: the codebook
+# store, the reused bucketed tables' root and the stream staging dirs
+_CROSS_CALL_STATE_WORDS = (
+    "CODEBOOK_STORE",
+    "MATERIALIZED_ROOT",
+    "_STAGE_CACHE",
+)
+
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
@@ -95,7 +103,8 @@ def test_no_bare_persist_outside_managed_sites():
     ``scoped``'s own call, and no cross-call memo survives — no
     plan-equality lookup (``sameResult``), none of the removed memo
     registries and none of the removed keyed persist/retire registries
-    appear anywhere in the package."""
+    appear anywhere in the package, and no disk or module-global state
+    is kept from one call for the next."""
     import lab3_spark
 
     root = os.path.dirname(lab3_spark.__file__)
@@ -106,6 +115,7 @@ def test_no_bare_persist_outside_managed_sites():
     offenders = []
     memos = []
     registries = []
+    cross_call = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
             if not fn.endswith(".py"):
@@ -120,6 +130,9 @@ def test_no_bare_persist_outside_managed_sites():
             registries.extend(
                 f"{rel}: {w}" for w in _REGISTRY_WORDS if w in src
             )
+            cross_call.extend(
+                f"{rel}: {w}" for w in _CROSS_CALL_STATE_WORDS if w in src
+            )
     assert not offenders, (
         f"bare .persist() outside managed sites: {offenders}; route "
         "through functions.partitioning.scoped"
@@ -128,6 +141,7 @@ def test_no_bare_persist_outside_managed_sites():
     assert not registries, (
         f"keyed persist/retire registry left in lab3_spark: {registries}"
     )
+    assert not cross_call, f"cross-call state left in lab3_spark: {cross_call}"
 
 
 def test_unigram_surprisal_recomputes_after_clear_cache(spark, docs):

@@ -403,7 +403,7 @@ def _py_cdc_chunks(text, W=16, MOD=64):
 
 
 def test_cdc_chunks_match_python_reference(spark):
-    from lab3_spark.operators.dedup import cdc_chunk_frame
+    from lab3_spark.operators.dedup import cdc_chunk_frame_arrow
 
     texts = [
         "the quick brown fox jumps over the lazy dog and keeps running "
@@ -416,12 +416,28 @@ def test_cdc_chunks_match_python_reference(spark):
         list(enumerate(texts)), "doc_id long, text string"
     )
     got = {}
-    for r in cdc_chunk_frame(df).collect():
+    for r in cdc_chunk_frame_arrow(df).collect():
         got.setdefault(r["doc_id"], []).append((r["idx"], r["chunk"]))
     for did, text in enumerate(texts):
         want = _py_cdc_chunks(text)
         have = [c for _, c in sorted(got.get(did, []))]
         assert have == want, f"doc {did}"
+
+
+def test_cdc_arrow_twin_bit_identical(spark, sf_dir):
+    """The Arrow chunker equals the pure-Python closed form, row for
+    row, on every document of the sf corpus."""
+    from lab3_spark.operators.dedup import cdc_chunk_frame_arrow
+    from lab3_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    want = sorted(
+        (r["doc_id"], i, c)
+        for r in docs.collect()
+        for i, c in enumerate(_py_cdc_chunks(r["text"] or ""), 1)
+    )
+    got = sorted(tuple(r) for r in cdc_chunk_frame_arrow(docs).collect())
+    assert got == want
 
 
 def test_cdc_boundaries_resynchronize_after_insert(spark):
@@ -445,16 +461,6 @@ def test_cdc_boundaries_resynchronize_after_insert(spark):
     # the surviving shared chunks are reported as cross-doc duplicates
     assert all(r["n_docs"] == 2 for r in dup)
     assert len(dup) >= len(a) - 1
-
-
-def test_cdc_arrow_twin_bit_identical(spark, sf_dir):
-    from lab3_spark.operators.dedup import cdc_chunk_frame, cdc_chunk_frame_arrow
-    from lab3_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = sorted(tuple(r) for r in cdc_chunk_frame(docs).collect())
-    b = sorted(tuple(r) for r in cdc_chunk_frame_arrow(docs).collect())
-    assert a == b
 
 
 def test_blocking_quality_hand_corpus(spark):

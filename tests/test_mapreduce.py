@@ -4,11 +4,8 @@
 from pyspark.sql import functions as F
 
 from lab3_spark.operators.inverted_index import inverted_index
-from lab3_spark.operators.mapreduce import (
-    inverted_index_as_mapreduce,
-    map_reduce,
-    word_count_as_mapreduce,
-)
+from lab3_spark.functions.text import tokenize
+from lab3_spark.operators.mapreduce import map_reduce, word_count_as_mapreduce
 from lab3_spark.operators.wordcount import word_counts_unfiltered
 
 
@@ -23,9 +20,17 @@ def test_facade_word_count_matches_operator(spark, corpus):
 
 
 def test_facade_inverted_index_matches_operator(spark, corpus):
+    # the invert app through the facade: map emits (word, doc_id), the
+    # set combiner collects the posting list (invert.cpp:85)
+    mapper = F.transform(
+        tokenize("text"),
+        lambda w: F.struct(w.alias("key"), F.col("doc_id").alias("value")),
+    )
     via_facade = {
-        (r["word"], tuple(r["ids"]))
-        for r in inverted_index_as_mapreduce(corpus).collect()
+        (r["word"], tuple(sorted(r["ids"])))
+        for r in map_reduce(
+            corpus, mapper, combiner="set", key_name="word", value_name="ids"
+        ).collect()
     }
     via_operator = {
         (r["word"], tuple(r["ids"]))

@@ -1,25 +1,45 @@
-"""Date-partitioned layout must turn a date predicate into DIRECTORY
-pruning — the scan's PartitionFilters — not a full-table scan.
+"""Storage layouts must change plans, never results.
 
-At 100 TB this is the difference between reading one day's directory
-and listing three years of files; the layout writer is
-sources/layout.py:materialize_partitioned_events.
+- A date-partitioned layout must turn a date predicate into DIRECTORY
+  pruning — the scan's PartitionFilters — not a full-table scan.  At
+  100 TB this is the difference between reading one day's directory
+  and listing three years of files; the layout is written by
+  sinks.write_parquet(..., partition_by=["event_date"]).
+- The bucketed fact tables (sources/layout.py) are written from the
+  input on every call: two data directories with the same basename
+  must each get their own rows back.
 """
 
+import os
 import re
+import sys
 
+import duckdb
 from pyspark.sql import functions as F
 
 from lab3_spark.plans.explain import formatted_plan
-from lab3_spark.sources.layout import (
-    materialize_bucketed_facts,
-    materialize_partitioned_events,
-)
+from lab3_spark.sinks import write_parquet
+from lab3_spark.sources.tables import load_table
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+for _d in ("perfbench", "tools"):
+    if os.path.join(ROOT, _d) not in sys.path:
+        sys.path.insert(0, os.path.join(ROOT, _d))
+
+import gen  # noqa: E402  (perfbench's seeded table generator)
+from verify_local import canon_rows, pandas_rows  # noqa: E402
+
+
+def _events_by_date(spark, sf_dir, out):
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "event_date", F.to_date("ts")
+    )
+    write_parquet(ev, out, partition_by=["event_date"])
+    return spark.read.parquet(out)
 
 
 def test_date_predicate_becomes_partition_filter(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "events_by_date")
-    ev = materialize_partitioned_events(spark, sf_dir, out)
+    ev = _events_by_date(spark, sf_dir, str(tmp_path / "events_by_date"))
 
     one_day = ev.where(F.col("event_date") == "2024-01-03").groupBy("event_type").count()
     plan = formatted_plan(one_day)
@@ -32,9 +52,7 @@ def test_date_predicate_becomes_partition_filter(spark, sf_dir, tmp_path):
 
 
 def test_partitioned_layout_preserves_results(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "events_by_date2")
-    ev = materialize_partitioned_events(spark, sf_dir, out)
-    from lab3_spark.sources.tables import load_table
+    ev = _events_by_date(spark, sf_dir, str(tmp_path / "events_by_date2"))
 
     flat = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
@@ -63,20 +81,26 @@ def test_partitioned_layout_preserves_results(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_materialized_bucketed_catalog_reuses_tables(spark, sf_dir):
-    try:
-        ob1, lb1 = materialize_bucketed_facts(spark, sf_dir, n_buckets=4)
-        # second call must be a catalog hit, not a rewrite
-        ob2, _ = materialize_bucketed_facts(spark, sf_dir, n_buckets=4)
-        assert ob1.count() == ob2.count() > 0
-        from lab3_spark.sources.layout import bucketed_table_names
+def test_bucketed_fact_join_reads_its_own_input(spark, tmp_path):
+    """Two generated catalogs whose directories share a basename, one
+    session: each bucketed_fact_join result must hash-match the DuckDB
+    oracle over its own tables."""
+    from lab3_spark.queries_catalog import ORACLES, QUERIES
 
-        orders_t, lineitem_t = bucketed_table_names(sf_dir)
-        assert spark.catalog.tableExists(orders_t)
-        assert spark.catalog.tableExists(lineitem_t)
-    finally:
-        from lab3_spark.sources.layout import bucketed_table_names
-
-        orders_t, lineitem_t = bucketed_table_names(sf_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {orders_t}")
-        spark.sql(f"DROP TABLE IF EXISTS {lineitem_t}")
+    results = []
+    for seed, parent in ((11, "a"), (12, "b")):
+        cat = str(tmp_path / parent / "cat")
+        os.makedirs(cat)
+        gen.gen_catalog(seed, cat)
+        got = QUERIES["bucketed_fact_join"](spark, cat).toPandas()
+        con = duckdb.connect()
+        for t in ("orders", "lineitem"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{os.path.join(cat, t + '.parquet')}')"
+            )
+        want = con.execute(ORACLES["bucketed_fact_join"]).df()
+        got_rows = canon_rows(list(got.columns), pandas_rows(got))
+        assert got_rows == canon_rows(list(want.columns), pandas_rows(want)), seed
+        results.append(got_rows)
+    assert results[0] != results[1]

@@ -122,13 +122,14 @@ def test_simhash_single_aggregation_no_bit_explode(spark, corpus):
 
 
 def test_lsh_codes_zero_shuffle_projection(spark, sf_dir):
-    from lab3_spark.operators.similarity import lsh_codes
+    from lab3_spark.operators.similarity import lsh_codes_arrow
     from lab3_spark.sources.tables import load_table
 
-    df = lsh_codes(load_table(spark, sf_dir, "embeddings"))
+    df = lsh_codes_arrow(load_table(spark, sf_dir, "embeddings"))
     plan = formatted_plan(df)
-    # a pure narrow projection: no aggregation at all, only the
-    # explicit spread-the-scan repartition
+    # one narrow Arrow pass: no aggregation at all, only the explicit
+    # spread-the-scan repartition
+    assert "MapInArrow" in plan, plan
     assert "HashAggregate" not in plan, plan
     assert count_exchanges(df) <= 1, plan
 

@@ -98,10 +98,13 @@ def test_hash_sample_fraction_is_threshold_cut(spark, fraction):
     """Deterministic sampling: the sample for fraction f is exactly the
     ids whose hash lands under the threshold — verified against a
     driver-side Python recomputation of the same md5 arithmetic."""
-    from lab3_spark.operators.sampling import SAMPLE_MOD, hash_sample
+    from lab3_spark.operators.sampling import SAMPLE_MOD, stratified_hash_sample
 
     df = spark.range(300).select(F.col("id").alias("doc_id"))
-    got = {r["doc_id"] for r in hash_sample(df, "doc_id", fraction).collect()}
+    sample = stratified_hash_sample(
+        df, "doc_id", "doc_id", {}, salt="sample", default_fraction=fraction
+    )
+    got = {r["doc_id"] for r in sample.collect()}
     want = {
         i
         for i in range(300)

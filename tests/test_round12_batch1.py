@@ -64,37 +64,6 @@ def test_paragraph_dedup_custom_joiner_roundtrip(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r11: codebook store key folds file size+mtime, so in-place
-# regeneration of the backing parquet invalidates the artifact
-# ---------------------------------------------------------------------------
-
-
-def test_codebook_store_key_changes_on_touch(spark, tmp_path, monkeypatch):
-    from lab3_spark.operators.kmeans import _codebook_store_path
-
-    monkeypatch.setenv("SPARK_GRAFT_CODEBOOK_STORE", "1")
-    pq = str(tmp_path / "emb.parquet")
-    spark.range(4).select(
-        F.col("id"), F.array(F.lit(1.0), F.lit(2.0)).alias("embedding")
-    ).write.parquet(pq)
-    df = spark.read.parquet(pq)
-    key1 = _codebook_store_path(df, 4, 3, False, "test")
-    assert key1 is not None
-    # same content, different mtime -> different key (in-place regen)
-    part = next(
-        p for p in os.listdir(pq) if p.endswith(".parquet")
-    )
-    full = os.path.join(pq, part)
-    st = os.stat(full)
-    os.utime(full, (st.st_atime + 100, st.st_mtime + 100))
-    key2 = _codebook_store_path(df, 4, 3, False, "test")
-    assert key2 is not None and key2 != key1
-    # hyperparams still key-separate
-    key3 = _codebook_store_path(df, 8, 3, False, "test")
-    assert key3 != key2
-
-
-# ---------------------------------------------------------------------------
 # ADVICE r11: reprice.py accepts both --passes=N and --passes N
 # ---------------------------------------------------------------------------
 

@@ -4,21 +4,24 @@ profiler."""
 from pyspark.sql import functions as F
 
 from lab3_spark.operators.profile import profile_table
-from lab3_spark.operators.sampling import (
-    hash_sample,
-    pack_sequences,
-    stratified_hash_sample,
-)
+from lab3_spark.operators.sampling import pack_sequences, stratified_hash_sample
+
+
+def _uniform(df, fraction):
+    # no listed strata: every row is kept at the default fraction
+    return stratified_hash_sample(
+        df, "doc_id", "doc_id", {}, salt="sample", default_fraction=fraction
+    )
 
 
 def test_hash_sample_deterministic_and_proportional(spark):
     df = spark.range(20_000).select(F.col("id").alias("doc_id"))
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.3).collect()}
-    b = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.3).collect()}
+    a = {r["doc_id"] for r in _uniform(df, 0.3).collect()}
+    b = {r["doc_id"] for r in _uniform(df, 0.3).collect()}
     assert a == b  # reproducible
     assert abs(len(a) / 20_000 - 0.3) < 0.02  # within 2pp of the target
     # a smaller fraction with the same salt is a SUBSET (threshold cut)
-    c = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.1).collect()}
+    c = {r["doc_id"] for r in _uniform(df, 0.1).collect()}
     assert c <= a
 
 

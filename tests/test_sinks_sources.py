@@ -7,7 +7,6 @@ from lab3_spark.operators.wordcount import word_count
 from lab3_spark.sinks import (
     render_inverted_index_text,
     render_keyval_text,
-    write_csv,
     write_parquet,
 )
 from lab3_spark.sources.text import read_text_lines
@@ -49,13 +48,9 @@ def test_render_inverted_index(spark, corpus):
 def test_parquet_csv_roundtrip(spark, corpus, tmp_path):
     out = word_count(corpus)
     pq = os.path.join(str(tmp_path), "wc_parquet")
-    cs = os.path.join(str(tmp_path), "wc_csv")
     write_parquet(out, pq)
-    write_csv(out, cs)
     back_pq = spark.read.parquet(pq)
-    back_cs = spark.read.option("header", "true").csv(cs)
     assert sorted(map(tuple, back_pq.collect())) == sorted(map(tuple, out.collect()))
-    assert back_cs.count() == out.count()
 
 
 def test_read_text_lines_line_numbers(spark, tmp_path):

@@ -46,50 +46,3 @@ def test_streaming_sessionize_closes_on_gap(spark, tmp_path):
     assert got == {
         (1, "2024-01-01 00:00:00"): ("2024-01-01 00:10:00", 2, "gap")
     }
-
-
-def test_event_time_timeout_flushes_on_watermark(spark, tmp_path):
-    """Two micro-batches: batch 2's events advance the watermark past
-    user 1's pending session, which must flush with closed_by='timeout'
-    even though user 1 received no new events."""
-    import os
-
-    from lab3_spark.streaming.stateful import streaming_sessionize_event_time
-
-    path = os.path.join(str(tmp_path), "et_src")
-    os.makedirs(path)
-    b1 = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00"), (1, "2024-01-01 00:10:00")],
-        "user_id long, ts_s string",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    # single part-file per batch: maxFilesPerTrigger=1 turns each
-    # FILE into a micro-batch and listing order must be batch order
-    b1.coalesce(1).write.parquet(os.path.join(path, "batch1"))
-
-    out = streaming_sessionize_event_time(
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(path + "/*"),
-        gap_minutes=30,
-        watermark="10 minutes",
-    )
-    # late second batch from ANOTHER user far in the future advances
-    # the watermark past user 1's (last_ts + gap)
-    b2 = spark.createDataFrame(
-        [(2, "2024-01-01 06:00:00")], "user_id long, ts_s string"
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    b2.coalesce(1).write.parquet(os.path.join(path, "batch2"))
-
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("et_sess_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not terminate"
-    got = {
-        (r["user_id"], str(r["session_start"])): (r["n_events"], r["closed_by"])
-        for r in spark.table("et_sess_test").collect()
-    }
-    assert got.get((1, "2024-01-01 00:00:00")) == (2, "timeout"), got

@@ -6,10 +6,21 @@ from pyspark.sql import functions as F
 
 from lab3_spark.operators.wordcount import word_counts_unfiltered
 from lab3_spark.streaming.windowed import (
-    run_stream_to_memory,
     streaming_tumbling_counts,
     streaming_word_count,
 )
+
+
+def run_stream_to_memory(result, query_name: str):
+    """Run the stream to completion into an in-memory table (complete
+    mode, availableNow); returns the StreamingQuery."""
+    return (
+        result.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def test_streaming_word_count_equals_batch(spark, tmp_path):

@@ -1,40 +1,10 @@
-"""Streaming dedup: duplicate events within the watermark horizon are
-dropped; output matches batch dropDuplicates on the same data."""
+"""Incremental sketch and dedup stores fed by Structured Streaming:
+the merged store equals the one-shot batch result, and a replayed
+batch changes nothing."""
 
 import os
 
 from pyspark.sql import functions as F
-
-from lab3_spark.streaming.windowed import streaming_dedup
-
-
-def test_streaming_dedup_drops_in_horizon_duplicates(spark, tmp_path):
-    rows = [
-        (1, "2024-01-01 00:00:00", "a"),
-        (1, "2024-01-01 00:01:00", "a-dup"),     # same id, inside horizon
-        (2, "2024-01-01 00:02:00", "b"),
-        (3, "2024-01-01 00:03:00", "c"),
-        (2, "2024-01-01 00:03:30", "b-dup"),
-    ]
-    src = spark.createDataFrame(
-        rows, "event_id long, ts_s string, payload string"
-    ).select("event_id", F.col("ts_s").cast("timestamp").alias("ts"), "payload")
-    path = os.path.join(str(tmp_path), "dedup_src")
-    src.write.parquet(path)
-
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    q = (
-        streaming_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"] for r in spark.table("dedup_stream_test").collect()}
-    assert got == {1, 2, 3}
-    assert spark.table("dedup_stream_test").count() == 3
 
 
 def test_streaming_cms_store_equals_batch_matrix(spark, sf_dir, tmp_path):
@@ -89,104 +59,16 @@ def test_streaming_cms_store_equals_batch_matrix(spark, sf_dir, tmp_path):
     assert again == whole
 
 
-def test_cms_store_compaction_preserves_merge(spark, sf_dir, tmp_path):
-    """Compacting old batch partitions into one leaves merged_counters
-    bit-identical and bounds the partition count."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from lab3_spark.operators.events import cms_counters
-    from lab3_spark.streaming.cms import compact_cms_store, merged_counters
-    from lab3_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    store = str(tmp_path / "store")
-    for b in range(5):
-        cms_counters(ev.where(F.col("event_id") % 5 == b)).write.parquet(
-            f"{store}/batch_id={b}"
-        )
-    before = {
-        (r.r, r.bucket): r.cnt for r in merged_counters(spark, store).collect()
-    }
-    absorbed = compact_cms_store(spark, store, keep_last=2)
-    assert absorbed == 2  # batches 1,2 folded into 0; 3,4 kept
-    parts = sorted(
-        f for f in os.listdir(store) if f.startswith("batch_id=")
-    )
-    assert parts == ["batch_id=0", "batch_id=3", "batch_id=4"], parts
-    after = {
-        (r.r, r.bucket): r.cnt for r in merged_counters(spark, store).collect()
-    }
-    assert after == before
-    # idempotent once bounded: nothing further to absorb
-    assert compact_cms_store(spark, store, keep_last=2) == 0
-
-
-def test_cms_compaction_crash_recovery(spark, sf_dir, tmp_path):
-    """A crash between the scratch write and the swap must not corrupt
-    the store: the _-prefixed scratch dir is invisible to
-    merged_counters' `batch_id=*` glob, and the next compaction run
-    deletes it before merging (no double-count, ever)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from lab3_spark.operators.events import cms_counters
-    from lab3_spark.streaming.cms import compact_cms_store, merged_counters
-    from lab3_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    store = str(tmp_path / "store")
-    for b in range(4):
-        cms_counters(ev.where(F.col("event_id") % 4 == b)).write.parquet(
-            f"{store}/batch_id={b}"
-        )
-    before = {
-        (r.r, r.bucket): r.cnt for r in merged_counters(spark, store).collect()
-    }
-    # simulate the crash: the scratch dir exists (already holding the
-    # folded counts of batches 0+1) but the swap never happened
-    folded = (
-        spark.read.option("basePath", store)
-        .parquet(f"{store}/batch_id=0", f"{store}/batch_id=1")
-        .groupBy("r", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select("r", "bucket", "cnt")
-    )
-    folded.write.parquet(f"{store}/_compacting_0")
-    # reader never sees the scratch counts
-    mid = {
-        (r.r, r.bucket): r.cnt for r in merged_counters(spark, store).collect()
-    }
-    assert mid == before
-    # the next compaction cleans the stale scratch and merges correctly
-    absorbed = compact_cms_store(spark, store, keep_last=2)
-    assert absorbed == 1  # batch 1 folded into 0; 2,3 kept
-    assert not any(
-        f.startswith("_compacting_") for f in os.listdir(store)
-    )
-    after = {
-        (r.r, r.bucket): r.cnt for r in merged_counters(spark, store).collect()
-    }
-    assert after == before
-
-
 def test_streaming_kmv_store_equals_batch_estimate(spark, sf_dir, tmp_path):
     """Draining events through the per-batch KMV synopsis store and
     merging reproduces the one-shot batch estimate EXACTLY; replaying
-    a batch changes nothing; compaction preserves the estimate and
-    bounds the store."""
+    a batch changes nothing."""
     import os
 
     from pyspark.sql import functions as F
 
     from lab3_spark.operators.events import kmv_daily_users
-    from lab3_spark.streaming.kmv import (
-        compact_kmv_store,
-        merged_estimate,
-        start_streaming_kmv,
-    )
+    from lab3_spark.streaming.kmv import merged_estimate_frame, start_streaming_kmv
     from lab3_spark.sources.tables import load_table
 
     k = 64
@@ -214,7 +96,11 @@ def test_streaming_kmv_store_equals_batch_estimate(spark, sf_dir, tmp_path):
     # total is the merged estimate over everything)
     ev_ts = load_table(spark, sf_dir, "events").select("user_id", "ts")
     whole = kmv_daily_users(ev_ts, k=k).collect()[0]["est_users_total"]
-    assert merged_estimate(spark, store, k) == whole
+
+    def merged_estimate():
+        return merged_estimate_frame(spark, store, k).collect()[0]["est_users_total"]
+
+    assert merged_estimate() == whole
     # replay batch 0 from the same data — idempotent
     b0 = spark.read.parquet(f"{incoming}/00.parquet")
     from lab3_spark.streaming.kmv import _hv
@@ -226,13 +112,7 @@ def test_streaming_kmv_store_equals_batch_estimate(spark, sf_dir, tmp_path):
         "hv",
         k,
     ).select("hv").write.mode("overwrite").parquet(f"{store}/batch_id=0")
-    assert merged_estimate(spark, store, k) == whole
-    # compaction: estimate unchanged, partitions bounded
-    absorbed = compact_kmv_store(spark, store, k, keep_last=2)
-    assert absorbed == 1
-    parts = sorted(f for f in os.listdir(store) if f.startswith("batch_id="))
-    assert parts == ["batch_id=0", "batch_id=2", "batch_id=3"], parts
-    assert merged_estimate(spark, store, k) == whole
+    assert merged_estimate() == whole
 
 
 def test_streaming_lsh_flags_near_dups_at_ingest(spark, tmp_path):

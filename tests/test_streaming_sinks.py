@@ -1,75 +1,7 @@
-"""foreachBatch parquet sink: committed output equals the batch
-aggregation; replaying a batch id is idempotent."""
-
-import os
+"""Per-batch stores written by foreachBatch: replaying a batch (an
+overwrite of its own ``batch_id=N`` partition) changes nothing."""
 
 from pyspark.sql import functions as F
-
-from lab3_spark.sources.tables import load_table, normalize_event_time
-from lab3_spark.streaming.sinks import (
-    foreach_batch_parquet_sink,
-    latest_batch_output,
-)
-from lab3_spark.streaming.windowed import streaming_tumbling_counts
-
-
-def _staged_stream(spark, sf_dir, tmp_path):
-    import tempfile
-
-    path = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="fb_sink_", dir=str(tmp_path))
-    os.symlink(path, os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(path).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    src = normalize_event_time(src)
-    return src
-
-
-def test_foreach_batch_sink_equals_batch_agg(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "fb_out")
-    ckpt = str(tmp_path / "fb_ckpt")
-    q = foreach_batch_parquet_sink(
-        streaming_tumbling_counts(_staged_stream(spark, sf_dir, tmp_path)),
-        out,
-        ckpt,
-    )
-    assert q.awaitTermination(600), "foreachBatch stream did not terminate"
-
-    got = sorted(map(tuple, latest_batch_output(spark, out).collect()))
-
-    ev = load_table(spark, sf_dir, "events")
-    want = sorted(
-        map(
-            tuple,
-            ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
-                "total_value",
-            )
-            .collect(),
-        )
-    )
-    assert got == want and len(want) > 0
-
-
-def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
-    # simulate a replayed micro-batch: writing the same batch_id twice
-    # must leave ONE copy (overwrite), not two (append)
-    out = str(tmp_path / "replay_out")
-    df = spark.range(5).select(F.col("id").alias("k"))
-
-    def write_batch(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-
-    write_batch(df, 0)
-    write_batch(df, 0)  # the retry
-    assert latest_batch_output(spark, out).count() == 5
 
 
 def test_bitmap_store_replay_idempotent(spark, tmp_path):

@@ -7,11 +7,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from lab3_spark.operators.zorder import (
-    interleave_bits,
-    with_z_value,
-    zorder_write,
-)
+from lab3_spark.operators.zorder import interleave_bits, with_z_value
 
 
 def test_interleave_known_values(spark):
@@ -107,7 +103,16 @@ def test_zorder_layout_skips_both_dimensions(spark, sf_dir, tmp_path):
         .write.mode("overwrite")
         .parquet(linear)
     )
-    zorder_write(ev, zpath, "user_id", "value", n_files=n_files)
+    # z-order layout: range-partition on the Morton value, so each file
+    # covers a contiguous z-range (a small rectangle in key space)
+    (
+        with_z_value(ev, "user_id", "value")
+        .repartitionByRange(n_files, "z")
+        .sortWithinPartitions("z")
+        .drop("z")
+        .write.mode("overwrite")
+        .parquet(zpath)
+    )
 
     lin = _file_ranges(linear, ["user_id", "value"])
     zrd = _file_ranges(zpath, ["user_id", "value"])
