@@ -5,16 +5,19 @@ in :func:`scoped`; the frame lives until the caller's innermost
 :func:`cache_scope` exits (one ``with`` per unit of work, its result
 consumed inside).  Outside any scope ``scoped`` is a plain ``persist()``
 the caller frees with ``spark.catalog.clearCache()``, Spark's own
-contract (localCheckpoint-backed frames are left to the ContextCleaner)."""
+contract (localCheckpoint-backed frames are left to the ContextCleaner).
+Other per-call leftovers (scratch directories, catalog tables) are
+released the same way through :func:`on_scope_exit`."""
 
 from __future__ import annotations
 
 import contextlib
 import contextvars
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 
+# (frames, exit callbacks) of the innermost open scope
 _SCOPE: contextvars.ContextVar = contextvars.ContextVar("cache_scope", default=None)
 
 
@@ -39,10 +42,12 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 def cache_scope() -> Iterator[list[DataFrame]]:
     """Own the frames :func:`scoped` registers while this is the innermost
     scope (the yielded list); at exit free checkpoint-backed ones with
-    :func:`free_checkpoint` and unpersist the rest without blocking.
-    The list is a ``ContextVar``: one per thread and per nested ``with``."""
+    :func:`free_checkpoint`, unpersist the rest without blocking, then
+    run the :func:`on_scope_exit` callbacks, last registered first.
+    The scope is a ``ContextVar``: one per thread and per nested ``with``."""
     frames: list[DataFrame] = []
-    token = _SCOPE.set(frames)
+    exits: list[Callable[[], object]] = []
+    token = _SCOPE.set((frames, exits))
     try:
         yield frames
     finally:
@@ -53,6 +58,20 @@ def cache_scope() -> Iterator[list[DataFrame]]:
                     df.unpersist(blocking=False)
             except Exception:
                 pass  # session may be stopped/replaced; nothing to free
+        for fn in reversed(exits):
+            try:
+                fn()
+            except Exception:
+                pass  # same: a stopped session has nothing left to drop
+
+
+def on_scope_exit(fn: Callable[[], object]) -> bool:
+    """Run ``fn`` when the innermost open scope exits; False (and ``fn``
+    not registered) outside any scope."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope[1].append(fn)
+    return scope is not None
 
 
 def scoped(df: DataFrame) -> DataFrame:
@@ -63,9 +82,9 @@ def scoped(df: DataFrame) -> DataFrame:
         return df
     if _checkpoint_rdd(df) is None:
         df = df.persist()
-    frames = _SCOPE.get()
-    if frames is not None:
-        frames.append(df)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope[0].append(df)
     return df
 
 

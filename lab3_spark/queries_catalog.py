@@ -59,16 +59,99 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scratch_dir(prefix: str) -> str:
-    """A fresh mkdtemp registered for atexit removal — for streaming
-    gates that WRITE state (stores, checkpoints) and need isolation
-    per invocation but must still not leak across runs."""
+    """A fresh mkdtemp for gates that WRITE state (stores, checkpoints,
+    round-trip files): removed when the caller's innermost
+    ``cache_scope()`` exits, or at interpreter exit outside any scope."""
     import atexit
+    import functools
     import shutil
     import tempfile
 
+    from lab3_spark.functions.partitioning import on_scope_exit
+
     d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    remove = functools.partial(shutil.rmtree, d, ignore_errors=True)
+    if not on_scope_exit(remove):
+        atexit.register(remove)
     return d
+
+
+def _drain(q, what: str) -> None:
+    """Wait for an availableNow query to finish.  ``awaitTermination``
+    returns False on timeout WITHOUT raising, and an incomplete sink
+    would silently corrupt the comparison, so a timeout stops the query
+    and raises."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"{what} availableNow run timed out")
+
+
+def _staged_batches(df: DataFrame, root: str, preds: list) -> str:
+    """Write ``df.where(p)`` for each predicate in ``preds`` as one
+    single-file parquet, mtimes pinned ascending so FileStreamSource
+    (ordered by modification time) drains them in that order.  Returns
+    the incoming directory path."""
+    import time
+
+    flat = os.path.join(root, "incoming")
+    os.makedirs(flat)
+    now = time.time()
+    for b, pred in enumerate(preds):
+        part_dir = os.path.join(root, f"part{b}")
+        df.where(pred).coalesce(1).write.parquet(part_dir)
+        (pf,) = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
+        dst = os.path.join(flat, f"{b:02d}.parquet")
+        os.rename(os.path.join(part_dir, pf), dst)
+        os.utime(dst, (now + b * 10, now + b * 10))
+    return flat
+
+
+def _mod3(col: str) -> list:
+    """Three batches by ``col % 3``."""
+    return [F.col(col) % 3 == b for b in range(3)]
+
+
+def _time_terciles(df: DataFrame) -> list:
+    """Three batches by global (ts, event_id) rank terciles: batches
+    partition the stream in TIME order, the delivery shape the
+    journey-stitching attribution store requires.  The cut keys come
+    from a driver-side sort of the (ts, event_id) projection at verify
+    scale."""
+    rows = df.select("ts", "event_id").orderBy("ts", "event_id").collect()
+    lo, hi = (rows[(b * len(rows)) // 3] for b in (1, 2))
+
+    def ge(r):
+        return (F.col("ts") > F.lit(r["ts"])) | (
+            (F.col("ts") == F.lit(r["ts"]))
+            & (F.col("event_id") >= F.lit(r["event_id"]))
+        )
+
+    return [~ge(lo), ge(lo) & ~ge(hi), ge(hi)]
+
+
+def _drain_store(
+    spark: SparkSession,
+    prefix: str,
+    df: DataFrame,
+    schema: str,
+    preds: list,
+    start: Callable,
+    **opts,
+) -> str:
+    """Stage ``df`` as one file per predicate in a fresh scratch
+    directory, drain it one file per micro-batch through
+    ``start(stream, store, checkpoint, **opts)`` and return the store
+    path."""
+    root = _scratch_dir(prefix)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_staged_batches(df, root, preds))
+    )
+    store = os.path.join(root, "store")
+    q = start(stream, store, os.path.join(root, "ckpt"), **opts)
+    _drain(q, start.__name__)
+    return store
 
 
 # ---------------------------------------------------------------------------
@@ -1684,11 +1767,7 @@ def q_streaming_tumbling(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    # awaitTermination returns False on timeout WITHOUT raising - an
-    # incomplete memory table would silently corrupt the comparison
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_tumbling availableNow run timed out")
+    _drain(q, "streaming_tumbling")
     out = spark.table("stream_tumbling_check")
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -1733,9 +1812,7 @@ def q_streaming_sliding(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_sliding availableNow run timed out")
+    _drain(q, "streaming_sliding")
     out = spark.table("stream_sliding_check")
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -1750,101 +1827,20 @@ def q_streaming_sliding(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _mtime_ordered_batches(
-    df, root: str, id_col: str, n_batches: int = 3
-) -> str:
-    """Write ``df`` as ``n_batches`` single-file parquets split by
-    ``id_col % n``, mtimes pinned ascending so FileStreamSource
-    (ordered by modification time) drains them in batch order.
-    Returns the incoming directory path."""
-    import os as _os
-    import time as _time
-
-    flat = _os.path.join(root, "incoming")
-    _os.makedirs(flat)
-    now = _time.time()
-    for b in range(n_batches):
-        part_dir = _os.path.join(root, f"part{b}")
-        df.where(F.col(id_col) % n_batches == b).coalesce(1).write.parquet(
-            part_dir
-        )
-        (pf,) = [f for f in _os.listdir(part_dir) if f.endswith(".parquet")]
-        dst = _os.path.join(flat, f"{b:02d}.parquet")
-        _os.rename(_os.path.join(part_dir, pf), dst)
-        _os.utime(dst, (now + b * 10, now + b * 10))
-    return flat
-
-
-def _mtime_ordered_doc_batches(docs, root: str, n_batches: int = 3) -> str:
-    return _mtime_ordered_batches(docs, root, "doc_id", n_batches)
-
-
-def _ts_ordered_batches(df, root: str, n_batches: int = 3) -> str:
-    """Like :func:`_mtime_ordered_batches` but split by global
-    (ts, event_id) rank terciles instead of id hash — batches
-    partition the stream in TIME order, the delivery shape the
-    journey-stitching attribution store requires.  Harness-only: the
-    cut keys come from a driver-side sort of the (ts, event_id)
-    projection at verify scale."""
-    import os as _os
-    import time as _time
-
-    rows = df.select("ts", "event_id").orderBy("ts", "event_id").collect()
-    n = len(rows)
-    cuts = [rows[(b * n) // n_batches] for b in range(1, n_batches)]
-
-    def _ge(r):
-        return (F.col("ts") > F.lit(r["ts"])) | (
-            (F.col("ts") == F.lit(r["ts"]))
-            & (F.col("event_id") >= F.lit(r["event_id"]))
-        )
-
-    flat = _os.path.join(root, "incoming")
-    _os.makedirs(flat)
-    now = _time.time()
-    for b in range(n_batches):
-        d = df
-        if b > 0:
-            d = d.where(_ge(cuts[b - 1]))
-        if b < n_batches - 1:
-            d = d.where(~_ge(cuts[b]))
-        part_dir = _os.path.join(root, f"part{b}")
-        d.coalesce(1).write.parquet(part_dir)
-        (pf,) = [
-            f for f in _os.listdir(part_dir) if f.endswith(".parquet")
-        ]
-        dst = _os.path.join(flat, f"{b:02d}.parquet")
-        _os.rename(_os.path.join(part_dir, pf), dst)
-        _os.utime(dst, (now + b * 10, now + b * 10))
-    return flat
-
-
 def _run_incremental_ingest(spark, sf_dir, prefix: str, pre_filter=None):
     """Shared driver for the incremental-ingest gates: stage 3
     mtime-ordered micro-batches, drain through the foreachBatch
     fingerprint-store dedup, return the accepted store."""
-    import os as _os
-
     from lab3_spark.streaming.incremental_dedup import (
         accepted_store,
         start_incremental_dedup,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _scratch_dir(prefix)
-    flat = _mtime_ordered_doc_batches(docs, root)
-    src = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, prefix, docs, "doc_id bigint, text string", _mod3("doc_id"),
+        start_incremental_dedup, pre_filter=pre_filter,
     )
-    store = _os.path.join(root, "store")
-    q = start_incremental_dedup(
-        src, store, _os.path.join(root, "ckpt"), pre_filter=pre_filter
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("incremental ingest availableNow run timed out")
     return (
         accepted_store(spark, store)
         .select("doc_id", "fp", F.col("batch_id").cast("bigint").alias("batch_id"))
@@ -2681,8 +2677,6 @@ def q_streaming_incremental_quantiles(spark, sf_dir):
     claiming bit-parity: the cross-batch merge adds one compress
     level (≤ 4·eps ≈ 4% worst-case rank error, inside the 5% band) —
     the honest statement of what a mergeable sketch guarantees."""
-    import os as _os
-
     from lab3_spark.operators.quantile_sketch import (
         kll_daily_quantile_check,
     )
@@ -2692,18 +2686,11 @@ def q_streaming_incremental_quantiles(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
-    root = _scratch_dir("stream_kll_")
-    flat = _mtime_ordered_batches(ev, root, "event_id")
-    src = (
-        spark.readStream.schema("event_id bigint, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_kll_", ev,
+        "event_id bigint, ts timestamp, value double",
+        _mod3("event_id"), start_streaming_quantiles,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_quantiles(src, store, _os.path.join(root, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_quantiles availableNow run timed out")
     return kll_daily_quantile_check(
         _t(spark, sf_dir, "events"),
         daily=merged_daily_digests(spark, store),
@@ -2721,23 +2708,14 @@ def q_streaming_cms_heavy_hitters(spark, sf_dir):
     one-shot batch matrix — so this gate shares the batch gate's
     oracle verbatim, the strongest possible statement of
     streamed == batch."""
-    import os as _os
-
     from lab3_spark.streaming.cms import merged_counters, start_streaming_cms
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    root = _scratch_dir("stream_cms_")
-    flat = _mtime_ordered_batches(ev, root, "event_id")
-    src = (
-        spark.readStream.schema("event_id bigint, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_cms_", ev,
+        "event_id bigint, user_id bigint",
+        _mod3("event_id"), start_streaming_cms,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_cms(src, store, _os.path.join(root, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_cms availableNow run timed out")
     return EV.cms_heavy_hitters(
         _t(spark, sf_dir, "events"), counters=merged_counters(spark, store)
     )
@@ -2913,9 +2891,7 @@ def q_streaming_stateful(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("stateful sessionize availableNow run timed out")
+    _drain(q, "stateful sessionize")
     return (
         spark.table("stream_sess_check")
         .select(
@@ -5666,9 +5642,7 @@ def q_streaming_ss_join(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("stream-stream join availableNow run timed out")
+    _drain(q, "stream-stream join")
     return (
         spark.table("stream_ssj_check")
         .select(
@@ -8747,26 +8721,17 @@ def q_streaming_kmv_distinct(spark, sf_dir):
     merges by union-then-re-select-k-smallest, so the merged estimate
     is bit-identical to the one-shot batch estimate — the oracle
     states the one-shot form directly."""
-    import os as _os
-
     from lab3_spark.streaming.kmv import (
         merged_estimate_frame,
         start_streaming_kmv,
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    root = _scratch_dir("stream_kmv_")
-    flat = _mtime_ordered_batches(ev, root, "event_id")
-    src = (
-        spark.readStream.schema("event_id bigint, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_kmv_", ev,
+        "event_id bigint, user_id bigint",
+        _mod3("event_id"), start_streaming_kmv, k=64,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_kmv(src, store, _os.path.join(root, "ckpt"), k=64)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_kmv availableNow run timed out")
     return merged_estimate_frame(spark, store, 64)
 
 
@@ -9042,28 +9007,18 @@ def q_streaming_lsh_flagging(spark, sf_dir):
     ((batch, doc_id) order).  First-arrival flagging is a pure
     function of (bucket, arrival order), so the oracle restates it
     directly over the batch assignment (doc_id % 3)."""
-    import os as _os
-
     from lab3_spark.streaming.lsh_flag import (
         flagged_docs,
         start_streaming_lsh_flags,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    root = _scratch_dir("stream_lsh_")
-    flat = _mtime_ordered_doc_batches(docs, root)
-    src = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_lsh_", docs,
+        "doc_id bigint, text string, lang string, source string,"
+        " n_chars bigint",
+        _mod3("doc_id"), start_streaming_lsh_flags,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_lsh_flags(src, store, _os.path.join(root, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_lsh availableNow run timed out")
     return flagged_docs(spark, store)
 
 
@@ -9458,8 +9413,6 @@ def q_streaming_incremental_attribution(spark, sf_dir):
     serving view's absorption probabilities equal the one-shot
     events_attribution_markov bit-for-bit, so this gate shares its
     unrolled-CTE oracle verbatim."""
-    import os as _os
-
     from lab3_spark.streaming.attribution import (
         merged_attribution,
         start_streaming_attribution,
@@ -9468,25 +9421,12 @@ def q_streaming_incremental_attribution(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    root = _scratch_dir("stream_attr_")
-    flat = _ts_ordered_batches(ev, root)
-    src = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp, event_id bigint,"
-            " event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_attr_", ev,
+        "user_id bigint, ts timestamp, event_id bigint,"
+        " event_type string",
+        _time_terciles(ev), start_streaming_attribution,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_attribution(
-        src, store, _os.path.join(root, "ckpt")
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "streaming_attribution availableNow run timed out"
-        )
     return merged_attribution(spark, store)
 
 
@@ -10069,28 +10009,17 @@ def q_streaming_cdc_apply(spark, sf_dir):
     log — the oracle IS orders_cdc_apply's.  (Feed contract: seq
     monotone with batch order; a delete is final for its key, so
     incremental n_changes bookkeeping matches the one-shot count.)"""
-    import os as _os
-
     from lab3_spark.streaming.cdc import latest_snapshot, start_cdc_apply
 
     log = REL.cdc_change_log(_t(spark, sf_dir, "orders")).withColumn(
         "_b", F.col("seq") - 1
     )
-    root = _scratch_dir("stream_cdc_")
-    flat = _mtime_ordered_batches(log, root, "_b")
-    src = (
-        spark.readStream.schema(
-            "o_orderkey bigint, seq bigint, op string, "
-            "price_cents bigint, o_orderstatus string, _b bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_cdc_", log,
+        "o_orderkey bigint, seq bigint, op string, "
+        "price_cents bigint, o_orderstatus string, _b bigint",
+        _mod3("_b"), start_cdc_apply,
     )
-    store = _os.path.join(root, "store")
-    q = start_cdc_apply(src, store, _os.path.join(root, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("cdc apply availableNow run timed out")
     return latest_snapshot(spark, store).orderBy("o_orderkey")
 
 
@@ -11253,8 +11182,6 @@ def q_streaming_activity_bitmap(spark, sf_dir):
     Presence union is a set union and bit_or is idempotent, so the
     merged result is bit-identical to the one-shot batch gate — the
     oracle states the one-shot form verbatim."""
-    import os as _os
-
     from lab3_spark.operators.events import activity_bitmap_from_presence
     from lab3_spark.streaming.bitmap import (
         merged_presence,
@@ -11262,18 +11189,11 @@ def q_streaming_activity_bitmap(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    root = _scratch_dir("stream_bitmap_")
-    flat = _mtime_ordered_batches(ev, root, "event_id")
-    src = (
-        spark.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    store = _drain_store(
+        spark, "stream_bitmap_", ev,
+        "event_id bigint, ts timestamp, user_id bigint",
+        _mod3("event_id"), start_streaming_bitmap,
     )
-    store = _os.path.join(root, "store")
-    q = start_streaming_bitmap(src, store, _os.path.join(root, "ckpt"))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming_bitmap availableNow run timed out")
     return activity_bitmap_from_presence(merged_presence(spark, store))
 
 
@@ -13664,8 +13584,6 @@ def q_streaming_incremental_pagerank(spark, sf_dir):
     contract: the final rank version must equal the ONE-SHOT batch
     PageRank over all delivered edges — the oracle IS
     pagerank_candidates' oracle verbatim."""
-    import os as _os
-
     from lab3_spark.operators.dedup import minhash_candidates
     from lab3_spark.operators.pagerank import symmetrize
     from lab3_spark.streaming.incremental_pagerank import (
@@ -13674,24 +13592,12 @@ def q_streaming_incremental_pagerank(spark, sf_dir):
     )
 
     edges = symmetrize(minhash_candidates(_t(spark, sf_dir, "documents")))
-    root = _scratch_dir("stream_pagerank_")
-    flat = _mtime_ordered_batches(
+    store = _drain_store(
+        spark, "stream_pagerank_",
         edges.withColumn("_b", (F.col("src") + F.col("dst")) % 3),
-        root,
-        "_b",
+        "src bigint, dst bigint, _b bigint",
+        _mod3("_b"), start_incremental_pagerank, n_iter=_PAGERANK_ITERS,
     )
-    src = (
-        spark.readStream.schema("src bigint, dst bigint, _b bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    store = _os.path.join(root, "store")
-    q = start_incremental_pagerank(
-        src, store, _os.path.join(root, "ckpt"), n_iter=_PAGERANK_ITERS
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("incremental pagerank availableNow run timed out")
     return (
         latest_ranks(spark, store)
         .select(F.col("node").alias("doc_id"), "rank_fp")
@@ -14337,30 +14243,16 @@ def q_streaming_incremental_lsh(spark, sf_dir):
     candidate version must equal the ONE-SHOT batch minhash_candidates
     over all delivered docs — the oracle IS dedup_minhash_lsh's oracle
     verbatim."""
-    import os as _os
-
     from lab3_spark.streaming.incremental_lsh_index import (
         latest_cands,
         start_incremental_lsh_index,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _scratch_dir("stream_lsh_")
-    flat = _mtime_ordered_batches(
-        docs.withColumn("_b", F.col("doc_id") % 3), root, "_b"
+    store = _drain_store(
+        spark, "stream_lsh_", docs, "doc_id bigint, text string",
+        _mod3("doc_id"), start_incremental_lsh_index,
     )
-    src = (
-        spark.readStream.schema("doc_id bigint, text string, _b bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    store = _os.path.join(root, "store")
-    q = start_incremental_lsh_index(
-        src, store, _os.path.join(root, "ckpt")
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("incremental lsh availableNow run timed out")
     return (
         latest_cands(spark, store)
         .select("doc_a", "doc_b", F.col("n_bands").cast("bigint").alias("n_bands"))
@@ -14718,30 +14610,16 @@ def q_streaming_incremental_spans(spark, sf_dir):
     Merged-equals-batch contract: the final span version must equal
     the ONE-SHOT batch exact_substring_spans over all delivered docs —
     the oracle IS dedup_exact_substring_spans' oracle verbatim."""
-    import os as _os
-
     from lab3_spark.streaming.incremental_spans import (
         latest_spans,
         start_incremental_spans,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _scratch_dir("stream_spans_")
-    flat = _mtime_ordered_batches(
-        docs.withColumn("_b", F.col("doc_id") % 3), root, "_b"
+    store = _drain_store(
+        spark, "stream_spans_", docs, "doc_id bigint, text string",
+        _mod3("doc_id"), start_incremental_spans,
     )
-    src = (
-        spark.readStream.schema("doc_id bigint, text string, _b bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    store = _os.path.join(root, "store")
-    q = start_incremental_spans(
-        src, store, _os.path.join(root, "ckpt")
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("incremental spans availableNow run timed out")
     return latest_spans(spark, store).orderBy("doc_id", "span_start")
 
 
@@ -15381,32 +15259,16 @@ def q_streaming_incremental_paragraph_lsh(spark, sf_dir):
     store emits pairs as buckets grow, so the batch gate's bucket
     cap is an ingest-time knob applied downstream, not index
     state)."""
-    import os as _os
-
     from lab3_spark.streaming.incremental_paragraph_lsh import (
         latest_cands,
         start_incremental_paragraph_lsh,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = _scratch_dir("stream_para_lsh_")
-    flat = _mtime_ordered_batches(
-        docs.withColumn("_b", F.col("doc_id") % 3), root, "_b"
+    store = _drain_store(
+        spark, "stream_para_lsh_", docs, "doc_id bigint, text string",
+        _mod3("doc_id"), start_incremental_paragraph_lsh,
     )
-    src = (
-        spark.readStream.schema("doc_id bigint, text string, _b bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    store = _os.path.join(root, "store")
-    q = start_incremental_paragraph_lsh(
-        src, store, _os.path.join(root, "ckpt")
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "incremental paragraph lsh availableNow run timed out"
-        )
     return (
         latest_cands(spark, store)
         .select(

@@ -28,6 +28,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lab3_spark.functions.partitioning import on_scope_exit
 from lab3_spark.sinks import write_bucketed
 from lab3_spark.sources.tables import load_table
 
@@ -45,7 +46,8 @@ def materialize_bucketed_facts(
 
     Every call writes both tables from ``sf_dir``: a table is named
     after ``out_dir`` (the caller passes a fresh directory), so no
-    call can read rows another call wrote."""
+    call can read rows another call wrote.  The tables are dropped from
+    the session catalog when the caller's ``cache_scope()`` exits."""
     tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(out_dir)))
     readers = []
     for table, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
@@ -58,6 +60,7 @@ def materialize_bucketed_facts(
             sort_col=key,
             path=os.path.join(out_dir, table),
         )
+        on_scope_exit(lambda n=name: spark.sql(f"DROP TABLE IF EXISTS {n}"))
         readers.append(spark.table(name))
     return readers[0], readers[1]
 

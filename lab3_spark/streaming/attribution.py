@@ -24,7 +24,8 @@ conversion, drop users already converted in the store, stitch each
 user's first batch touch to their stored frontier (or START), add the
 within-batch consecutive edges, fold into the cumulative counts, and
 advance the frontier — all written as idempotent ``version=batch_id``
-partitions with the cdc.py wipe-refusal guard.
+partitions of both tables, refusing when either prior version is
+missing (the wipe guard of streaming/store.py).
 
 Contract: because batches partition the stream in global (ts,
 event_id) order, the stitched edge multiset after the last batch is
@@ -39,39 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
+from lab3_spark.streaming import store
 
 _STATE_SCHEMA = "user_id bigint, last_type string, converted int"
 _COUNTS_SCHEMA = "s string, t string, n bigint"
-
-
-def _guard_prior(spark: SparkSession, store_path: str, batch_id: int) -> None:
-    """cdc.py wipe-refusal, both branches: an expected prior version
-    missing (whether others survive or none do) means journey state is
-    lost — refuse rather than silently re-attribute a suffix."""
-    jvm = spark._jvm
-    hprev = jvm.org.apache.hadoop.fs.Path(
-        f"{store_path}/counts/version={batch_id - 1}"
-    )
-    fs = hprev.getFileSystem(spark._jsc.hadoopConfiguration())
-    if batch_id > 0 and not fs.exists(hprev):
-        hstore = jvm.org.apache.hadoop.fs.Path(f"{store_path}/counts")
-        existing = (
-            sorted(
-                int(st.getPath().getName().split("=", 1)[1])
-                for st in fs.listStatus(hstore)
-                if st.getPath().getName().startswith("version=")
-            )
-            if fs.exists(hstore)
-            else []
-        )
-        raise RuntimeError(
-            f"attribution store {store_path}/counts holds versions "
-            f"{existing} but not version={batch_id - 1} expected by "
-            f"incoming batch_id={batch_id}; refusing to attribute a "
-            "journey suffix — start over with a fresh checkpoint "
-            "(full replay) or restore the store"
-        )
 
 
 def start_streaming_attribution(
@@ -87,17 +59,15 @@ def start_streaming_attribution(
     per-user window re-sorts."""
     from pyspark.sql.window import Window
 
-    @cache_scope()
+    state_path, counts_path = f"{store_path}/state", f"{store_path}/counts"
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _guard_prior(spark, store_path, batch_id)
-        if batch_id > 0:
-            state_prev = spark.read.parquet(
-                f"{store_path}/state/version={batch_id - 1}"
-            )
-            counts_prev = spark.read.parquet(
-                f"{store_path}/counts/version={batch_id - 1}"
-            )
+        prior = store.read_prior(
+            spark, [state_path, counts_path], batch_id, "attribution"
+        )
+        if prior is not None:
+            state_prev, counts_prev = prior
         else:
             state_prev = spark.createDataFrame([], _STATE_SCHEMA)
             counts_prev = spark.createDataFrame([], _COUNTS_SCHEMA)
@@ -164,20 +134,10 @@ def start_streaming_attribution(
         state_new = state_prev.join(
             batch_state, "user_id", "left_anti"
         ).unionByName(batch_state)
-        counts_new.write.mode("overwrite").parquet(
-            f"{store_path}/counts/version={batch_id}"
-        )
-        state_new.write.mode("overwrite").parquet(
-            f"{store_path}/state/version={batch_id}"
-        )
+        store.write_version(counts_new, counts_path, batch_id)
+        store.write_version(state_new, state_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)
 
 
 def merged_attribution(
@@ -193,18 +153,10 @@ def merged_attribution(
     exact-integer chain solve."""
     from lab3_spark.operators.events import solve_removal_effects
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{store_path}/counts")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        raise FileNotFoundError(f"no count versions under {store_path}")
-    version = max(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.getPath().getName().startswith("version=")
-    )
-    counts = spark.read.parquet(f"{store_path}/counts/version={version}")
-    state = spark.read.parquet(f"{store_path}/state/version={version}")
+    counts_path, state_path = f"{store_path}/counts", f"{store_path}/state"
+    version = store.latest_version(spark, counts_path, "count")
+    counts = store.read_version(spark, counts_path, version)
+    state = store.read_version(spark, state_path, version, "state")
     terminals = (
         state.where(
             (F.col("converted") == 0) & F.col("last_type").isNotNull()

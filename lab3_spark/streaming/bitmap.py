@@ -26,15 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
+from lab3_spark.streaming import store
 
 
 def merged_presence(spark: SparkSession, store_path: str) -> DataFrame:
     """Distinct (user_id, dt) over every batch partition — the exact
     input shape of ``activity_bitmap_from_presence``."""
     return (
-        spark.read.option("basePath", store_path)
-        .parquet(f"{store_path}/batch_id=*")
+        store.read_batches(spark, store_path)
         .select("user_id", "dt")
         .distinct()
     )
@@ -47,18 +46,8 @@ def start_streaming_bitmap(
     trigger — drains the source then stops; production ingest would
     use a processing-time trigger)."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(
-            "user_id", F.to_date("ts").alias("dt")
-        ).distinct().write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        presence = batch_df.select("user_id", F.to_date("ts").alias("dt"))
+        store.write_batch(presence.distinct(), store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -30,16 +30,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.events import cms_counters
+from lab3_spark.streaming import store
 
 
 def merged_counters(spark: SparkSession, store_path: str) -> DataFrame:
     """(r, bucket, cnt): the elementwise sum of every batch's counter
     matrix — bit-identical to `cms_counters` over the full history."""
     return (
-        spark.read.option("basePath", store_path)
-        .parquet(f"{store_path}/batch_id=*")
+        store.read_batches(spark, store_path)
         .groupBy("r", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -57,16 +56,8 @@ def start_streaming_cms(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cms_counters(batch_df, key_col, d, w).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        counters = cms_counters(batch_df, key_col, d, w)
+        store.write_batch(counters, store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -36,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.functions.text import tokenize
+from lab3_spark.streaming import store
 
 
 def _fingerprints(df: DataFrame, text_col: str) -> DataFrame:
@@ -47,9 +47,7 @@ def _fingerprints(df: DataFrame, text_col: str) -> DataFrame:
 
 def accepted_store(spark: SparkSession, store_path: str) -> DataFrame:
     """(doc_id, fp, batch_id): every accepted (novel-at-arrival) doc."""
-    return spark.read.option("basePath", store_path).parquet(
-        f"{store_path}/batch_id=*"
-    )
+    return store.read_batches(spark, store_path)
 
 
 def start_incremental_dedup(
@@ -71,9 +69,7 @@ def start_incremental_dedup(
     semantics; replays re-apply it deterministically, keeping the
     idempotence contract."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if pre_filter is not None:
             batch_df = pre_filter(batch_df)
         batch = (
@@ -81,39 +77,14 @@ def start_incremental_dedup(
             .groupBy("fp")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        # Explicit existence check instead of try/except: a bare
-        # swallow would also hide REAL store-read failures (corrupt
-        # file, FS error) and silently skip dedup for the whole batch,
-        # breaking the one-doc-per-fingerprint store invariant with no
-        # signal.  Missing store = first batch, the only legitimate
-        # "no prior" case; any other read error now propagates and
-        # fails the StreamingQuery loudly.  The check goes through
-        # Hadoop's FileSystem API (not os.path) so hdfs:// / s3a://
-        # store paths — anything spark.read.parquet accepts — resolve
-        # the same way the subsequent read will; an os.path check
-        # would be always-False there and silently skip dedup forever.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(store_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_prior = fs.exists(hpath) and any(
-            st.getPath().getName().startswith("batch_id=")
-            for st in fs.listStatus(hpath)
-        )
-        if has_prior:
-            prior = (
-                accepted_store(spark, store_path)
-                .where(F.col("batch_id") < batch_id)
-                .select("fp")
+        try:
+            prior = store.read_batches(
+                batch_df.sparkSession, store_path, before=batch_id
             )
-            batch = batch.join(prior, "fp", "left_anti")
-        batch.select("doc_id", "fp").write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        except FileNotFoundError:
+            pass  # no earlier batch: nothing to dedup against
+        else:
+            batch = batch.join(prior.select("fp"), "fp", "left_anti")
+        store.write_batch(batch.select("doc_id", "fp"), store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

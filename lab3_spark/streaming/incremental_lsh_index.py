@@ -8,10 +8,9 @@ batch duplicate?").
 Per micro-batch (foreachBatch):
 
 1. distinct the batch's (doc_id, text) rows on doc_id;
-2. store/checkpoint-disagreement guard (both cdc.py branches): a
-   batch_id > 0 whose expected ``{store}/bands/version=batch_id-1`` is
-   absent REFUSES — whether other versions survive (partial wipe) or
-   none do (full wipe under a kept checkpoint);
+2. read version batch_id-1 of both ``bands/`` and ``cands/``; a
+   batch_id > 0 missing either REFUSES — partial or full wipe under a
+   kept checkpoint (the wipe guard of streaming/store.py);
 3. NEW docs = batch anti-join prior band store on doc_id (re-delivered
    docs are idempotent); band keys are computed for the NEW docs only
    — a document's MinHash signature depends on nothing but the
@@ -34,8 +33,7 @@ delivered document — EXACTLY, because banding is per-document and the
 delta join enumerates precisely the collisions the batch self-join
 would add.  Exactly-once: version dirs are keyed by batch_id — a
 replayed batch re-reads version N−1 and overwrites only its own
-output (the cdc.py / incremental_dedup / incremental_pagerank
-discipline).
+output (the versioned layout of streaming/store.py).
 """
 
 from __future__ import annotations
@@ -43,32 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
-
-
-def cands_snapshot(
-    spark: SparkSession, store_path: str, version: int
-) -> DataFrame:
-    return spark.read.parquet(f"{store_path}/cands/version={version}")
+from lab3_spark.streaming import store
 
 
 def latest_cands(spark: SparkSession, store_path: str) -> DataFrame:
     """The highest-version candidate-pair table under ``store_path``."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{store_path}/cands")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # fs.exists first: listStatus on a missing store raises a raw py4j
-    # Java FileNotFoundException, not the Python contract (ADVICE r8)
-    if not fs.exists(hpath):
-        raise FileNotFoundError(f"no candidate versions under {store_path}")
-    versions = [
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.getPath().getName().startswith("version=")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no candidate versions under {store_path}")
-    return cands_snapshot(spark, store_path, max(versions))
+    return store.read_version(spark, f"{store_path}/cands", what="candidate")
 
 
 def start_incremental_lsh_index(
@@ -82,42 +60,18 @@ def start_incremental_lsh_index(
     document deltas; extra columns are ignored."""
     from lab3_spark.operators.dedup import minhash_band_keys
 
-    @cache_scope()
+    bands_path, cands_path = f"{store_path}/bands", f"{store_path}/cands"
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(
             ["doc_id"]
         )
-        jvm = spark._jvm
-        hprev = jvm.org.apache.hadoop.fs.Path(
-            f"{store_path}/bands/version={batch_id - 1}"
+        prior = store.read_prior(
+            spark, [bands_path, cands_path], batch_id, "lsh index"
         )
-        fs = hprev.getFileSystem(spark._jsc.hadoopConfiguration())
-        if batch_id > 0 and not fs.exists(hprev):
-            hstore = jvm.org.apache.hadoop.fs.Path(f"{store_path}/bands")
-            existing = (
-                sorted(
-                    int(st.getPath().getName().split("=", 1)[1])
-                    for st in fs.listStatus(hstore)
-                    if st.getPath().getName().startswith("version=")
-                )
-                if fs.exists(hstore)
-                else []
-            )
-            raise RuntimeError(
-                f"lsh band store {store_path}/bands holds versions "
-                f"{existing} but not version={batch_id - 1} expected by "
-                f"incoming batch_id={batch_id}; refusing to index against "
-                "lost prior state — start over with a fresh checkpoint "
-                "(full replay) or restore the store"
-            )
-        if batch_id > 0:
-            prior_bands = spark.read.parquet(
-                f"{store_path}/bands/version={batch_id - 1}"
-            )
-            prior_cands = spark.read.parquet(
-                f"{store_path}/cands/version={batch_id - 1}"
-            )
+        if prior is not None:
+            prior_bands, prior_cands = prior
             new_docs = batch_docs.join(
                 prior_bands.select("doc_id").distinct(), "doc_id", "left_anti"
             )
@@ -130,12 +84,10 @@ def start_incremental_lsh_index(
             if prior_bands is not None
             else new_bands
         )
-        merged_bands.write.mode("overwrite").parquet(
-            f"{store_path}/bands/version={batch_id}"
-        )
+        store.write_version(merged_bands, bands_path, batch_id)
         # re-read the durable version: the pair join runs over one
         # consistent snapshot, not the in-flight union plan
-        bands = spark.read.parquet(f"{store_path}/bands/version={batch_id}")
+        bands = store.read_version(spark, bands_path, batch_id)
         new_ids = new_docs.select("doc_id").distinct()
         a = bands.join(new_ids, "doc_id").alias("a")
         b = bands.join(
@@ -163,14 +115,6 @@ def start_incremental_lsh_index(
             if prior_cands is not None
             else new_pairs
         )
-        merged_cands.write.mode("overwrite").parquet(
-            f"{store_path}/cands/version={batch_id}"
-        )
+        store.write_version(merged_cands, cands_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -15,9 +15,9 @@ Per micro-batch (foreachBatch):
    (updates require a fresh checkpoint / full replay, exactly like
    recovering from a wiped store).  This is replay-idempotence, NOT
    update support;
-2. store/checkpoint-disagreement guard over BOTH prior version dirs
-   (bands, cands) — the ADVICE-r9 partial-wipe discipline: any
-   missing prior dir REFUSES with the documented RuntimeError;
+2. read version batch_id-1 of BOTH ``bands/`` and ``cands/``; any
+   missing one REFUSES with the documented RuntimeError (the wipe
+   guard of streaming/store.py);
 3. NEW docs = batch anti-join prior band store on doc_id; their
    paragraphs are banded ONCE via the batch machinery VERBATIM
    (dedup.paragraph_frame → minhash_band_keys with
@@ -41,7 +41,7 @@ per-batch would depend on delivery order (the batch gate's
 ``max_bucket`` is an ingest-time knob, applied downstream of the
 index).  Exactly-once: version dirs keyed by batch_id — a replayed
 batch re-reads version N−1 and overwrites only its own output (the
-cdc.py / incremental_lsh_index discipline).
+versioned layout of streaming/store.py).
 """
 
 from __future__ import annotations
@@ -49,35 +49,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
-
-
-def cands_snapshot(
-    spark: SparkSession, store_path: str, version: int
-) -> DataFrame:
-    return spark.read.parquet(f"{store_path}/cands/version={version}")
+from lab3_spark.streaming import store
 
 
 def latest_cands(spark: SparkSession, store_path: str) -> DataFrame:
     """The highest-version paragraph candidate table under
     ``store_path``."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{store_path}/cands")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        raise FileNotFoundError(
-            f"no paragraph candidate versions under {store_path}"
-        )
-    versions = [
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.getPath().getName().startswith("version=")
-    ]
-    if not versions:
-        raise FileNotFoundError(
-            f"no paragraph candidate versions under {store_path}"
-        )
-    return cands_snapshot(spark, store_path, max(versions))
+    return store.read_version(
+        spark, f"{store_path}/cands", what="paragraph candidate"
+    )
 
 
 def start_incremental_paragraph_lsh(
@@ -102,52 +82,18 @@ def start_incremental_paragraph_lsh(
     if (delimiter is None) == (block_tokens is None):
         raise ValueError("give exactly one of delimiter / block_tokens")
 
-    @cache_scope()
+    bands_path, cands_path = f"{store_path}/bands", f"{store_path}/cands"
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(
             ["doc_id"]
         )
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(store_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
+        prior = store.read_prior(
+            spark, [bands_path, cands_path], batch_id, "paragraph lsh"
         )
-        missing = [
-            part
-            for part in ("bands", "cands")
-            if batch_id > 0
-            and not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{store_path}/{part}/version={batch_id - 1}"
-                )
-            )
-        ]
-        if missing:
-            hstore = jvm.org.apache.hadoop.fs.Path(f"{store_path}/bands")
-            existing = (
-                sorted(
-                    int(st.getPath().getName().split("=", 1)[1])
-                    for st in fs.listStatus(hstore)
-                    if st.getPath().getName().startswith("version=")
-                )
-                if fs.exists(hstore)
-                else []
-            )
-            raise RuntimeError(
-                f"paragraph lsh store {store_path} is missing "
-                f"version={batch_id - 1} under {missing} (bands holds "
-                f"versions {existing}) expected by incoming "
-                f"batch_id={batch_id}; refusing to index against lost "
-                "prior state — start over with a fresh checkpoint "
-                "(full replay) or restore the store"
-            )
-        if batch_id > 0:
-            prior_bands = spark.read.parquet(
-                f"{store_path}/bands/version={batch_id - 1}"
-            )
-            prior_cands = spark.read.parquet(
-                f"{store_path}/cands/version={batch_id - 1}"
-            )
+        if prior is not None:
+            prior_bands, prior_cands = prior
             new_docs = batch_docs.join(
                 prior_bands.select("doc_id").distinct(),
                 "doc_id",
@@ -170,13 +116,9 @@ def start_incremental_paragraph_lsh(
             if prior_bands is not None
             else new_bands
         )
-        merged_bands.write.mode("overwrite").parquet(
-            f"{store_path}/bands/version={batch_id}"
-        )
+        store.write_version(merged_bands, bands_path, batch_id)
         # re-read the durable version: one consistent snapshot
-        bands = spark.read.parquet(
-            f"{store_path}/bands/version={batch_id}"
-        )
+        bands = store.read_version(spark, bands_path, batch_id)
         new_ids = new_docs.select("doc_id").distinct()
         a = bands.join(new_ids, "doc_id").alias("a")
         b = bands.join(
@@ -222,14 +164,6 @@ def start_incremental_paragraph_lsh(
             if prior_cands is not None
             else new_pairs
         )
-        merged_cands.write.mode("overwrite").parquet(
-            f"{store_path}/cands/version={batch_id}"
-        )
+        store.write_version(merged_cands, cands_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -11,10 +11,9 @@ a boilerplate block becomes dedup-worthy only when the second copy
 arrives).  Gram counts are monotone non-decreasing, so spans only ever
 APPEAR — the delta work is exactly:
 
-1. distinct the batch on doc_id; store/checkpoint-disagreement guard
-   (both cdc.py branches): batch_id > 0 whose expected
-   ``gramcounts/version=batch_id-1`` is absent REFUSES — partial or
-   full wipe under a kept checkpoint;
+1. distinct the batch on doc_id; read version batch_id-1 of all three
+   tables — a batch_id > 0 missing any REFUSES (partial or full wipe
+   under a kept checkpoint; the wipe guard of streaming/store.py);
 2. NEW docs = batch anti-join the prior positional-gram store
    (re-delivered docs are idempotent); their positional grams append
    to ``docgrams/version=batch_id`` — a document's grams depend on
@@ -37,41 +36,22 @@ delivered document — monotone counts make carried-over spans exact,
 and affected docs are recomputed against the same duplicated-gram
 table the batch run would build.  Exactly-once: version dirs are
 keyed by batch_id (a replayed batch re-reads version N−1 and
-overwrites only its own output — the cdc.py discipline)."""
+overwrites only its own output — the versioned layout of
+streaming/store.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
+from lab3_spark.streaming import store
 
 SPAN_COLS = ("doc_id", "span_start", "span_end", "span_tokens")
 
 
-def spans_snapshot(
-    spark: SparkSession, store_path: str, version: int
-) -> DataFrame:
-    return spark.read.parquet(f"{store_path}/spans/version={version}")
-
-
 def latest_spans(spark: SparkSession, store_path: str) -> DataFrame:
     """The highest-version span table under ``store_path``."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{store_path}/spans")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # fs.exists first: listStatus on a missing store raises a raw py4j
-    # Java FileNotFoundException, not the Python contract (ADVICE r8)
-    if not fs.exists(hpath):
-        raise FileNotFoundError(f"no span versions under {store_path}")
-    versions = [
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hpath)
-        if st.getPath().getName().startswith("version=")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no span versions under {store_path}")
-    return spans_snapshot(spark, store_path, max(versions))
+    return store.read_version(spark, f"{store_path}/spans", what="span")
 
 
 def start_incremental_spans(
@@ -89,62 +69,20 @@ def start_incremental_spans(
     from lab3_spark.operators.dedup import spans_from_hits
     from lab3_spark.operators.textstats import _word_ngrams
 
-    @cache_scope()
+    grams_path, counts_path, spans_path = (
+        f"{store_path}/{t}" for t in ("docgrams", "gramcounts", "spans")
+    )
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_docs = batch_df.select("doc_id", text_col).dropDuplicates(
             ["doc_id"]
         )
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(store_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
+        prior = store.read_prior(
+            spark, [grams_path, counts_path, spans_path], batch_id, "span"
         )
-        # wipe guard over ALL THREE prior version dirs (ADVICE r9): a
-        # PARTIAL wipe — say docgrams/ or spans/ deleted while
-        # gramcounts survives — must surface as the documented
-        # refusing-to-dedup RuntimeError, not a raw py4j
-        # FileNotFoundException from spark.read.parquet below
-        missing = [
-            part
-            for part in ("docgrams", "gramcounts", "spans")
-            if batch_id > 0
-            and not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{store_path}/{part}/version={batch_id - 1}"
-                )
-            )
-        ]
-        if missing:
-            hstore = jvm.org.apache.hadoop.fs.Path(
-                f"{store_path}/gramcounts"
-            )
-            existing = (
-                sorted(
-                    int(st.getPath().getName().split("=", 1)[1])
-                    for st in fs.listStatus(hstore)
-                    if st.getPath().getName().startswith("version=")
-                )
-                if fs.exists(hstore)
-                else []
-            )
-            raise RuntimeError(
-                f"span store {store_path} is missing "
-                f"version={batch_id - 1} under {missing} (gramcounts "
-                f"holds versions {existing}) expected by incoming "
-                f"batch_id={batch_id}; refusing to dedup against lost "
-                "prior state — start over with a fresh checkpoint "
-                "(full replay) or restore the store"
-            )
-        if batch_id > 0:
-            prior_grams = spark.read.parquet(
-                f"{store_path}/docgrams/version={batch_id - 1}"
-            )
-            prior_counts = spark.read.parquet(
-                f"{store_path}/gramcounts/version={batch_id - 1}"
-            )
-            prior_spans = spark.read.parquet(
-                f"{store_path}/spans/version={batch_id - 1}"
-            )
+        if prior is not None:
+            prior_grams, prior_counts, prior_spans = prior
             new_docs = batch_docs.join(
                 prior_grams.select("doc_id").distinct(),
                 "doc_id",
@@ -164,14 +102,10 @@ def start_incremental_spans(
             if prior_grams is not None
             else new_grams
         )
-        merged_grams.write.mode("overwrite").parquet(
-            f"{store_path}/docgrams/version={batch_id}"
-        )
+        store.write_version(merged_grams, grams_path, batch_id)
         # re-read the durable version: every downstream join runs over
         # one consistent snapshot, not the in-flight union plan
-        docgrams = spark.read.parquet(
-            f"{store_path}/docgrams/version={batch_id}"
-        )
+        docgrams = store.read_version(spark, grams_path, batch_id)
         delta_counts = new_grams.groupBy("gram").agg(
             F.count(F.lit(1)).alias("_d")
         )
@@ -192,12 +126,8 @@ def start_incremental_spans(
             merged_counts = delta_counts.select(
                 "gram", F.col("_d").cast("bigint").alias("cnt")
             )
-        merged_counts.write.mode("overwrite").parquet(
-            f"{store_path}/gramcounts/version={batch_id}"
-        )
-        counts = spark.read.parquet(
-            f"{store_path}/gramcounts/version={batch_id}"
-        )
+        store.write_version(merged_counts, counts_path, batch_id)
+        counts = store.read_version(spark, counts_path, batch_id)
         dup = counts.where(F.col("cnt") >= 2).select("gram")
         new_ids = new_docs.select("doc_id").distinct()
         if prior_counts is not None:
@@ -229,14 +159,6 @@ def start_incremental_spans(
             merged_spans = carried.unionByName(recomputed)
         else:
             merged_spans = recomputed
-        merged_spans.select(*SPAN_COLS).write.mode("overwrite").parquet(
-            f"{store_path}/spans/version={batch_id}"
-        )
+        store.write_version(merged_spans.select(*SPAN_COLS), spans_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.events import KMV_DOMAIN, KMV_HEX_CHARS, kmv_synopsis
+from lab3_spark.streaming import store
 
 
 def _hv(key_col: str):
@@ -52,8 +52,7 @@ def merged_estimate_frame(
     KMV estimate over the full history (mergeability), computed from
     ≤ k·batches stored rows without touching the source stream."""
     return (
-        spark.read.option("basePath", store_path)
-        .parquet(f"{store_path}/batch_id=*")
+        store.read_batches(spark, store_path)
         .select("hv")
         .distinct()
         .orderBy("hv")
@@ -79,7 +78,6 @@ def start_streaming_kmv(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_syn = kmv_synopsis(
             batch_df.select(F.lit("all").alias("g"), _hv(key_col).alias("hv")),
@@ -87,14 +85,6 @@ def start_streaming_kmv(
             "hv",
             k,
         ).select("hv")
-        batch_syn.write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        store.write_batch(batch_syn, store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

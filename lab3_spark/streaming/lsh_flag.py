@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.dedup import minhash_band_keys
+from lab3_spark.streaming import store
 
 
 def flagged_docs(spark: SparkSession, store_path: str) -> DataFrame:
@@ -44,9 +44,7 @@ def flagged_docs(spark: SparkSession, store_path: str) -> DataFrame:
     (lexicographic (batch_id, doc_id)).  One aggregation per bucket
     (min struct — map-side combinable) + a same-key join back; reads
     only the metadata-scale key store, never the corpus."""
-    keys = spark.read.option("basePath", store_path).parquet(
-        f"{store_path}/batch_id=*"
-    )
+    keys = store.read_batches(spark, store_path)
     firsts = keys.groupBy("band", "band_key").agg(
         F.min(F.struct("batch_id", "doc_id")).alias("first")
     )
@@ -77,16 +75,8 @@ def start_streaming_lsh_flags(
     trigger — drains the source then stops; a production ingest would
     use a processing-time trigger)."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        minhash_band_keys(batch_df, text_col).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+        keys = minhash_band_keys(batch_df, text_col)
+        store.write_batch(keys, store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

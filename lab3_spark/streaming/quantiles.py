@@ -33,15 +33,14 @@ is strictly batch; SURVEY §2.8/§2.9 extension surface.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from lab3_spark.functions.partitioning import cache_scope
 from lab3_spark.operators.quantile_sketch import (
     DEFAULT_EPS,
     _DIGEST_FIELDS,
     daily_value_digest,
     merged_digest_pdf,
 )
+from lab3_spark.streaming import store
 
 
 def merged_daily_digests(
@@ -55,10 +54,8 @@ def merged_daily_digests(
     def merge_day(pdf):
         return merged_digest_pdf(pdf, eps, {"day": pdf["day"].iloc[0]})
 
-    store = spark.read.option("basePath", store_path).parquet(
-        f"{store_path}/batch_id=*"
-    )
-    return store.groupBy("day").applyInPandas(
+    digests = store.read_batches(spark, store_path)
+    return digests.groupBy("day").applyInPandas(
         merge_day, f"day string, {_DIGEST_FIELDS}"
     )
 
@@ -74,16 +71,8 @@ def start_streaming_quantiles(
     trigger — drains the source then stops, the test/replay-friendly
     mode; a production ingest would use a processing-time trigger)."""
 
-    @cache_scope()
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        daily_value_digest(batch_df, value_col, eps).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+        digests = daily_value_digest(batch_df, value_col, eps)
+        store.write_batch(digests, store_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.start(stream, process, checkpoint)

@@ -144,6 +144,52 @@ def test_no_bare_persist_outside_managed_sites():
     assert not cross_call, f"cross-call state left in lab3_spark: {cross_call}"
 
 
+# store listing and stream starts: streaming/store.py's alone
+_STORE_IO_WORDS = ("listStatus(", "getFileSystem(", "foreachBatch(")
+
+
+def test_store_io_only_in_store_module():
+    """Structural guard: within lab3_spark only ``streaming/store.py``
+    lists a directory through Hadoop, resolves a FileSystem or starts a
+    foreachBatch query (so every store shares one layout, one version
+    reader and one wipe guard), and only ``queries_catalog._drain``
+    waits on a StreamingQuery."""
+    import ast
+
+    import lab3_spark
+
+    root = os.path.dirname(lab3_spark.__file__)
+    store_io = []
+    waits = []
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, root)
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            if rel != os.path.join("streaming", "store.py"):
+                store_io.extend(
+                    f"{rel}: {w}" for w in _STORE_IO_WORDS if w in src
+                )
+            for top in ast.parse(src, path).body:
+                name = getattr(top, "name", "<module>")
+                waits.extend(
+                    f"{rel}: {name}"
+                    for n in ast.walk(top)
+                    if isinstance(n, ast.Call)
+                    and getattr(n.func, "attr", None) == "awaitTermination"
+                    and (rel, name) != ("queries_catalog.py", "_drain")
+                )
+    assert not store_io, (
+        f"store listing or stream start outside streaming/store.py: {store_io}"
+    )
+    assert not waits, (
+        f"awaitTermination outside queries_catalog._drain: {waits}"
+    )
+
+
 def test_unigram_surprisal_recomputes_after_clear_cache(spark, docs):
     """A call after ``spark.catalog.clearCache()`` must hand back a
     frame it persisted itself, never the previous call's frame (which

@@ -6,6 +6,7 @@ and never shared with another thread's scope."""
 
 from __future__ import annotations
 
+import os
 import threading
 
 from lab3_spark.functions.partitioning import cache_scope
@@ -89,3 +90,25 @@ def test_threads_keep_their_own_rank_frames(spark):
         t.join(600)
     assert not errors, errors
     assert seen["levels"] and all(seen["levels"]), seen
+
+
+def test_scope_exit_removes_scratch_dirs_and_bucketed_tables(spark, sf_dir):
+    """Three bucketed_fact_join calls in one scope: each writes a fresh
+    scratch directory and two ``*_bkt_*`` catalog tables, and the scope's
+    exit removes all of them (before, they stayed until interpreter exit
+    and for the whole session)."""
+    import glob
+    import tempfile
+
+    def leftovers():
+        dirs = glob.glob(os.path.join(tempfile.gettempdir(), "bucketed_facts_*"))
+        tables = [t.name for t in spark.catalog.listTables() if "_bkt_" in t.name]
+        return set(dirs), set(tables)
+
+    dirs0, tables0 = leftovers()
+    with cache_scope():
+        for _ in range(3):
+            QUERIES["bucketed_fact_join"](spark, sf_dir).collect()
+        dirs, tables = leftovers()
+        assert len(dirs - dirs0) == 3 and len(tables - tables0) == 6
+    assert leftovers() == (dirs0, tables0)

@@ -298,10 +298,8 @@ def test_incremental_paragraph_lsh_merged_equals_batch(spark, tmp_path):
     1's boilerplate copy must pair with batch 0's WITHOUT batch 0
     being re-banded, and a re-delivered doc is idempotent."""
     from lab3_spark.operators.dedup import paragraph_minhash_duplicates
-    from lab3_spark.streaming.incremental_paragraph_lsh import (
-        cands_snapshot,
-        latest_cands,
-    )
+    from lab3_spark.streaming.incremental_paragraph_lsh import latest_cands
+    from lab3_spark.streaming.store import read_version
 
     b0 = [(1, "alpha beta gamma delta epsilon\n" + BOILER)]
     b1 = [(2, BOILER + "\nzeta eta theta iota kappa"), (1, "ignored")]
@@ -325,8 +323,8 @@ def test_incremental_paragraph_lsh_merged_equals_batch(spark, tmp_path):
     assert got == exp
     # delta-proportionality is visible in the versions: v0 has no
     # pairs (one doc), v1 adds exactly the (1,1)x(2,0) collision
-    assert cands_snapshot(spark, store, 0).count() == 0
-    v1 = sorted(map(tuple, cands_snapshot(spark, store, 1).collect()))
+    assert read_version(spark, store + "/cands", 0).count() == 0
+    v1 = sorted(map(tuple, read_version(spark, store + "/cands", 1).collect()))
     assert v1 == [(1, 1, 2, 0, 4)]
 
 

@@ -83,11 +83,8 @@ def test_streaming_cdc_versions_match_batch_apply(spark, tmp_path):
     maintainer: the FINAL version equals the one-shot batch cdc_apply,
     and the intermediate version 0 is the insert-only snapshot."""
     from lab3_spark.operators.relational import cdc_apply, cdc_change_log
-    from lab3_spark.streaming.cdc import (
-        latest_snapshot,
-        snapshot,
-        start_cdc_apply,
-    )
+    from lab3_spark.streaming.cdc import latest_snapshot, start_cdc_apply
+    from lab3_spark.streaming.store import read_version
 
     orders = spark.createDataFrame(
         [(k, float(k), "O") for k in range(1, 50)],
@@ -128,7 +125,7 @@ def test_streaming_cdc_versions_match_batch_apply(spark, tmp_path):
     }
     assert got == expected
 
-    v0 = {r.o_orderkey: r.last_op for r in snapshot(spark, store, 0).collect()}
+    v0 = {r.o_orderkey: r.last_op for r in read_version(spark, store, 0).collect()}
     assert set(v0.values()) == {"I"} and len(v0) == 49
 
 

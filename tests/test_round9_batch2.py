@@ -56,10 +56,8 @@ def test_incremental_spans_merged_equals_batch(spark, tmp_path):
     delivers doc 2 with the same block, so doc 1's span must appear
     through the newly-duplicated-gram re-evaluation path."""
     from lab3_spark.operators.dedup import exact_substring_spans
-    from lab3_spark.streaming.incremental_spans import (
-        latest_spans,
-        spans_snapshot,
-    )
+    from lab3_spark.streaming.incremental_spans import latest_spans
+    from lab3_spark.streaming.store import read_version
 
     b0 = [(1, BLOCK + " taila tailb")]
     b1 = [(2, "heada " + BLOCK), (1, BLOCK)]  # doc 1 re-delivered: idempotent
@@ -83,10 +81,10 @@ def test_incremental_spans_merged_equals_batch(spark, tmp_path):
     assert got == exp
     # the reactivation specifically: version 0 has NO spans (block
     # unique), version 1 reports doc 1's span without re-delivery
-    assert spans_snapshot(spark, store, 0).count() == 0
+    assert read_version(spark, store + "/spans", 0).count() == 0
     v1 = {
         r["doc_id"]: (r["span_start"], r["span_end"])
-        for r in spans_snapshot(spark, store, 1).collect()
+        for r in read_version(spark, store + "/spans", 1).collect()
     }
     assert v1[1] == (0, 8) and v1[2] == (1, 9)
     # idempotence: doc 1's re-delivery in batch 1 did not duplicate rows
@@ -97,7 +95,7 @@ def test_incremental_spans_unaffected_docs_carry_over(spark, tmp_path):
     """A batch that repeats nothing old recomputes nothing old: after
     batch 2 (all-unique doc), the span rows of docs 1/2 are carried
     from version 1 verbatim."""
-    from lab3_spark.streaming.incremental_spans import spans_snapshot
+    from lab3_spark.streaming.store import read_version
 
     feed = _doc_feed(
         spark,
@@ -109,8 +107,8 @@ def test_incremental_spans_unaffected_docs_carry_over(spark, tmp_path):
     )
     store, ck = str(tmp_path / "store"), str(tmp_path / "ck")
     _drain_spans(spark, feed, store, ck)
-    v0 = sorted(map(tuple, spans_snapshot(spark, store, 0).collect()))
-    v1 = sorted(map(tuple, spans_snapshot(spark, store, 1).collect()))
+    v0 = sorted(map(tuple, read_version(spark, store + "/spans", 0).collect()))
+    v1 = sorted(map(tuple, read_version(spark, store + "/spans", 1).collect()))
     assert v0 == v1 == [(1, 0, 8, 8), (2, 0, 8, 8)]
 
 
