@@ -24,3 +24,9 @@ from pyspark.sql import functions as F
 def trunc(col: Column, digits: int = 4) -> Column:
     p = 10**digits
     return F.floor(col * p) / p
+
+
+def cents(name: str) -> Column:
+    """A money column as exact integer cents: floor(x·100 + 0.5) on the
+    same IEEE double in every engine — boundary-free."""
+    return F.floor(F.col(name) * 100 + F.lit(0.5)).cast("bigint")

@@ -2224,15 +2224,15 @@ def sorted_neighborhood_pairs(
     for a FIXED comparison budget — exactly (w−1)·N pairs regardless
     of key skew, the property that made it the classic pre-LSH linkage
     method.  Scale shape: the global sort order comes from
-    rank.with_global_row_number (ranged shuffle + broadcast offsets —
+    rank.with_row_number (ranged shuffle + broadcast offsets —
     no single-partition window); neighbor pairing is an equi-join of
     the rank frame with itself on rn+offset; the verify joins a
     persisted shingle frame (the LSH family's shingling)."""
     from lab3_spark.functions.partitioning import scoped
     from lab3_spark.functions.rounding import trunc
-    from lab3_spark.operators.rank import with_global_row_number
+    from lab3_spark.operators.rank import with_row_number
 
-    ranked = with_global_row_number(
+    ranked = with_row_number(
         documents.select(
             "doc_id",
             F.substring(F.lower(F.col(text_col)), 1, 16).alias("_snm_key"),

@@ -659,7 +659,7 @@ def cms_heavy_hitters(
     if topn > 100_000:
         raise ValueError(
             f"topn {topn} allocates O(topn) per partition in TakeOrdered; "
-            "use rank.with_global_row_number for full rankings"
+            "use rank.with_row_number for full rankings"
         )
     from pyspark.sql.window import Window
 

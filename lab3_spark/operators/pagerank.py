@@ -45,7 +45,8 @@ def pagerank_fixed_point(
     edges: DataFrame, n_iter: int = 5, input_from_symmetrize: bool = False
 ) -> DataFrame:
     """(node, rank_fp): integer fixed-point PageRank after ``n_iter``
-    synchronous iterations from a uniform RANK_SCALE start.
+    synchronous iterations from a uniform RANK_SCALE start — the
+    personalized loop (:func:`_fixed_point`) with every node a seed.
 
     ``edges`` is a directed (src, dst) list; a symmetrized graph (every
     node has out-degree ≥ 1) has no dangling-mass problem by
@@ -58,6 +59,39 @@ def pagerank_fixed_point(
     already emits every node, so ``s`` is never NULL and the key set is
     exactly the node set — values identical, one join fewer per
     iteration (optimization round 12, guide §2.4)."""
+    return _fixed_point(edges, n_iter, None, input_from_symmetrize)
+
+
+def ppr_fixed_point(
+    edges: DataFrame, n_iter: int = 5, n_seeds: int = 3
+) -> DataFrame:
+    """(node, rank_fp): PERSONALIZED PageRank — restart mass goes to a
+    SEED SET instead of uniformly (TrustRank / topic-sensitive
+    PageRank, Gyöngyi et al. 2004 / Haveliwala 2002, public): ranks
+    measure proximity to the seeds, the curation primitive for
+    propagating trust from vetted documents (or suspicion from known
+    spam) through the near-duplicate graph.
+
+    Seeds are the ``n_seeds`` smallest node ids (deterministic,
+    scale-free); each seed carries restart mass RANK_SCALE (a constant
+    factor vs the normalized 1/|S| convention — rankings identical,
+    arithmetic stays all-bigint).  The oracle unrolls identical CTEs
+    with a CASE base term."""
+    return _fixed_point(edges, n_iter, n_seeds, False)
+
+
+def _fixed_point(
+    edges: DataFrame,
+    n_iter: int,
+    n_seeds: int | None,
+    input_from_symmetrize: bool,
+) -> DataFrame:
+    """The one PageRank loop.  r0 = RANK_SCALE on seeds, 0 elsewhere;
+    each iteration adds BASE_FP restart only on seeds.  ``n_seeds`` is
+    None when every node is a seed, which is uniform PageRank: the
+    seed flag is then the literal 1 and needs no per-node column."""
+    from lab3_spark.functions.partitioning import free_checkpoint, scoped
+
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # degree rides with the edge list from the start: one narrow join
     # now instead of a second join every iteration.  The edge table is
@@ -66,33 +100,38 @@ def pagerank_fixed_point(
     # the cached partitioning means only the node-scale rank table
     # moves per iteration — without it the edge table (the heavy side
     # at 100 TB) re-shuffles n_iter times.
-    from lab3_spark.functions.partitioning import free_checkpoint, scoped
-
     par = edges.sparkSession.sparkContext.defaultParallelism
-    edeg = (
+    edeg = scoped(
         edges.join(deg, "src")
         .select("src", "dst", "deg")
-        .repartition(par, "src")
+        .repartition(par, "src"),
     )
-    edeg = scoped(edeg)
-
     if input_from_symmetrize:
-        nodes = None
-        ranks = edeg.select(F.col("src").alias("node")).distinct().withColumn(
-            "rank_fp", F.lit(RANK_SCALE).cast("bigint")
-        )
+        nodes = edeg.select(F.col("src").alias("node")).distinct()
     else:
-        nodes = scoped(
-            edges.select(F.col("src").alias("node")).distinct(),
+        nodes = scoped(edges.select(F.col("src").alias("node")).distinct())
+    if n_seeds is None:
+        seed = F.lit(1)
+    else:
+        seeds = nodes.orderBy("node").limit(n_seeds).select(
+            "node", F.lit(1).alias("is_seed")
         )
-        ranks = nodes.withColumn("rank_fp", F.lit(RANK_SCALE).cast("bigint"))
+        nodes = scoped(
+            nodes.join(F.broadcast(seeds), "node", "left").select(
+                "node", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
+            ),
+        )
+        seed = F.col("is_seed")
     damp = (
-        F.lit(BASE_FP)
+        seed * F.lit(BASE_FP)
         + F.expr(
             f"({DAMPING_NUM} * coalesce(s, CAST(0 AS BIGINT)))"
             f" div {DAMPING_DEN}"
         )
     ).cast("bigint")
+    ranks = nodes.select(
+        "node", (seed * F.lit(RANK_SCALE)).cast("bigint").alias("rank_fp")
+    )
     prev_trunc = None
     for it in range(n_iter):
         summed = (
@@ -127,86 +166,6 @@ def pagerank_fixed_point(
             prev_trunc = ranks
     # the final checkpoint outlives this call (the caller reads it)
     # until the caller's scope exits
-    final = ranks.localCheckpoint(eager=True)
-    if prev_trunc is not None:
-        free_checkpoint(prev_trunc)
-    return scoped(final)
-
-
-def ppr_fixed_point(
-    edges: DataFrame, n_iter: int = 5, n_seeds: int = 3
-) -> DataFrame:
-    """(node, rank_fp): PERSONALIZED PageRank — restart mass goes to a
-    SEED SET instead of uniformly (TrustRank / topic-sensitive
-    PageRank, Gyöngyi et al. 2004 / Haveliwala 2002, public): ranks
-    measure proximity to the seeds, the curation primitive for
-    propagating trust from vetted documents (or suspicion from known
-    spam) through the near-duplicate graph.
-
-    Seeds are the ``n_seeds`` smallest node ids (deterministic,
-    scale-free); each seed carries restart mass RANK_SCALE (a constant
-    factor vs the normalized 1/|S| convention — rankings identical,
-    arithmetic stays all-bigint).  r0 = RANK_SCALE on seeds, 0
-    elsewhere; each iteration adds BASE_FP restart only on seeds.
-    Same per-iteration shape and bounded checkpointing as
-    `pagerank_fixed_point`; the oracle unrolls identical CTEs with a
-    CASE base term."""
-    from lab3_spark.functions.partitioning import free_checkpoint, scoped
-
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    # hash-partition by src once before caching — the per-iteration
-    # join then moves only the node-scale rank table (guide §2.4)
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    edeg = scoped(
-        edges.join(deg, "src")
-        .select("src", "dst", "deg")
-        .repartition(par, "src"),
-    )
-    seeds = nodes.orderBy("node").limit(n_seeds).select(
-        "node", F.lit(1).alias("is_seed")
-    )
-    nflag = scoped(
-        nodes.join(F.broadcast(seeds), "node", "left").select(
-            "node", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
-        ),
-    )
-    base = (F.col("is_seed") * F.lit(BASE_FP)).cast("bigint")
-    ranks = nflag.select(
-        "node",
-        (F.col("is_seed") * F.lit(RANK_SCALE)).cast("bigint").alias("rank_fp"),
-    )
-    prev_trunc = None
-    for it in range(n_iter):
-        summed = (
-            edeg.join(ranks, edeg.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp div deg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nflag.join(summed, "node", "left").select(
-            "node",
-            (
-                base
-                + F.expr(
-                    f"({DAMPING_NUM} * coalesce(s, CAST(0 AS BIGINT)))"
-                    f" div {DAMPING_DEN}"
-                )
-            )
-            .cast("bigint")
-            .alias("rank_fp"),
-        )
-        # purely lazy loop; one eager checkpoint at the end (see
-        # pagerank_fixed_point) — periodic truncation for long horizons,
-        # each freeing its predecessor (ADVICE r12)
-        if n_iter > 8 and (it + 1) % 8 == 0 and (it + 1) < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev_trunc is not None:
-                free_checkpoint(prev_trunc)
-            prev_trunc = ranks
     final = ranks.localCheckpoint(eager=True)
     if prev_trunc is not None:
         free_checkpoint(prev_trunc)

@@ -29,10 +29,13 @@ differ past 4 decimals and undercount.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lab3_spark.functions.partitioning import one_window_partition
+from lab3_spark.functions.rounding import cents
 
 
 def _canon(col: Column, dtype: str) -> Column:
@@ -245,7 +248,6 @@ def poisson_bootstrap_ci(
     from lab3_spark.functions.text import md5_long
 
     P = 2147483647  # 2^31 - 1
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint")
     blits = F.array(*[F.lit(b) for b in range(n_boot)])
     x = (F.col("h") + F.col("b") * F.lit(2654435761)) % P + 1
     x2 = (x * x) % P
@@ -256,7 +258,7 @@ def poisson_bootstrap_ci(
         w = F.when(u < _POISSON1_CDF_FP[lvl], F.lit(lvl)).otherwise(w)
     weighted = (
         df.select(
-            cents.alias("y"),
+            cents(value_col).alias("y"),
             md5_long(F.col(key_col).cast("string"), salt="boot").alias("h"),
         )
         .select("y", "h", F.explode(blits).alias("b"))
@@ -300,215 +302,60 @@ def poisson_bootstrap_ci(
 
 def winsorized_stats(
     df: DataFrame,
-    value_col: str = "o_totalprice",
-    key_col: str = "o_orderkey",
+    value: Column,
+    key_col: str,
     tail_pct: int = 1,
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """One row (n, p_lo_cents, p_hi_cents, mean_cents,
-    winsorized_mean_cents): the mean before and after winsorizing the
-    distribution's tails — clip every value below the p1 (above the
-    p99) RANK cutoff to the cutoff value, then re-average.  The robust
-    location estimate that, unlike trimming, keeps n constant.
+    """(keys..., n, p_lo, p_hi, mean_v, winsorized_mean_v), one row per
+    ``keys`` group (one row with no keys): the mean before and after
+    winsorizing the distribution's tails — clip every value below the
+    p1 (above the p99) RANK cutoff to the cutoff value, then
+    re-average.  The robust location estimate that, unlike trimming,
+    keeps n constant.
 
-    Rank-based cutoffs (k = max(1, n·tail_pct DIV 100); p_lo = the
-    k-th smallest value, p_hi = the k-th largest) make the whole
-    statistic integer-exact and engine-portable — no percentile
-    interpolation to disagree on.  The global rank is the DISTRIBUTED
-    range-partitioned row number (operators/rank.py) — no single-
-    partition window on the data-scale frame; the two cutoffs travel
-    back as a broadcast 1-row frame and the clip + mean is one
-    combinable agg."""
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_global_row_number,
-    )
-
-    cents = (
-        F.floor(F.col(value_col) * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("y")
-    )
-    vals = df.select(cents, F.col(key_col).alias("k"))
-    ranked = drop_rank_internals(
-        with_global_row_number(
-            vals, ["y", "k"], out_col="rn",
-        )
-    )
+    ``value`` must be an exact integer expression (the caller fixes the
+    point, e.g. cents).  Rank-based cutoffs (k = max(1, n·tail_pct DIV
+    100) per group; p_lo = the k-th smallest value, p_hi = the k-th
+    largest) make the whole statistic integer-exact and
+    engine-portable — no percentile interpolation to disagree on.  The
+    rank is the distributed keyed row number (operators/rank.py): one
+    ranged shuffle ordered by (keys, value, key_col), offsets broadcast
+    back — the data never crosses a single-partition or per-group
+    window, so a skewed group cannot stall an executor.  The cutoffs
+    travel back as a #groups-row broadcast frame and the clip + mean
+    is one combinable agg."""
     from lab3_spark.functions.partitioning import scoped
+    from lab3_spark.operators.rank import total_rows_col, with_row_number
 
-    ranked = scoped(ranked)
-    n_row = ranked.agg(F.count(F.lit(1)).alias("n"))
-    cuts = (
-        ranked.crossJoin(F.broadcast(n_row))
-        .where(
-            (
-                F.col("rn")
-                == F.greatest(
-                    F.lit(1), F.expr(f"n * {tail_pct} DIV 100")
-                )
-            )
-            | (
-                F.col("rn")
-                == F.col("n")
-                - F.greatest(F.lit(1), F.expr(f"n * {tail_pct} DIV 100"))
-                + 1
-            )
-        )
-        .agg(
-            F.min("y").alias("p_lo"),
-            F.max("y").alias("p_hi"),
-        )
-    )
-    return (
-        ranked.crossJoin(F.broadcast(cuts))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.first("p_lo").alias("p_lo_cents"),
-            F.first("p_hi").alias("p_hi_cents"),
-            F.sum("y").alias("sy"),
-            F.sum(
-                F.greatest(F.col("p_lo"), F.least(F.col("p_hi"), F.col("y")))
-            ).alias("sw"),
-        )
-        .select(
-            F.col("n").cast("bigint").alias("n"),
-            F.col("p_lo_cents").cast("bigint").alias("p_lo_cents"),
-            F.col("p_hi_cents").cast("bigint").alias("p_hi_cents"),
-            F.expr("CAST(sy DIV n AS BIGINT)").alias("mean_cents"),
-            F.expr("CAST(sw DIV n AS BIGINT)").alias(
-                "winsorized_mean_cents"
-            ),
-        )
-    )
-
-
-def mannwhitney_u(
-    df: DataFrame,
-    value_col: str = "o_totalprice",
-    group_expr: str = "o_orderpriority = '1-URGENT'",
-) -> DataFrame:
-    """One row (n1, n2, u1_x2, u2_x2, auc_fp): Mann-Whitney U between
-    the rows matching ``group_expr`` (group 1) and the rest — the
-    rank-based two-sample location test that, unlike the t-test,
-    needs no normality and is EXACT under ties.  auc_fp is the
-    common-language effect size U1/(n1·n2) — equivalently
-    P(X1 > X2) + ½P(X1 = X2), the probability a random group-1 value
-    beats a random group-2 value.
-
-    Everything integer: from the VALUE HISTOGRAM (one groupBy to the
-    distinct-value frame), the tie-averaged rank sum is
-    2·R1 = Σ_v n1(v)·(2·cum_below(v) + cnt(v) + 1) — kept ×2 so
-    average ranks at ties (k+½ shapes) never materialize a float;
-    U1×2 = 2R1 − n1(n1+1).  Distinct values ≈ rows here (continuous
-    prices), so the cumulative count uses the DISTRIBUTED global
-    running sum (operators/rank.py), never a single-partition window
-    on the data-scale histogram."""
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_global_running_sum,
-    )
-
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint")
-    hist = (
-        df.select(
-            cents.alias("y"),
-            F.when(F.expr(group_expr), 1).otherwise(0).alias("g1"),
-        )
-        .groupBy("y")
-        .agg(
-            F.sum("g1").cast("bigint").alias("n1v"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-    )
-    cum = drop_rank_internals(
-        with_global_running_sum(
-            hist, ["y"], "cnt", out_col="cum_incl",
-        )
-    )
-    agg = cum.agg(
-        F.sum("n1v").alias("n1"),
-        F.sum(F.col("cnt") - F.col("n1v")).alias("n2"),
-        F.sum(
-            F.col("n1v")
-            * (
-                2 * (F.col("cum_incl") - F.col("cnt"))
-                + F.col("cnt")
-                + 1
-            )
-        ).alias("r1_x2"),
-    )
-    u1_x2 = F.col("r1_x2") - F.col("n1") * (F.col("n1") + 1)
-    # an empty group makes U undefined — emit NULL, not a zero-division
-    auc = F.when(
-        (F.col("n1") > 0) & (F.col("n2") > 0),
-        F.expr(
-            "CAST((r1_x2 - n1 * (n1 + 1)) * 1000000"
-            " DIV (2 * n1 * n2) AS BIGINT)"
-        ),
-    )
-    return agg.select(
-        F.col("n1").cast("bigint").alias("n1"),
-        F.col("n2").cast("bigint").alias("n2"),
-        u1_x2.cast("bigint").alias("u1_x2"),
-        (2 * F.col("n1") * F.col("n2") - u1_x2)
-        .cast("bigint")
-        .alias("u2_x2"),
-        auc.alias("auc_fp"),
-    )
-
-
-def grouped_winsorized_stats(
-    df: DataFrame,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-    key_col: str = "doc_id",
-    tail_pct: int = 1,
-    scale_cents: bool = False,
-) -> DataFrame:
-    """Per-GROUP winsorized means — :func:`winsorized_stats` lifted
-    from a corpus-global scalar to one row per group (VERDICT r7
-    item 3): (grp, n, p_lo, p_hi, mean_v, winsorized_mean_v), ordered
-    by grp.
-
-    Same integer-exact rank-cutoff recipe (k = max(1, n_g·tail_pct
-    DIV 100) per group), but the rank is the GROUPED distributed row
-    number (operators/rank.py with_grouped_row_number): one ranged
-    shuffle ordered by (group, value, key), per-group offsets
-    broadcast back — the data never crosses a per-group
-    single-partition window, so a skewed group cannot stall an
-    executor.  Cutoffs come back as a #groups-row broadcast frame."""
-    from lab3_spark.functions.partitioning import scoped
-    from lab3_spark.operators.rank import (
-        group_rows_col,
-        with_grouped_row_number,
-    )
-
-    y = (
-        F.floor(F.col(value_col) * 100 + F.lit(0.5))
-        if scale_cents
-        else F.col(value_col)
-    ).cast("bigint")
+    keys = list(keys)
     vals = df.select(
-        F.col(group_col).alias("grp"), y.alias("y"), F.col(key_col).alias("k")
+        *keys, value.cast("bigint").alias("y"), F.col(key_col).alias("k")
     )
     ranked = scoped(
-        with_grouped_row_number(
-            vals, ["grp"], ["y", "k"], out_col="rn",
-        ).withColumn("gn", group_rows_col()),
+        with_row_number(vals, ["y", "k"], out_col="rn", keys=keys).withColumn(
+            "gn", total_rows_col()
+        ),
     )
     kcut = F.greatest(F.lit(1), F.expr(f"gn * {tail_pct} DIV 100"))
     hi_rn = F.col("gn") - kcut + 1
     cuts = (
         ranked.where((F.col("rn") == kcut) | (F.col("rn") == hi_rn))
-        .groupBy("grp")
+        .groupBy(*keys)
         .agg(
             F.min(F.when(F.col("rn") == kcut, F.col("y"))).alias("p_lo"),
             F.max(F.when(F.col("rn") == hi_rn, F.col("y"))).alias("p_hi"),
         )
     )
+    # an equi-join needs a key: the global case's one cutoffs row
+    # cross-joins instead
+    joined = (
+        ranked.join(F.broadcast(cuts), keys)
+        if keys
+        else ranked.crossJoin(F.broadcast(cuts))
+    )
     return (
-        ranked.join(F.broadcast(cuts), "grp")
-        .groupBy("grp")
+        joined.groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.first("p_lo").alias("p_lo"),
@@ -519,55 +366,57 @@ def grouped_winsorized_stats(
             ).alias("sw"),
         )
         .select(
-            "grp",
+            *keys,
             F.col("n").cast("bigint").alias("n"),
             F.col("p_lo").cast("bigint").alias("p_lo"),
             F.col("p_hi").cast("bigint").alias("p_hi"),
             F.expr("CAST(sy DIV n AS BIGINT)").alias("mean_v"),
             F.expr("CAST(sw DIV n AS BIGINT)").alias("winsorized_mean_v"),
         )
-        .orderBy("grp")
     )
 
 
-def grouped_mannwhitney_u(
+def mannwhitney_u(
     df: DataFrame,
-    group_col: str = "o_orderstatus",
-    value_col: str = "o_totalprice",
-    group_expr: str = "o_orderpriority = '1-URGENT'",
+    value: Column,
+    group_expr: str,
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-GROUP Mann-Whitney U — :func:`mannwhitney_u` lifted to one
-    row per group (grp, n1, n2, u1_x2, u2_x2, auc_fp), ordered by grp.
-    Same exact-integer tie-averaged recipe from the per-group value
-    histogram; the cumulative count is the GROUPED distributed prefix
-    sum (operators/rank.py with_grouped_running_sum) — one ranged
-    shuffle ordered by (group, value), per-group starting totals
-    broadcast back, never a per-group single-partition window.  Empty
-    side within a group → NULL auc_fp (the corpus-global contract)."""
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_grouped_running_sum,
-    )
+    """(keys..., n1, n2, u1_x2, u2_x2, auc_fp), one row per ``keys``
+    group (one row with no keys): Mann-Whitney U between the rows
+    matching ``group_expr`` (sample 1) and the rest — the rank-based
+    two-sample location test that, unlike the t-test, needs no
+    normality and is EXACT under ties.  auc_fp is the common-language
+    effect size U1/(n1·n2) — equivalently P(X1 > X2) + ½P(X1 = X2),
+    the probability a random sample-1 value beats a random sample-2
+    value.
 
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint")
+    Everything integer (``value`` must be an exact integer
+    expression): from the per-(group, value) HISTOGRAM, the
+    tie-averaged rank sum is 2·R1 = Σ_v n1(v)·(2·cum_below(v) + cnt(v)
+    + 1) — kept ×2 so average ranks at ties (k+½ shapes) never
+    materialize a float; U1×2 = 2R1 − n1(n1+1).  Distinct values ≈
+    rows for continuous prices, so the cumulative count is the
+    DISTRIBUTED keyed running sum (operators/rank.py), never a
+    single-partition or per-group window on the data-scale histogram.
+    An empty sample makes U undefined → NULL auc_fp."""
+    from lab3_spark.operators.rank import with_running_sum
+
+    keys = list(keys)
     hist = (
         df.select(
-            F.col(group_col).alias("grp"),
-            cents.alias("y"),
+            *keys,
+            value.cast("bigint").alias("y"),
             F.when(F.expr(group_expr), 1).otherwise(0).alias("g1"),
         )
-        .groupBy("grp", "y")
+        .groupBy(*keys, "y")
         .agg(
             F.sum("g1").cast("bigint").alias("n1v"),
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
         )
     )
-    cum = drop_rank_internals(
-        with_grouped_running_sum(
-            hist, ["grp"], ["y"], "cnt", out_col="cum_incl",
-        )
-    )
-    agg = cum.groupBy("grp").agg(
+    cum = with_running_sum(hist, ["y"], "cnt", out_col="cum_incl", keys=keys)
+    agg = cum.groupBy(*keys).agg(
         F.sum("n1v").alias("n1"),
         F.sum(F.col("cnt") - F.col("n1v")).alias("n2"),
         F.sum(
@@ -584,64 +433,67 @@ def grouped_mannwhitney_u(
         ),
     )
     return agg.select(
-        "grp",
+        *keys,
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
         u1_x2.cast("bigint").alias("u1_x2"),
         (2 * F.col("n1") * F.col("n2") - u1_x2).cast("bigint").alias("u2_x2"),
         auc.alias("auc_fp"),
-    ).orderBy("grp")
+    )
 
 
 def spearman_rho(
     df: DataFrame,
-    x_col: str = "l_quantity",
-    y_col: str = "l_extendedprice",
+    x: Column,
+    y: Column,
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """One row (n, rho_fp): Spearman rank correlation between two
-    numeric columns — Pearson over tie-averaged ranks, exact until the
-    final division.  rho_fp = floor(rho·10⁶).
+    """(keys..., n, rho_fp), one row per ``keys`` group (one row with
+    no keys): Spearman rank correlation between two numeric columns —
+    Pearson over tie-averaged ranks, exact until the final division.
+    rho_fp = floor(rho·10⁶).  ``x``/``y`` must be exact integer
+    expressions (the caller fixes the point).
 
     Ranks stay INTEGER via the ×2 trick (2·rank = 2·cum_below + cnt
-    + 1 from each column's value histogram — the mannwhitney_u
-    machinery; the uniform ×2 cancels in the correlation).  Each
-    histogram's cumulative count is the DISTRIBUTED prefix sum
-    (operators/rank.py); rank columns join back to the fact rows as
-    value→rank lookup tables (co-partitioned equi-joins on the value —
-    two data-scale shuffles, the irreducible cost of a joint rank
-    statistic).  Moment sums accumulate in decimal(38,0) — exact to
-    n ≈ 1.3·10⁹ rows (num ≈ 4n⁴ < 10³⁸; DuckDB's HUGEINT has the
-    same bound); the final rho is ONE double expression evaluated
-    identically in both engines (docs/SCALE.md).  Degenerate (constant)
-    column → NULL rho_fp."""
+    + 1 from each column's per-(group, value) histogram — the
+    mannwhitney_u machinery; the uniform ×2 cancels in the
+    correlation).  Each histogram's cumulative count is the
+    DISTRIBUTED keyed prefix sum (operators/rank.py); rank columns join
+    back to the fact rows as (group, value)→rank lookup tables
+    (co-partitioned equi-joins — two data-scale shuffles, the
+    irreducible cost of a joint rank statistic).  Moment sums
+    accumulate in decimal(38,0) — exact to n ≈ 1.3·10⁹ rows per group
+    (num ≈ 4n⁴ < 10³⁸; DuckDB's HUGEINT has the same bound); the final
+    rho is ONE double expression evaluated identically in both engines
+    (docs/SCALE.md).  Degenerate (constant) column within a group →
+    NULL rho_fp."""
     from lab3_spark.functions.partitioning import scoped
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_global_running_sum,
+    from lab3_spark.operators.rank import with_running_sum
+
+    keys = list(keys)
+    vals = scoped(
+        df.select(*keys, x.cast("bigint").alias("x"), y.cast("bigint").alias("y"))
     )
 
-    xfp = F.floor(F.col(x_col) * 100 + F.lit(0.5)).cast("bigint")
-    yfp = F.floor(F.col(y_col) * 100 + F.lit(0.5)).cast("bigint")
-    vals = scoped(df.select(xfp.alias("x"), yfp.alias("y")))
-
     def rank_table(col: str) -> DataFrame:
-        hist = vals.groupBy(col).agg(
+        hist = vals.groupBy(*keys, col).agg(
             F.count(F.lit(1)).cast("bigint").alias("_c")
         )
-        cum = drop_rank_internals(
-            with_global_running_sum(hist, [col], "_c", out_col="_cum")
-        )
+        cum = with_running_sum(hist, [col], "_c", out_col="_cum", keys=keys)
         # 2·(tie-averaged rank) = 2·cum_below + cnt + 1
         return cum.select(
+            *keys,
             col,
             (2 * (F.col("_cum") - F.col("_c")) + F.col("_c") + 1).alias(
                 f"r{col}"
             ),
         )
 
-    ranked = vals.join(rank_table("x"), "x").join(rank_table("y"), "y")
+    ranked = vals.join(rank_table("x"), [*keys, "x"]).join(
+        rank_table("y"), [*keys, "y"]
+    )
     d38 = "decimal(38,0)"
-    agg = ranked.agg(
+    agg = ranked.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("rx").cast(d38)).alias("sx"),
         F.sum(F.col("ry").cast(d38)).alias("sy"),
@@ -658,80 +510,7 @@ def spearman_rho(
         " * CAST(n * syy - sy * sy AS DOUBLE))) AS BIGINT)"
         " ELSE NULL END"
     )
-    return agg.select("n", rho_fp.alias("rho_fp"))
-
-
-def grouped_spearman_rho(
-    df: DataFrame,
-    group_col: str,
-    x: Column,
-    y: Column,
-) -> DataFrame:
-    """Per-GROUP Spearman — :func:`spearman_rho` lifted to one row per
-    group (grp, n, rho_fp), ordered by grp.
-
-    Ranks are per-group tie-averaged ×2 integers (2·rank = 2·cum_below
-    + cnt + 1) from each column's per-(group, value) histogram; the
-    cumulative count is the GROUPED distributed prefix sum
-    (operators/rank.py with_grouped_running_sum) — one ranged shuffle
-    ordered by (group, value), per-group starting totals broadcast
-    back, never a per-group single-partition window, so a skewed group
-    cannot stall an executor.  Rank tables join back to the fact rows
-    as (group, value)→rank lookups; per-group moment sums accumulate
-    in decimal(38,0) (exact to n ≈ 1.3·10⁹ rows per group, the scalar
-    bound); the final rho is the SAME single double expression as the
-    scalar operator, mirrored in the oracle.  Degenerate (constant)
-    column within a group → NULL rho_fp.  ``x``/``y`` must already be
-    exact integer expressions (the caller fixes the point)."""
-    from lab3_spark.functions.partitioning import scoped
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_grouped_running_sum,
-    )
-
-    vals = scoped(
-        df.select(
-            F.col(group_col).alias("grp"),
-            x.cast("bigint").alias("x"),
-            y.cast("bigint").alias("y"),
-        ),
-    )
-
-    def rank_table(col: str) -> DataFrame:
-        hist = vals.groupBy("grp", col).agg(
-            F.count(F.lit(1)).cast("bigint").alias("_c")
-        )
-        cum = drop_rank_internals(
-            with_grouped_running_sum(hist, ["grp"], [col], "_c", out_col="_cum")
-        )
-        return cum.select(
-            "grp",
-            col,
-            (2 * (F.col("_cum") - F.col("_c")) + F.col("_c") + 1).alias(
-                f"r{col}"
-            ),
-        )
-
-    ranked = vals.join(rank_table("x"), ["grp", "x"]).join(
-        rank_table("y"), ["grp", "y"]
-    )
-    d38 = "decimal(38,0)"
-    agg = ranked.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("rx").cast(d38)).alias("sx"),
-        F.sum(F.col("ry").cast(d38)).alias("sy"),
-        F.sum((F.col("rx") * F.col("rx")).cast(d38)).alias("sxx"),
-        F.sum((F.col("ry") * F.col("ry")).cast(d38)).alias("syy"),
-        F.sum((F.col("rx") * F.col("ry")).cast(d38)).alias("sxy"),
-    )
-    rho_fp = F.expr(
-        "CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN"
-        " CAST(FLOOR(CAST(n * sxy - sx * sy AS DOUBLE) * 1000000 /"
-        " SQRT(CAST(n * sxx - sx * sx AS DOUBLE)"
-        " * CAST(n * syy - sy * sy AS DOUBLE))) AS BIGINT)"
-        " ELSE NULL END"
-    )
-    return agg.select("grp", "n", rho_fp.alias("rho_fp")).orderBy("grp")
+    return agg.select(*keys, "n", rho_fp.alias("rho_fp"))
 
 
 def kendall_tau_b(
@@ -836,12 +615,12 @@ def paired_permutation_test(
     from lab3_spark.functions.text import md5_long
 
     P = 2147483647  # 2^31 - 1
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint")
+    cents_v = cents(value_col)
     pairs = (
         df.groupBy(key_col)
         .agg(
-            F.sum(F.when(F.expr(cond_a), cents)).alias("sa"),
-            F.sum(F.when(F.expr(cond_b), cents)).alias("sb"),
+            F.sum(F.when(F.expr(cond_a), cents_v)).alias("sa"),
+            F.sum(F.when(F.expr(cond_b), cents_v)).alias("sb"),
         )
         .where(F.col("sa").isNotNull() & F.col("sb").isNotNull())
         .select(
@@ -945,10 +724,7 @@ def source_mannwhitney_bh(
     The group count m is collected once (a 1-row metadata aggregate,
     the kmeans pattern) because the BH thresholds depend on it."""
     from lab3_spark.functions.partitioning import one_window_partition, scoped
-    from lab3_spark.operators.rank import (
-        drop_rank_internals,
-        with_global_running_sum,
-    )
+    from lab3_spark.operators.rank import with_running_sum
     from pyspark.sql.window import Window
 
     hist = scoped(
@@ -962,9 +738,7 @@ def source_mannwhitney_bh(
     tot = scoped(
         hist.groupBy("y").agg(F.sum("cnt").cast("bigint").alias("ct")),
     )
-    cum = drop_rank_internals(
-        with_global_running_sum(tot, ["y"], "ct", out_col="cumt")
-    )
+    cum = with_running_sum(tot, ["y"], "ct", out_col="cumt")
     rank2 = (2 * (F.col("cumt") - F.col("ct")) + F.col("ct") + 1).alias("r2")
     per = (
         hist.join(cum.select("y", rank2), "y")
@@ -1052,7 +826,7 @@ def grouped_bootstrap_ci(
     """(grp, n, point, ci_lo, ci_hi): the per-GROUP mean with a 95%
     Poisson-bootstrap CI — :func:`poisson_bootstrap_ci` lifted to one
     row per group, the "how sure are we about each source's average"
-    companion to grouped_winsorized_stats.
+    companion to the keyed winsorized_stats.
 
     Identical deterministic machinery (ONE md5 per row, salt 'boot';
     the (h, b) cubic-residue mix; inverse-CDF Poisson(1) weights as

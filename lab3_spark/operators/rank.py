@@ -1,4 +1,4 @@
-"""Distributed global order statistics — no single-partition window.
+"""Distributed order statistics, global or per key — no single-partition window.
 
 ``ntile / percent_rank / cume_dist OVER (ORDER BY ...)`` with no
 PARTITION BY is the classic scale trap: Spark's WindowExec moves the
@@ -14,12 +14,19 @@ the Spark-native equivalent:
    (partition i's keys all sort before partition i+1's);
    ``sortWithinPartitions`` completes the total order.
 2. per-partition local index via ``monotonically_increasing_id`` —
-   pid<<33 | row-index evaluated over the sorted iterator (the
-   sources/text.py:36-54 line-numbering trick), so no window — and
-   therefore no second Exchange — ever touches the big side.
-3. partition row-counts (a metadata-scale aggregate, one row per
-   partition) → cumulative offsets, broadcast back.
-4. global row number = local index + partition offset + 1.
+   pid<<33 | row-index evaluated over the sorted iterator, so no
+   window — and therefore no second Exchange — ever touches the big
+   side.
+3. per-(key, partition) counts (a metadata-scale aggregate) → the
+   rows of earlier partitions minus the rows of earlier keys,
+   broadcast back by a LEFT join (:func:`_with_offsets`, the one
+   offset primitive; with no keys the key is the whole frame).
+4. row number = local index + offset + 1.
+
+A keyed computation and its global case are one body: the key list
+is a parameter and an empty list is the global case.  The same
+primitive numbers a text read's lines in file order
+(:func:`with_line_numbers`, no ranged shuffle).
 
 ``ntile(k)``, ``percent_rank`` and ``cume_dist`` are then pure
 arithmetic on (rn, N) when the order key is a total order (unique per
@@ -32,9 +39,9 @@ as every ordered query in the catalog):
   rest ``floor(N/k)`` (the SQL-standard split DuckDB and Spark share).
 
 Everything is JVM-side; N arrives via a broadcast of the (tiny) offsets
-aggregate, not a driver collect.  The only unpartitioned window left
-runs over the per-partition counts — #partitions rows, metadata scale
-(same pattern as sources/text.py:36-54 line numbering).
+aggregate, not a driver collect.  The only windows without a data
+partition spec run over the per-(key, partition) aggregates —
+metadata scale.
 """
 
 from __future__ import annotations
@@ -49,6 +56,63 @@ _PID = "_gos_pid"
 _RIDX = "_gos_ridx"
 _OFF = "_gos_offset"
 _TOT = "_gos_total"
+ROW_IDX_BITS = 33  # monotonically_increasing_id layout (Spark contract)
+
+
+def _indexed(df: DataFrame) -> DataFrame:
+    """(partition id, row index within the partition) decomposed from
+    ``monotonically_increasing_id`` over each partition's current row
+    order — JVM-only, no window, no shuffle."""
+    mid = F.monotonically_increasing_id()
+    return df.withColumn(
+        _PID, F.shiftrightunsigned(mid, ROW_IDX_BITS)
+    ).withColumn(_RIDX, mid.bitwiseAND(F.lit((1 << ROW_IDX_BITS) - 1)))
+
+
+def _with_offsets(d: DataFrame, keys: Sequence[str], measure: Column) -> DataFrame:
+    """The one offset primitive.  ``d`` is ranged (or, with no keys,
+    in scan order) so that each partition follows the ones before it;
+    ``measure`` aggregates per (keys, partition) into a metadata-scale
+    frame, which is joined back onto ``d`` with
+
+    - ``_gos_offset`` = the measure over all EARLIER partitions minus
+      the measure over all EARLIER keys: added to a row's
+      within-partition prefix it gives the row's prefix within its key;
+    - ``_gos_total`` = the measure of the row's key (of the whole
+      frame with no keys).
+
+    The offsets windows run over the metadata frame only, ordered by
+    partition id or by key — none is partitioned by a data or key
+    column.  ``one_window_partition()`` gives them a non-empty,
+    non-foldable partition spec, which silences WindowExec's "No
+    Partition Defined" warning over these few rows.
+
+    The join is a broadcast LEFT join on (keys, partition id): every
+    row's (key, partition) has an offsets row, so it returns the same
+    rows as an inner join, and Catalyst drops it altogether when no
+    offsets column is used (the offsets side is unique on the join
+    keys)."""
+    from lab3_spark.functions.partitioning import one_window_partition
+
+    whole = Window.partitionBy(one_window_partition())
+    earlier = Window.unboundedPreceding
+    off = F.coalesce(
+        F.sum("_m").over(whole.orderBy(_PID).rangeBetween(earlier, -1)),
+        F.lit(0),
+    )
+    if keys:
+        by_key = whole.orderBy(*keys)
+        here = Window.currentRow
+        tot = F.sum("_m").over(by_key.rangeBetween(here, here))
+        off = off - (F.sum("_m").over(by_key.rangeBetween(earlier, here)) - tot)
+    else:
+        tot = F.sum("_m").over(whole)
+    offsets = (
+        d.groupBy(*keys, _PID)
+        .agg(measure.alias("_m"))
+        .select(*keys, _PID, off.alias(_OFF), tot.alias(_TOT))
+    )
+    return d.join(F.broadcast(offsets), [*keys, _PID], "left")
 
 
 def _ranged_frame(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
@@ -76,206 +140,103 @@ def _ranged_frame(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
     extra data-scale projection per call, the same size class as the
     ranged frame."""
     from lab3_spark.functions.partitioning import scoped
-    from lab3_spark.sources.text import ROW_IDX_BITS
 
     par = df.sparkSession.sparkContext.defaultParallelism
     df = scoped(df)
     cols = [F.col(c) for c in order_cols]
-    mid = F.monotonically_increasing_id()
-    d = (
-        df.repartitionByRange(par, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn(_PID, F.shiftrightunsigned(mid, ROW_IDX_BITS))
-        .withColumn(_RIDX, mid.bitwiseAND(F.lit((1 << ROW_IDX_BITS) - 1)))
+    return scoped(
+        _indexed(df.repartitionByRange(par, *cols).sortWithinPartitions(*cols))
     )
-    return scoped(d)
 
 
-def with_global_row_number(
+def with_row_number(
     df: DataFrame,
     order_cols: Sequence[str],
     out_col: str = "rn",
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Add a 1-based global row number following ``ORDER BY order_cols``
-    without a single-partition window.
+    """Add a 1-based row number following ``ORDER BY order_cols``
+    within each ``keys`` group (the whole frame when ``keys`` is
+    empty) — the scale-safe ``row_number() OVER (PARTITION BY keys
+    ORDER BY order_cols)``, with neither a single-partition window nor
+    a per-group one (``partitionBy(key)`` moves a whole group to one
+    partition: the skew/OOM trap when a group is data-scale).
 
-    Also leaves a ``_gos_total`` column (total row count N) for derived
-    statistics; callers drop it via :func:`drop_rank_internals`.
+    ONE ranged shuffle ordered by (keys, order) gives a global order
+    whose partitions follow each other; a row's number is its index in
+    its partition plus the rows of earlier partitions minus the rows of
+    earlier keys (:func:`_with_offsets`).  Key cardinality must be
+    metadata-scale (sources, statuses).
 
-    ``order_cols`` must be a total order (append a unique key as the
-    last column) — equal keys across a range boundary would otherwise
-    make ranks partition-placement-dependent."""
-    d = _ranged_frame(df, order_cols)
+    Also leaves a ``_gos_total`` column (the key's row count N,
+    :func:`total_rows_col`) for derived statistics; callers drop it via
+    :func:`drop_rank_internals`.
 
-    counts = d.groupBy(_PID).agg(F.count("*").alias("_n"))
-    # one_window_partition(): same single-partition placement over the
-    # ≤ defaultParallelism offset rows, but a non-empty (and
-    # non-foldable) partition spec silences the WindowExec "No
-    # Partition Defined" warning that was masking real warnings during
-    # verify runs (VERDICT r7 item 7)
-    from lab3_spark.functions.partitioning import one_window_partition
-
-    w = (
-        Window.partitionBy(one_window_partition())
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ``order_cols`` must be a total order within each key (append a
+    unique key as the last column) — equal keys across a range
+    boundary would otherwise make ranks partition-placement-dependent."""
+    keys = list(keys)
+    d = _with_offsets(
+        _ranged_frame(df, [*keys, *order_cols]), keys, F.count(F.lit(1))
     )
-    offsets = (
-        counts.withColumn(_OFF, F.coalesce(F.sum("_n").over(w), F.lit(0)))
-        .withColumn(_TOT, F.sum("_n").over(
-            Window.partitionBy(one_window_partition()).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(_PID, _OFF, _TOT)
-    )
-
-    return (
-        d.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, (F.col(_RIDX) + F.col(_OFF) + 1).cast("long"))
-        .drop(_PID, _RIDX, _OFF)
-    )
+    return d.withColumn(
+        out_col, (F.col(_RIDX) + F.col(_OFF) + 1).cast("long")
+    ).drop(_PID, _RIDX, _OFF)
 
 
-def with_global_running_sum(
+def with_running_sum(
     df: DataFrame,
     order_cols: Sequence[str],
     value_col: str,
     out_col: str = "cum",
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Global prefix sum of ``value_col`` following ``ORDER BY
-    order_cols`` — the distributed replacement for
-    ``sum(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``, which
-    Spark plans as a single-partition window (the 100 TB stall).
+    """Prefix sum of ``value_col`` following ``ORDER BY order_cols``
+    within each ``keys`` group (the whole frame when ``keys`` is
+    empty) — the distributed replacement for ``sum(v) OVER (PARTITION
+    BY keys ORDER BY ... ROWS UNBOUNDED PRECEDING)``, which Spark plans
+    as a single-partition (or whole-group) window.
 
-    Same three-step shape as :func:`with_global_row_number` (shared
-    scaffolding: :func:`_ranged_frame`): ONE ranged shuffle orders the
-    data; per-PARTITION value sums (metadata scale — one row per
-    partition) cumulate through a tiny window and broadcast back as
-    offsets; the within-partition running sum is an ordinary
-    partitioned window.  ``order_cols`` must be a total order (append a
-    unique key)."""
-    d = _ranged_frame(df, order_cols)
-
-    sums = d.groupBy(_PID).agg(F.sum(value_col).alias("_v"))
-    # see with_global_row_number — warning hygiene over the
-    # metadata-scale offsets frame, identical placement
-    from lab3_spark.functions.partitioning import one_window_partition
-
-    w = (
-        Window.partitionBy(one_window_partition())
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    Same shape as :func:`with_row_number`: ONE ranged shuffle orders
+    the data; the within-partition running sum is an ordinary window
+    partitioned by the partition id, and the value sums of earlier
+    partitions minus those of earlier keys arrive as broadcast offsets
+    (:func:`_with_offsets`).  ``order_cols`` must be a total order
+    within each key (append a unique key)."""
+    keys = list(keys)
+    d = _with_offsets(
+        _ranged_frame(df, [*keys, *order_cols]), keys, F.sum(value_col)
     )
-    offsets = sums.withColumn(
-        _OFF, F.coalesce(F.sum("_v").over(w), F.lit(0))
-    ).select(_PID, _OFF)
-
     local = Window.partitionBy(_PID).orderBy(_RIDX).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    return (
-        d.join(F.broadcast(offsets), _PID)
-        .withColumn(
-            # no cast: the sum keeps the value column's own type
-            # (bigint → bigint, double → double) — a generic prefix-sum
-            # helper must not silently floor fractional inputs
-            out_col,
-            F.sum(value_col).over(local) + F.col(_OFF),
-        )
-        .drop(_PID, _RIDX, _OFF)
-    )
+    # no cast: the sum keeps the value column's own type (bigint →
+    # bigint, double → double) — a generic prefix-sum helper must not
+    # silently floor fractional inputs
+    return d.withColumn(
+        out_col, F.sum(value_col).over(local) + F.col(_OFF)
+    ).drop(_PID, _RIDX, _OFF, _TOT)
 
 
-_GRP_N = "_gos_group_n"
-
-
-def with_grouped_row_number(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[str],
-    out_col: str = "rn",
-) -> DataFrame:
-    """Per-GROUP 1-based row number following ``ORDER BY order_cols``
-    within each group — WITHOUT a per-group window (``partitionBy(
-    group)`` moves each whole group to one partition: the skew/OOM
-    trap when a group is data-scale).
-
-    One :func:`with_global_row_number` pass ordered by (group, order)
-    gives contiguous global ranks per group; subtracting each group's
-    broadcast start offset (cumulative counts of preceding groups —
-    a #groups-row metadata frame) localizes them.  Group cardinality
-    must be metadata-scale (sources, priorities, statuses); the DATA
-    never sees a per-group single-partition window.  Also leaves a
-    ``_gos_group_n`` column (per-group row count, exposed via
-    :func:`group_rows_col`); drop with :func:`drop_rank_internals`."""
-    from lab3_spark.functions.partitioning import one_window_partition
-
-    gcols = list(group_cols)
-    d = with_global_row_number(df, [*gcols, *order_cols], out_col="_grn")
-    counts = d.groupBy(*gcols).agg(F.count("*").alias(_GRP_N))
-    w = (
-        Window.partitionBy(one_window_partition())
-        .orderBy(*gcols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.withColumn(
-        _OFF, F.coalesce(F.sum(_GRP_N).over(w), F.lit(0))
-    )
-    return (
-        d.join(F.broadcast(offs), gcols)
-        .withColumn(out_col, (F.col("_grn") - F.col(_OFF)).cast("long"))
-        .drop("_grn", _OFF)
-    )
-
-
-def with_grouped_running_sum(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[str],
-    value_col: str,
-    out_col: str = "cum",
-) -> DataFrame:
-    """Per-group prefix sum of ``value_col`` following ``ORDER BY
-    order_cols`` within each group — the grouped sibling of
-    :func:`with_global_running_sum`, same no-per-group-window design
-    as :func:`with_grouped_row_number`: one global prefix sum ordered
-    by (group, order), minus each group's broadcast starting total
-    (cumulative value sums of preceding groups, #groups rows)."""
-    from lab3_spark.functions.partitioning import one_window_partition
-
-    gcols = list(group_cols)
-    d = with_global_running_sum(
-        df, [*gcols, *order_cols], value_col, out_col="_gcum"
-    )
-    sums = d.groupBy(*gcols).agg(F.sum(value_col).alias("_gv"))
-    w = (
-        Window.partitionBy(one_window_partition())
-        .orderBy(*gcols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = sums.withColumn(
-        _OFF, F.coalesce(F.sum("_gv").over(w), F.lit(0))
-    ).drop("_gv")
-    return (
-        d.join(F.broadcast(offs), gcols)
-        .withColumn(out_col, F.col("_gcum") - F.col(_OFF))
-        .drop("_gcum", _OFF)
-    )
-
-
-def group_rows_col() -> Column:
-    """Per-group row count as a column, valid on a
-    :func:`with_grouped_row_number` result before
-    ``drop_rank_internals``."""
-    return F.col(_GRP_N)
+def with_line_numbers(df: DataFrame, out_col: str = "line_no") -> DataFrame:
+    """Add a 0-based contiguous ``out_col`` following the frame's
+    current partition/row order (a text read's file order) — the
+    per-partition index plus each partition's broadcast row offset,
+    with no shuffle of the data."""
+    d = _with_offsets(_indexed(df), [], F.count(F.lit(1)))
+    return d.withColumn(
+        out_col, (F.col(_RIDX) + F.col(_OFF)).cast("long")
+    ).drop(_PID, _RIDX, _OFF, _TOT)
 
 
 def drop_rank_internals(df: DataFrame) -> DataFrame:
-    return df.drop(_TOT).drop(_GRP_N)
+    return df.drop(_TOT)
 
 
 def total_rows_col() -> Column:
-    """N (total row count) as a column, valid on a
-    :func:`with_global_row_number` result before ``drop_rank_internals``."""
+    """N (the row's key's row count; all rows with no keys) as a
+    column, valid on a :func:`with_row_number` result before
+    ``drop_rank_internals``."""
     return F.col(_TOT)
 
 
@@ -321,7 +282,7 @@ def with_global_order_stats(
     """One-stop: global row number plus any of ntile / percent_rank /
     cume_dist, all derived from the distributed rank — the drop-in
     replacement for an unpartitioned window."""
-    d = with_global_row_number(df, order_cols, out_col=rn_col)
+    d = with_row_number(df, order_cols, out_col=rn_col)
     rn = F.col(rn_col)
     n = total_rows_col()
     if ntile is not None:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lab3_spark.functions.partitioning import one_window_partition
+from lab3_spark.functions.rounding import cents
 
 # Monetary/ratio rounding used identically in oracle SQL so value-hash
 # comparison is stable across engines' float summation orders.
@@ -317,12 +318,6 @@ def parties_per_nation(
 # Change-data-capture apply (round 6)
 # ---------------------------------------------------------------------------
 
-def _cents() -> F.Column:
-    """o_totalprice as integer cents: floor(x·100 + 0.5) on the same
-    IEEE double in every engine — exact, boundary-free."""
-    return F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-
-
 def cdc_change_log(orders: DataFrame) -> DataFrame:
     """Deterministic CDC change log derived from orders — the input
     shape of a Debezium/Delta change feed: every key gets an INSERT at
@@ -332,7 +327,7 @@ def cdc_change_log(orders: DataFrame) -> DataFrame:
     all-bigint."""
     base = orders.select(
         "o_orderkey",
-        _cents().alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
         "o_orderstatus",
     )
     inserts = base.select(
@@ -514,7 +509,7 @@ def nation_revenue_ols(
                 - 1
             ).cast("bigint").alias("x"),
         )
-        .agg(F.sum(_cents()).alias("y"))
+        .agg(F.sum(cents("o_totalprice")).alias("y"))
     )
     M = 10**6
     stats = monthly.groupBy("n_name").agg(
@@ -579,7 +574,7 @@ def price_time_skyline(orders: DataFrame) -> DataFrame:
     o = orders.select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("_day"),
-        _cents().alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
     )
     daily = o.groupBy("_day").agg(F.max("price_cents").alias("_dmax"))
     w = Window.partitionBy(one_window_partition()).orderBy("_day").rowsBetween(
@@ -622,7 +617,7 @@ def customer_rfm_segments(orders: DataFrame, q: int = 5) -> DataFrame:
     base = orders.groupBy("o_custkey").agg(
         F.max(F.col("o_orderdate").cast("date")).alias("_last"),
         F.count("*").alias("_freq"),
-        F.sum(_cents()).alias("_mon"),
+        F.sum(cents("o_totalprice")).alias("_mon"),
     ).select(
         "o_custkey",
         (-F.datediff("_last", F.lit("1970-01-01").cast("date"))).alias(
@@ -871,7 +866,7 @@ def holt_forecast(orders: DataFrame, horizon: int = 7) -> DataFrame:
     the collect_list is metadata-scale."""
     daily = (
         orders.groupBy(F.col("o_orderdate").cast("date").alias("d"))
-        .agg(F.sum(_cents()).alias("yc"))
+        .agg(F.sum(cents("o_totalprice")).alias("yc"))
         .select("d", F.col("yc").cast("double").alias("y"))
     )
     series = daily.agg(
@@ -942,7 +937,7 @@ def nation_trend_robust(
                 - 1
             ).cast("bigint").alias("x"),
         )
-        .agg(F.sum(_cents()).alias("y")),
+        .agg(F.sum(cents("o_totalprice")).alias("y")),
     )
     a = monthly.select("n_name", F.col("x").alias("xi"), F.col("y").alias("yi"))
     b = monthly.select("n_name", F.col("x").alias("xj"), F.col("y").alias("yj"))
@@ -1068,7 +1063,7 @@ def customer_revenue_lorenz(
     from lab3_spark.operators.rank import (
         ntile_from_rank,
         total_rows_col,
-        with_global_row_number,
+        with_row_number,
     )
 
     rev = orders.groupBy("o_custkey").agg(
@@ -1078,7 +1073,7 @@ def customer_revenue_lorenz(
             )
         ).alias("cents")
     )
-    d = with_global_row_number(
+    d = with_row_number(
         rev, ["cents", "o_custkey"], out_col="_rn",
     ).withColumn("_n", total_rows_col())
     d = d.withColumn(

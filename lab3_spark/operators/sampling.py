@@ -240,13 +240,13 @@ def token_budget_select(
     A document is kept iff the running token total INCLUDING it stays
     ≤ budget, walking docs by quality DESC (tie: doc_id ASC).  The
     running total is the DISTRIBUTED prefix sum
-    (rank.with_global_running_sum) — the naive ``sum() OVER (ORDER BY
+    (rank.with_running_sum) — the naive ``sum() OVER (ORDER BY
     quality)`` is a single-partition window, the 100 TB stall.  The
     quality score is truncated to the catalog's 1e-4 fixed point
     BEFORE ordering, so both engines walk the identical total order.
     """
     from lab3_spark.functions.rounding import trunc
-    from lab3_spark.operators.rank import with_global_running_sum
+    from lab3_spark.operators.rank import with_running_sum
     from lab3_spark.operators.textstats import quality_expr
 
     base = spread(documents).select(
@@ -254,7 +254,7 @@ def token_budget_select(
         trunc(quality_expr(text_col), 4).alias("quality"),
         F.size(tokenize(text_col)).cast("bigint").alias("n_tokens"),
     ).withColumn("_negq", -F.col("quality"))
-    cum = with_global_running_sum(
+    cum = with_running_sum(
         base,
         ["_negq", "doc_id"],
         "n_tokens",
@@ -643,7 +643,7 @@ def systematic_sample(
     from lab3_spark.functions.text import md5_long
     from lab3_spark.operators.rank import (
         drop_rank_internals,
-        with_global_row_number,
+        with_row_number,
     )
 
     hashed = df.select(
@@ -651,7 +651,7 @@ def systematic_sample(
         md5_long(F.col(id_col).cast("string"), salt=salt).alias("_h"),
     )
     ranked = drop_rank_internals(
-        with_global_row_number(
+        with_row_number(
             hashed, ["_h", id_col], out_col="rn",
         )
     )
@@ -774,28 +774,28 @@ def packing_fragmentation_curve(
     model).
 
     ONE corpus scan + one RANGED cumsum shuffle prices the whole
-    ladder: the 'before' offsets come from rank.with_grouped_running_sum
-    (one global ranged prefix sum + broadcast per-group starting
+    ladder: the 'before' offsets come from the keyed rank.with_running_sum
+    (one ranged prefix sum + broadcast per-(group, partition) starting
     totals) — NOT a per-group single-partition window, which would
     move a skewed source entirely onto one partition (ADVICE r8); the
     |budgets|-row ladder then explodes per document (|L|× row
     amplification of the id/offset projection only, not the text),
     then two combinable aggs.  Empty documents pack zero fragments.
     All integers; truncating division both engines."""
-    from lab3_spark.operators.rank import with_grouped_running_sum
+    from lab3_spark.operators.rank import with_running_sum
 
     n_tokens = F.size(tokenize(text_col))
     base = (
-        with_grouped_running_sum(
+        with_running_sum(
             documents.select(
                 F.col(group_col).alias("grp"),
                 F.col(id_col).alias("k"),
                 n_tokens.alias("nt"),
             ),
-            ["grp"],
             ["k"],
             "nt",
             out_col="_cum",
+            keys=["grp"],
         )
         .withColumn("before", F.col("_cum") - F.col("nt"))
         .select(

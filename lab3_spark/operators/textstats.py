@@ -13,6 +13,8 @@ partitions < parallelism — a no-op on a real cluster scan).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1449,8 +1451,8 @@ def quality_quantile_by_source(
     engines sort identical doubles."""
     from lab3_spark.operators.rank import (
         drop_rank_internals,
-        group_rows_col,
-        with_grouped_row_number,
+        total_rows_col,
+        with_row_number,
     )
 
     scored = spread(documents).select(
@@ -1460,12 +1462,12 @@ def quality_quantile_by_source(
         # raw blend; the 4-decimal floor is what the oracle sorts)
         trunc(quality_expr(text_col), RATIO).alias("quality"),
     )
-    ranked = with_grouped_row_number(
+    ranked = with_row_number(
         scored,
-        [group_col],
         ["quality", "doc_id"],
         out_col="rn",
-    ).withColumn("_gn", group_rows_col())
+        keys=[group_col],
+    ).withColumn("_gn", total_rows_col())
     return (
         drop_rank_internals(ranked)
         .select(
@@ -2056,7 +2058,7 @@ def zipf_fit(documents: DataFrame, text_col: str = "text") -> DataFrame:
     no single-partition window even at web-scale vocabularies."""
     from lab3_spark.operators.rank import (
         drop_rank_internals,
-        with_global_row_number,
+        with_row_number,
     )
 
     wc = (
@@ -2067,7 +2069,7 @@ def zipf_fit(documents: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("neg", -F.col("cnt"))
     )
     ranked = drop_rank_internals(
-        with_global_row_number(wc, ["neg", "term"], out_col="rank")
+        with_row_number(wc, ["neg", "term"], out_col="rank")
     )
     xf = F.floor(F.log(F.col("rank").cast("double")) * ZIPF_LOG_FP).cast("bigint")
     yf = F.floor(F.log(F.col("cnt").cast("double")) * ZIPF_LOG_FP).cast("bigint")
@@ -2258,21 +2260,29 @@ def bpe_merge_candidates(
 
 
 def bpe_merges(
-    documents: DataFrame, text_col: str = "text", k: int = 8
+    documents: DataFrame,
+    text_col: str = "text",
+    k: int = 8,
+    keys: Sequence[str] = (),
 ) -> DataFrame:
-    """(it, pair, cnt): the merge chosen at each of ``k`` BPE rounds
-    (Sennrich et al. 2016) — ``pair`` is the space-separated symbol
-    pair ("t h", then later e.g. "th e") and ``cnt`` its corpus
-    frequency at selection time, weighted by word occurrence counts.
-    Iterates the full algorithm, not just the first round that
-    :func:`bpe_merge_candidates` seeds.
+    """(keys..., it, pair, cnt): the merge chosen at each of ``k`` BPE
+    rounds (Sennrich et al. 2016), learned separately per ``keys``
+    group (once over the corpus with no keys) — ``pair`` is the
+    space-separated symbol pair ("t h", then later e.g. "th e") and
+    ``cnt`` its frequency at selection time, weighted by word
+    occurrence counts.  Iterates the full algorithm, not just the
+    first round that :func:`bpe_merge_candidates` seeds.  Keyed by
+    source it is the per-domain vocabulary-induction view: two sources
+    whose first merges diverge tokenize differently enough that a
+    shared vocabulary taxes one of them.
 
     Scale design: the corpus folds ONCE to the vocabulary-scale
-    (word, wcnt) type table; every round's pair count and merge apply
-    run over word TYPES — metadata-scale regardless of corpus size,
-    the same argument as :func:`bpe_merge_candidates`.  Per round: one
-    groupBy over the type table plus a 1-ROW driver collect of the
-    argmax pair (the kmeans-centroid pattern — bounded, documented).
+    (keys, word, wcnt) type table; every round's pair count, argmax
+    and merge apply run over word TYPES — metadata-scale regardless of
+    corpus size, the same argument as :func:`bpe_merge_candidates`.
+    Per round: one groupBy over the type table plus a #groups-row
+    driver collect of the argmax pairs (the kmeans-centroid pattern —
+    bounded, documented).
 
     Segmentations are strings of WRAPPED symbols — ``|a||b||c|``, each
     symbol carrying its own leading AND trailing delimiter ('|' cannot
@@ -2285,45 +2295,50 @@ def bpe_merges(
     Identical `replace` semantics in Spark and DuckDB — the oracle
     runs the same algorithm.  Pinned against a pure-Python greedy
     reference in tests, pathological same-char runs included.  Each
-    round's frame is persisted under a per-iteration key (the
-    components.py discipline), so the next round's pair count and
-    merge read it without re-running the earlier rounds.
+    round's frame is cached, so the next round's pair count and merge
+    read it without re-running the earlier rounds.
 
     Ties break (cnt DESC, pair ASC) — deterministic, mirrored in the
-    oracle.  Stops early if no pair remains (every word fully merged).
+    oracle.  A group whose words are fully merged stops contributing
+    rows; the loop stops when no group has a pair left.
     """
-    rows, _ = _bpe_loop(documents, text_col, k)
+    keys = list(keys)
+    rows, _ = _bpe_loop(documents, text_col, k, keys)
+    fields = [f"`{c}` {documents.schema[c].dataType.simpleString()}" for c in keys]
     return documents.sparkSession.createDataFrame(
-        rows, "it bigint, pair string, cnt bigint"
+        rows, ", ".join([*fields, "it bigint, pair string, cnt bigint"])
     )
 
 
 def _bpe_loop(
-    documents: DataFrame, text_col: str, k: int
-) -> tuple[list[tuple[int, str, int]], DataFrame]:
-    """The shared BPE engine behind :func:`bpe_merges` and
-    :func:`bpe_apply_compression`: returns (chosen merges, the FINAL
-    (wcnt, seg) segmentation frame after all of them applied)."""
+    documents: DataFrame, text_col: str, k: int, keys: list[str]
+) -> tuple[list[tuple], DataFrame]:
+    """The one BPE loop behind :func:`bpe_merges` and
+    :func:`bpe_apply_compression`: returns (chosen merges as (keys...,
+    it, pair, cnt) tuples in (keys, it) order, the FINAL (keys, wcnt,
+    seg) segmentation frame after all of them applied)."""
     from lab3_spark.functions.partitioning import scoped
 
     words = (
         spread(documents)
-        .select(F.explode(tokenize(text_col)).alias("word"))
-        .groupBy("word")
+        .select(*keys, F.explode(tokenize(text_col)).alias("word"))
+        .groupBy(*keys, "word")
         .agg(F.count(F.lit(1)).alias("wcnt"))
         .where(F.length("word") >= 2)
     )
     seg = words.select(
+        *keys,
         "wcnt",
         F.concat(
             F.lit("|"), F.array_join(F.split("word", ""), "||"), F.lit("|")
         ).alias("seg"),
     )
-    rows: list[tuple[int, str, int]] = []
+    rows: list[tuple] = []
     for it in range(1, k + 1):
         seg = scoped(seg)
         pairs = (
             seg.select(
+                *keys,
                 "wcnt",
                 F.split(F.expr("trim(BOTH '|' FROM seg)"), "\\|\\|").alias(
                     "syms"
@@ -2331,6 +2346,7 @@ def _bpe_loop(
             )
             .where(F.size("syms") >= 2)
             .select(
+                *keys,
                 "wcnt",
                 F.explode(
                     F.expr(
@@ -2339,36 +2355,42 @@ def _bpe_loop(
                     )
                 ).alias("pair"),
             )
-            .groupBy("pair")
+            .groupBy(*keys, "pair")
             .agg(F.sum("wcnt").cast("bigint").alias("cnt"))
         )
-        # 1-row argmax collect per round — metadata-scale by design
-        best = pairs.orderBy(F.desc("cnt"), F.asc("pair")).limit(1).collect()
+        # #groups-row argmax collect per round — metadata-scale
+        best = _pair_argmax(pairs, keys).collect()
         if not best:
             break
-        pair, cnt = best[0]["pair"], int(best[0]["cnt"])
-        rows.append((it, pair, cnt))
-        a, b = pair.split(" ")
-        seg = seg.select(
-            "wcnt",
-            F.replace(
-                F.col("seg"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
-            ).alias("seg"),
-        )
-    return rows, seg
+        merged = F.col("seg")
+        for r in best:
+            rows.append((*(r[c] for c in keys), it, r["pair"], int(r["cnt"])))
+            a, b = r["pair"].split(" ")
+            hit = F.lit(True)
+            for c in keys:
+                hit = hit & (F.col(c) == r[c])
+            merged = F.when(
+                hit,
+                F.replace(
+                    F.col("seg"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
+                ),
+            ).otherwise(merged)
+        seg = seg.select(*keys, "wcnt", merged.alias("seg"))
+    return sorted(rows, key=lambda r: r[: len(keys) + 1]), seg
 
 
-def _grouped_pair_argmax(pairs: DataFrame) -> DataFrame:
-    """(source, pair, cnt): per-source best merge pair — max cnt, ties
-    to the lexicographically smallest pair — as a single COMBINABLE
-    ``min_by`` aggregate over the (source, pair, cnt) frame.  The
-    struct ordering (-cnt, pair) encodes (cnt DESC, pair ASC) so one
-    declarative agg replaces the row_number window; min_by partials
-    combine map-side, so a hot source collapses to one row per input
-    partition before the shuffle (the skew property the window
-    lacked).  Plan-pinned window-free by tests/test_round12_plans."""
+def _pair_argmax(pairs: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., pair, cnt): each group's best merge pair — max cnt,
+    ties to the lexicographically smallest pair — as a single
+    COMBINABLE ``min_by`` aggregate over the (keys, pair, cnt) frame;
+    groups with no pair left give no row.  The struct ordering (-cnt,
+    pair) encodes (cnt DESC, pair ASC) so one declarative agg replaces
+    a row_number window; min_by partials combine map-side, so a hot
+    group collapses to one row per input partition before the shuffle
+    (the skew property the window lacked).  Plan-pinned window-free by
+    tests/test_round12_plans."""
     return (
-        pairs.groupBy("source")
+        pairs.groupBy(*keys)
         .agg(
             F.min_by(
                 F.struct("pair", "cnt"),
@@ -2379,125 +2401,12 @@ def _grouped_pair_argmax(pairs: DataFrame) -> DataFrame:
             ).alias("_best")
         )
         .select(
-            "source",
+            *keys,
             F.col("_best.pair").alias("pair"),
             F.col("_best.cnt").alias("cnt"),
         )
+        .where(F.col("pair").isNotNull())
     )
-
-
-def grouped_bpe_merges(
-    documents: DataFrame,
-    text_col: str = "text",
-    k: int = 4,
-    group_col: str = "source",
-) -> DataFrame:
-    """(source, it, pair, cnt): :func:`bpe_merges` PER SOURCE — each
-    source learns its own merge table, k rounds of the same wrapped-
-    symbol greedy loop.  The per-domain vocabulary-induction view: two
-    sources whose first merges diverge tokenize differently enough
-    that a shared vocabulary taxes one of them (the fertility
-    diagnostic's upstream cause).
-
-    Scale: the corpus folds once to the (source, word TYPE) table;
-    every round's pair count and argmax run over that vocabulary-scale
-    frame (per-source pair tables are type-bounded regardless of
-    corpus size — the scalar loop's argument, once per group).  Per
-    round: ONE #sources-row driver collect (the kmeans-centroid
-    pattern, metadata-scale) and one broadcast merges join; the
-    per-source argmax is a ``min_by(struct(pair, cnt), struct(-cnt,
-    pair))`` COMBINABLE aggregate — NOT a row_number window.  A window
-    partitioned by source would send every pair row of a hot source to
-    one unsplittable task each round (the iterated cousin of the
-    exact-dedup hot-fingerprint window retired in round 11); the agg
-    map-side combines each partition to one candidate per source
-    before the shuffle, so a source with a billion-token vocabulary
-    costs the shuffle one row per input partition (VERDICT r11 item
-    3).  Ties break (cnt DESC, pair ASC) via the (-cnt, pair) struct
-    ordering, mirrored in the oracle's unrolled per-source CTE rounds.
-    A source whose words are fully merged simply stops contributing
-    rows (LEFT join keeps its segmentation frozen), identically in
-    both engines."""
-    from lab3_spark.functions.partitioning import scoped
-
-    spark = documents.sparkSession
-    words = (
-        spread(documents)
-        .select(
-            F.col(group_col).alias("source"),
-            F.explode(tokenize(text_col)).alias("word"),
-        )
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .where(F.length("word") >= 2)
-    )
-    seg = words.select(
-        "source",
-        "wcnt",
-        F.concat(
-            F.lit("|"), F.array_join(F.split("word", ""), "||"), F.lit("|")
-        ).alias("seg"),
-    )
-    out_rows: list[tuple[str, int, str, int]] = []
-    for it in range(1, k + 1):
-        seg = scoped(seg)
-        pairs = (
-            seg.select(
-                "source",
-                "wcnt",
-                F.split(F.expr("trim(BOTH '|' FROM seg)"), "\\|\\|").alias(
-                    "syms"
-                ),
-            )
-            .where(F.size("syms") >= 2)
-            .select(
-                "source",
-                "wcnt",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1),"
-                        " i -> concat(syms[i-1], ' ', syms[i]))"
-                    )
-                ).alias("pair"),
-            )
-            .groupBy("source", "pair")
-            .agg(F.sum("wcnt").cast("bigint").alias("cnt"))
-        )
-        best = _grouped_pair_argmax(pairs)
-        # #sources-row argmax collect per round — metadata-scale
-        rows = best.collect()
-        if not rows:
-            break
-        out_rows += [
-            (r["source"], it, r["pair"], int(r["cnt"])) for r in rows
-        ]
-        merges = spark.createDataFrame(
-            [
-                (r["source"], *r["pair"].split(" ", 1))
-                for r in rows
-            ],
-            "source string, a string, b string",
-        )
-        seg = seg.join(F.broadcast(merges), "source", "left").select(
-            "source",
-            "wcnt",
-            F.when(
-                F.col("a").isNotNull(),
-                F.replace(
-                    F.col("seg"),
-                    F.concat(
-                        F.lit("|"), F.col("a"), F.lit("||"), F.col("b"),
-                        F.lit("|"),
-                    ),
-                    F.concat(F.lit("|"), F.col("a"), F.col("b"), F.lit("|")),
-                ),
-            )
-            .otherwise(F.col("seg"))
-            .alias("seg"),
-        )
-    return spark.createDataFrame(
-        sorted(out_rows), "source string, it bigint, pair string, cnt bigint"
-    ).orderBy("source", "it")
 
 
 def bpe_apply_compression(
@@ -2511,13 +2420,13 @@ def bpe_apply_compression(
     chars/symbol).
 
     Runs the same metadata-scale type-table loop as :func:`bpe_merges`
-    (shared ``_bpe_loop``), then ONE aggregate over the final
+    (shared ``_bpe_loop``, no keys), then ONE aggregate over the final
     segmentation frame: symbols per word = size(split(seg)), weighted
     by word occurrence counts; 1-char words (excluded from merge
     LEARNING — they have no pairs) re-enter the corpus totals as
     single-symbol tokens.  chars_per_symbol_fp = total_chars·10⁶ DIV
     total_symbols."""
-    merges, seg = _bpe_loop(documents, text_col, k)
+    merges, seg = _bpe_loop(documents, text_col, k, [])
     words1 = (
         spread(documents)
         .select(F.explode(tokenize(text_col)).alias("word"))
@@ -2978,7 +2887,7 @@ def source_ks_matrix(
     throughout: d_num = max|cum_a·n_b − cum_b·n_a|, one division at
     the end (cum·n ≤ n² — bigint-safe)."""
     from lab3_spark.functions.partitioning import scoped
-    from lab3_spark.operators.rank import with_grouped_running_sum
+    from lab3_spark.operators.rank import with_running_sum
 
     hist = scoped(
         documents.select(
@@ -2998,9 +2907,7 @@ def source_ks_matrix(
         )
     )
     cum = scoped(
-        with_grouped_running_sum(
-            grid, ["grp"], ["y"], "cnt", out_col="cum",
-        ).select("y", "grp", "cum"),
+        with_running_sum(grid, ["y"], "cnt", out_col="cum", keys=["grp"]).select("y", "grp", "cum"),
     )
     tot = hist.groupBy("grp").agg(F.sum("cnt").cast("bigint").alias("n"))
     a = cum.select(

@@ -193,7 +193,7 @@ def zone_map_pruning_audit(
     SQL oracle reproduces every count bit-for-bit."""
     from lab3_spark.operators.rank import (
         total_rows_col,
-        with_global_row_number,
+        with_row_number,
     )
 
     stats = df.agg(
@@ -227,7 +227,7 @@ def zone_map_pruning_audit(
     )
 
     def _files(order_col: str, layout: str) -> DataFrame:
-        d = with_global_row_number(
+        d = with_row_number(
             coded,
             [order_col, key_col],
             out_col="_rn",

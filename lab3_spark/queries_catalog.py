@@ -6637,7 +6637,7 @@ def q_doc_ppl_buckets(spark, sf_dir):
 def q_token_budget_select(spark, sf_dir):
     """Global token-budget selection (sampling.token_budget_select):
     best-quality-first prefix under a 10k-token budget, computed with
-    the DISTRIBUTED prefix sum (rank.with_global_running_sum) instead
+    the DISTRIBUTED prefix sum (rank.with_running_sum) instead
     of the single-partition ``sum() OVER (ORDER BY ...)`` window."""
     from lab3_spark.operators.sampling import token_budget_select
 
@@ -12637,9 +12637,18 @@ def q_orders_winsorized_stats(spark, sf_dir):
     cutoffs make the whole statistic integer-exact (no percentile
     interpolation to disagree on); the global rank is the distributed
     range-partitioned row number (operators/rank.py)."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import winsorized_stats
 
-    return winsorized_stats(_t(spark, sf_dir, "orders"))
+    return winsorized_stats(
+        _t(spark, sf_dir, "orders"), cents("o_totalprice"), "o_orderkey"
+    ).select(
+        "n",
+        F.col("p_lo").alias("p_lo_cents"),
+        F.col("p_hi").alias("p_hi_cents"),
+        F.col("mean_v").alias("mean_cents"),
+        F.col("winsorized_mean_v").alias("winsorized_mean_cents"),
+    )
 
 
 @query(
@@ -12680,9 +12689,14 @@ def q_orders_mannwhitney(spark, sf_dir):
     Distinct prices ≈ rows, so the cumulative count is the DISTRIBUTED
     global running sum (operators/rank.py) — no single-partition
     window over the data-scale histogram."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u
 
-    return mannwhitney_u(_t(spark, sf_dir, "orders"))
+    return mannwhitney_u(
+        _t(spark, sf_dir, "orders"),
+        cents("o_totalprice"),
+        "o_orderpriority = '1-URGENT'",
+    )
 
 
 @query(
@@ -12994,16 +13008,19 @@ def q_bpe_merges_k(spark, sf_dir):
 )
 def q_source_winsorized_stats(spark, sf_dir):
     """Per-source winsorized doc-length means (profile.
-    grouped_winsorized_stats) — orders_winsorized_stats lifted from a
+    winsorized_stats keyed by source) — orders_winsorized_stats lifted from a
     corpus scalar to one row per source (VERDICT r7 item 3).  The rank
     is the GROUPED distributed row number (rank.py): one ranged
     shuffle ordered by (source, length, id), per-group offsets
     broadcast back — no per-group single-partition window, so a
     skewed source cannot stall an executor.  (The oracle's PARTITION
     BY window is DuckDB-local shorthand for the same semantics.)"""
-    from lab3_spark.operators.profile import grouped_winsorized_stats
+    from lab3_spark.operators.profile import winsorized_stats
 
-    return grouped_winsorized_stats(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents").withColumnRenamed("source", "grp")
+    return winsorized_stats(
+        docs, F.col("n_chars"), "doc_id", keys=["grp"]
+    ).orderBy("grp")
 
 
 @query(
@@ -13041,13 +13058,20 @@ def q_source_winsorized_stats(spark, sf_dir):
 )
 def q_orders_mannwhitney_by_status(spark, sf_dir):
     """Per-status Mann-Whitney U, URGENT vs rest (profile.
-    grouped_mannwhitney_u) — the grouped lift of orders_mannwhitney:
+    mannwhitney_u keyed by status) — the grouped lift of orders_mannwhitney:
     same exact-integer tie-averaged histogram recipe, cumulative via
     the GROUPED distributed prefix sum (rank.py), one row per
     o_orderstatus."""
-    from lab3_spark.operators.profile import grouped_mannwhitney_u
+    from lab3_spark.functions.rounding import cents
+    from lab3_spark.operators.profile import mannwhitney_u
 
-    return grouped_mannwhitney_u(_t(spark, sf_dir, "orders"))
+    orders = _t(spark, sf_dir, "orders")
+    return mannwhitney_u(
+        orders.withColumnRenamed("o_orderstatus", "grp"),
+        cents("o_totalprice"),
+        "o_orderpriority = '1-URGENT'",
+        keys=["grp"],
+    ).orderBy("grp")
 
 
 @query(
@@ -13090,9 +13114,14 @@ def q_lineitem_spearman(spark, sf_dir):
     distributed prefix sum), moment sums exact in decimal(38,0) /
     HUGEINT, ONE identical double expression for the final rho in
     both engines."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import spearman_rho
 
-    return spearman_rho(_t(spark, sf_dir, "lineitem"))
+    return spearman_rho(
+        _t(spark, sf_dir, "lineitem"),
+        cents("l_quantity"),
+        cents("l_extendedprice"),
+    )
 
 
 @query(
@@ -13648,7 +13677,7 @@ def q_streaming_incremental_pagerank(spark, sf_dir):
 )
 def q_source_spearman(spark, sf_dir):
     """Per-source Spearman between document length and lexical
-    diversity (profile.grouped_spearman_rho): does a longer document
+    diversity (profile.spearman_rho keyed by source): does a longer document
     keep introducing new token types, per source? — the lexical-
     diversity drift diagnostic of a mixture audit (a source whose rho
     collapses is boilerplate- or template-heavy).  lineitem_spearman's
@@ -13657,15 +13686,15 @@ def q_source_spearman(spark, sf_dir):
     distributed prefix sum (rank.py), decimal(38,0)/HUGEINT moments,
     one shared double expression for rho."""
     from lab3_spark.functions.text import tokenize
-    from lab3_spark.operators.profile import grouped_spearman_rho
+    from lab3_spark.operators.profile import spearman_rho
 
-    docs = _t(spark, sf_dir, "documents")
-    return grouped_spearman_rho(
+    docs = _t(spark, sf_dir, "documents").withColumnRenamed("source", "grp")
+    return spearman_rho(
         docs,
-        "source",
         F.col("n_chars"),
         F.size(F.array_distinct(tokenize("text"))),
-    )
+        keys=["grp"],
+    ).orderBy("grp")
 
 
 @query(
@@ -14213,16 +14242,18 @@ def q_padding_waste_by_bucket(spark, sf_dir):
 @query("source_bpe_merges", _duck_bpe_grouped_sql(4))
 def q_source_bpe_merges(spark, sf_dir):
     """Per-source BPE vocabulary induction (textstats.
-    grouped_bpe_merges): each source learns its own 4-round merge
+    bpe_merges keyed by source): each source learns its own 4-round merge
     table — the per-domain view of bpe_merges_k ("which sources need
     their own tokenizer?", the upstream cause of fertility drift).
     Same wrapped-symbol greedy loop over the (source, word TYPE)
     table; per round one #sources-row argmax collect + one broadcast
     merges join; the oracle unrolls the same rounds with per-source
     row_number argmax and LEFT-join replace."""
-    from lab3_spark.operators.textstats import grouped_bpe_merges
+    from lab3_spark.operators.textstats import bpe_merges
 
-    return grouped_bpe_merges(_t(spark, sf_dir, "documents"), k=4)
+    return bpe_merges(
+        _t(spark, sf_dir, "documents"), k=4, keys=["source"]
+    ).orderBy("source", "it")
 
 
 @query(

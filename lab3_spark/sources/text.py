@@ -3,15 +3,11 @@
 The reference's invert app splits its input on ``\\n`` and stamps a
 0-based line number on each chunk (phoenixLab/invert/invert.cpp:91-105).
 Spark's ``monotonically_increasing_id`` is NOT contiguous — but it IS
-``(partition_id << 33) + row_index_within_partition``, which makes
-contiguous numbering a pure-DataFrame computation:
-
-    line_no = row_index + offset(partition_id)
-
-where offset is the running sum of partition row counts.  Everything
-stays JVM-side (one extra tiny aggregation + broadcast join); the
-previous RDD ``zipWithIndex`` formulation round-tripped every line
-through Python pickling and was ~4× slower on a 107 MB corpus.
+``(partition_id << 33) + row_index_within_partition``, so contiguous
+numbering is the row index plus the row count of the earlier
+partitions: the global case of the engine's one offset primitive
+(operators/rank.py ``with_line_numbers``), JVM-side, with no shuffle
+of the lines.
 
 Correctness of the ordering (rows within a text partition follow file
 order, and partition ids follow file offsets for a single file) is
@@ -28,34 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from lab3_spark.functions.partitioning import one_window_partition
-
-ROW_IDX_BITS = 33  # monotonically_increasing_id layout (Spark contract)
-
-
-def with_line_numbers(df: DataFrame, out_col: str = "line_no") -> DataFrame:
-    """Add a 0-based contiguous `out_col` following the DataFrame's
-    current partition/row order — JVM-only (no Python round-trip)."""
-    mid = F.monotonically_increasing_id()
-    d = df.withColumn("_pid", F.shiftrightunsigned(mid, ROW_IDX_BITS)).withColumn(
-        "_ridx", mid.bitwiseAND(F.lit((1 << ROW_IDX_BITS) - 1))
-    )
-    w = Window.partitionBy(one_window_partition()).orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        d.groupBy("_pid")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_offset", F.sum("_n").over(w))
-        .select("_pid", F.coalesce("_offset", F.lit(0)).alias("_offset"))
-    )
-    return (
-        d.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_ridx") + F.col("_offset")).cast("long"))
-        .drop("_pid", "_ridx")
-    )
+from lab3_spark.operators.rank import with_line_numbers
 
 
 def read_text_lines(spark: SparkSession, *paths: str) -> DataFrame:

@@ -77,13 +77,10 @@ def start_incremental_dedup(
             .groupBy("fp")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        try:
-            prior = store.read_batches(
-                batch_df.sparkSession, store_path, before=batch_id
-            )
-        except FileNotFoundError:
-            pass  # no earlier batch: nothing to dedup against
-        else:
+        prior = store.read_batches(
+            batch_df.sparkSession, store_path, before=batch_id
+        )
+        if prior is not None:
             batch = batch.join(prior.select("fp"), "fp", "left_anti")
         store.write_batch(batch.select("doc_id", "fp"), store_path, batch_id)
 

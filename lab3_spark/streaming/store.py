@@ -13,7 +13,8 @@ its own output (exactly-once per ``(batch_id, data)``):
   prior, so a full replay from a fresh checkpoint stays legal.
 - **Append stores** ``{store}/batch_id=N``: each batch writes its own
   partition (:func:`write_batch`); readers merge every partition, or
-  those before a batch (:func:`read_batches`).
+  those before a batch (:func:`read_batches`), which refuses the same
+  way when one of them is missing.
 
 Listings use Hadoop's FileSystem API, so any path ``spark.read.parquet``
 accepts (hdfs://, s3a://) resolves as the read that follows does."""
@@ -107,13 +108,28 @@ def write_batch(df: DataFrame, store: str, batch_id: int) -> None:
 
 def read_batches(
     spark: SparkSession, store: str, before: int | None = None
-) -> DataFrame:
-    """Every ``batch_id=N`` partition of ``store`` (only N < ``before``
-    when given), with ``batch_id`` as a column.  Raises
-    FileNotFoundError when no partition qualifies."""
-    ids = [n for n in _ids(spark, store, "batch_id") if before is None or n < before]
+) -> DataFrame | None:
+    """Every ``batch_id=N`` partition of ``store``, with ``batch_id`` as
+    a column; raises FileNotFoundError when there is none.
+
+    With ``before`` given, the prior state of incoming batch ``before``:
+    partitions N < ``before``, or None for batch 0 (no prior).  Every
+    one of 0..before-1 must be present — a missing one means the store
+    lost batches its checkpoint says were applied, so it refuses rather
+    than let the batch build on a partial history."""
+    if before == 0:
+        return None
+    ids = _ids(spark, store, "batch_id")
+    missing = [] if before is None else sorted(set(range(before)) - set(ids))
+    if missing:
+        raise RuntimeError(
+            f"store {store} is missing {len(missing)} of batch_id=0.."
+            f"{before - 1} (first: {missing[0]}) expected by incoming "
+            f"batch_id={before}; refusing to build on lost prior state — "
+            "start over with a fresh checkpoint (full replay) or restore "
+            "the store"
+        )
     if not ids:
-        after = "" if before is None else f" before batch_id={before}"
-        raise FileNotFoundError(f"no batches under {store}{after}")
+        raise FileNotFoundError(f"no batches under {store}")
     df = spark.read.option("basePath", store).parquet(f"{store}/batch_id=*")
     return df if before is None else df.where(F.col("batch_id") < before)

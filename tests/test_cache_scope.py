@@ -48,10 +48,10 @@ def test_pagerank_result_outlives_next_call_in_scope(spark):
 
 
 def test_threads_keep_their_own_rank_frames(spark):
-    """Thread B's with_global_row_number frames stay cached while
+    """Thread B's with_row_number frames stay cached while
     thread A runs the same operator on another input in its own
     scope."""
-    from lab3_spark.operators.rank import with_global_row_number
+    from lab3_spark.operators.rank import with_row_number
 
     b_ready = threading.Event()
     a_done = threading.Event()
@@ -62,7 +62,7 @@ def test_threads_keep_their_own_rank_frames(spark):
         try:
             df = spark.range(0, 200).withColumnRenamed("id", "k")
             with cache_scope() as frames:
-                out = with_global_row_number(df, ["k"])
+                out = with_row_number(df, ["k"])
                 rows = sorted(out.collect())
                 b_ready.set()
                 assert a_done.wait(300), "thread A did not finish"
@@ -77,7 +77,7 @@ def test_threads_keep_their_own_rank_frames(spark):
             assert b_ready.wait(300), "thread B did not start"
             df = spark.range(0, 300).withColumnRenamed("id", "k")
             with cache_scope():
-                with_global_row_number(df, ["k"]).collect()
+                with_row_number(df, ["k"]).collect()
         except BaseException as e:
             errors.append(e)
         finally:

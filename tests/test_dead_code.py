@@ -77,3 +77,41 @@ def test_no_engine_code_only_tests_reach():
 
 def test_allowlist_is_still_needed():
     assert ALLOWED <= set(_unreached()), "remove stale entries from ALLOWED"
+
+
+def _engine_functions():
+    """(relative path, top-level FunctionDef, its source) for every
+    engine function."""
+    for path in _py_files("lab3_spark"):
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        for node in ast.parse(text, path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield os.path.relpath(path, ROOT), node, ast.get_source_segment(text, node)
+
+
+def test_prefix_offsets_only_in_rank():
+    """The exclusive-prefix offset window — a sum over
+    ``one_window_partition()`` framed ``(unboundedPreceding, -1)`` —
+    is operators/rank.py's one offset primitive; any other copy is a
+    second implementation of per-partition offsets."""
+    import re
+
+    frame = re.compile(r"(rows|range)Between\(\s*Window\.unboundedPreceding,\s*-1\s*\)")
+    copies = [
+        f"{path}:{fn.name}"
+        for path, fn, src in _engine_functions()
+        if path != os.path.join("lab3_spark", "operators", "rank.py")
+        and "one_window_partition" in src
+        and frame.search(src)
+        and ".sum(" in src
+    ]
+    assert not copies, f"exclusive-prefix offset window outside rank.py: {copies}"
+
+
+def test_no_grouped_twin():
+    """A keyed computation is one function whose key list may be empty:
+    no ``grouped_X`` next to an ``X``."""
+    names = {fn.name for _, fn, _ in _engine_functions()}
+    twins = sorted(n for n in names if n.startswith("grouped_") and n[8:] in names)
+    assert not twins, f"grouped twins of a global function: {twins}"

@@ -9,7 +9,7 @@ from pyspark.sql.window import Window
 
 from lab3_spark.operators.rank import (
     with_global_order_stats,
-    with_global_row_number,
+    with_row_number,
     drop_rank_internals,
 )
 
@@ -50,7 +50,7 @@ def test_matches_window_functions(docs, k):
 
 def test_range_partitioned_layout(docs):
     ranked = drop_rank_internals(
-        with_global_row_number(docs, ["n_chars", "doc_id"])
+        with_row_number(docs, ["n_chars", "doc_id"])
     )
     # the distributed form's ONE big-side shuffle is a RANGE
     # partitioning on the order keys (disjoint globally-ordered
@@ -113,3 +113,32 @@ def test_top_n_per_key_equals_plain_window(spark):
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert got.count() > 0
+
+
+def test_keyed_row_number_and_running_sum_match_windows(spark):
+    """With keys, row numbers and running sums restart per key and equal
+    Spark's per-key windows — on skewed keys whose rows span several
+    ranged partitions, and a key that shares a partition with others."""
+    from lab3_spark.operators.rank import with_row_number, with_running_sum
+
+    df = spark.range(3000).select(
+        F.when(F.col("id") < 2000, F.lit("hot"))
+        .otherwise(F.concat(F.lit("k"), (F.col("id") % 5).cast("string")))
+        .alias("key"),
+        F.col("id"),
+        ((F.col("id") * 2654435761) % 1009).alias("v"),
+    )
+    w = Window.partitionBy("key").orderBy("v", "id")
+    want = {
+        r["id"]: (r["rn"], r["cum"])
+        for r in df.select(
+            "id",
+            F.row_number().over(w).alias("rn"),
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+        ).collect()
+    }
+    rn = drop_rank_internals(with_row_number(df, ["v", "id"], keys=["key"]))
+    cum = with_running_sum(df, ["v", "id"], "v", keys=["key"])
+    got_rn = {r["id"]: r["rn"] for r in rn.collect()}
+    got_cum = {r["id"]: r["cum"] for r in cum.collect()}
+    assert {i: (got_rn[i], got_cum[i]) for i in got_rn} == want

@@ -100,7 +100,7 @@ def test_ppl_buckets_partition_corpus(docs):
 def test_global_running_sum_matches_window(spark):
     """The distributed prefix sum equals the single-partition window on
     a shape where the window is still runnable."""
-    from lab3_spark.operators.rank import with_global_running_sum
+    from lab3_spark.operators.rank import with_running_sum
     from pyspark.sql.window import Window
 
     df = spark.range(0, 1000).select(
@@ -108,7 +108,7 @@ def test_global_running_sum_matches_window(spark):
     )
     got = {
         r.id: r.cum
-        for r in with_global_running_sum(df, ["id"], "v").collect()
+        for r in with_running_sum(df, ["id"], "v").collect()
     }
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     want = {

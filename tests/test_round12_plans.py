@@ -22,13 +22,13 @@ def test_grouped_bpe_argmax_is_window_free(spark):
     (map-side combine proof), zero Window nodes."""
     from pyspark.sql import functions as F
 
-    from lab3_spark.operators.textstats import _grouped_pair_argmax
+    from lab3_spark.operators.textstats import _pair_argmax
 
     pairs = spark.createDataFrame(
         [("a", "x y", 3), ("a", "y z", 3), ("b", "p q", 1)],
         "source string, pair string, cnt long",
     ).select("source", "pair", F.col("cnt").cast("bigint").alias("cnt"))
-    plan = formatted_plan(_grouped_pair_argmax(pairs))
+    plan = formatted_plan(_pair_argmax(pairs, ["source"]))
     assert "Window" not in plan, plan
     assert "min_by" in plan, plan
     assert "partial_min_by" in plan or "partial min_by" in plan.replace(
@@ -42,7 +42,7 @@ def test_grouped_bpe_argmax_values_and_ties(spark):
     pair, matching the oracle's unrolled CTE rounds."""
     from pyspark.sql import functions as F
 
-    from lab3_spark.operators.textstats import _grouped_pair_argmax
+    from lab3_spark.operators.textstats import _pair_argmax
 
     pairs = spark.createDataFrame(
         [
@@ -55,22 +55,23 @@ def test_grouped_bpe_argmax_values_and_ties(spark):
     ).select("source", "pair", F.col("cnt").cast("bigint").alias("cnt"))
     rows = {
         r["source"]: (r["pair"], r["cnt"])
-        for r in _grouped_pair_argmax(pairs).collect()
+        for r in _pair_argmax(pairs, ["source"]).collect()
     }
     assert rows == {"a": ("b b", 5), "b": ("q q", 7)}
 
 
 def test_grouped_bpe_merges_no_window_in_loop(spark, docs):
-    """End-to-end: grouped_bpe_merges' output values are unchanged by
-    the argmax rewrite (golden spot-check on real testdata) and the
-    loop never constructs a Window (source-level guard)."""
+    """End-to-end: the per-source bpe_merges output values are
+    unchanged by the argmax rewrite (golden spot-check on real
+    testdata) and the loop never constructs a Window (source-level
+    guard)."""
     import inspect
 
     from lab3_spark.operators import textstats
 
-    src = inspect.getsource(textstats.grouped_bpe_merges)
+    src = inspect.getsource(textstats._bpe_loop)
     assert "Window" not in src, "window crept back into the BPE loop"
-    out = textstats.grouped_bpe_merges(docs, k=2).collect()
+    out = textstats.bpe_merges(docs, k=2, keys=["source"]).collect()
     assert len(out) > 0
     # keys unique per (source, it); cnt positive; pair is 'sym sym'
     seen = set()

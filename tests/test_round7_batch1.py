@@ -199,6 +199,7 @@ def test_source_vocab_overlap_hand_computed(spark):
 
 
 def test_winsorized_mean_pulls_in_outlier(spark):
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import winsorized_stats
 
     # 99 values of 10.00 + one 10000.00 outlier; k = max(1, 100//100) = 1
@@ -206,7 +207,12 @@ def test_winsorized_mean_pulls_in_outlier(spark):
     # tail clipping at rank 1 and rank 100 nothing changes; use 200 rows
     rows = [(i, 10.0) for i in range(199)] + [(199, 10_000.0)]
     df = spark.createDataFrame(rows, "o_orderkey bigint, o_totalprice double")
-    got = winsorized_stats(df).collect()[0]
+    got = winsorized_stats(df, cents("o_totalprice"), "o_orderkey").select(
+        "n",
+        F.col("p_hi").alias("p_hi_cents"),
+        F.col("mean_v").alias("mean_cents"),
+        F.col("winsorized_mean_v").alias("winsorized_mean_cents"),
+    ).collect()[0]
     assert got["n"] == 200
     # k = 2: p_lo = 1000, p_hi = value at rank 199 = 1000 -> outlier clipped
     assert got["p_hi_cents"] == 1000

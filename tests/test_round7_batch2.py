@@ -8,13 +8,14 @@ def test_mannwhitney_hand_computed(spark):
     """group1 = {3, 5}, group2 = {1, 3}: ranks 1, 2.5, 2.5, 4 →
     R1 = 6.5, U1 = 3.5 (pair count: 3>1 + ½·(3=3) + 5>1 + 5>3),
     AUC = 3.5/4."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u
 
     df = spark.createDataFrame(
         [(0.03, "g1"), (0.05, "g1"), (0.01, "g2"), (0.03, "g2")],
         "o_totalprice double, grp string",
     )
-    row = mannwhitney_u(df, group_expr="grp = 'g1'").collect()[0]
+    row = mannwhitney_u(df, cents("o_totalprice"), "grp = 'g1'").collect()[0]
     assert row["n1"] == 2 and row["n2"] == 2
     assert row["u1_x2"] == 7  # U1 = 3.5
     assert row["u2_x2"] == 1  # U2 = 0.5; U1 + U2 = n1*n2
@@ -23,14 +24,15 @@ def test_mannwhitney_hand_computed(spark):
 
 def test_mannwhitney_symmetry(spark):
     """Swapping the groups swaps U1/U2 and mirrors the AUC."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u
 
     df = spark.createDataFrame(
         [(float(v), "a" if v % 2 else "b") for v in range(1, 101)],
         "o_totalprice double, grp string",
     )
-    a = mannwhitney_u(df, group_expr="grp = 'a'").collect()[0]
-    b = mannwhitney_u(df, group_expr="grp = 'b'").collect()[0]
+    a = mannwhitney_u(df, cents("o_totalprice"), "grp = 'a'").collect()[0]
+    b = mannwhitney_u(df, cents("o_totalprice"), "grp = 'b'").collect()[0]
     assert a["u1_x2"] == b["u2_x2"] and a["u2_x2"] == b["u1_x2"]
     assert a["u1_x2"] + a["u2_x2"] == 2 * a["n1"] * a["n2"]
 
@@ -105,12 +107,13 @@ def test_quality_pr_curve_monotone(spark, sf_dir):
 
 
 def test_mannwhitney_empty_group_null_auc(spark):
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u
 
     df = spark.createDataFrame(
         [(1.0, "b"), (2.0, "b")], "o_totalprice double, grp string"
     )
-    row = mannwhitney_u(df, group_expr="grp = 'a'").collect()[0]
+    row = mannwhitney_u(df, cents("o_totalprice"), "grp = 'a'").collect()[0]
     assert row["n1"] == 0 and row["auc_fp"] is None
 
 
@@ -137,10 +140,11 @@ def test_mannwhitney_matches_bruteforce_pair_count(spark):
     ]
     if not any(g == "a" for _, g in rows):  # pragma: no cover
         rows[0] = (rows[0][0], "a")
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u
 
     df = spark.createDataFrame(rows, "o_totalprice double, grp string")
-    got = mannwhitney_u(df, group_expr="grp = 'a'").collect()[0]
+    got = mannwhitney_u(df, cents("o_totalprice"), "grp = 'a'").collect()[0]
     xs1 = [round(v * 100) for v, g in rows if g == "a"]
     xs2 = [round(v * 100) for v, g in rows if g == "b"]
     u1_x2 = sum(
@@ -183,12 +187,17 @@ def test_winsorized_and_mannwhitney_use_distributed_rank(spark, sf_dir):
     """Both rank statistics must go through the ranged shuffle
     (RangePartitioning on the value order), never a single-partition
     window over the data-scale frame."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import mannwhitney_u, winsorized_stats
     from lab3_spark.plans.explain import formatted_plan
     from lab3_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    for df in (winsorized_stats(orders), mannwhitney_u(orders)):
+    price = cents("o_totalprice")
+    for df in (
+        winsorized_stats(orders, price, "o_orderkey"),
+        mannwhitney_u(orders, price, "o_orderpriority = '1-URGENT'"),
+    ):
         plan = formatted_plan(df)
         assert "rangepartitioning" in plan.lower(), plan
 

@@ -196,19 +196,25 @@ def _orders(spark):
 def test_grouped_mannwhitney_matches_per_group_scalar(spark):
     """The grouped operator must equal the corpus-global operator run
     on each group's slice."""
-    from lab3_spark.operators.profile import (
-        grouped_mannwhitney_u,
-        mannwhitney_u,
-    )
+    from lab3_spark.functions.rounding import cents
+    from lab3_spark.operators.profile import mannwhitney_u
 
     df = _orders(spark)
+    urgent = "o_orderpriority = '1-URGENT'"
     got = {
         r["grp"]: (r["n1"], r["n2"], r["u1_x2"], r["u2_x2"], r["auc_fp"])
-        for r in grouped_mannwhitney_u(df).collect()
+        for r in mannwhitney_u(
+            df.withColumnRenamed("o_orderstatus", "grp"),
+            cents("o_totalprice"),
+            urgent,
+            keys=["grp"],
+        ).collect()
     }
     for status in "POF":
         (exp,) = mannwhitney_u(
-            df.where(F.col("o_orderstatus") == status)
+            df.where(F.col("o_orderstatus") == status),
+            cents("o_totalprice"),
+            urgent,
         ).collect()
         assert got[status] == (
             exp["n1"], exp["n2"], exp["u1_x2"], exp["u2_x2"], exp["auc_fp"]
@@ -216,7 +222,7 @@ def test_grouped_mannwhitney_matches_per_group_scalar(spark):
 
 
 def test_grouped_winsorized_matches_per_group_python(spark):
-    from lab3_spark.operators.profile import grouped_winsorized_stats
+    from lab3_spark.operators.profile import winsorized_stats
 
     df = _orders(spark).selectExpr(
         "o_orderstatus AS source",
@@ -226,7 +232,13 @@ def test_grouped_winsorized_matches_per_group_python(spark):
     got = {
         r["grp"]: (r["n"], r["p_lo"], r["p_hi"], r["mean_v"],
                    r["winsorized_mean_v"])
-        for r in grouped_winsorized_stats(df, tail_pct=5).collect()
+        for r in winsorized_stats(
+            df.withColumnRenamed("source", "grp"),
+            F.col("n_chars"),
+            "doc_id",
+            tail_pct=5,
+            keys=["grp"],
+        ).collect()
     }
     rows = df.collect()
     for status in "POF":
@@ -243,6 +255,7 @@ def test_grouped_winsorized_matches_per_group_python(spark):
 def test_spearman_matches_bruteforce(spark):
     """Tie-heavy small input vs a pure-Python tie-averaged-rank
     Pearson."""
+    from lab3_spark.functions.rounding import cents
     from lab3_spark.operators.profile import spearman_rho
 
     xs = [1, 2, 2, 3, 3, 3, 4, 10, 10, 5, 6, 7]
@@ -251,7 +264,9 @@ def test_spearman_matches_bruteforce(spark):
         list(zip(map(float, xs), map(float, ys))),
         "l_quantity double, l_extendedprice double",
     )
-    (got,) = spearman_rho(df).collect()
+    (got,) = spearman_rho(
+        df, cents("l_quantity"), cents("l_extendedprice")
+    ).collect()
 
     def avg_ranks(v):
         s = sorted(range(len(v)), key=lambda i: v[i])

@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 def test_grouped_spearman_matches_per_group_scalar(spark):
     """The grouped operator must equal the corpus-global operator run
     on each group's slice (the grouped-MW test pattern)."""
-    from lab3_spark.operators.profile import (
-        grouped_spearman_rho,
-        spearman_rho,
-    )
+    from lab3_spark.functions.rounding import cents
+    from lab3_spark.operators.profile import spearman_rho
 
     rng = random.Random(11)
     rows = []
@@ -29,22 +27,26 @@ def test_grouped_spearman_matches_per_group_scalar(spark):
     )
     got = {
         r["grp"]: (r["n"], r["rho_fp"])
-        for r in grouped_spearman_rho(
-            df,
-            "source",
+        for r in spearman_rho(
+            df.withColumnRenamed("source", "grp"),
             F.floor(F.col("l_quantity") * 100 + F.lit(0.5)),
             F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
+            keys=["grp"],
         ).collect()
     }
     for g in "ABC":
-        (exp,) = spearman_rho(df.where(F.col("source") == g)).collect()
+        (exp,) = spearman_rho(
+            df.where(F.col("source") == g),
+            cents("l_quantity"),
+            cents("l_extendedprice"),
+        ).collect()
         assert got[g] == (exp["n"], exp["rho_fp"]), g
 
 
 def test_grouped_spearman_degenerate_and_perfect(spark):
     """Constant column within a group → NULL rho_fp for THAT group
     only; a perfectly monotone group hits exactly 10⁶."""
-    from lab3_spark.operators.profile import grouped_spearman_rho
+    from lab3_spark.operators.profile import spearman_rho
 
     rows = [("K", 5, i) for i in range(10)] + [
         ("L", i, i) for i in range(10)
@@ -52,8 +54,11 @@ def test_grouped_spearman_degenerate_and_perfect(spark):
     df = spark.createDataFrame(rows, "source string, x bigint, y bigint")
     got = {
         r["grp"]: (r["n"], r["rho_fp"])
-        for r in grouped_spearman_rho(
-            df, "source", F.col("x"), F.col("y")
+        for r in spearman_rho(
+            df.withColumnRenamed("source", "grp"),
+            F.col("x"),
+            F.col("y"),
+            keys=["grp"],
         ).collect()
     }
     assert got["K"] == (10, None)
@@ -432,7 +437,7 @@ def test_padding_waste_hand_computed(spark):
 def test_grouped_bpe_matches_per_group_scalar(spark):
     """Each source's merge sequence must equal the scalar bpe_merges
     run on that source's slice alone (groups are fully independent)."""
-    from lab3_spark.operators.textstats import bpe_merges, grouped_bpe_merges
+    from lab3_spark.operators.textstats import bpe_merges
 
     texts = {
         "A": ["the theft theme then the the", "low lower lowest"],
@@ -446,7 +451,7 @@ def test_grouped_bpe_matches_per_group_scalar(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
     got: dict = {}
-    for r in grouped_bpe_merges(df, k=3).collect():
+    for r in bpe_merges(df, k=3, keys=["source"]).collect():
         got.setdefault(r["source"], []).append((r["it"], r["pair"], r["cnt"]))
     for src in texts:
         exp = [

@@ -64,6 +64,41 @@ def test_read_text_lines_line_numbers(spark, tmp_path):
     assert df.collect()[0]["doc_id"] == "sample.txt"
 
 
+def test_line_numbers_across_split_files(spark, tmp_path):
+    """Two files, each read as several partitions: line_no must equal
+    the line's 0-based position in its own file, restarting per file."""
+    files = {}
+    for name, n in (("a.txt", 300), ("b.txt", 220)):
+        lines = [f"{name} line {i} " + "x" * (i % 17) for i in range(n)]
+        path = os.path.join(str(tmp_path), name)
+        with open(path, "w") as f:
+            f.write("\n".join(lines) + "\n")
+        files[name] = (path, lines)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2048")
+    try:
+        for path, _ in files.values():
+            assert spark.read.text(path).rdd.getNumPartitions() >= 3
+        got = read_text_lines(spark, *(p for p, _ in files.values())).collect()
+    finally:
+        spark.conf.set(key, old)
+    for name, (_, lines) in files.items():
+        rows = sorted((r["line_no"], r["text"]) for r in got if r["doc_id"] == name)
+        assert rows == list(enumerate(lines)), name
+
+
+def test_word_count_over_text_lines_has_no_join(spark, tmp_path):
+    """word_count never reads line_no, so the line-number offsets join
+    must drop out of the optimized plan."""
+    p = os.path.join(str(tmp_path), "sample.txt")
+    with open(p, "w") as f:
+        f.write("the quick brown fox\njumps over the lazy dog\n")
+    qe = word_count(read_text_lines(spark, p))._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+
+
 def test_reference_corpus_wordcount_if_present(spark):
     """Golden smoke on the reference's own corpus (read-only data file,
     phoenixLab/Dracula.txt) when available."""

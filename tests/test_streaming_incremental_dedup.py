@@ -116,3 +116,34 @@ def test_store_path_with_uri_scheme(spark, tmp_path):
     # doc 7 (cross-batch dup of doc 4) must NOT be present — the
     # scheme'd-path failure mode would have accepted it
     assert 7 not in {r["doc_id"] for r in got}
+
+
+def test_wiped_store_under_kept_checkpoint_refuses(spark, tmp_path):
+    """With the store deleted but the checkpoint kept, batch 1 has lost
+    the batch 0 it must dedup against: it must refuse, not accept every
+    doc as novel."""
+    import shutil
+    import time
+
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    schema = "doc_id bigint, text string"
+    feed = str(tmp_path / "feed")
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    os.makedirs(feed)
+
+    def drain(i, rows):
+        part = str(tmp_path / f"part{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(part)
+        (pf,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        dst = os.path.join(feed, f"{i:02d}.parquet")
+        os.rename(os.path.join(part, pf), dst)
+        os.utime(dst, (time.time() + i * 10,) * 2)
+        src = spark.readStream.schema(schema).parquet(feed)
+        start_incremental_dedup(src, store, ckpt).awaitTermination(120)
+
+    drain(0, [(1, "the quick brown fox")])
+    shutil.rmtree(store)
+    with pytest.raises(StreamingQueryException, match="refusing"):
+        drain(1, [(2, "the quick brown fox")])
