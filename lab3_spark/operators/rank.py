@@ -91,7 +91,8 @@ def _with_offsets(d: DataFrame, keys: Sequence[str], measure: Column) -> DataFra
     row's (key, partition) has an offsets row, so it returns the same
     rows as an inner join, and Catalyst drops it altogether when no
     offsets column is used (the offsets side is unique on the join
-    keys)."""
+    keys).  Keys match null-safe: a NULL key is one group, as in SQL's
+    ``PARTITION BY``, and finds its offsets row."""
     from lab3_spark.functions.partitioning import one_window_partition
 
     whole = Window.partitionBy(one_window_partition())
@@ -112,7 +113,12 @@ def _with_offsets(d: DataFrame, keys: Sequence[str], measure: Column) -> DataFra
         .agg(measure.alias("_m"))
         .select(*keys, _PID, off.alias(_OFF), tot.alias(_TOT))
     )
-    return d.join(F.broadcast(offsets), [*keys, _PID], "left")
+    if not keys:
+        return d.join(F.broadcast(offsets), [_PID], "left")
+    theirs = [f"_gos_o{i}" for i in range(len(keys) + 1)]
+    on = [F.col(c).eqNullSafe(F.col(o)) for c, o in zip([*keys, _PID], theirs)]
+    offsets = offsets.toDF(*theirs, _OFF, _TOT)
+    return d.join(F.broadcast(offsets), on, "left").drop(*theirs)
 
 
 def _ranged_frame(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:

@@ -18,6 +18,22 @@ Config choices (SURVEY.md §4):
   message; only the Python call-site annotation in their query context
   is gone.  It must be set here: PySpark reads the flag once per
   process, from the first active session.
+- Generated-code cache sized to the engine's working set
+  (``spark.sql.codegen.cache.maxEntries`` = 8192; Spark's default is
+  100).  The reference compiles its map/combine/reduce once, as C++
+  templates (map_reduce.h:46-48); the engine's equivalent is Janino
+  compiling each whole-stage-codegen class, kept in an LRU cache keyed
+  by the generated source.  One ``catalog_mix`` round needs about 154
+  classes and one ``text_batch`` pass about 117, so at 100 entries the
+  cache thrashed and a warm session recompiled about 147 classes per
+  catalog round (and on executors too: tasks compile their stage's
+  class).  The first call of every catalog gate at sf0.001 compiles
+  4,696 distinct classes (about 3 KB of bytecode each); 8192 is the
+  first power of two above that.  The cache holds code, never data or
+  results, so no call is served from an earlier call; a warm session
+  only stops paying Janino for code it already compiled.  It is a
+  static SQL conf, read once per JVM when ``CodeGenerator`` builds its
+  cache: the first session in the JVM fixes it.
 """
 
 from __future__ import annotations
@@ -62,6 +78,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     if extra_conf:
         for k, v in extra_conf.items():

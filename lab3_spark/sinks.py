@@ -30,12 +30,14 @@ def render_inverted_index_text(
     df: DataFrame, key: str = "word", ids: str = "ids"
 ) -> DataFrame:
     """invert's sink shape (invert.cpp:151-168): ``word - n1, n2, ...``
-    with the posting list comma-joined."""
+    with the posting list comma-joined.  The ids are cast as a whole
+    array and joined in one expression: no per-element lambda, which
+    Spark evaluates interpreted, element by element."""
     return df.select(
         F.concat(
             F.col(key),
             F.lit(" - "),
-            F.concat_ws(", ", F.transform(ids, lambda x: x.cast("string"))),
+            F.array_join(F.col(ids).cast("array<string>"), ", "),
         ).alias("line")
     )
 

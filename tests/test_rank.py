@@ -115,19 +115,11 @@ def test_top_n_per_key_equals_plain_window(spark):
     assert got.count() > 0
 
 
-def test_keyed_row_number_and_running_sum_match_windows(spark):
-    """With keys, row numbers and running sums restart per key and equal
-    Spark's per-key windows — on skewed keys whose rows span several
-    ranged partitions, and a key that shares a partition with others."""
+def _assert_keyed_match_windows(df):
+    """with_row_number / with_running_sum keyed on ``key`` equal Spark's
+    per-key ``row_number()`` and running ``sum()`` windows, row by row."""
     from lab3_spark.operators.rank import with_row_number, with_running_sum
 
-    df = spark.range(3000).select(
-        F.when(F.col("id") < 2000, F.lit("hot"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 5).cast("string")))
-        .alias("key"),
-        F.col("id"),
-        ((F.col("id") * 2654435761) % 1009).alias("v"),
-    )
     w = Window.partitionBy("key").orderBy("v", "id")
     want = {
         r["id"]: (r["rn"], r["cum"])
@@ -141,4 +133,36 @@ def test_keyed_row_number_and_running_sum_match_windows(spark):
     cum = with_running_sum(df, ["v", "id"], "v", keys=["key"])
     got_rn = {r["id"]: r["rn"] for r in rn.collect()}
     got_cum = {r["id"]: r["cum"] for r in cum.collect()}
+    assert len(got_rn) == len(got_cum) == df.count()
     assert {i: (got_rn[i], got_cum[i]) for i in got_rn} == want
+
+
+def test_keyed_row_number_and_running_sum_match_windows(spark):
+    """With keys, row numbers and running sums restart per key and equal
+    Spark's per-key windows — on skewed keys whose rows span several
+    ranged partitions, and a key that shares a partition with others."""
+    _assert_keyed_match_windows(
+        spark.range(3000).select(
+            F.when(F.col("id") < 2000, F.lit("hot"))
+            .otherwise(F.concat(F.lit("k"), (F.col("id") % 5).cast("string")))
+            .alias("key"),
+            F.col("id"),
+            ((F.col("id") * 2654435761) % 1009).alias("v"),
+        )
+    )
+
+
+def test_null_key_is_one_group(spark):
+    """A NULL key numbers and sums like any other group, as SQL's
+    ``PARTITION BY`` does: 1,200 of 3,000 rows have a NULL key, so the
+    NULL group (first in the range order) spans several of the four
+    ranged partitions, and NULL rows still find their offsets."""
+    _assert_keyed_match_windows(
+        spark.range(3000).select(
+            F.when(F.col("id") % 5 < 2, F.lit(None).cast("string"))
+            .otherwise(F.concat(F.lit("k"), (F.col("id") % 3).cast("string")))
+            .alias("key"),
+            F.col("id"),
+            ((F.col("id") * 2654435761) % 1009).alias("v"),
+        )
+    )

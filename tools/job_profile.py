@@ -2,10 +2,12 @@
 
 Runs each named gate once per pass (noop sink, warm session) and
 prints every Spark job it launched: description, duration, task
-count.  This is the measure-first tool for the action-floor work
-(VERDICT r12 item 1: the rank machinery's ~2.4 s fixed cost is ~5
-small jobs per call — this script is how we count them before and
-after).
+count, and the Janino compilations of the pass (a warm pass that
+still compiles has a per-call value in its generated code, or a
+working set larger than the session's codegen cache).  This is the
+measure-first tool for the action-floor work (VERDICT r12 item 1: the
+rank machinery's ~2.4 s fixed cost is ~5 small jobs per call — this
+script is how we count them before and after).
 
 Usage: python tools/job_profile.py gate [gate ...] [--passes N]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -30,6 +32,12 @@ from lab3_spark.sources.tables import TABLES, load_table
 def _jobs(base: str, app: str) -> list[dict]:
     with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/jobs?status=succeeded") as r:
         return json.load(r)
+
+
+def _compiles(spark) -> int:
+    """Janino compilations so far in this JVM, driver and executors."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> None:
@@ -57,19 +65,24 @@ def main() -> None:
         for p in range(passes):
             before_ids = {j["jobId"] for j in _jobs(base, app)}
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            c0 = _compiles(spark)
             t0 = time.time()
             with cache_scope():
                 QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
             dt = time.time() - t0
+            compiled = _compiles(spark) - c0
             spark.sparkContext.setJobDescription(None)
             time.sleep(0.3)
             jobs = [
                 j for j in _jobs(base, app) if j["jobId"] not in before_ids
             ]
             jobs.sort(key=lambda j: j["jobId"])
-            print(f"\n=== {name} pass {p + 1}: {dt:.3f}s, {len(jobs)} jobs")
+            print(
+                f"\n=== {name} pass {p + 1}: {dt:.3f}s, {len(jobs)} jobs,"
+                f" {compiled} compiled"
+            )
             for j in jobs:
                 sub = j.get("submissionTime", "")
                 comp = j.get("completionTime", "")
